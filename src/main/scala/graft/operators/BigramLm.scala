@@ -61,6 +61,11 @@ object BigramLm {
     * `(id, n_transitions, avg_ll)` — one row per document; documents with
     * fewer than two tokens have no transition (`n_transitions = 0`,
     * `avg_ll = 0.0`).
+    *
+    * Streaming callers score arrivals against a model fit offline (or on
+    * a reference corpus): a streaming-global LM would retroactively change
+    * already-emitted scores with every batch, and CCNet scores against a
+    * REFERENCE-corpus LM, not the corpus being filtered.
     */
   def scoreDocs(
       docs: DataFrame,

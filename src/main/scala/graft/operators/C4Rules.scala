@@ -30,7 +30,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: ENTIRELY map-side — every rule is a per-line predicate
   * and every output a per-document fold over the line array (no explode,
   * no shuffle, no state). The cheapest possible plan class; it
-  * whole-stage-codegens into the scan.
+  * whole-stage-codegens into the scan. Run per micro-batch at ingest
+  * (clean-at-ingest ordering), it keeps raw chrome from ever reaching
+  * downstream consumers.
   */
 object C4Rules {
 

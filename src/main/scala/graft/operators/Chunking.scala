@@ -68,6 +68,10 @@ object Chunking {
     * partitioned by doc_id (parallel across documents, no global sort),
     * one doc_id-keyed aggregation. Output rows ≈ n_tokens/budget per
     * document.
+    *
+    * Streaming output ≡ batch output on the same documents however files
+    * split into micro-batches; the per-doc window (not a time window)
+    * keeps a streaming use inside `foreachBatch`.
     */
   def sentencePack(
       docs: DataFrame,

@@ -180,8 +180,11 @@ object Dedup {
     // unlike a limit(k+1).collect() probe, NOTHING row-shaped reaches
     // the driver on the over-threshold path (a user-raised threshold of
     // 10^7+ would otherwise make the gate itself a driver-memory hazard
-    // exactly on the inputs that must stay distributed). The count moves
-    // at most k+1 rows through one bounded shuffle, never to the driver.
+    // exactly on the inputs that must stay distributed). The count's
+    // single-partition shuffle moves up to numPartitions·(k+1) rows (each
+    // partition's local limit keeps k+1), never to the driver.
+    // `limit` takes an Int and k+1 must fit, so a threshold above
+    // Int.MaxValue - 1 skips the probe and stays distributed.
     val underBound =
       longKeyed && localMax > 0 && localMax <= Int.MaxValue - 1 &&
         edges.limit(localMax.toInt + 1).count() <= localMax

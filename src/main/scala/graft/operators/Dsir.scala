@@ -98,6 +98,11 @@ object Dsir {
     * document's bigram occurrences; `keep = 1` iff the weight is
     * positive (the document is more target-like than raw-like). A
     * document with no bigram carries zero weight.
+    *
+    * Fit offline (target corpus vs raw corpus) and applied per
+    * micro-batch, this is the "does this look like my curated data" gate
+    * made at ingest; the bounded model broadcasts to every batch at no
+    * per-batch cost.
     */
   def scoreDocs(
       docs: DataFrame,

@@ -78,6 +78,10 @@ object NbClassifier {
     * 1e-4 fixed-point `ln P(c) + Σ ln P(w2|w1,c)` of the WINNING class.
     * A document with fewer than two tokens has no transition and is
     * classified purely by prior (ties break `label ASC`).
+    *
+    * Streaming callers apply a model fit offline on a labeled reference
+    * corpus (the frozen-model rule of the TF-IDF and LM scorers), which
+    * makes the language/domain routing decision at ingest.
     */
   def predict(
       docs: DataFrame,

@@ -184,6 +184,10 @@ object Percentiles {
     * The per-key window sorts (distinct corpus values + arrival batch) —
     * batch-bounded on the arrival side and distinct-value-bounded on the
     * model side, never corpus rows.
+    *
+    * The model is the compressed per-key CDF (distinct-value table +
+    * sizes); recomputing it per micro-batch would shift every earlier
+    * decision (the frozen-cuts rule).
     */
   def scoreAgainst(
       arrivals: DataFrame,

@@ -87,6 +87,9 @@ object Repetition {
     * Scale shape: one explode → two hash aggregations, both map-side
     * partial-agg friendly; per-doc fanout = text length (the same cost
     * any per-character scan pays), alphabet-bounded after the first agg.
+    *
+    * The aggregation is per document and a document arrives whole in one
+    * micro-batch, so a streaming use needs no cross-batch state.
     */
   def charEntropy(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val log2e = 1.4426950408889634 // 1/ln(2): log2(x) = ln(x) * log2e
@@ -131,6 +134,10 @@ object Repetition {
     * occurrences; covered positions cut-explode to exactly the covered
     * token count (≤ 6 · n_tokens rows) and join token lengths on
     * (id, pos). Nothing is quadratic in document or corpus size.
+    *
+    * Every signal is a WITHIN-document property, so the per-(id, n, gram)
+    * shuffle is micro-batch-confined under streaming: no model, no
+    * cross-batch state.
     */
   def gopherRepetition(
       docs: DataFrame,

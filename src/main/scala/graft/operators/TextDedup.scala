@@ -721,6 +721,10 @@ object TextDedup {
     * documents AND line contents — no per-doc sort of all lines), one
     * doc-keyed reassembly agg. Output per doc: kept/removed counts and
     * the md5 of the ordered reassembly.
+    *
+    * The operator is per-document (no cross-doc state), so micro-batch
+    * boundaries cannot change any output row; its per-doc window (not a
+    * time window) keeps a streaming use inside `foreachBatch`.
     */
   def intraDocLineDedup(
       docs: DataFrame,
@@ -806,6 +810,10 @@ object TextDedup {
     * Scale shape: one line-keyed left join (arrival-lines × model — the
     * model side carries only high-df lines) and the per-doc reassembly
     * aggregation. Stateless given the model ⇒ replay-idempotent.
+    *
+    * The model is frozen for the same reason every scorer's is: per-batch
+    * df recounting would miss chrome whose frequency only the full corpus
+    * reveals, and would make results depend on batch arrival order.
     */
   def scrubBoilerplate(
       arrivals: DataFrame,

@@ -42,6 +42,12 @@ object TfIdf {
   /** Top-`k` terms per document under a frozen model:
     * `(id, term, tfidf, rank)`. Terms absent from the model are ignored
     * (an unseen term has no defined IDF — the standard apply-time rule).
+    *
+    * The model is fit once and never refit per micro-batch: a
+    * streaming-global TF-IDF would need stateful vocabulary counts and
+    * would change already-emitted scores retroactively, so freezing is
+    * both the scalable and the statistically honest choice (scores stay
+    * comparable across batches).
     */
   def scoreTopTerms(
       docs: DataFrame,

@@ -211,6 +211,11 @@ object Vocabulary {
     * Scale shape: one map-side posexplode, ONE vocabulary-keyed left
     * join (unhinted — vocabulary size is a user outcome), per-doc-local
     * in-order reassembly (the q79 machinery).
+    *
+    * Retraining per micro-batch would re-segment earlier documents (the
+    * frozen-cuts rule), so streaming callers apply merges trained offline;
+    * the character fallback means novel stream content never blocks on
+    * the model.
     */
   def bpeEncode(
       docs: DataFrame,
@@ -268,6 +273,11 @@ object Vocabulary {
     * encode is the [[bpeEncode]] plan keyed by `(id, seg_id)` — one
     * vocabulary-keyed left join, chunk-local reassembly. No new shuffle
     * class versus document-level encode (rows ≈ tokens either way).
+    *
+    * CDC boundaries depend only on the document's own tokens and the
+    * model is frozen, so chunk identity is stable across replays and
+    * across batches carrying edited re-crawls of the same document (the
+    * CDC shift-invariance property).
     */
   def bpeEncodeChunks(
       docs: DataFrame,
@@ -426,6 +436,9 @@ object Vocabulary {
     * unhinted — V is a user knob, not a bound we own; AQE dispatches),
     * one per-doc aggregation. The in-order reassembly is
     * `array_sort(collect_list(struct(pos, id)))` — per-doc local.
+    *
+    * Recutting the vocabulary per micro-batch would re-map ids
+    * retroactively — the frozen-cuts rule of the mixture sampler.
     */
   def encodeWithVocab(
       docs: DataFrame,

@@ -1,20 +1,43 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.Dedup
 import graft.table.WarehouseTable
+
+/** A landing-dir file stream — the one place a stage's source is built.
+  * `maxFilesPerTrigger` is the reference's "≤10 messages per poll": each
+  * micro-batch reads a bounded file list.
+  */
+final case class FileStreamSpec(
+    dir: String,
+    schema: StructType,
+    format: String = "parquet", // "parquet" | "csv" | "json" | "text"
+    options: Map[String, String] = Map.empty,
+    maxFilesPerTrigger: Int = 10) {
+
+  def read(spark: SparkSession): DataFrame =
+    spark.readStream
+      .options(options)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .schema(schema)
+      .format(format)
+      .load(dir)
+}
 
 /** Structured-Streaming face of the ingest engine — the reference's
   * poll-loop semantics (`/root/reference/spark-job/read.py:330-350`)
   * mapped onto Spark's native micro-batch machinery:
   *
-  *  - SQS "≤10 messages per poll" → file source with `maxFilesPerTrigger`
-  *    (each micro-batch reads a bounded file list, exactly the batch
-  *    amalgamation of read.py:253-274);
+  *  - SQS "≤10 messages per poll" → [[FileStreamSpec]]'s
+  *    `maxFilesPerTrigger` (each micro-batch reads a bounded file list,
+  *    exactly the batch amalgamation of read.py:253-274);
   *  - ack-after-write at-least-once → the streaming checkpoint: offsets
   *    commit only after the batch function returns, so a crash replays the
   *    batch and the keyed merge absorbs the duplicate (same idempotency
@@ -22,6 +45,12 @@ import graft.table.WarehouseTable
   *  - dedup-then-merge → `foreachBatch` runs the same [[Dedup]] +
   *    [[WarehouseTable.merge]] used by the batch path — one code path to
   *    test, two trigger mechanisms.
+  *
+  * Any batch operator runs as a stage through three combinators:
+  * [[foreachBatchStage]] (arbitrary per-batch body), [[batchStage]] (a
+  * `DataFrame => DataFrame` operator landed under `batch=<id>`) and
+  * [[appendStage]] (a streaming-safe projection into the file sink). The
+  * named `start*` stages below compose several steps per batch.
   *
   * Event-time rollups with watermarked late-data handling are provided by
   * [[windowedRollup]] (the streaming twin of q06_hourly_rollup).
@@ -34,6 +63,74 @@ object StreamingIngest {
     * semi-join fallback. Never consulted by production code.
     */
   @volatile private[graft] var lastRecomputeCollected: Option[Boolean] = None
+
+  /** Run `body` on every micro-batch of `stream` until the input present
+    * at start is drained (AvailableNow), checkpointed in `checkpointDir`.
+    * Offsets commit only after `body` returns, so a crash re-runs the
+    * batch under the SAME id — `body` must be idempotent per batch id.
+    */
+  def foreachBatchStage(stream: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(body)
+      .start()
+
+  /** `outDir/batch=<id>` — a micro-batch's own output dir. */
+  private def batchDir(outDir: String, batchId: Long): String =
+    s"$outDir/batch=$batchId"
+
+  /** Apply the batch operator `f` to every micro-batch and land its result
+    * at `outDir/batch=<id>` with `overwrite`. `f` is stateless given its
+    * frozen inputs (a model, cuts, a corpus or index fixed for the life
+    * of the stream), so a replayed batch recomputes identical rows and
+    * REWRITES its own dir instead of appending duplicates; the union of
+    * all batch dirs equals `f` over the same files whenever `f` is
+    * per-row or per-document (a document arrives whole in one batch).
+    */
+  def batchStage(stream: DataFrame, outDir: String, checkpointDir: String)(
+      f: DataFrame => DataFrame): StreamingQuery =
+    foreachBatchStage(stream, checkpointDir) { (batch, batchId) =>
+      f(batch).write.mode("overwrite").parquet(batchDir(outDir, batchId))
+    }
+
+  /** Land `stream` in the parquet file sink at `outDir`. For map-only
+    * stages (pure per-row expressions: no state, no watermark, no
+    * aggregation) replay safety is the file sink's manifest guarantee,
+    * and the union of micro-batch outputs equals the batch operator over
+    * the same files.
+    */
+  def appendStage(
+      stream: DataFrame,
+      outDir: String,
+      checkpointDir: String,
+      partitionBy: Seq[String] = Nil): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .partitionBy(partitionBy: _*)
+      .format("parquet")
+      .option("path", outDir)
+      .start()
+
+  /** One row per `idCol`: the MIN of the remaining columns as a struct.
+    * A micro-batch can span several landing files carrying the same id,
+    * and a per-row operator joined back by id would fan out n×n. Unlike
+    * dropDuplicates (which keeps an ARBITRARY row), the min-struct
+    * survivor is a pure function of the data, so a run and a checkpoint
+    * replay of the same batch keep the same row whatever the partition
+    * order.
+    */
+  private def onePerId(batch: DataFrame, idCol: String): DataFrame = {
+    val others = batch.columns.filter(_ != idCol)
+    batch
+      .groupBy(col(idCol))
+      .agg(min(struct(others.map(col).toIndexedSeq: _*)).as("_row"))
+      .select(col(idCol) +: others.map(c => col(s"_row.`$c`").as(c)).toIndexedSeq: _*)
+  }
 
   /** Start a CSV-landing-dir → warehouse merge stream.
     *
@@ -58,60 +155,46 @@ object StreamingIngest {
       tiebreakDesc: Seq[String] = Nil,
       cdcOpColumn: String = "",
       cdcDeleteValues: Seq[String] = Seq("D")): StreamingQuery = {
-    val stream = spark.readStream
-      .options(csvOptions)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .csv(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // the tiebreak keeps checkpoint replays deterministic: a ts tie
-          // within a micro-batch must pick the same winner on every attempt.
-          // In op-aware mode the op column is always part of the tiebreak —
-          // otherwise a same-order D/U tie for one key would be resolved by
-          // partition-order luck and replays could nondeterministically
-          // delete vs upsert (mirrors IngestRunner.writeCdc). With NO
-          // caller-supplied tiebreak, a residual same-order tie would
-          // still fall to partition order — a replay after a crash could
-          // then merge a DIFFERENT row than the first attempt wrote, so a
-          // content hash over the full row closes the order totally (a
-          // pure function of the data: any replay picks the same winner).
-          val contentTiebreak = "graft_row_md5"
-          val withHash = batch.withColumn(contentTiebreak,
-            md5(to_json(struct(batch.columns.map(col): _*))))
-          val tiebreak0 =
-            if (cdcOpColumn.nonEmpty && !tiebreakDesc.contains(cdcOpColumn))
-              tiebreakDesc :+ cdcOpColumn
-            else tiebreakDesc
-          val deduped = Dedup
-            .latestByKey(withHash, keys, orderDesc, tiebreak0 :+ contentTiebreak)
-            .drop(contentTiebreak)
-          val deleteWhere =
-            if (cdcOpColumn.isEmpty) None
-            else Some(col(cdcOpColumn).isin(cdcDeleteValues: _*))
-          table.merge(batch.sparkSession, deduped, keys, deleteWhere = deleteWhere)
-        }
-        ()
+    val src = FileStreamSpec(landingDir, schema, "csv", csvOptions, maxFilesPerTrigger)
+    foreachBatchStage(src.read(spark), checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty) {
+        // the tiebreak keeps checkpoint replays deterministic: a ts tie
+        // within a micro-batch must pick the same winner on every attempt.
+        // In op-aware mode the op column is always part of the tiebreak —
+        // otherwise a same-order D/U tie for one key would be resolved by
+        // partition-order luck and replays could nondeterministically
+        // delete vs upsert (mirrors IngestRunner.writeCdc). With NO
+        // caller-supplied tiebreak, a residual same-order tie would
+        // still fall to partition order — a replay after a crash could
+        // then merge a DIFFERENT row than the first attempt wrote, so a
+        // content hash over the full row closes the order totally (a
+        // pure function of the data: any replay picks the same winner).
+        val contentTiebreak = "graft_row_md5"
+        val withHash = batch.withColumn(contentTiebreak,
+          md5(to_json(struct(batch.columns.map(col): _*))))
+        val tiebreak0 =
+          if (cdcOpColumn.nonEmpty && !tiebreakDesc.contains(cdcOpColumn))
+            tiebreakDesc :+ cdcOpColumn
+          else tiebreakDesc
+        val deduped = Dedup
+          .latestByKey(withHash, keys, orderDesc, tiebreak0 :+ contentTiebreak)
+          .drop(contentTiebreak)
+        val deleteWhere =
+          if (cdcOpColumn.isEmpty) None
+          else Some(col(cdcOpColumn).isin(cdcDeleteValues: _*))
+        table.merge(batch.sparkSession, deduped, keys, deleteWhere = deleteWhere)
       }
-      .start()
+    }
   }
 
   /** Deterministic train/val/test sharding as a STREAMING stage — the
     * streaming twin of the batch samplers (q37 stratified sample, q39
     * mixture): micro-batches from a landing dir get a shard label from
     * [[graft.operators.Sampling.shard]] (a pure function of the row key)
-    * and land in `outDir` partitioned by shard.
-    *
-    * Because the shard decision carries no state and no randomness, the
-    * stage needs no aggregation, no watermark, and no custom state: a
-    * replayed micro-batch re-derives the identical labels, and the UNION
-    * of all micro-batch outputs equals the batch sampler run over the same
-    * files — asserted in `StreamingIngestSpec`. At scale this is a
-    * map-only stage appended to any ingest stream.
+    * and land in `outDir` partitioned by shard. The shard decision
+    * carries no state and no randomness, so this is an [[appendStage]];
+    * the union of all micro-batch outputs equals the batch sampler run
+    * over the same files — asserted in `StreamingIngestSpec`.
     */
   def startSampler(
       spark: SparkSession,
@@ -125,37 +208,19 @@ object StreamingIngest {
       outDir: String,
       checkpointDir: String,
       maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream
-      .withColumn("shard",
-        graft.operators.Sampling.shard(col(keyCol), cuts, defaultShard))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .partitionBy("shard")
-      .format("parquet")
-      .option("path", outDir)
-      .start()
+    val stream = FileStreamSpec(landingDir, schema, format, options,
+      maxFilesPerTrigger).read(spark)
+    appendStage(
+      stream.withColumn("shard",
+        graft.operators.Sampling.shard(col(keyCol), cuts, defaultShard)),
+      outDir, checkpointDir, partitionBy = Seq("shard"))
   }
 
   /** Benchmark decontamination as a STREAMING stage — the q42 shape
     * (GPT-3/Pile shared-n-gram filter) applied per micro-batch: every
     * arriving document is tagged `contaminated` (+ shared-gram count) by
     * joining its distinct word n-grams against a STATIC benchmark gram
-    * set. The benchmark side is fixed for the life of the stream, so the
-    * stage is stateless: no watermark, no streaming aggregation — each
-    * micro-batch runs the plain batch join inside `foreachBatch`.
-    *
-    * Replay idempotency comes from keying the output by micro-batch id
-    * (`outDir/batch=<id>`, overwrite): a batch replayed after a crash
-    * rewrites its own directory rather than appending duplicates —
-    * the same guarantee the file sink's manifest gives the sampler stage.
+    * set, fixed for the life of the stream — a [[batchStage]].
     *
     * At scale the benchmark gram set is bounded by the benchmark suite
     * (millions of grams, not corpus-sized), so the per-batch join
@@ -163,106 +228,56 @@ object StreamingIngest {
     */
   def startDecontaminator(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       benchGrams: DataFrame, // one column: gram (distinct)
       gramN: Int,
       outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val grams = batch.select(col(idCol),
-          explode(graft.functions.TextFunctions.shingles(col(textCol), gramN)).as("gram"))
-        val hits = grams.join(benchGrams, "gram")
-          .groupBy(col(idCol))
-          .agg(count(lit(1)).as("n_shared_grams"))
-        batch.join(hits, Seq(idCol), "left")
-          .withColumn("n_shared_grams", coalesce(col("n_shared_grams"), lit(0L)))
-          .withColumn("contaminated", col("n_shared_grams") > 0)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      val grams = batch.select(col(idCol),
+        explode(graft.functions.TextFunctions.shingles(col(textCol), gramN)).as("gram"))
+      val hits = grams.join(benchGrams, "gram")
+        .groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_shared_grams"))
+      batch.join(hits, Seq(idCol), "left")
+        .withColumn("n_shared_grams", coalesce(col("n_shared_grams"), lit(0L)))
+        .withColumn("contaminated", col("n_shared_grams") > 0)
+    }
 
   /** Incremental dedup as a STREAMING stage — the streaming twin of batch
-    * q47: every arriving micro-batch is classified against a STATIC
-    * corpus ([[graft.operators.TextDedup.dedupAgainstCorpus]] — exact
+    * q47: every arriving micro-batch is collapsed to one row per id
+    * ([[onePerId]] — `dedupAgainstCorpus` emits one decision per input
+    * ROW), classified against a STATIC corpus
+    * ([[graft.operators.TextDedup.dedupAgainstCorpus]] — exact
     * fingerprint + exact shingle-Jaccard) and lands with its decision
     * columns (`exact_dup`, `n_near_dups`, `keep`), so a downstream
     * consumer reads `keep = 1` for the deduplicated stream.
     *
     * The corpus side is fixed for the life of the stream (the operator's
-    * own contract: incoming-vs-corpus only), so the stage is stateless —
-    * like the decontaminator, each micro-batch runs the plain batch
-    * operator inside `foreachBatch`, and replay idempotency comes from
-    * keying the output by micro-batch id (overwrite `batch=<id>`).
-    * Refreshing the corpus index is a stream restart with a new corpus
-    * frame — the checkpoint replays nothing because processed files are
-    * committed. The corpus frame is re-evaluated every micro-batch;
-    * callers with many small batches should pass it `.cache()`d (or as a
-    * pre-shingled materialized table).
+    * own contract: incoming-vs-corpus only). Refreshing the corpus index
+    * is a stream restart with a new corpus frame — the checkpoint replays
+    * nothing because processed files are committed. The corpus frame is
+    * re-evaluated every micro-batch; callers with many small batches
+    * should pass it `.cache()`d (or as a pre-shingled materialized table).
     */
   def startIncrementalDeduper(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       corpus: DataFrame,
       outDir: String,
       checkpointDir: String,
       shingleN: Int = 3,
-      threshold: Double = 0.5,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // classify one row per id: a micro-batch can span several landing
-        // files carrying the same id, and dedupAgainstCorpus emits one
-        // decision per input ROW — joining row-level decisions back would
-        // fan out n×n for an id duplicated n times. The survivor is the
-        // MIN of the remaining columns as a struct (not dropDuplicates,
-        // which keeps an ARBITRARY row): same-id rows with different text
-        // land identically on a run and on a checkpoint replay of the
-        // same batch, whatever the partition order.
-        val others = batch.columns.filter(_ != idCol)
-        val uniq = batch
-          .groupBy(col(idCol))
-          .agg(min(struct(others.map(col).toIndexedSeq: _*)).as("_row"))
-          .select(col(idCol) +: others.map(c => col(s"_row.`$c`").as(c)).toIndexedSeq: _*)
-        val decided = graft.operators.TextDedup.dedupAgainstCorpus(
-          uniq, corpus, idCol, textCol, shingleN, threshold)
-        uniq.join(decided, Seq(idCol))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      threshold: Double = 0.5): StreamingQuery =
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      val uniq = onePerId(batch, idCol)
+      val decided = graft.operators.TextDedup.dedupAgainstCorpus(
+        uniq, corpus, idCol, textCol, shingleN, threshold)
+      uniq.join(decided, Seq(idCol))
+    }
 
   /** Bloom-prefiltered exact dedup as a STREAMING stage — q71's shape at
     * the arrival path: the corpus-fingerprint Bloom filter is built ONCE
@@ -271,217 +286,30 @@ object StreamingIngest {
     * the candidate sliver pays the verify join against the corpus
     * fingerprints. Decisions are identical to
     * [[graft.operators.TextDedup.bloomDedupAgainstCorpus]] on the same
-    * batch (asserted in the suite); the same min-struct survivor rule as
-    * [[startIncrementalDeduper]] keeps checkpoint replays deterministic.
+    * batch (asserted in the suite); the [[onePerId]] survivor rule keeps
+    * checkpoint replays deterministic.
     */
   def startBloomDeduper(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       corpus: DataFrame,
       outDir: String,
       checkpointDir: String,
       expectedCorpusDocs: Long = 1000000L,
-      fpp: Double = 0.01,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
+      fpp: Double = 0.01): StreamingQuery = {
     val corpusFp = corpus.select(graft.functions.TextFunctions
       .fingerprint(col(textCol)).as("fp")).distinct()
     val bloom = graft.operators.TextDedup.corpusFingerprintBloom(
       corpusFp, expectedCorpusDocs, fpp)
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val others = batch.columns.filter(_ != idCol)
-        val uniq = batch
-          .groupBy(col(idCol))
-          .agg(min(struct(others.map(col).toIndexedSeq: _*)).as("_row"))
-          .select(col(idCol) +: others.map(c => col(s"_row.`$c`").as(c)).toIndexedSeq: _*)
-        val decided = graft.operators.TextDedup.bloomDedupAgainstCorpus(
-          uniq, corpus, idCol, textCol, expectedCorpusDocs, fpp,
-          prebuilt = Some(bloom))
-        uniq.join(decided, Seq(idCol))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** TF-IDF scoring as a STREAMING stage — the train-offline /
-    * score-online shape: a FROZEN IDF model (fit with
-    * [[graft.operators.TfIdf.idfModel]] over the reference corpus) scores
-    * every arriving micro-batch's documents and lands their top-k terms.
-    * A streaming-global TF-IDF would need stateful vocabulary counts and
-    * would change already-emitted scores retroactively — freezing the
-    * model is both the scalable and the statistically honest choice
-    * (scores are comparable across batches because the model is fixed).
-    *
-    * Stateless per batch ⇒ replay idempotency via batch-id-keyed
-    * overwrite, like the decontaminator and incremental-dedup stages.
-    */
-  def startTfIdfScorer(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      idfModel: DataFrame, // columns: w, idf — vocabulary-sized, frozen
-      topK: Int,
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TfIdf
-          .scoreTopTerms(batch, idCol, textCol, idfModel, topK)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** Bigram-LM quality scoring as a STREAMING stage — the streaming twin
-    * of batch q53, under the same frozen-model rule as the TF-IDF scorer:
-    * the model is fit offline (or on a reference corpus) and arriving
-    * micro-batches are scored against it. A streaming-global LM would
-    * retroactively change already-emitted scores with every batch —
-    * freezing is both the scalable and the statistically honest form
-    * (CCNet scores against a REFERENCE-corpus LM, not the corpus being
-    * filtered). Unseen transitions hit the model's uniform 1/V floor.
-    * Batch-id-keyed overwrite ⇒ replay-idempotent.
-    */
-  def startLmScorer(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      model: graft.operators.BigramLm.Model, // frozen
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.BigramLm
-          .scoreDocs(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** BPE encoding as a STREAMING stage — the frozen-model apply of
-    * [[graft.operators.Vocabulary.bpeEncode]] per micro-batch: arriving
-    * documents land with their subword stream fingerprint and counts
-    * under merges trained offline (retraining per batch would re-segment
-    * earlier documents — the frozen-cuts rule). OOV words fall back to
-    * characters map-side, so novel stream content never blocks on the
-    * model. Stateless per batch ⇒ replay idempotency via batch-id-keyed
-    * overwrite.
-    */
-  def startBpeEncoder(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      model: graft.operators.Vocabulary.BpeModel, // frozen
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Vocabulary
-          .bpeEncode(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** [[startBpeEncoder]] at CHUNK granularity — arriving documents are
-    * content-defined-chunked ([[graft.operators.Chunking.cdcChunkText]])
-    * and each chunk lands with its own frozen-model subword stream
-    * ([[graft.operators.Vocabulary.bpeEncodeChunks]]), the unit the
-    * packing stages (q41/q49) consume. CDC boundaries depend only on the
-    * document's own tokens, and the model is frozen, so chunk identity is
-    * stable across replays and across batches containing edited re-crawls
-    * of the same document (the CDC shift-invariance property). Stateless
-    * per batch ⇒ replay idempotency via batch-id-keyed overwrite.
-    */
-  def startBpeChunkEncoder(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      model: graft.operators.Vocabulary.BpeModel, // frozen
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Vocabulary
-          .bpeEncodeChunks(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      val uniq = onePerId(batch, idCol)
+      val decided = graft.operators.TextDedup.bloomDedupAgainstCorpus(
+        uniq, corpus, idCol, textCol, expectedCorpusDocs, fpp,
+        prebuilt = Some(bloom))
+      uniq.join(decided, Seq(idCol))
+    }
   }
 
   /** JSONL ingest with corrupt-line quarantine as a STREAMING stage —
@@ -490,8 +318,7 @@ object StreamingIngest {
     * corrupt-capture contract as the batch reader) and each micro-batch
     * lands its good rows AND its quarantined raw lines (tag-don't-drop
     * at ingest: a malformed line neither kills the stream nor vanishes).
-    * Stateless per batch ⇒ replay idempotency via batch-id-keyed
-    * overwrite of both outputs.
+    * Both outputs are batch-id-keyed overwrites (see [[batchStage]]).
     */
   def startJsonlIngest(
       spark: SparkSession,
@@ -501,146 +328,18 @@ object StreamingIngest {
       quarantineDir: String,
       checkpointDir: String,
       maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .format("text")
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist() // two actions (good + quarantine) share one scan
-        try {
-          val (good, bad) = graft.sources.JsonlReader
-            .parseLines(batch, "value", schema)
-          good.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          bad.write.mode("overwrite")
-            .parquet(s"$quarantineDir/batch=$batchId")
-        } finally { batch.unpersist(); () }
-      }
-      .start()
-  }
-
-  /** Corpus-relative percentile scoring as a STREAMING stage — each
-    * arriving document lands with its position in the FROZEN per-key
-    * corpus distribution ([[graft.operators.Percentiles.scoreAgainst]]):
-    * the "is this doc unusually long/low-quality FOR ITS SOURCE" signal
-    * at ingest. The model is the compressed per-key CDF (distinct-value
-    * table + sizes) — recomputing it per batch would shift every earlier
-    * decision, the frozen-cuts rule. Stateless per batch ⇒ replay
-    * idempotency via batch-id-keyed overwrite.
-    */
-  def startPercentileScorer(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      keyCol: String,
-      valueCol: String,
-      model: graft.operators.Percentiles.Model, // frozen
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Percentiles
-          .scoreAgainst(batch, idCol, keyCol, valueCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** Frozen-vocabulary document encoding as a STREAMING stage — the
-    * tokenizer apply (q79) per micro-batch: arriving documents land with
-    * their id-sequence fingerprint and OOV audit under a vocabulary cut
-    * offline (recutting per batch would re-map ids retroactively — the
-    * frozen-cuts rule of the mixture sampler). Stateless per batch ⇒
-    * replay idempotency via batch-id-keyed overwrite.
-    */
-  def startVocabEncoder(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      vocab: DataFrame, // word, rank — frozen
-      vocabSize: Int,
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Vocabulary
-          .encodeWithVocab(batch, idCol, textCol, vocab, vocabSize)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** DSIR importance scoring as a STREAMING stage — the frozen-model
-    * apply of [[graft.operators.Dsir]] per micro-batch, under the same
-    * rule as the TF-IDF/LM/NB scorers: the hashed-bigram bucket model is
-    * fit offline (target corpus vs raw corpus) and every arriving
-    * document lands with its log importance weight and keep decision —
-    * the "does this look like my curated data" gate made at ingest.
-    * The model is bounded by construction (≤ numBuckets rows), so it
-    * broadcasts to every micro-batch at no per-batch cost. Stateless per
-    * batch ⇒ replay idempotency via batch-id-keyed overwrite.
-    */
-  def startDsirScorer(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      model: graft.operators.Dsir.Model, // frozen
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dsir
-          .scoreDocs(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    val lines = FileStreamSpec(landingDir,
+      StructType(Seq(StructField("value", StringType))), "text",
+      maxFilesPerTrigger = maxFilesPerTrigger)
+    foreachBatchStage(lines.read(spark), checkpointDir) { (batch, batchId) =>
+      batch.persist() // two actions (good + quarantine) share one scan
+      try {
+        val (good, bad) = graft.sources.JsonlReader
+          .parseLines(batch, "value", schema)
+        good.write.mode("overwrite").parquet(batchDir(outDir, batchId))
+        bad.write.mode("overwrite").parquet(batchDir(quarantineDir, batchId))
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** Incremental chunk-level dedup as a STREAMING stage — what
@@ -651,246 +350,47 @@ object StreamingIngest {
     * chunk granularity). A chunk is kept iff its content is new to the
     * corpus or this (doc, seg) is the index's recorded first occurrence,
     * so replaying the corpus through its own frozen index reproduces the
-    * batch q59 decisions exactly. Stateless per batch (the index is
-    * frozen; refresh = stream restart, like the incremental doc deduper)
-    * ⇒ replay idempotency via batch-id-keyed overwrite.
+    * batch q59 decisions exactly. The index is frozen (refresh = stream
+    * restart, like the incremental doc deduper).
     */
   def startChunkDeduper(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       chunkIndex: DataFrame, // seg_md5, first_doc, first_seg — frozen
       outDir: String,
       checkpointDir: String,
       k: Int = 3,
-      boundaryHexPrefix: String = "0",
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val chunks = graft.operators.Chunking
-          .cdcChunks(batch, idCol, textCol, k, boundaryHexPrefix)
-        graft.operators.Chunking
-          .chunkDedupAudit(chunks, idCol, chunkIndex)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      boundaryHexPrefix: String = "0"): StreamingQuery =
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      val chunks = graft.operators.Chunking
+        .cdcChunks(batch, idCol, textCol, k, boundaryHexPrefix)
+      graft.operators.Chunking.chunkDedupAudit(chunks, idCol, chunkIndex)
+    }
 
   /** At-rest BM25 index maintenance as a STREAMING stage — the arrival
     * path of [[graft.operators.Bm25.indexAtRest]]: every micro-batch of
     * NEW documents is committed into the term-partitioned inverted index
     * via [[graft.operators.Bm25.indexCommit]], so a retrieval query
-    * issued after any batch sees everything ingested so far. Unlike the
-    * scorer stages this one's idempotency does NOT need the batch-id-
-    * keyed output convention: the commit itself is replay-idempotent
-    * (keyed MERGE on (term, doc_id) + recompute-from-state subtotals), so
-    * a checkpoint replay of a batch is a byte-identical no-op. Same-id
-    * rows within one batch collapse by the min-struct survivor rule
-    * ([[startIncrementalDeduper]]) before fitting, so token counts can't
-    * double under landing-file duplication.
+    * issued after any batch sees everything ingested so far. The commit
+    * itself is replay-idempotent (keyed MERGE on (term, doc_id) +
+    * recompute-from-state subtotals), so a checkpoint replay of a batch
+    * is a byte-identical no-op. Same-id rows within one batch collapse
+    * by [[onePerId]] before fitting, so token counts can't double under
+    * landing-file duplication.
     */
   def startBm25Indexer(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       table: graft.table.WarehouseTable,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val others = batch.columns.filter(_ != idCol)
-        val uniq = batch
-          .groupBy(col(idCol))
-          .agg(min(struct(others.map(col).toIndexedSeq: _*)).as("_row"))
-          .select(col(idCol) +: others.map(c => col(s"_row.`$c`").as(c)).toIndexedSeq: _*)
-        graft.operators.Bm25.indexCommit(spark, uniq, idCol, textCol, table)
-        ()
-      }
-      .start()
-  }
-
-  /** Naive-Bayes classification as a STREAMING stage — the frozen-model
-    * apply of [[graft.operators.NbClassifier]] per micro-batch, under the
-    * same rule as the TF-IDF and LM scorers: the per-class bigram model
-    * is fit offline on a labeled reference corpus and every arriving
-    * document lands with its argmax class (the language/domain routing
-    * decision made at ingest). Stateless per batch ⇒ replay idempotency
-    * via batch-id-keyed overwrite.
-    */
-  def startNbClassifier(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      model: graft.operators.NbClassifier.Model, // frozen
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.NbClassifier
-          .predict(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** Character-entropy quality scoring as a STREAMING stage — batch q55
-    * per micro-batch: each arriving document lands with its bits/char
-    * score (the gibberish/binary-junk gate run at ingest, before junk
-    * reaches the corpus). The per-document aggregation is confined to the
-    * micro-batch (a doc arrives whole), so the stage needs no cross-batch
-    * state; batch-id-keyed overwrite output makes checkpoint replays
-    * rewrite, not duplicate (same idempotency rule as the other
-    * foreachBatch stages).
-    */
-  def startEntropyScorer(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Repetition
-          .charEntropy(batch, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** Gopher repetition scoring as a STREAMING stage — the full Rae et al.
-    * A1 n-gram table (q111) per micro-batch: every signal is a
-    * WITHIN-document property (top n-gram fractions, dup-span union
-    * coverage), so the stage needs no model and no cross-batch state —
-    * the per-(id, n, gram) shuffle is batch-confined. Arriving documents
-    * land with the 9-column repetition profile the quality gate reads;
-    * batch-id-keyed overwrite keeps replays idempotent.
-    */
-  def startRepetitionScorer(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Repetition
-          .gopherRepetition(batch, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** C4 line-rule cleanup as a STREAMING stage — the q113 rule set per
-    * micro-batch: every arriving page lands with its per-line keep
-    * decisions applied (clean text + audit counts + page-kill flags).
-    * Like the repetition scorer, every rule is a within-document
-    * predicate — no model, no state, pure map-side; batch-id-keyed
-    * overwrite keeps replays idempotent. Clean-at-ingest ordering: raw
-    * chrome never reaches downstream consumers.
-    */
-  def startC4Scrubber(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      checkpointDir: String,
-      minWords: Int = 5,
-      minSentences: Int = 3,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.C4Rules
-          .clean(batch, idCol, textCol, minWords, minSentences)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    foreachBatchStage(src.read(spark), checkpointDir) { (batch, _) =>
+      graft.operators.Bm25.indexCommit(
+        spark, onePerId(batch, idCol), idCol, textCol, table)
+    }
 
   /** Snapshot-diff classification as a STREAMING stage — the incremental
     * face of batch q65: every arriving document is classified `added` /
@@ -898,47 +398,28 @@ object StreamingIngest {
     * fingerprints. `removed` is deliberately absent: absence is a
     * whole-snapshot property, undecidable from any single micro-batch —
     * the batch q65 run over the full new snapshot owns it. The baseline
-    * is fixed for the stream's life (the frozen-model rule the TF-IDF and
-    * LM scorers follow), so the stage is stateless; batch-id-keyed
-    * overwrite output keeps replays idempotent.
+    * is fixed for the stream's life (the frozen-model rule).
     */
   def startDiffClassifier(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       baseline: DataFrame, // the old snapshot (idCol, textCol)
       outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val base = baseline.select(
       col(idCol).as("__id"), md5(col(textCol)).as("fp_old"))
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .withColumn("fp_new", md5(col(textCol)))
-          .join(base, col(idCol) === col("__id"), "left")
-          .withColumn("status",
-            when(col("fp_old").isNull, lit("added"))
-              .when(col("fp_old") === col("fp_new"), lit("unchanged"))
-              .otherwise(lit("changed")))
-          .drop("__id")
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      batch
+        .withColumn("fp_new", md5(col(textCol)))
+        .join(base, col(idCol) === col("__id"), "left")
+        .withColumn("status",
+          when(col("fp_old").isNull, lit("added"))
+            .when(col("fp_old") === col("fp_new"), lit("unchanged"))
+            .otherwise(lit("changed")))
+        .drop("__id")
+    }
   }
 
   /** Temperature-mixture sampling as a STREAMING stage — batch q60 under
@@ -952,17 +433,14 @@ object StreamingIngest {
     */
   def startMixtureSampler(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       stratumCol: String,
       keyCol: String,
       cuts: Map[String, Int], // stratum -> 256-bucket cut (frozen)
       outDir: String,
       checkpointDir: String,
-      defaultCut: Int = 0, // strata ABSENT from cuts: 0 = drop, 256 = keep all
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
+      // strata ABSENT from cuts: 0 = drop, 256 = keep all
+      defaultCut: Int = 0): StreamingQuery = {
     require(cuts.nonEmpty && cuts.values.forall(c => c >= 0 && c <= 256),
       "cuts must be 256-bucket values")
     require(defaultCut >= 0 && defaultCut <= 256,
@@ -988,33 +466,15 @@ object StreamingIngest {
       cuts.keys.map(s => col(stratumCol) === s).reduce(_ || _), lit(false))
     val unlisted = !inCuts && hash < lit(cutHex(defaultCut))
     val keep = coalesce(listed, lit(false)) || unlisted
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream
-      .filter(keep)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", outDir)
-      .start()
+    appendStage(src.read(spark).filter(keep), outDir, checkpointDir)
   }
 
   /** PII scrubbing as a STREAMING stage — the streaming twin of batch q43:
     * every arriving document is redacted ([[graft.operators.PiiRedaction]]
-    * regexp_replace chain) and lands with its per-class audit counts.
-    *
-    * Like the sampler, the stage is a pure per-row function — no state, no
-    * watermark, no aggregation — so replay safety is exactly the file
-    * sink's manifest guarantee, and the union of micro-batch outputs
-    * equals the batch scrub over the same files (asserted in
-    * `StreamingIngestSpec`). Scrub-then-land also gives the right privacy
-    * ordering at scale: raw text never reaches the warehouse.
+    * regexp_replace chain) and lands with its per-class audit counts — an
+    * [[appendStage]], asserted equal to the batch scrub over the same
+    * files in `StreamingIngestSpec`. Scrub-then-land also gives the right
+    * privacy ordering at scale: raw text never reaches the warehouse.
     */
   def startScrubber(
       spark: SparkSession,
@@ -1028,23 +488,14 @@ object StreamingIngest {
       classes: Seq[graft.operators.PiiRedaction.PiiClass] =
         graft.operators.PiiRedaction.defaultClasses,
       maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    graft.operators.PiiRedaction.scrub(stream, textCol, classes)
-      // the scrubbed text REPLACES the raw column: downstream consumers of
-      // the landed data cannot accidentally read unredacted text
-      .withColumn(textCol, col("redacted")).drop("redacted")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", outDir)
-      .start()
+    val stream = FileStreamSpec(landingDir, schema, format, options,
+      maxFilesPerTrigger).read(spark)
+    appendStage(
+      graft.operators.PiiRedaction.scrub(stream, textCol, classes)
+        // the scrubbed text REPLACES the raw column: downstream consumers of
+        // the landed data cannot accidentally read unredacted text
+        .withColumn(textCol, col("redacted")).drop("redacted"),
+      outDir, checkpointDir)
   }
 
   /** Near-dup CLUSTER MAINTENANCE as a STREAMING stage — the full q106
@@ -1064,10 +515,7 @@ object StreamingIngest {
     */
   def startClusterMaintainer(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       corpus: DataFrame, // frozen
@@ -1075,48 +523,27 @@ object StreamingIngest {
       outDir: String,
       checkpointDir: String,
       shingleN: Int = 3,
-      threshold: Double = 0.5,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{Dedup, TextDedup}
-        // min-struct survivor per id — the startIncrementalDeduper rule:
-        // replay-deterministic whatever the partition order
-        val others = batch.columns.filter(_ != idCol)
-        val uniq = batch
-          .groupBy(col(idCol))
-          .agg(min(struct(others.map(col).toIndexedSeq: _*)).as("_row"))
-          .select(col(idCol) +: others.map(c => col(s"_row.`$c`").as(c)).toIndexedSeq: _*)
-        // uniq is consumed by 3 subplans; deliberately NOT checkpointed —
-        // a localCheckpoint per micro-batch pins RDD blocks the stream
-        // never frees, and re-evaluating a micro-batch-sized aggregate is
-        // cheaper than leaking storage on a long-running maintainer
-        val sh = TextDedup.shingled(uniq, idCol, textCol, shingleN)
-        val within = TextDedup.verifyPairs(
-          TextDedup.minHashCandidates(sh), sh, threshold)
-        val cross = TextDedup.crossPairsAgainstCorpus(
-          uniq, corpus, idCol, textCol, shingleN, threshold)
-        val edges = within.select(col("d1"), col("d2"))
-          .unionByName(cross.select(col("d1"), col("d2")))
-        Dedup.componentsCommit(
-          spark, uniq.select(col(idCol).as("id")), edges, table)
-        val audit = uniq.agg(count(lit(1)).as("n_arrivals"))
-          .crossJoin(within.agg(count(lit(1)).as("n_within_edges")))
-          .crossJoin(cross.agg(count(lit(1)).as("n_cross_edges")))
-        audit.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      threshold: Double = 0.5): StreamingQuery =
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      import graft.operators.TextDedup
+      val uniq = onePerId(batch, idCol)
+      // uniq is consumed by 3 subplans; deliberately NOT checkpointed —
+      // a localCheckpoint per micro-batch pins RDD blocks the stream
+      // never frees, and re-evaluating a micro-batch-sized aggregate is
+      // cheaper than leaking storage on a long-running maintainer
+      val sh = TextDedup.shingled(uniq, idCol, textCol, shingleN)
+      val within = TextDedup.verifyPairs(
+        TextDedup.minHashCandidates(sh), sh, threshold)
+      val cross = TextDedup.crossPairsAgainstCorpus(
+        uniq, corpus, idCol, textCol, shingleN, threshold)
+      val edges = within.select(col("d1"), col("d2"))
+        .unionByName(cross.select(col("d1"), col("d2")))
+      Dedup.componentsCommit(
+        spark, uniq.select(col(idCol).as("id")), edges, table)
+      uniq.agg(count(lit(1)).as("n_arrivals"))
+        .crossJoin(within.agg(count(lit(1)).as("n_within_edges")))
+        .crossJoin(cross.agg(count(lit(1)).as("n_cross_edges")))
+    }
 
   /** END-TO-END streaming corpus dedup — the whole pipeline the last
     * three stages rehearse, composed: per micro-batch, arrivals UPSERT
@@ -1134,16 +561,12 @@ object StreamingIngest {
     * spec replays the whole stream and diffs nothing). The corpus-side
     * mining here re-shingles the stored corpus per batch — fine at
     * demo scale; at 100 TB the same loop runs against the at-rest
-    * minhash index ([[graft.operators.TextDedup.minhashLookupAtRest]] +
-    * `minhashIndexCommit` on accepted survivors), which is this exact
+    * minhash index ([[startIndexedCorpusDeduper]]), which is this exact
     * plumbing with pruned-partition probes instead of a corpus scan.
     */
   def startCorpusDeduper(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       corpusTable: graft.table.WarehouseTable,
@@ -1151,43 +574,23 @@ object StreamingIngest {
       outDir: String,
       checkpointDir: String,
       shingleN: Int = 3,
-      threshold: Double = 0.5,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{Dedup, TextDedup}
-        val others = batch.columns.filter(_ != idCol)
-        val uniq = batch
-          .groupBy(col(idCol))
-          .agg(min(struct(others.map(col).toIndexedSeq: _*)).as("_row"))
-          .select(col(idCol) +: others.map(c => col(s"_row.`$c`").as(c)).toIndexedSeq: _*)
-        corpusTable.merge(spark, uniq, Seq(idCol))
-        val corpus = corpusTable.read(spark)
-          .select(col(idCol), col(textCol))
-        val edges = TextDedup.crossPairsAgainstCorpus(
-          uniq, corpus, idCol, textCol, shingleN, threshold)
-          .filter(col("d1") =!= col("d2"))
-        Dedup.componentsCommit(
-          spark, uniq.select(col(idCol).as("id")),
-          edges.select(col("d1"), col("d2")), clusterTable)
-        Dedup.keepOneMaterialize(
-          spark, corpusTable, clusterTable.read(spark), idCol)
-        uniq.agg(count(lit(1)).as("n_arrivals"))
-          .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      threshold: Double = 0.5): StreamingQuery =
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      val uniq = onePerId(batch, idCol)
+      corpusTable.merge(spark, uniq, Seq(idCol))
+      val corpus = corpusTable.read(spark)
+        .select(col(idCol), col(textCol))
+      val edges = graft.operators.TextDedup.crossPairsAgainstCorpus(
+        uniq, corpus, idCol, textCol, shingleN, threshold)
+        .filter(col("d1") =!= col("d2"))
+      Dedup.componentsCommit(
+        spark, uniq.select(col(idCol).as("id")),
+        edges.select(col("d1"), col("d2")), clusterTable)
+      Dedup.keepOneMaterialize(
+        spark, corpusTable, clusterTable.read(spark), idCol)
+      uniq.agg(count(lit(1)).as("n_arrivals"))
+        .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
+    }
 
   /** The INDEXED streaming corpus deduper — [[startCorpusDeduper]]'s
     * 100 TB form: identical per-batch semantics (upsert → mine → fold →
@@ -1196,7 +599,7 @@ object StreamingIngest {
     * ([[graft.operators.TextDedup.minhashLookupAtRest]]) instead of
     * re-shingling the stored corpus. Per micro-batch:
     *
-    *  1. arrivals collapse to one row per id (min-struct — the q04 rule);
+    *  1. arrivals collapse to one row per id ([[onePerId]]);
     *  2. [[graft.operators.TextDedup.minhashIndexCommit]] MERGEs their
     *     band hashes into the `pb`-partitioned index and their rows into
     *     the corpus table (keyed upserts — replay re-writes identical
@@ -1228,10 +631,7 @@ object StreamingIngest {
     */
   def startIndexedCorpusDeduper(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       indexTable: graft.table.WarehouseTable,
@@ -1244,97 +644,40 @@ object StreamingIngest {
       shingleN: Int = 3,
       partBuckets: Int = 8,
       threshold: Double = 0.5,
-      minRecallJaccard: Double = 0.75,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{Dedup, TextDedup}
-        val others = batch.columns.filter(_ != idCol)
-        val uniq = batch
-          .groupBy(col(idCol))
-          .agg(min(struct(others.map(col).toIndexedSeq: _*)).as("_row"))
-          .select(col(idCol) +: others.map(c => col(s"_row.`$c`").as(c)).toIndexedSeq: _*)
-        if (!indexTable.exists)
-          // bootstrap an EMPTY index (schema + banding properties only);
-          // the commit below folds the first batch in through the same
-          // keyed path every later batch uses
-          TextDedup.minhashIndexAtRest(uniq.limit(0), idCol, textCol,
-            indexTable, bands, rows, shingleN, partBuckets)
-        TextDedup.minhashIndexCommit(
-          spark, uniq, idCol, textCol, indexTable, corpusTable)
-        val arrivals = uniq.select(
-          col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
-        val corpus = corpusTable.read(spark).select(col("doc_id"), col("text"))
-        val edges = TextDedup.minhashLookupAtRest(
-          spark, arrivals, corpus, "doc_id", "text", indexTable,
-          bands, rows, shingleN, partBuckets, threshold, minRecallJaccard)
-          .select(col("d1"), col("d2"))
-        Dedup.componentsCommit(
-          spark, arrivals.select(col("doc_id").as("id")), edges, clusterTable)
-        val assignment = clusterTable.read(spark)
-        Dedup.keepOneMaterialize(spark, corpusTable, assignment, "doc_id")
-        // index hygiene: a deleted doc's band hashes leave with it, so
-        // later probes never surface dead candidates
-        val dupIds = assignment.filter(col("id") =!= col("cluster"))
-          .select(col("id").as("doc_id"))
-        val deadIdx = indexTable.read(spark)
-          .join(dupIds, Seq("doc_id"), "left_semi")
-        indexTable.merge(spark, deadIdx, Seq("doc_id", "band"),
-          deleteWhere = Some(lit(true)))
-        arrivals.agg(count(lit(1)).as("n_arrivals"))
-          .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** Incremental rollup maintenance as a STREAMING stage — each
-    * micro-batch folds into the at-rest aggregate table via
-    * [[graft.operators.IncrementalRollup.commit]] under the per-row
-    * `last_batch` guard, so the non-idempotent "add the counts" fold is
-    * EXACTLY-ONCE across checkpoint replays (guard and delta commit in
-    * one snapshot — see the operator docs). `prepare` maps the raw batch
-    * to keys + measure columns (a projection, run inside the batch).
-    */
-  def startRollupMaintainer(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      prepare: DataFrame => DataFrame,
-      keys: Seq[String],
-      merges: Map[String, String],
-      table: graft.table.WarehouseTable,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.IncrementalRollup.commit(
-          spark, prepare(batch), keys, merges, table, batchId)
-        ()
-      }
-      .start()
-  }
+      minRecallJaccard: Double = 0.75): StreamingQuery =
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      import graft.operators.TextDedup
+      val uniq = onePerId(batch, idCol)
+      if (!indexTable.exists)
+        // bootstrap an EMPTY index (schema + banding properties only);
+        // the commit below folds the first batch in through the same
+        // keyed path every later batch uses
+        TextDedup.minhashIndexAtRest(uniq.limit(0), idCol, textCol,
+          indexTable, bands, rows, shingleN, partBuckets)
+      TextDedup.minhashIndexCommit(
+        spark, uniq, idCol, textCol, indexTable, corpusTable)
+      val arrivals = uniq.select(
+        col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+      val corpus = corpusTable.read(spark).select(col("doc_id"), col("text"))
+      val edges = TextDedup.minhashLookupAtRest(
+        spark, arrivals, corpus, "doc_id", "text", indexTable,
+        bands, rows, shingleN, partBuckets, threshold, minRecallJaccard)
+        .select(col("d1"), col("d2"))
+      Dedup.componentsCommit(
+        spark, arrivals.select(col("doc_id").as("id")), edges, clusterTable)
+      val assignment = clusterTable.read(spark)
+      Dedup.keepOneMaterialize(spark, corpusTable, assignment, "doc_id")
+      // index hygiene: a deleted doc's band hashes leave with it, so
+      // later probes never surface dead candidates
+      val dupIds = assignment.filter(col("id") =!= col("cluster"))
+        .select(col("id").as("doc_id"))
+      val deadIdx = indexTable.read(spark)
+        .join(dupIds, Seq("doc_id"), "left_semi")
+      indexTable.merge(spark, deadIdx, Seq("doc_id", "band"),
+        deleteWhere = Some(lit(true)))
+      arrivals.agg(count(lit(1)).as("n_arrivals"))
+        .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
+    }
 
   /** Range-join probing as a STREAMING stage — the q121 at-rest interval
     * index serving a live point stream: each micro-batch of events
@@ -1353,115 +696,20 @@ object StreamingIngest {
     */
   def startWindowProber(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       pointCol: String,
       toIntervals: DataFrame => DataFrame,
       indexTable: graft.table.WarehouseTable,
       outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.RangeIndex
-        RangeIndex.indexCommit(spark, toIntervals(batch), indexTable)
-        RangeIndex.lookupAtRest(spark, batch, pointCol, indexTable)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      import graft.operators.RangeIndex
+      RangeIndex.indexCommit(spark, toIntervals(batch), indexTable)
+      RangeIndex.lookupAtRest(spark, batch, pointCol, indexTable)
+    }
 
-  /** Intra-document line dedup as a STREAMING stage — q124's
-    * [[graft.operators.TextDedup.intraDocLineDedup]] per micro-batch.
-    * The operator is PER-DOCUMENT (one window keyed doc+line-content, no
-    * cross-doc state), so batch boundaries cannot change any output row;
-    * the per-doc window keeps it in `foreachBatch` (non-time windows
-    * aren't allowed in a continuous plan); stateless ⇒ the batch-id-keyed
-    * overwrite is replay-idempotent.
-    */
-  def startIntraDocScrubber(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextDedup
-          .intraDocLineDedup(batch, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** Clustered-layout ingestion as a STREAMING stage — q123's
-    * [[graft.table.WarehouseTable.clusterAppend]] per micro-batch:
-    * arrivals route through the table's FROZEN cluster cuts (range or
-    * z — whatever the base persisted) into bucket-split dirs, so the
-    * stats-pruned selectivity that made the base layout worth building
-    * survives CONTINUOUS ingestion, not just one-shot appends. An
-    * optional `prepare` maps the raw batch into the table's schema.
-    * Replay safety comes from the batch-id-keyed append itself: a
-    * replayed micro-batch REPLACES its own earlier dirs in one snapshot
-    * commit (dir-granular keying), so a fresh-checkpoint rerun
-    * converges to the identical table instead of doubling rows.
-    */
-  def startClusteredWriter(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      prepare: DataFrame => DataFrame,
-      table: graft.table.WarehouseTable,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        table.clusterAppend(spark, prepare(batch), Some(batchId))
-        ()
-      }
-      .start()
-  }
-
-  /** Interval-OVERLAP probing as a STREAMING stage (37th) — the q127
-    * at-rest probe under the stage-31 as-of-arrival discipline: each
+  /** Interval-OVERLAP probing as a STREAMING stage — the q127 at-rest
+    * probe under [[startWindowProber]]'s as-of-arrival discipline: each
     * micro-batch of INTERVALS (e.g. freshly closed sessions) first
     * COMMITS itself into the index (keyed MERGE, replay-idempotent),
     * then overlap-probes ONLY the partitions its own cells touch
@@ -1474,37 +722,19 @@ object StreamingIngest {
     */
   def startOverlapProber(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       qStartCol: String,
       qEndCol: String,
       toStored: DataFrame => DataFrame,
       indexTable: graft.table.WarehouseTable,
       outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.RangeIndex
-        RangeIndex.indexCommit(spark, toStored(batch), indexTable)
-        RangeIndex.overlapLookupAtRest(
-            spark, batch, qStartCol, qEndCol, indexTable)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      import graft.operators.RangeIndex
+      RangeIndex.indexCommit(spark, toStored(batch), indexTable)
+      RangeIndex.overlapLookupAtRest(
+        spark, batch, qStartCol, qEndCol, indexTable)
+    }
 
   /** Ingest contracts as a STREAMING stage — the q137 expectation layer
     * ([[graft.operators.Contracts.tag]]) run per micro-batch at the
@@ -1512,45 +742,27 @@ object StreamingIngest {
     * rows land under `out/clean/`, violating rows under
     * `out/quarantine/` WITH their tags (tag-don't-drop — quarantine is
     * reviewable, reprocessable, and auditable). Row rules are pure
-    * map-side predicates, so the stage is stateless and the
-    * batch-id-keyed overwrite replays idempotently. Corpus-level rules
-    * (uniqueness) deliberately stay batch-scoped here: a cross-batch
-    * unique check is the at-rest dedup family's job (stages 26/27), not
-    * a row gate's.
+    * map-side predicates, so both outputs are batch-id-keyed overwrites
+    * (see [[batchStage]]). Corpus-level rules (uniqueness) deliberately
+    * stay batch-scoped here: a cross-batch unique check is the at-rest
+    * dedup family's job, not a row gate's.
     */
   def startContractsGate(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       rules: Seq[graft.operators.Contracts.Rule],
       outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tagged = graft.operators.Contracts.tag(batch, rules)
-          .localCheckpoint() // one evaluation feeds both sinks
-        tagged.filter(org.apache.spark.sql.functions.col("clean"))
-          .drop("violations", "clean")
-          .write.mode("overwrite").parquet(s"$outDir/clean/batch=$batchId")
-        tagged.filter(!org.apache.spark.sql.functions.col("clean"))
-          .drop("clean")
-          .write.mode("overwrite").parquet(s"$outDir/quarantine/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    foreachBatchStage(src.read(spark), checkpointDir) { (batch, batchId) =>
+      val tagged = graft.operators.Contracts.tag(batch, rules)
+        .localCheckpoint() // one evaluation feeds both sinks
+      tagged.filter(col("clean"))
+        .drop("violations", "clean")
+        .write.mode("overwrite").parquet(batchDir(s"$outDir/clean", batchId))
+      tagged.filter(!col("clean"))
+        .drop("clean")
+        .write.mode("overwrite").parquet(batchDir(s"$outDir/quarantine", batchId))
+    }
 
   /** Drift monitoring as a STREAMING stage — each micro-batch's signal
     * distribution compared against the FROZEN reference bucket model
@@ -1559,41 +771,22 @@ object StreamingIngest {
     * reference is frozen at start (recomputing it per batch would make
     * earlier alarms retroactively wrong — the q60 frozen-cuts argument);
     * refreshing it is [[graft.operators.IncrementalRollup]]'s job (the
-    * q141 at-rest composition). Stateless against the frozen model ⇒
-    * batch-id-keyed overwrite replays idempotently.
+    * q141 at-rest composition).
     */
   def startDriftMonitor(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       reference: DataFrame,
       keyCols: Seq[String],
       valueCol: String,
       bits: Int,
       outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
+    import graft.operators.Drift
     val ref = reference.localCheckpoint() // frozen once, reused per batch
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.Drift
-        Drift.tvd(ref,
-            Drift.bucketCounts(batch, keyCols, valueCol, bits), keyCols)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    batchStage(src.read(spark), outDir, checkpointDir) { batch =>
+      Drift.tvd(ref, Drift.bucketCounts(batch, keyCols, valueCol, bits), keyCols)
+    }
   }
 
   /** Markup scrubbing as a STREAMING stage — the q119 extraction
@@ -1602,196 +795,65 @@ object StreamingIngest {
     * ingest, so everything downstream of the landing zone sees rendered
     * text, never crawl markup. The raw text is REPLACED by its clean
     * form; `n_tags`/`n_chars_raw` ride along as the markup-density audit
-    * (tag-don't-drop). Pure map-side scalar expressions ⇒ plain append
-    * sink; checkpoint replay rewrites identical rows.
+    * (tag-don't-drop). Pure map-side scalar expressions ⇒ [[appendStage]].
     */
   def startMarkupScrubber(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       textCol: String,
       outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream
-      .withColumn("n_tags",
-        graft.operators.Normalize.markupTagCount(col(textCol)))
-      .withColumn("n_chars_raw", length(col(textCol)).cast("long"))
-      .withColumn(textCol,
-        graft.operators.Normalize.cleanMarkup(col(textCol)))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", outDir)
-      .start()
-  }
-
-  /** Sentence-boundary packing as a STREAMING stage — q116's
-    * [[graft.operators.Chunking.sentencePack]] per micro-batch. Packing
-    * is PER-DOCUMENT (one window partitioned by doc id, no cross-doc
-    * state), so batch boundaries cannot change any chunk: streaming
-    * output ≡ batch output on the same documents regardless of how files
-    * split into micro-batches. The per-doc window keeps this in
-    * `foreachBatch` (windows over non-time columns aren't allowed in a
-    * continuous plan); stateless given the budget ⇒ the batch-id-keyed
-    * overwrite is replay-idempotent.
-    */
-  def startSentencePacker(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      checkpointDir: String,
-      budget: Long = 16L,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Chunking
-          .sentencePack(batch, idCol, textCol, budget)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** Boilerplate-line scrubbing as a STREAMING stage — the q103 filter
-    * under a FROZEN line set ([[graft.operators.TextDedup.boilerplateModel]]
-    * built offline over the corpus): arriving documents shed every line
-    * the corpus proved to be chrome, and land with their clean text plus
-    * the removed-line audit count. The model is frozen for the same
-    * reason every scorer's is — per-batch df recounting would miss
-    * chrome whose frequency only the full corpus reveals, and would make
-    * replay results depend on batch arrival order. Stateless given the
-    * model ⇒ batch-id-keyed overwrite is replay-idempotent.
-    */
-  def startBoilerplateScrubber(
-      spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
-      idCol: String,
-      textCol: String,
-      model: DataFrame, // frozen boilerplate line set
-      outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextDedup
-          .scrubBoilerplate(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    appendStage(
+      src.read(spark)
+        .withColumn("n_tags",
+          graft.operators.Normalize.markupTagCount(col(textCol)))
+        .withColumn("n_chars_raw", length(col(textCol)).cast("long"))
+        .withColumn(textCol,
+          graft.operators.Normalize.cleanMarkup(col(textCol))),
+      outDir, checkpointDir)
 
   /** Text canonicalization as a STREAMING stage — the q56 batch pass
     * (casefold / punctuation-strip / whitespace-collapse) applied to each
     * arriving document before it lands, so every downstream consumer (the
     * deduper, the scorers) reads the canonical form by construction.
-    * Pure per-row scalar expressions: stateless, codegen'd, replay safety
-    * is the file-sink manifest guarantee. The raw text is REPLACED (same
-    * rule as the scrubber) and the pre-normalization length lands as an
-    * audit column — the shrinkage ratio is a junk signal at zero cost.
+    * Pure per-row scalar expressions ⇒ [[appendStage]]. The raw text is
+    * REPLACED (same rule as the scrubber) and the pre-normalization
+    * length lands as an audit column — the shrinkage ratio is a junk
+    * signal at zero cost.
     */
   def startNormalizer(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       textCol: String,
       outDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream
-      .withColumn("n_raw", length(col(textCol)).cast("long"))
-      .withColumn(textCol, graft.operators.Normalize.normalize(col(textCol)))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", outDir)
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    appendStage(
+      src.read(spark)
+        .withColumn("n_raw", length(col(textCol)).cast("long"))
+        .withColumn(textCol, graft.operators.Normalize.normalize(col(textCol))),
+      outDir, checkpointDir)
 
   /** Content-defined chunking as a STREAMING stage — the q58 batch shape
     * per micro-batch: each arriving document is cut at rolling-hash
     * boundaries and lands as chunk rows `(id, seg_id, n_seg_tokens,
     * seg_md5)`. The boundary rule depends only on the local k-gram, so a
     * document chunks identically whether it arrives in one batch or is
-    * replayed — no state, no watermark; chunk-level dedup downstream can
+    * replayed — an [[appendStage]]; chunk-level dedup downstream can
     * treat the landed chunks as a plain append-only table.
     */
   def startChunker(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       textCol: String,
       outDir: String,
       checkpointDir: String,
       k: Int = 3,
-      boundaryHexPrefix: String = "0",
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    graft.operators.Chunking
-      .cdcChunks(stream, idCol, textCol, k, boundaryHexPrefix)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", outDir)
-      .start()
-  }
+      boundaryHexPrefix: String = "0"): StreamingQuery =
+    appendStage(
+      graft.operators.Chunking
+        .cdcChunks(src.read(spark), idCol, textCol, k, boundaryHexPrefix),
+      outDir, checkpointDir)
 
   /** One funnel-relevant event: `step` is the 0-based index the event's
     * type resolved to (the caller maps type → index before grouping —
@@ -1990,8 +1052,8 @@ object StreamingIngest {
         col("event_type"), col("n"), col("sum_value"))
   }
 
-  /** STREAMING RIGHT-TO-BE-FORGOTTEN (39th stage) — deletion requests
-    * arrive as a stream of subject ids and each micro-batch runs the
+  /** STREAMING RIGHT-TO-BE-FORGOTTEN — deletion requests arrive as a
+    * stream of subject ids and each micro-batch runs the
     * [[graft.pipeline.Forget]] cascade across the corpus table and every
     * derived artifact, then writes the per-table audit receipt under
     * `batch=<id>`. The live form of q138: a deletion-request queue is
@@ -2016,50 +1078,106 @@ object StreamingIngest {
     */
   def startForgetter(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       idCol: String,
       targets: Seq[graft.pipeline.Forget.Target],
       auditDir: String,
+      checkpointDir: String): StreamingQuery =
+    foreachBatchStage(src.read(spark), checkpointDir) { (batch, batchId) =>
+      val ids = batch.select(col(idCol)).distinct()
+      val counts = graft.pipeline.Forget.forget(spark, ids, targets)
+      import spark.implicits._
+      counts.toSeq.toDF("table_root", "rows_deleted")
+        .withColumn("batch_id", lit(batchId))
+        .withColumn("exec_id", lit(java.util.UUID.randomUUID().toString))
+        .coalesce(1) // receipt rows: one per target table
+        .write.mode("append").parquet(batchDir(auditDir, batchId))
+    }
+
+  /** Tail `source`'s commit log — the drain shared by [[startCdcMirror]]
+    * and [[startAggView]]. The `snaps/` dir is the wake signal (one tiny
+    * JSON file per commit; at `maxFilesPerTrigger = 1` the history
+    * applies COMMIT BY COMMIT). Each trigger calls `apply(from, target)`
+    * with `target` = the newest snapshot NAMED IN THIS BATCH (so the
+    * commit granularity is the trigger's, not "whatever is current by
+    * now") when it is past the applied-through cursor, then advances the
+    * cursor. The cursor advances only AFTER `apply` returns: a crash
+    * between apply and checkpoint replays a window whose apply must
+    * therefore be idempotent.
+    *
+    * The cursor at `cursorPath` is "<lineage>@<snapId>": snapshot ids are
+    * only monotone within one source lineage (a rollback reuses abandoned
+    * ids), so a persisted cursor from a pre-rollback timeline must FAIL
+    * LOUDLY — with `refusal(persistedLineage, appliedId, currentLineage)`
+    * — instead of treating the new timeline as continuous. Legacy cursors
+    * without a lineage prefix resume only on a never-rolled-back source.
+    * It is written tmp-then-atomic-move, so a reader never sees a torn
+    * cursor.
+    */
+  private def tailSnapshotLog(
+      spark: SparkSession,
+      source: WarehouseTable,
+      cursorPath: Path,
+      refusal: (String, Long, String) => String,
       checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ids = batch.select(col(idCol)).distinct()
-        val counts = graft.pipeline.Forget.forget(spark, ids, targets)
-        import spark.implicits._
-        counts.toSeq.toDF("table_root", "rows_deleted")
-          .withColumn("batch_id", lit(batchId))
-          .withColumn("exec_id", lit(java.util.UUID.randomUUID().toString))
-          .coalesce(1) // receipt rows: one per target table
-          .write.mode("append").parquet(s"$auditDir/batch=$batchId")
-        ()
+      maxFilesPerTrigger: Int)(apply: (Long, Long) => Unit): StreamingQuery = {
+    def readCursor(): Long =
+      if (!Files.exists(cursorPath)) 0L
+      else {
+        val raw = new String(Files.readAllBytes(cursorPath), StandardCharsets.UTF_8).trim
+        val (lin, id) = raw.split("@") match {
+          case Array(l, i) => (l, i.toLong)
+          case _ => ("root", raw.toLong)
+        }
+        val cur = source.lineageId
+        if (lin != cur) throw new IllegalStateException(refusal(lin, id, cur))
+        id
       }
-      .start()
+    def writeCursor(v: Long): Unit = {
+      val tmp = Paths.get(s"$cursorPath.tmp")
+      Files.write(tmp, s"${source.lineageId}@$v".getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, cursorPath,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
+    // the lineage check must run AT START, not only per batch: a
+    // post-rollback commit reuses a snapshot id, so its snap file PATH is
+    // one the stream checkpoint already saw — no trigger would ever fire
+    // to run the per-batch check, and the stalled consumer would silently
+    // stay on the abandoned timeline.
+    readCursor()
+    val snaps = spark.readStream
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .text(s"${source.root}/snaps")
+      // file identity must be captured AT THE SOURCE — `_metadata` only
+      // resolves against the file-source relation, and foreachBatch hands
+      // over a plain LogicalRDD
+      .select(col("_metadata.file_path").as("__snap_path"))
+    foreachBatchStage(snaps, checkpointDir) { (batch, _) =>
+      // driver-side collect bounded by maxFilesPerTrigger file paths
+      val ids = batch.select(col("__snap_path")).distinct()
+        .collect().map(_.getString(0)).flatMap { p =>
+          val n = p.substring(p.lastIndexOf('/') + 1)
+          if (n.startsWith("snap-") && n.endsWith(".json"))
+            Some(n.stripPrefix("snap-").stripSuffix(".json").toLong)
+          else None
+        }
+      val from = readCursor()
+      if (ids.nonEmpty && ids.max > from) {
+        apply(from, ids.max)
+        writeCursor(ids.max)
+      }
+    }
   }
 
-  /** STREAMING CDC MIRROR (40th stage) — the CONSUMER side of
+  /** STREAMING CDC MIRROR — the CONSUMER side of
     * [[graft.table.WarehouseTable.changesSince]]: tail a source
-    * warehouse table's commit log (its `snaps/` dir is the wake signal,
-    * one tiny JSON file per commit — at `maxFilesPerTrigger = 1` the
-    * history applies COMMIT BY COMMIT) and apply each window's change
-    * feed to a mirror table keyed on `keys`. The feed collapses per key
-    * to the latest `_change_ordinal` (insert beats delete at equal
-    * ordinal); winners labeled `insert` UPSERT into the mirror (keyed
-    * merge), winners labeled `delete` land keyed merge-deletes. Because
-    * [[graft.table.WarehouseTable.changesSince]] carries position-delete
-    * erasures, the mirror tracks predicate RTBF
+    * warehouse table's commit log ([[tailSnapshotLog]]) and apply each
+    * window's change feed to a mirror table keyed on `keys`. The feed
+    * collapses per key to the latest `_change_ordinal` (insert beats
+    * delete at equal ordinal); winners labeled `insert` UPSERT into the
+    * mirror (keyed merge), winners labeled `delete` land keyed
+    * merge-deletes. Because [[graft.table.WarehouseTable.changesSince]]
+    * carries position-delete erasures, the mirror tracks predicate RTBF
     * ([[graft.pipeline.Forget.forgetWhere]]) too — the flow that used to
     * silently diverge CDC consumers.
     *
@@ -2073,14 +1191,12 @@ object StreamingIngest {
     * gets its removals diffed — the silent-divergence hole a keyless COW
     * source used to leave open. A source already keyed DIFFERENTLY
     * refuses loudly (one table, one row identity). Replay-safe: the
-    * applied-through cursor
-    * (`_cdc_applied` inside the mirror root) advances only AFTER the
-    * window's merges commit; a crash between apply and checkpoint
-    * replays a window whose keyed apply is idempotent — re-upserting
-    * identical rows and re-deleting absent keys both land arbitration
-    * no-ops. Deleting a key the mirror never held (an insert+delete
-    * collapsed inside one window) is equally a no-op: the tombstone
-    * wins arbitration over nothing.
+    * applied-through cursor (`_cdc_applied` inside the mirror root)
+    * advances only AFTER the window's merges commit; a replayed window's
+    * keyed apply is idempotent — re-upserting identical rows and
+    * re-deleting absent keys both land arbitration no-ops. Deleting a key
+    * the mirror never held (an insert+delete collapsed inside one window)
+    * is equally a no-op: the tombstone wins arbitration over nothing.
     *
     * Scale: per-trigger cost is CHANGE-bound — the feed reads fresh dirs
     * plus posdel-touched files only, and the keyed apply merges only the
@@ -2102,110 +1218,38 @@ object StreamingIngest {
     // tables, so a keyless COW source would silently drop removals from
     // every window. Throws if the source is already keyed differently.
     source.ensureMergeKeys(keys)
-    val cursorPath = java.nio.file.Paths.get(mirror.root, "_cdc_applied")
-    // cursor = "<lineage>@<snapId>": snapshot ids are only monotone
-    // within one source lineage (a rollback reuses abandoned ids), so a
-    // persisted cursor from a pre-rollback timeline must FAIL LOUDLY
-    // instead of treating the new timeline as continuous. Legacy cursors
-    // without a lineage prefix resume only on a never-rolled-back source.
-    def readCursor(): Long =
-      if (!java.nio.file.Files.exists(cursorPath)) 0L
-      else {
-        val raw = new String(java.nio.file.Files.readAllBytes(cursorPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        val (lin, id) = raw.split("@") match {
-          case Array(l, i) => (l, i.toLong)
-          case _ => ("root", raw.toLong)
-        }
-        val cur = source.lineageId
-        if (lin != cur)
-          throw new IllegalStateException(
-            s"CDC mirror at ${mirror.root} applied through snapshot $id of " +
-              s"source lineage $lin, but the source at ${source.root} is now " +
-              s"on lineage $cur (a rollback rewrote its timeline and snapshot " +
-              "ids were reused) — the mirror no longer corresponds to any " +
-              "source state. Drop the mirror table, its _cdc_applied cursor " +
-              "and the stream checkpoint, then restart to re-seed.")
-        id
+    val refusal = (lin: String, id: Long, cur: String) =>
+      s"CDC mirror at ${mirror.root} applied through snapshot $id of " +
+        s"source lineage $lin, but the source at ${source.root} is now " +
+        s"on lineage $cur (a rollback rewrote its timeline and snapshot " +
+        "ids were reused) — the mirror no longer corresponds to any " +
+        "source state. Drop the mirror table, its _cdc_applied cursor " +
+        "and the stream checkpoint, then restart to re-seed."
+    tailSnapshotLog(spark, source, Paths.get(mirror.root, "_cdc_applied"),
+      refusal, checkpointDir, maxFilesPerTrigger) { (from, target) =>
+      // STATIC empty-window skip (see startAggView): a maintenance-only
+      // window carries no change frames — decided from manifests alone.
+      // No exists-guard needed here: an empty feed never created the
+      // mirror before either (both merges are guarded).
+      source.changesSinceOpt(spark, from, asOf = Some(target)).foreach { feed0 =>
+        val feed = feed0.withColumn("__ord2", expr(
+          "_change_ordinal * 2 + IF(_change_type = 'insert', 1, 0)"))
+        val winners = Dedup
+          .latestByKey(feed, keys, orderDesc = "__ord2")
+          .localCheckpoint() // pin: both merges below consume it
+        val ups = winners.filter(col("_change_type") =!= "delete")
+          .drop("_change_type", "_change_ordinal", "__ord2")
+        if (!ups.isEmpty) mirror.merge(spark, ups, keys)
+        val dels = winners.filter(col("_change_type") === "delete")
+          .drop("_change_type", "_change_ordinal", "__ord2")
+        if (!dels.isEmpty)
+          mirror.merge(spark, dels, keys, deleteWhere = Some(lit(true)))
       }
-    def writeCursor(v: Long): Unit = {
-      val tmp = java.nio.file.Paths.get(mirror.root, "_cdc_applied.tmp")
-      java.nio.file.Files.write(tmp,
-        s"${source.lineageId}@$v"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, cursorPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    // the lineage check must run AT START, not only per batch: a
-    // post-rollback commit reuses a snapshot id, so its snap file PATH is
-    // one the stream checkpoint already saw — no trigger would ever fire
-    // to run the per-batch check, and the stalled mirror would silently
-    // stay on the abandoned timeline.
-    readCursor()
-    val stream = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(s"${source.root}/snaps")
-      // file identity must be captured AT THE SOURCE — `_metadata` only
-      // resolves against the file-source relation, and foreachBatch hands
-      // over a plain LogicalRDD
-      .select(col("_metadata.file_path").as("__snap_path"))
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // apply-through target = newest snapshot NAMED IN THIS BATCH, so
-        // the commit granularity is the trigger's, not "whatever is
-        // current by now". Driver-side collect bounded by
-        // maxFilesPerTrigger file paths.
-        val ids = batch.select(col("__snap_path")).distinct()
-          .collect().map(_.getString(0)).flatMap { p =>
-            val n = p.substring(p.lastIndexOf('/') + 1)
-            if (n.startsWith("snap-") && n.endsWith(".json"))
-              Some(n.stripPrefix("snap-").stripSuffix(".json").toLong)
-            else None
-          }
-        val from = readCursor()
-        if (ids.nonEmpty && ids.max > from) {
-          def tt[A](label: String)(f: => A): A =
-            if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-              val t0 = System.nanoTime(); val r = f
-              System.err.println(f"[cdcMirror] w$from->${ids.max} $label%-10s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-              r
-            } else f
-          val target = ids.max
-          // STATIC empty-window skip (see startAggView): a maintenance-
-          // only window carries no change frames — decided from manifests
-          // alone. The existing isEmpty guards already suppressed the
-          // merges, but the drain still paid the window arbitration, a
-          // localCheckpoint and two isEmpty jobs per empty window. No
-          // exists-guard needed here: an empty feed never created the
-          // mirror before either (both merges were guarded).
-          source.changesSinceOpt(spark, from, asOf = Some(target)).foreach {
-            feed0 =>
-            val feed = feed0.withColumn("__ord2", expr(
-              "_change_ordinal * 2 + IF(_change_type = 'insert', 1, 0)"))
-            val winners = tt("winners")(graft.operators.Dedup
-              .latestByKey(feed, keys, orderDesc = "__ord2")
-              .localCheckpoint()) // pin: both merges below consume it
-            val ups = winners.filter(col("_change_type") =!= "delete")
-              .drop("_change_type", "_change_ordinal", "__ord2")
-            tt("upsMerge")(if (!ups.isEmpty) mirror.merge(spark, ups, keys))
-            val dels = winners.filter(col("_change_type") === "delete")
-              .drop("_change_type", "_change_ordinal", "__ord2")
-            tt("delsMerge")(if (!dels.isEmpty)
-              mirror.merge(spark, dels, keys, deleteWhere = Some(lit(true))))
-          }
-          writeCursor(target)
-        }
-        ()
-      }
-      .start()
   }
 
-  /** 41st stage: ROBUST ANOMALY MONITORING at ingest — the q167 detector
-    * run continuously. Each micro-batch folds its (type, day) counts into
+  /** ROBUST ANOMALY MONITORING at ingest — the q167 detector run
+    * continuously. Each micro-batch folds its (type, day) counts into
     * an incrementally-maintained rollup table
     * ([[graft.operators.IncrementalRollup]] — batch-marker-keyed, so a
     * checkpoint-replayed batch is a per-key NO-OP and counts can never
@@ -2230,52 +1274,36 @@ object StreamingIngest {
     */
   def startAnomalyMonitor(
       spark: SparkSession,
-      landingDir: String,
-      schema: StructType,
-      format: String,
-      options: Map[String, String],
+      src: FileStreamSpec,
       typeCol: String,
       tsNanosCol: String,
       countsTable: graft.table.WarehouseTable,
       verdictDir: String,
       checkpointDir: String,
       windowDays: Int = 7,
-      thresholdE2: Long = 350,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
+      thresholdE2: Long = 350): StreamingQuery = {
     val nanosPerDay = 86400L * 1000 * 1000 * 1000
-    val stream = spark.readStream
-      .options(options)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-      .format(format)
-      .load(landingDir)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val arrivals = batch.select(
-          col(typeCol),
-          expr(s"$tsNanosCol div $nanosPerDay").as("day"),
-          lit(1L).as("n"))
-        graft.operators.IncrementalRollup.commit(
-          spark, arrivals, Seq(typeCol, "day"), Map("n" -> "sum"),
-          countsTable, batchId)
-        val verdicts = graft.operators.EventAnalytics.anomaliesFromCounts(
-          graft.operators.IncrementalRollup.read(spark, countsTable),
-          typeCol, "day", "n", windowDays, thresholdE2)
-        val vt = graft.table.WarehouseTable(verdictDir)
-        if (!vt.exists)
-          vt.create(verdicts.schema,
-            properties = graft.table.WarehouseTable
-              .tableProperties("COW", "snappy"))
-        vt.overwrite(verdicts)
-        ()
-      }
-      .start()
+    foreachBatchStage(src.read(spark), checkpointDir) { (batch, batchId) =>
+      val arrivals = batch.select(
+        col(typeCol),
+        expr(s"$tsNanosCol div $nanosPerDay").as("day"),
+        lit(1L).as("n"))
+      graft.operators.IncrementalRollup.commit(
+        spark, arrivals, Seq(typeCol, "day"), Map("n" -> "sum"),
+        countsTable, batchId)
+      val verdicts = graft.operators.EventAnalytics.anomaliesFromCounts(
+        graft.operators.IncrementalRollup.read(spark, countsTable),
+        typeCol, "day", "n", windowDays, thresholdE2)
+      val vt = graft.table.WarehouseTable(verdictDir)
+      if (!vt.exists)
+        vt.create(verdicts.schema,
+          properties = graft.table.WarehouseTable
+            .tableProperties("COW", "snappy"))
+      vt.overwrite(verdicts)
+    }
   }
 
-  /** 42nd stage: INCREMENTAL AGGREGATE VIEW — a per-group (count, sums)
+  /** INCREMENTAL AGGREGATE VIEW — a per-group (count, sums)
     * table maintained EXACTLY from a keyed COW source's change feed,
     * never by rescanning the source: the classic materialized-view
     * maintenance every recurring report query wants at 100 TB, now
@@ -2283,7 +1311,7 @@ object StreamingIngest {
     * all flow through; `IncrementalRollup` alone is append-only).
     *
     * Mechanics: each trigger drains the source's commit log like
-    * [[startCdcMirror]], reads the window's GROSS feed
+    * [[startCdcMirror]] ([[tailSnapshotLog]]), reads the window's GROSS feed
     * ([[graft.table.WarehouseTable.changesSince]] with
     * `netRemovals = false`) and folds SIGNED contributions — insert
     * rows +1/+v, delete rows −1/−v — into an [[graft.operators
@@ -2355,203 +1383,148 @@ object StreamingIngest {
     // the cursor lives BESIDE the view root (the view table itself is
     // created by the rollup's first commit, after the cursor's parent
     // must already be writable)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(view.root).getParent)
-    val cursorPath = java.nio.file.Paths.get(view.root + "_agg_applied")
-    def readCursor(): Long =
-      if (!java.nio.file.Files.exists(cursorPath)) 0L
-      else {
-        val raw = new String(java.nio.file.Files.readAllBytes(cursorPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        val (lin, id) = raw.split("@") match {
-          case Array(l, i) => (l, i.toLong)
-          case _ => ("root", raw.toLong)
+    Files.createDirectories(Paths.get(view.root).getParent)
+    val refusal = (lin: String, id: Long, cur: String) =>
+      s"aggregate view at ${view.root} applied through snapshot $id " +
+        s"of source lineage $lin, but the source is now on lineage " +
+        s"$cur (rollback rewrote its timeline) — drop the view, its " +
+        "_agg_applied cursor and the stream checkpoint to re-seed."
+    tailSnapshotLog(spark, source, Paths.get(view.root + "_agg_applied"),
+      refusal, checkpointDir, maxFilesPerTrigger) { (from, target) =>
+      val isDel = col("_change_type") === "delete"
+      val sign = when(isDel, lit(-1L)).otherwise(lit(1L))
+      // STATIC empty-window skip: a maintenance-only window (compact,
+      // posdel fold, re-cluster on the source) carries no change
+      // frames — a fact changesSinceOpt decides from manifests alone.
+      // Its gross contribution is identically zero, so the fold is a
+      // no-op by the fold's own algebra; executing it anyway costs the
+      // view a full keyed COW merge (null-key check + write job +
+      // manifest churn) per window. Skip everything but the cursor
+      // advance. Guarded on view.exists so the view's creating commit
+      // is never skipped (readers of a drained view must find a
+      // table); replay-safe: a replayed window re-decides the same
+      // skip from the same manifests.
+      val windowOpt = source
+        .changesSinceOpt(spark, from, asOf = Some(target), netRemovals = false)
+      if (windowOpt.nonEmpty || !view.exists) {
+        // None + no view yet: still fold (the empty frame's schema
+        // creates the view) — built directly, never by re-walking the
+        // window's manifests a second time
+        val window = windowOpt.getOrElse(source.emptyChangeFrame(spark))
+        if (minMaxCols.isEmpty) {
+          val contrib = window.select(groupKeys.map(col) ++
+            sumCols.map(c => (col(c).cast("long") * sign).as(s"sum_$c")) :+
+            sign.as("n"): _*)
+          graft.operators.IncrementalRollup.commit(spark, contrib,
+            groupKeys, sumCols.map(c => s"sum_$c" -> "sum").toMap + ("n" -> "sum"),
+            view, batchId = target)
+        } else {
+          // one pass over the window yields the signed sums, the
+          // insert-side extremes (fold via least/greatest) AND the
+          // delete-side extremes (the regression detector) — the
+          // result is group-cardinality-sized, so pin it once
+          val aggs =
+            sumCols.map(c => sum(col(c).cast("long") * sign).as(s"sum_$c")) ++
+            Seq(sum(sign).as("n")) ++
+            minMaxCols.flatMap(c => Seq(
+              min(when(!isDel, col(c).cast("long"))).as(s"min_$c"),
+              max(when(!isDel, col(c).cast("long"))).as(s"max_$c"),
+              min(when(isDel, col(c).cast("long"))).as(s"__delmin_$c"),
+              max(when(isDel, col(c).cast("long"))).as(s"__delmax_$c")))
+          val w = window.groupBy(groupKeys.map(col): _*)
+            .agg(aggs.head, aggs.tail: _*).localCheckpoint()
+          val mergeFns =
+            sumCols.map(c => s"sum_$c" -> "sum").toMap + ("n" -> "sum") ++
+              minMaxCols.flatMap(c =>
+                Seq(s"min_$c" -> "min", s"max_$c" -> "max"))
+          // RECOMPUTE-ON-REGRESS: a group whose deletes reach its
+          // POST-FOLD extreme may have lost the attaining row — set
+          // exactly those groups to the truth AS OF the window end.
+          // The post-fold extremes are computed HERE from the stored
+          // view and the window's insert-side extremes (least/greatest
+          // — the fold's own algebra), so detection needs no commit
+          // first and the fold and the repair land as ONE view merge
+          // (commitWithRepair) — one snapshot per window instead of
+          // two. A replayed window detects against already-repaired
+          // extremes; whatever it flags, the repair values are the
+          // same truth it already wrote, so the guarded merge no-ops.
+          // The candidate set is bounded by the window's delete-touched
+          // groups (view-key-sized at most), so collecting it for the
+          // partition prune is bounded the same way.
+          val post =
+            if (view.exists)
+              w.alias("w").join(
+                  graft.operators.IncrementalRollup.read(spark, view)
+                    .select(groupKeys.map(col) ++ minMaxCols.flatMap(c =>
+                      Seq(col(s"min_$c"), col(s"max_$c"))): _*)
+                    .alias("p"),
+                  groupKeys.map(k => col(s"w.$k") <=> col(s"p.$k"))
+                    .reduce(_ && _), "left")
+                .select(groupKeys.map(k => col(s"w.$k").as(k)) ++
+                  minMaxCols.flatMap(c => Seq(
+                    col(s"w.__delmin_$c").as(s"__delmin_$c"),
+                    col(s"w.__delmax_$c").as(s"__delmax_$c"),
+                    least(col(s"p.min_$c"), col(s"w.min_$c"))
+                      .as(s"__post_min_$c"),
+                    greatest(col(s"p.max_$c"), col(s"w.max_$c"))
+                      .as(s"__post_max_$c"))): _*)
+            else // first window: the fold's result IS the window's own
+              w.select(groupKeys.map(col) ++ minMaxCols.flatMap(c => Seq(
+                col(s"__delmin_$c"), col(s"__delmax_$c"),
+                col(s"min_$c").as(s"__post_min_$c"),
+                col(s"max_$c").as(s"__post_max_$c"))): _*)
+          val needCond = minMaxCols.map(c =>
+            (col(s"__delmin_$c") <=
+              coalesce(col(s"__post_min_$c"), col(s"__delmin_$c"))) ||
+            (col(s"__delmax_$c") >=
+              coalesce(col(s"__post_max_$c"), col(s"__delmax_$c"))))
+            .reduce(_ || _)
+          // null-safe key match (a NULL group is a real group — see
+          // regressedTruth): ANSI equality here would flag it as
+          // regressed on EVERY delete-carrying window (conservative
+          // but a spurious recompute per window)
+          val needJoined = post
+            .filter(needCond)
+            .select(groupKeys.map(col): _*)
+          // THRESHOLD-GUARDED collect: the needing-key set is usually
+          // window-sized (deletes' groups), and collecting it buys two
+          // prunes (partition fast path + key-range dataFilters). But a
+          // FULL-VIEW regress — a COW rewrite of every partition over a
+          // high-cardinality group key — needs every group key, and at
+          // 10^8 groups an unconditional collect is driver-memory death.
+          // Probe via limit(maxCollect+1): at most maxCollect+1 rows ever
+          // reach the driver. Under the bound, the probe IS the key set
+          // (one job, same as before); over it, the collect and its two
+          // key prunes are DROPPED and the recompute runs the already-
+          // distributed semi-join form (non-broadcast) — the sound
+          // unpruned fallback regressedTruth documents for null
+          // partition keys.
+          val maxCollect = spark.conf.get(
+            "spark.graft.aggview.recompute.maxCollectKeys", "100000").toInt
+          val probe = needJoined.limit(maxCollect + 1).collect()
+          if (probe.isEmpty)
+            graft.operators.IncrementalRollup.commit(
+              spark, w, groupKeys, mergeFns, view, batchId = target)
+          else {
+            val underBound = probe.length <= maxCollect
+            StreamingIngest.lastRecomputeCollected = Some(underBound)
+            val rec = if (underBound) {
+              val needDf = spark.createDataFrame(
+                java.util.Arrays.asList(probe: _*),
+                StructType(groupKeys.map(k => w.schema(k))))
+              regressedTruth(spark, source, groupKeys, minMaxCols,
+                needDf, Some(probe), target)
+            } else
+              regressedTruth(spark, source, groupKeys, minMaxCols,
+                needJoined, None, target)
+            graft.operators.IncrementalRollup
+              .commitWithRepair(spark, w, groupKeys, mergeFns,
+                rec, minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c")),
+                view, batchId = target)
+          }
         }
-        val cur = source.lineageId
-        if (lin != cur)
-          throw new IllegalStateException(
-            s"aggregate view at ${view.root} applied through snapshot $id " +
-              s"of source lineage $lin, but the source is now on lineage " +
-              s"$cur (rollback rewrote its timeline) — drop the view, its " +
-              "_agg_applied cursor and the stream checkpoint to re-seed.")
-        id
       }
-    def writeCursor(v: Long): Unit = {
-      val tmp = java.nio.file.Paths.get(view.root + "_agg_applied.tmp")
-      java.nio.file.Files.write(tmp,
-        s"${source.lineageId}@$v"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, cursorPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    readCursor() // lineage check at START (same reasoning as the mirror)
-    val stream = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(s"${source.root}/snaps")
-      .select(col("_metadata.file_path").as("__snap_path"))
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ids = batch.select(col("__snap_path")).distinct()
-          .collect().map(_.getString(0)).flatMap { p =>
-            val n = p.substring(p.lastIndexOf('/') + 1)
-            if (n.startsWith("snap-") && n.endsWith(".json"))
-              Some(n.stripPrefix("snap-").stripSuffix(".json").toLong)
-            else None
-          } // bounded: maxFilesPerTrigger paths
-        val from = readCursor()
-        if (ids.nonEmpty && ids.max > from) {
-          def tt[A](label: String)(f: => A): A =
-            if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-              val t0 = System.nanoTime(); val r = f
-              System.err.println(f"[aggView] w$from->${ids.max} $label%-10s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-              r
-            } else f
-          val target = ids.max
-          val isDel = col("_change_type") === "delete"
-          val sign = when(isDel, lit(-1L)).otherwise(lit(1L))
-          // STATIC empty-window skip: a maintenance-only window (compact,
-          // posdel fold, re-cluster on the source) carries no change
-          // frames — a fact changesSinceOpt decides from manifests alone.
-          // Its gross contribution is identically zero, so the fold is a
-          // no-op by the fold's own algebra; executing it anyway costs the
-          // view a full keyed COW merge (null-key check + write job +
-          // manifest churn) per window. Skip everything but the cursor
-          // advance. Guarded on view.exists so the view's creating commit
-          // is never skipped (readers of a drained view must find a
-          // table); replay-safe: a replayed window re-decides the same
-          // skip from the same manifests.
-          val windowOpt = source
-            .changesSinceOpt(spark, from, asOf = Some(target), netRemovals = false)
-          if (windowOpt.isEmpty && view.exists) {
-            tt("emptySkip")(())
-          } else {
-          // None + no view yet: still fold (the empty frame's schema
-          // creates the view) — built directly, never by re-walking the
-          // window's manifests a second time
-          val window = windowOpt.getOrElse(source.emptyChangeFrame(spark))
-          if (minMaxCols.isEmpty) {
-            val contrib = window.select(groupKeys.map(col) ++
-              sumCols.map(c => (col(c).cast("long") * sign).as(s"sum_$c")) :+
-              sign.as("n"): _*)
-            tt("rollup")(graft.operators.IncrementalRollup.commit(spark, contrib,
-              groupKeys, sumCols.map(c => s"sum_$c" -> "sum").toMap + ("n" -> "sum"),
-              view, batchId = target))
-          } else {
-            // one pass over the window yields the signed sums, the
-            // insert-side extremes (fold via least/greatest) AND the
-            // delete-side extremes (the regression detector) — the
-            // result is group-cardinality-sized, so pin it once
-            val aggs =
-              sumCols.map(c => sum(col(c).cast("long") * sign).as(s"sum_$c")) ++
-              Seq(sum(sign).as("n")) ++
-              minMaxCols.flatMap(c => Seq(
-                min(when(!isDel, col(c).cast("long"))).as(s"min_$c"),
-                max(when(!isDel, col(c).cast("long"))).as(s"max_$c"),
-                min(when(isDel, col(c).cast("long"))).as(s"__delmin_$c"),
-                max(when(isDel, col(c).cast("long"))).as(s"__delmax_$c")))
-            val w = tt("winAgg")(window.groupBy(groupKeys.map(col): _*)
-              .agg(aggs.head, aggs.tail: _*).localCheckpoint())
-            val mergeFns =
-              sumCols.map(c => s"sum_$c" -> "sum").toMap + ("n" -> "sum") ++
-                minMaxCols.flatMap(c =>
-                  Seq(s"min_$c" -> "min", s"max_$c" -> "max"))
-            // RECOMPUTE-ON-REGRESS: a group whose deletes reach its
-            // POST-FOLD extreme may have lost the attaining row — set
-            // exactly those groups to the truth AS OF the window end.
-            // The post-fold extremes are computed HERE from the stored
-            // view and the window's insert-side extremes (least/greatest
-            // — the fold's own algebra), so detection needs no commit
-            // first and the fold and the repair land as ONE view merge
-            // (commitWithRepair) — one snapshot per window instead of
-            // two. A replayed window detects against already-repaired
-            // extremes; whatever it flags, the repair values are the
-            // same truth it already wrote, so the guarded merge no-ops.
-            // The candidate set is bounded by the window's delete-touched
-            // groups (view-key-sized at most), so collecting it for the
-            // partition prune is bounded the same way.
-            val post =
-              if (view.exists)
-                w.alias("w").join(
-                    graft.operators.IncrementalRollup.read(spark, view)
-                      .select(groupKeys.map(col) ++ minMaxCols.flatMap(c =>
-                        Seq(col(s"min_$c"), col(s"max_$c"))): _*)
-                      .alias("p"),
-                    groupKeys.map(k => col(s"w.$k") <=> col(s"p.$k"))
-                      .reduce(_ && _), "left")
-                  .select(groupKeys.map(k => col(s"w.$k").as(k)) ++
-                    minMaxCols.flatMap(c => Seq(
-                      col(s"w.__delmin_$c").as(s"__delmin_$c"),
-                      col(s"w.__delmax_$c").as(s"__delmax_$c"),
-                      least(col(s"p.min_$c"), col(s"w.min_$c"))
-                        .as(s"__post_min_$c"),
-                      greatest(col(s"p.max_$c"), col(s"w.max_$c"))
-                        .as(s"__post_max_$c"))): _*)
-              else // first window: the fold's result IS the window's own
-                w.select(groupKeys.map(col) ++ minMaxCols.flatMap(c => Seq(
-                  col(s"__delmin_$c"), col(s"__delmax_$c"),
-                  col(s"min_$c").as(s"__post_min_$c"),
-                  col(s"max_$c").as(s"__post_max_$c"))): _*)
-            val needCond = minMaxCols.map(c =>
-              (col(s"__delmin_$c") <=
-                coalesce(col(s"__post_min_$c"), col(s"__delmin_$c"))) ||
-              (col(s"__delmax_$c") >=
-                coalesce(col(s"__post_max_$c"), col(s"__delmax_$c"))))
-              .reduce(_ || _)
-            // null-safe key match (a NULL group is a real group — see
-            // regressedTruth): ANSI equality here would flag it as
-            // regressed on EVERY delete-carrying window (conservative
-            // but a spurious recompute per window)
-            val needJoined = post
-              .filter(needCond)
-              .select(groupKeys.map(col): _*)
-            // THRESHOLD-GUARDED collect: the needing-key set is usually
-            // window-sized (deletes' groups), and collecting it buys two
-            // prunes (partition fast path + key-range dataFilters). But a
-            // FULL-VIEW regress — a COW rewrite of every partition over a
-            // high-cardinality group key — needs every group key, and at
-            // 10^8 groups an unconditional collect is driver-memory death.
-            // Probe via limit(maxCollect+1): at most maxCollect+1 rows ever
-            // reach the driver. Under the bound, the probe IS the key set
-            // (one job, same as before); over it, the collect and its two
-            // key prunes are DROPPED and the recompute runs the already-
-            // distributed semi-join form (non-broadcast) — the sound
-            // unpruned fallback regressedTruth documents for null
-            // partition keys.
-            val maxCollect = spark.conf.get(
-              "spark.graft.aggview.recompute.maxCollectKeys", "100000").toInt
-            val probe = tt("needProbe")(needJoined.limit(maxCollect + 1).collect())
-            if (probe.isEmpty)
-              tt("rollup")(graft.operators.IncrementalRollup.commit(
-                spark, w, groupKeys, mergeFns, view, batchId = target))
-            else {
-              val underBound = probe.length <= maxCollect
-              StreamingIngest.lastRecomputeCollected = Some(underBound)
-              val rec = if (underBound) {
-                val needDf = spark.createDataFrame(
-                  java.util.Arrays.asList(probe: _*),
-                  org.apache.spark.sql.types.StructType(
-                    groupKeys.map(k => w.schema(k))))
-                regressedTruth(spark, source, groupKeys, minMaxCols,
-                  needDf, Some(probe), target)
-              } else
-                regressedTruth(spark, source, groupKeys, minMaxCols,
-                  needJoined, None, target)
-              tt("foldRepair")(graft.operators.IncrementalRollup
-                .commitWithRepair(spark, w, groupKeys, mergeFns,
-                  rec, minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c")),
-                  view, batchId = target))
-            }
-          }
-          }
-          writeCursor(target)
-        }
-        ()
-      }
-      .start()
   }
 
   /** The MIN/MAX recompute's truth read for the regressed groups. With
@@ -2839,7 +1812,7 @@ object StreamingIngest {
   final case class AttributedPurchase(
       user_id: Long, event_id: Long, channel: String, value: Double)
 
-  /** Streaming LAST-TOUCH ATTRIBUTION (38th stage) — the live form of the
+  /** Streaming LAST-TOUCH ATTRIBUTION — the live form of the
     * q147 as-of union-sort: per-user state is ONE NewestClick (not the
     * click history — last-touch needs only the newest), each purchase
     * emits immediately with the credited channel, clickless purchases

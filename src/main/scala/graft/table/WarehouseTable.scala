@@ -1548,6 +1548,12 @@ final class WarehouseTable(val root: String) {
     * every non-key column of matched rows; `Some(cols)` updates only those
     * columns, preserving the rest from the target (COW only — a MOR delta
     * carries whole rows, so partial SET lists are rejected there).
+    *
+    * A source row with a null key is refused with an
+    * `IllegalArgumentException` and the table keeps no trace of the
+    * attempt. On the COW path the null-key check runs concurrently with
+    * the rewrite's write, so when that write itself fails on the bad
+    * batch, the write's error may surface instead of the refusal.
     */
   def merge(
       spark: SparkSession,

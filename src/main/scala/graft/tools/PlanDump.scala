@@ -56,7 +56,7 @@ object PlanDump {
           "from manifests alone; startAggView/startCdcMirror skip the fold " +
           "and the no-op view COW merge). The RETURNED frame's plan (the " +
           "view read) is identical before and after by design; the " +
-          "evidence is job-count: GRAFT_STREAM_DEBUG emptySkip lines + " +
+          "evidence is job-count: per-window emptySkip counts + " +
           "bench A/B in OPTIMIZATION_r17.md batch 1."
       Seq("q181_agg_view_unpart", "q185_agg_view_minmax_mor",
         "q188_agg_view_null_group", "q177_agg_view_mor",

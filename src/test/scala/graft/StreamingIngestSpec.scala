@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.StreamingIngest
+import graft.streaming.{FileStreamSpec, StreamingIngest}
 import graft.table.WarehouseTable
 
 class StreamingIngestSpec extends SparkSpec {
@@ -170,9 +170,9 @@ class StreamingIngestSpec extends SparkSpec {
     val ckpt = tmpDir("incdedup_ckpt")
     def run() = {
       val q = StreamingIngest.startIncrementalDeduper(
-        spark, landing, incoming.schema, "parquet", Map.empty,
+        spark, FileStreamSpec(landing, incoming.schema, maxFilesPerTrigger = 1),
         idCol = "doc_id", textCol = "text", corpus = corpus,
-        outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+        outDir = outDir, checkpointDir = ckpt)
       q.awaitTermination(180000)
     }
     run()
@@ -214,9 +214,9 @@ class StreamingIngestSpec extends SparkSpec {
     val ckpt = tmpDir("bloomdedup_ckpt")
     def run() = {
       val q = StreamingIngest.startBloomDeduper(
-        spark, landing, incoming.schema, "parquet", Map.empty,
+        spark, FileStreamSpec(landing, incoming.schema, maxFilesPerTrigger = 1),
         idCol = "doc_id", textCol = "text", corpus = corpus,
-        outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+        outDir = outDir, checkpointDir = ckpt)
       q.awaitTermination(180000)
     }
     run()
@@ -257,10 +257,9 @@ class StreamingIngestSpec extends SparkSpec {
     }
     val outDir = tmpDir("tfidf_out")
     val ckpt = tmpDir("tfidf_ckpt")
-    val q = StreamingIngest.startTfIdfScorer(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", idfModel = model, topK = 3,
-      outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, ckpt)(TfIdf.scoreTopTerms(_, "doc_id", "text", model, 3))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "term", "tfidf", "rank")
@@ -291,10 +290,9 @@ class StreamingIngestSpec extends SparkSpec {
       }
     val outDir = tmpDir("lm_out")
     val ckpt = tmpDir("lm_ckpt")
-    val q = StreamingIngest.startLmScorer(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", model = model,
-      outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, ckpt)(BigramLm.scoreDocs(_, "doc_id", "text", model))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "n_transitions", "avg_ll")
@@ -322,10 +320,9 @@ class StreamingIngestSpec extends SparkSpec {
       }
     val outDir = tmpDir("bpe_out")
     val ckpt = tmpDir("bpe_ckpt")
-    val q = StreamingIngest.startBpeEncoder(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", model = model,
-      outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, ckpt)(Vocabulary.bpeEncode(_, "doc_id", "text", model))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "n_words", "n_bpe_tokens", "toks_md5")
@@ -383,11 +380,10 @@ class StreamingIngestSpec extends SparkSpec {
         Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet"))
       }
     val outDir = tmpDir("bpec_out")
-    val q = StreamingIngest.startBpeChunkEncoder(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", model = model,
-      outDir = outDir, checkpointDir = tmpDir("bpec_ckpt"),
-      maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, tmpDir("bpec_ckpt"))(
+      Vocabulary.bpeEncodeChunks(_, "doc_id", "text", model))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "seg_id", "n_words", "n_bpe_tokens", "toks_md5")
@@ -416,9 +412,9 @@ class StreamingIngestSpec extends SparkSpec {
         Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet"))
       }
     val q = StreamingIngest.startBm25Indexer(
-      spark, landing, docs.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1),
       idCol = "doc_id", textCol = "text", table = table,
-      checkpointDir = tmpDir("bm25_ckpt"), maxFilesPerTrigger = 1)
+      checkpointDir = tmpDir("bm25_ckpt"))
     q.awaitTermination(180000)
     val expect = Bm25.topK(Bm25.fit(docs, "doc_id", "text"),
       Seq("spark", "dup"), k = 15).as[(Long, Long, Long)].collect().toSeq
@@ -447,11 +443,10 @@ class StreamingIngestSpec extends SparkSpec {
       }
     val outDir = tmpDir("pct_out")
     val ckpt = tmpDir("pct_ckpt")
-    val q = StreamingIngest.startPercentileScorer(
-      spark, landing, arrivals.schema, "parquet", Map.empty,
-      idCol = "doc_id", keyCol = "source", valueCol = "n_chars",
-      model = model, outDir = outDir, checkpointDir = ckpt,
-      maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, arrivals.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, ckpt)(
+      Percentiles.scoreAgainst(_, "doc_id", "source", "n_chars", model))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "source", "n_chars", "pct_e4")
@@ -480,10 +475,9 @@ class StreamingIngestSpec extends SparkSpec {
       }
     val outDir = tmpDir("ve_out")
     val ckpt = tmpDir("ve_ckpt")
-    val q = StreamingIngest.startVocabEncoder(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", vocab = vocab, vocabSize = 16,
-      outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, ckpt)(Vocabulary.encodeWithVocab(_, "doc_id", "text", vocab, 16))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "n_tokens", "n_oov", "oov_rate", "ids_md5")
@@ -515,10 +509,9 @@ class StreamingIngestSpec extends SparkSpec {
       }
     val outDir = tmpDir("dsir_out")
     val ckpt = tmpDir("dsir_ckpt")
-    val q = StreamingIngest.startDsirScorer(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", model = model,
-      outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, ckpt)(Dsir.scoreDocs(_, "doc_id", "text", model))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "n_grams", "lw_e4", "keep")
@@ -552,9 +545,9 @@ class StreamingIngestSpec extends SparkSpec {
     val ckpt = tmpDir("cd_ckpt")
     def run(): Unit = {
       val q = StreamingIngest.startChunkDeduper(
-        spark, landing, corpus.schema, "parquet", Map.empty,
+        spark, FileStreamSpec(landing, corpus.schema, maxFilesPerTrigger = 1),
         idCol = "doc_id", textCol = "text", chunkIndex = index,
-        outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+        outDir = outDir, checkpointDir = ckpt)
       q.awaitTermination(180000)
       ()
     }
@@ -595,10 +588,9 @@ class StreamingIngestSpec extends SparkSpec {
         Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet"))
       }
     val outDir = tmpDir("nb_out")
-    val q = StreamingIngest.startNbClassifier(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", model = model,
-      outDir = outDir, checkpointDir = tmpDir("nb_ckpt"), maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, tmpDir("nb_ckpt"))(NbClassifier.predict(_, "doc_id", "text", model))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "pred_label", "n_transitions", "score_q")
@@ -629,9 +621,9 @@ class StreamingIngestSpec extends SparkSpec {
     val outDir = tmpDir("decon_out") + "/tagged"
     val ckpt = tmpDir("decon_ckpt")
     def run() = StreamingIngest.startDecontaminator(
-      spark, landing, training.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, training.schema, maxFilesPerTrigger = 1),
       idCol = "doc_id", textCol = "text", benchGrams = benchGrams, gramN = 8,
-      outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+      outDir = outDir, checkpointDir = ckpt)
       .awaitTermination(120000)
     run()
     val flagged = spark.read.parquet(outDir)
@@ -972,9 +964,8 @@ class StreamingIngestSpec extends SparkSpec {
     // stage 1: normalizer (two micro-batches)
     val normOut = tmpDir("norm_out") + "/clean"
     val q1 = StreamingIngest.startNormalizer(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      textCol = "text", outDir = normOut, checkpointDir = tmpDir("norm_ckpt"),
-      maxFilesPerTrigger = 1)
+      spark, FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1),
+      textCol = "text", outDir = normOut, checkpointDir = tmpDir("norm_ckpt"))
     q1.awaitTermination(120000)
     val streamedNorm = spark.read.parquet(normOut)
       .select("doc_id", "text", "n_raw").as[(Long, String, Long)].collect().toSet
@@ -985,9 +976,9 @@ class StreamingIngestSpec extends SparkSpec {
     // stage 2: CDC chunker over the normalized landing dir
     val chunkOut = tmpDir("chunk_out") + "/chunks"
     val q2 = StreamingIngest.startChunker(
-      spark, normOut, spark.read.parquet(normOut).schema, "parquet", Map.empty,
+      spark, FileStreamSpec(normOut, spark.read.parquet(normOut).schema, maxFilesPerTrigger = 1),
       idCol = "doc_id", textCol = "text", outDir = chunkOut,
-      checkpointDir = tmpDir("chunk_ckpt"), maxFilesPerTrigger = 1)
+      checkpointDir = tmpDir("chunk_ckpt"))
     q2.awaitTermination(120000)
     val streamedChunks = spark.read.parquet(chunkOut)
       .select("doc_id", "seg_id", "n_seg_tokens", "seg_md5")
@@ -1019,9 +1010,9 @@ class StreamingIngestSpec extends SparkSpec {
     // stage 1: markup scrubber (two micro-batches) — clean text + audit
     val cleanOut = tmpDir("mk_out") + "/clean"
     val q1 = StreamingIngest.startMarkupScrubber(
-      spark, landing, docs.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1),
       textCol = "text", outDir = cleanOut,
-      checkpointDir = tmpDir("mk_ckpt"), maxFilesPerTrigger = 1)
+      checkpointDir = tmpDir("mk_ckpt"))
     q1.awaitTermination(120000)
     val streamedClean = spark.read.parquet(cleanOut)
       .select("doc_id", "text", "n_tags", "n_chars_raw")
@@ -1036,11 +1027,11 @@ class StreamingIngestSpec extends SparkSpec {
     // stage 2: sentence packer over the scrubbed landing dir — per-doc
     // packing means micro-batch boundaries cannot change any chunk
     val packOut = tmpDir("pack_out")
-    val q2 = StreamingIngest.startSentencePacker(
-      spark, cleanOut, spark.read.parquet(cleanOut).schema, "parquet",
-      Map.empty, idCol = "doc_id", textCol = "text", outDir = packOut,
-      checkpointDir = tmpDir("pack_ckpt"), budget = 16L,
-      maxFilesPerTrigger = 1)
+    val q2 = StreamingIngest.batchStage(
+      FileStreamSpec(cleanOut, spark.read.parquet(cleanOut).schema,
+        maxFilesPerTrigger = 1).read(spark),
+      packOut, tmpDir("pack_ckpt"))(
+      graft.operators.Chunking.sentencePack(_, "doc_id", "text", 16L))
     q2.awaitTermination(120000)
     val streamedPack = spark.read.parquet(s"$packOut/batch=*")
       .select("doc_id", "chunk", "n_sentences", "tok_sum", "chunk_md5")
@@ -1075,10 +1066,11 @@ class StreamingIngestSpec extends SparkSpec {
       b.select(col("typ"), lit(1L).as("n"), col("v").as("sum_v"),
         col("v").as("max_v"))
     val merges = Map("n" -> "sum", "sum_v" -> "sum", "max_v" -> "max")
-    val q = StreamingIngest.startRollupMaintainer(
-      spark, landing, src.schema, "parquet", Map.empty,
-      prepare, Seq("typ"), merges, table,
-      checkpointDir = tmpDir("roll_ckpt"), maxFilesPerTrigger = 1)
+    def run(ckpt: String) = StreamingIngest.foreachBatchStage(
+      FileStreamSpec(landing, src.schema, maxFilesPerTrigger = 1).read(spark), ckpt) {
+      (b, id) => IncrementalRollup.commit(spark, prepare(b), Seq("typ"), merges, table, id)
+    }
+    val q = run(tmpDir("roll_ckpt"))
     q.awaitTermination(120000)
     def state(): Set[(String, Long, Long, Long)] =
       IncrementalRollup.read(spark, table)
@@ -1091,10 +1083,7 @@ class StreamingIngestSpec extends SparkSpec {
     assert(state() == oneShot)
     // fresh-checkpoint replay of the same landing dir, same batch
     // composition: every fold is guarded — nothing changes
-    val q2 = StreamingIngest.startRollupMaintainer(
-      spark, landing, src.schema, "parquet", Map.empty,
-      prepare, Seq("typ"), merges, table,
-      checkpointDir = tmpDir("roll_ckpt2"), maxFilesPerTrigger = 1)
+    val q2 = run(tmpDir("roll_ckpt2"))
     q2.awaitTermination(120000)
     assert(state() == oneShot)
   }
@@ -1125,9 +1114,9 @@ class StreamingIngestSpec extends SparkSpec {
         col("qs").as("s"), col("qe").as("e"))
     val outDir = tmpDir("oprob_out")
     val q = StreamingIngest.startOverlapProber(
-      spark, landing, b0.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, b0.schema, maxFilesPerTrigger = 1),
       "qs", "qe", toStored, idx, outDir,
-      checkpointDir = tmpDir("oprob_ckpt"), maxFilesPerTrigger = 1)
+      checkpointDir = tmpDir("oprob_ckpt"))
     q.awaitTermination(120000)
     def pairs(batch: Int): Set[(Long, Long)] =
       spark.read.parquet(s"$outDir/batch=$batch")
@@ -1204,9 +1193,9 @@ class StreamingIngestSpec extends SparkSpec {
     }
     val outDir = tmpDir("drift_out")
     val q = StreamingIngest.startDriftMonitor(
-      spark, landing, b0.toDF("k", "v").schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, b0.toDF("k", "v").schema, maxFilesPerTrigger = 1),
       reference, Seq("k"), "v", bits = 4, outDir,
-      checkpointDir = tmpDir("drift_ckpt"), maxFilesPerTrigger = 1)
+      checkpointDir = tmpDir("drift_ckpt"))
     q.awaitTermination(120000)
     def report(batch: Int): Map[String, Boolean] =
       spark.read.parquet(s"$outDir/batch=$batch")
@@ -1249,9 +1238,9 @@ class StreamingIngestSpec extends SparkSpec {
     val ckpt = tmpDir("anom_ckpt")
     val ev = f0.toDF("event_type", "ts")
     val q = StreamingIngest.startAnomalyMonitor(
-      spark, landing, ev.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, ev.schema, maxFilesPerTrigger = 1),
       "event_type", "ts", counts, verdictDir, ckpt,
-      windowDays = 7, thresholdE2 = 350, maxFilesPerTrigger = 1)
+      windowDays = 7, thresholdE2 = 350)
     q.awaitTermination(120000)
     def verdicts: Map[(String, Long), (Long, Long, Long, Boolean)] =
       graft.table.WarehouseTable(verdictDir).read(spark)
@@ -1269,9 +1258,9 @@ class StreamingIngestSpec extends SparkSpec {
     // restart on the same checkpoint: no new files -> rollup unchanged,
     // verdicts identical (batch-marker idempotence)
     val q2 = StreamingIngest.startAnomalyMonitor(
-      spark, landing, ev.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, ev.schema, maxFilesPerTrigger = 1),
       "event_type", "ts", counts, verdictDir, ckpt,
-      windowDays = 7, thresholdE2 = 350, maxFilesPerTrigger = 1)
+      windowDays = 7, thresholdE2 = 350)
     q2.awaitTermination(60000)
     assert(verdicts == direct)
   }
@@ -1297,8 +1286,8 @@ class StreamingIngestSpec extends SparkSpec {
       Contracts.inRange("range", col("n"), 1L, 1000L))
     val outDir = tmpDir("cgate_out")
     val q = StreamingIngest.startContractsGate(
-      spark, landing, src.schema, "parquet", Map.empty, rules,
-      outDir, checkpointDir = tmpDir("cgate_ckpt"), maxFilesPerTrigger = 1)
+      spark, FileStreamSpec(landing, src.schema, maxFilesPerTrigger = 1), rules,
+      outDir, checkpointDir = tmpDir("cgate_ckpt"))
     q.awaitTermination(120000)
     val clean = spark.read.parquet(s"$outDir/clean/batch=*")
       .select("id").as[Long].collect().sorted.toSeq
@@ -1337,9 +1326,11 @@ class StreamingIngestSpec extends SparkSpec {
         .filter(_.getName.endsWith(".parquet")).head
       Files.copy(f.toPath, Paths.get(s"$landing/$nm.parquet"))
     }
-    val q = StreamingIngest.startClusteredWriter(
-      spark, landing, sch, "parquet", Map.empty, identity,
-      table, checkpointDir = tmpDir("sclw_ckpt"), maxFilesPerTrigger = 1)
+    def run(ckpt: String) = StreamingIngest.foreachBatchStage(
+      FileStreamSpec(landing, sch, maxFilesPerTrigger = 1).read(spark), ckpt) {
+      (b, id) => table.clusterAppend(spark, b, Some(id))
+    }
+    val q = run(tmpDir("sclw_ckpt"))
     q.awaitTermination(120000)
     val full = (1 to 1000).toSeq
     assert(table.read(spark).collect().map(_.getInt(0)).sorted.toSeq == full)
@@ -1352,9 +1343,7 @@ class StreamingIngestSpec extends SparkSpec {
       .collect().map(_.getInt(0)).sorted.toSeq == (901 to 1000).toSeq)
     // fresh checkpoint, same landing dir, same batch composition: every
     // micro-batch replaces its own dirs — the table converges, no dups
-    val q2 = StreamingIngest.startClusteredWriter(
-      spark, landing, sch, "parquet", Map.empty, identity,
-      table, checkpointDir = tmpDir("sclw_ckpt2"), maxFilesPerTrigger = 1)
+    val q2 = run(tmpDir("sclw_ckpt2"))
     q2.awaitTermination(120000)
     assert(table.read(spark).collect().map(_.getInt(0)).sorted.toSeq == full)
   }
@@ -1681,10 +1670,9 @@ class StreamingIngestSpec extends SparkSpec {
         (col("p") - 5L).as("s"), (col("p") + 5L).as("e"))
     val outDir = tmpDir("wprob_out")
     val q = StreamingIngest.startWindowProber(
-      spark, landing, b0.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, b0.schema, maxFilesPerTrigger = 1),
       pointCol = "p", toIntervals = toIntervals, indexTable = idx,
-      outDir = outDir, checkpointDir = tmpDir("wprob_ckpt"),
-      maxFilesPerTrigger = 1)
+      outDir = outDir, checkpointDir = tmpDir("wprob_ckpt"))
     q.awaitTermination(120000)
     val out = spark.read.parquet(outDir + "/batch=*")
       .select("pid", "iv").as[(Long, Long)].collect().toSet
@@ -1716,10 +1704,9 @@ class StreamingIngestSpec extends SparkSpec {
         Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet"))
       }
     val outDir = tmpDir("idl_out")
-    val q = StreamingIngest.startIntraDocScrubber(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", outDir = outDir,
-      checkpointDir = tmpDir("idl_ckpt"), maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, tmpDir("idl_ckpt"))(TextDedup.intraDocLineDedup(_, "doc_id", "text"))
     q.awaitTermination(120000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "n_lines", "n_removed", "clean_md5")
@@ -1744,10 +1731,9 @@ class StreamingIngestSpec extends SparkSpec {
       Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet"))
     }
     val outDir = tmpDir("ent_out") + "/scored"
-    val q = StreamingIngest.startEntropyScorer(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", outDir = outDir,
-      checkpointDir = tmpDir("ent_ckpt"), maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, tmpDir("ent_ckpt"))(Repetition.charEntropy(_, "doc_id", "text"))
     q.awaitTermination(120000)
     val streamed = spark.read.parquet(outDir)
       .select("doc_id", "n_chars", "entropy")
@@ -1778,10 +1764,9 @@ class StreamingIngestSpec extends SparkSpec {
         Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet")) }
     val outDir = tmpDir("diff_out") + "/classified"
     val q = StreamingIngest.startDiffClassifier(
-      spark, landing, arrivals.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, arrivals.schema, maxFilesPerTrigger = 1),
       idCol = "doc_id", textCol = "text", baseline = baseline,
-      outDir = outDir, checkpointDir = tmpDir("diff_ckpt"),
-      maxFilesPerTrigger = 1)
+      outDir = outDir, checkpointDir = tmpDir("diff_ckpt"))
     q.awaitTermination(120000)
     val streamed = spark.read.parquet(outDir)
       .select("doc_id", "status").as[(Long, String)].collect().toSet
@@ -1817,10 +1802,9 @@ class StreamingIngestSpec extends SparkSpec {
         Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet")) }
     val outDir = tmpDir("mix_out") + "/kept"
     val q = StreamingIngest.startMixtureSampler(
-      spark, landing, docs.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1),
       stratumCol = "source", keyCol = "doc_id", cuts = cuts,
-      outDir = outDir, checkpointDir = tmpDir("mix_ckpt"),
-      maxFilesPerTrigger = 1)
+      outDir = outDir, checkpointDir = tmpDir("mix_ckpt"))
     q.awaitTermination(120000)
     val streamed = spark.read.parquet(outDir)
       .select("doc_id").as[Long].collect().toSet
@@ -1864,11 +1848,9 @@ class StreamingIngestSpec extends SparkSpec {
         Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet"))
       }
     val outDir = tmpDir("rep_out")
-    val q = StreamingIngest.startRepetitionScorer(
-      spark, landing, docs.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text",
-      outDir = outDir, checkpointDir = tmpDir("rep_ckpt"),
-      maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, docs.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, tmpDir("rep_ckpt"))(Repetition.gopherRepetition(_, "doc_id", "text"))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .collect().map(_.toSeq).toSet
@@ -1897,11 +1879,9 @@ class StreamingIngestSpec extends SparkSpec {
         Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet"))
       }
     val outDir = tmpDir("c4_out")
-    val q = StreamingIngest.startC4Scrubber(
-      spark, landing, planted.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text",
-      outDir = outDir, checkpointDir = tmpDir("c4_ckpt"),
-      maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, planted.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, tmpDir("c4_ckpt"))(graft.operators.C4Rules.clean(_, "doc_id", "text"))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .collect().map(_.toSeq).toSet
@@ -1948,10 +1928,9 @@ class StreamingIngestSpec extends SparkSpec {
     }
     val outDir = tmpDir("ccm_out")
     val q = StreamingIngest.startClusterMaintainer(
-      spark, landing, batchA.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, batchA.schema, maxFilesPerTrigger = 1),
       idCol = "doc_id", textCol = "text", corpus = corpus, table = table,
-      outDir = outDir, checkpointDir = tmpDir("ccm_ckpt"),
-      maxFilesPerTrigger = 1)
+      outDir = outDir, checkpointDir = tmpDir("ccm_ckpt"))
     q.awaitTermination(300000)
     val stored = table.read(spark).as[(Long, Long)].collect().toSet
     // ground truth: one-shot mining + clustering over corpus ∪ arrivals
@@ -2015,11 +1994,10 @@ class StreamingIngestSpec extends SparkSpec {
       Files.copy(f.toPath, Paths.get(s"$landing/$nm.parquet"))
     }
     val q = StreamingIngest.startCorpusDeduper(
-      spark, landing, batchA.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, batchA.schema, maxFilesPerTrigger = 1),
       idCol = "doc_id", textCol = "text",
       corpusTable = corpusTable, clusterTable = clusterTable,
-      outDir = tmpDir("cdup_out"), checkpointDir = tmpDir("cdup_ckpt"),
-      maxFilesPerTrigger = 1)
+      outDir = tmpDir("cdup_out"), checkpointDir = tmpDir("cdup_ckpt"))
     q.awaitTermination(300000)
     val after = corpusTable.read(spark)
       .select("doc_id").as[Long].collect().toSet
@@ -2033,11 +2011,10 @@ class StreamingIngestSpec extends SparkSpec {
     // FULL replay (fresh checkpoint, same landing): keyed upsert + fold +
     // delete all converge — nothing changes
     val q2 = StreamingIngest.startCorpusDeduper(
-      spark, landing, batchA.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, batchA.schema, maxFilesPerTrigger = 1),
       idCol = "doc_id", textCol = "text",
       corpusTable = corpusTable, clusterTable = clusterTable,
-      outDir = tmpDir("cdup_out2"), checkpointDir = tmpDir("cdup_ckpt2"),
-      maxFilesPerTrigger = 1)
+      outDir = tmpDir("cdup_out2"), checkpointDir = tmpDir("cdup_ckpt2"))
     q2.awaitTermination(300000)
     assert(corpusTable.read(spark)
       .select("doc_id").as[Long].collect().toSet == after)
@@ -2088,12 +2065,11 @@ class StreamingIngestSpec extends SparkSpec {
       Files.copy(f.toPath, Paths.get(s"$landing/$nm.parquet"))
     }
     val q = StreamingIngest.startIndexedCorpusDeduper(
-      spark, landing, batchA.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, batchA.schema, maxFilesPerTrigger = 1),
       idCol = "doc_id", textCol = "text",
       indexTable = indexTable, corpusTable = corpusTable,
       clusterTable = clusterTable,
-      outDir = tmpDir("icdup_out"), checkpointDir = tmpDir("icdup_ckpt"),
-      maxFilesPerTrigger = 1)
+      outDir = tmpDir("icdup_out"), checkpointDir = tmpDir("icdup_ckpt"))
     q.awaitTermination(300000)
     val after = corpusTable.read(spark)
       .select("doc_id").as[Long].collect().toSet
@@ -2110,12 +2086,11 @@ class StreamingIngestSpec extends SparkSpec {
     // FULL replay (fresh checkpoint, same landing): keyed commits + fold +
     // deletes all converge — corpus, clusters AND index unchanged
     val q2 = StreamingIngest.startIndexedCorpusDeduper(
-      spark, landing, batchA.schema, "parquet", Map.empty,
+      spark, FileStreamSpec(landing, batchA.schema, maxFilesPerTrigger = 1),
       idCol = "doc_id", textCol = "text",
       indexTable = indexTable, corpusTable = corpusTable,
       clusterTable = clusterTable,
-      outDir = tmpDir("icdup_out2"), checkpointDir = tmpDir("icdup_ckpt2"),
-      maxFilesPerTrigger = 1)
+      outDir = tmpDir("icdup_out2"), checkpointDir = tmpDir("icdup_ckpt2"))
     q2.awaitTermination(300000)
     assert(corpusTable.read(spark)
       .select("doc_id").as[Long].collect().toSet == after)
@@ -2149,10 +2124,9 @@ class StreamingIngestSpec extends SparkSpec {
       }
     val outDir = tmpDir("bp_out")
     val ckpt = tmpDir("bp_ckpt")
-    val q = StreamingIngest.startBoilerplateScrubber(
-      spark, landing, planted.schema, "parquet", Map.empty,
-      idCol = "doc_id", textCol = "text", model = model,
-      outDir = outDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+    val q = StreamingIngest.batchStage(
+      FileStreamSpec(landing, planted.schema, maxFilesPerTrigger = 1).read(spark),
+      outDir, ckpt)(TextDedup.scrubBoilerplate(_, "doc_id", "text", model))
     q.awaitTermination(180000)
     val streamed = spark.read.parquet(s"$outDir/batch=*")
       .select("doc_id", "n_lines", "n_boiler_lines", "clean_md5")
@@ -2384,9 +2358,9 @@ class StreamingIngestSpec extends SparkSpec {
     val reqSchema = StructType(Seq(StructField("the_id", LongType)))
     def run(): Unit = {
       val q = StreamingIngest.startForgetter(
-        spark, landing, reqSchema, "parquet", Map.empty,
+        spark, FileStreamSpec(landing, reqSchema, maxFilesPerTrigger = 1),
         idCol = "the_id", targets = targets,
-        auditDir = auditDir, checkpointDir = ckpt, maxFilesPerTrigger = 1)
+        auditDir = auditDir, checkpointDir = ckpt)
       q.awaitTermination(180000)
       ()
     }
@@ -2664,6 +2638,13 @@ class StreamingIngestSpec extends SparkSpec {
       spark, src, mirror, Seq("doc_id"), ckpt)
     q.awaitTermination(180000)
     assert(mirror.read(spark).count() == 2)
+    // an aggregate view over the same source shares the commit-log tail
+    val view = WarehouseTable(tmpDir("cdcl_view") + "/v")
+    val viewCkpt = tmpDir("cdcl_vckpt")
+    def startView() = StreamingIngest.startAggView(
+      spark, src, view, Seq("text"), Seq("doc_id"), viewCkpt)
+    startView().awaitTermination(180000)
+    assert(StreamingIngest.readAggView(spark, view).count() == 2)
     // the source's timeline is rewritten: rollback reclaims snapshot ids,
     // so the mirror's applied-through cursor points into a DELETED
     // history — new commits reuse the same ids with different content
@@ -2676,5 +2657,45 @@ class StreamingIngestSpec extends SparkSpec {
         spark, src, mirror, Seq("doc_id"), ckpt)
     }
     assert(err.getMessage.contains("lineage"))
+    val viewErr = intercept[IllegalStateException](startView())
+    assert(viewErr.getMessage.contains("lineage"))
+  }
+
+  test("batchStage crash replay: the uncommitted batch re-runs under its id and rewrites only its own dir") {
+    import spark.implicits._
+    val landing = tmpDir("crash_land")
+    Seq(Seq((1L, "a b"), (2L, "c")), Seq((3L, "d e f"))).zipWithIndex.foreach {
+      case (rows, i) =>
+        val stage = tmpDir(s"crash_stage$i") + "/files"
+        rows.toDF("doc_id", "text").coalesce(1).write.parquet(stage)
+        val f = new java.io.File(stage).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(f.toPath, Paths.get(s"$landing/f$i.parquet"))
+    }
+    val sch = Seq((0L, "")).toDF("doc_id", "text").schema
+    val outDir = tmpDir("crash_out")
+    val ckpt = tmpDir("crash_ckpt")
+    def run(): Unit = StreamingIngest.batchStage(
+      FileStreamSpec(landing, sch, maxFilesPerTrigger = 1).read(spark),
+      outDir, ckpt)(_.withColumn("n_chars", length(col("text"))))
+      .awaitTermination(120000)
+    def rows() = spark.read.parquet(s"$outDir/batch=*")
+      .select("doc_id", "text", "n_chars").as[(Long, String, Int)].collect().toSeq.sorted
+    def dirs() = new java.io.File(outDir).list().filter(_.startsWith("batch=")).toSet
+    def parts(d: String) =
+      new java.io.File(s"$outDir/$d").list().filter(_.endsWith(".parquet")).toSet
+    run()
+    val (rows0, dirs0, parts0) = (rows(), dirs(), parts("batch=1"))
+    assert(dirs0 == Set("batch=0", "batch=1") && rows0.size == 3)
+    // a crash after batch 1's body ran but before its commit was logged
+    val commit = Paths.get(s"$ckpt/commits/1")
+    Files.delete(commit)
+    Files.deleteIfExists(Paths.get(s"$ckpt/commits/.1.crc"))
+    run()
+    assert(Files.exists(commit)) // batch 1 ran again and committed
+    val parts1 = parts("batch=1") // ...replacing its own dir's files
+    assert(parts1.size == parts0.size && (parts1 & parts0).isEmpty)
+    assert(dirs() == dirs0)
+    assert(rows() == rows0)
   }
 }

@@ -1071,10 +1071,12 @@ class WarehouseTableSpec extends SparkSpec {
     c.create(sch, None, Map.empty)
     c.merge(spark, df((1, "a")), Seq("k"))
     val cSnap = c.currentSnapshotId
+    val cDirs = dataDirs(c)
     intercept[IllegalArgumentException] {
       c.merge(spark, df((null, "boom")), Seq("k"))
     }
     assert(c.currentSnapshotId == cSnap)
+    assert(dataDirs(c) == cDirs, "refused merge left orphan rewrite dirs")
     assert(c.read(spark).collect().map(r => (r.getInt(0), r.getString(1)))
       .toSet == Set((1, "a")))
   }
