@@ -2058,28 +2058,21 @@ object SparkEntry {
     // cluster table must equal exact components over corpus ∪ arrivals.
     // Re-runs replay the same batch — every commit is idempotent.
     "q106_incremental_components" -> ((s, dir) => {
-      def tt[A](label: String)(f: => A): A =
-        if (sys.env.contains("GRAFT_Q106_DEBUG")) {
-          val t0 = System.nanoTime(); val r = f
-          System.err.println(f"[q106] $label%-16s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-          r
-        } else f
       val (idxT, corpT, clusT) = q106Fixture(s, dir)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val arrivals = docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + PlantOffset).as("doc_id"), col("text"))
-      val storePairs = tt("lookup")(TextDedup.minhashLookupAtRest(s, arrivals,
+      val storePairs = TextDedup.minhashLookupAtRest(s, arrivals,
         corpT.read(s).select(col("doc_id"), col("text")),
-        "doc_id", "text", idxT, threshold = 0.5).localCheckpoint())
+        "doc_id", "text", idxT, threshold = 0.5).localCheckpoint()
       val arrSh = TextDedup.shingled(arrivals, "doc_id", "text", 3)
-      val arrPairs = tt("arrPairs")(TextDedup.verifyPairs(
-        TextDedup.minHashCandidates(arrSh), arrSh, 0.5).localCheckpoint())
+      val arrPairs = TextDedup.verifyPairs(
+        TextDedup.minHashCandidates(arrSh), arrSh, 0.5).localCheckpoint()
       val fresh = storePairs.select(col("d1"), col("d2"))
         .unionByName(arrPairs.select(col("d1"), col("d2"))).distinct()
-      tt("idxCommit")(
-        TextDedup.minhashIndexCommit(s, arrivals, "doc_id", "text", idxT, corpT))
-      tt("ccCommit")(Dedup.componentsCommit(
-        s, arrivals.select(col("doc_id").as("id")), fresh, clusT))
+      TextDedup.minhashIndexCommit(s, arrivals, "doc_id", "text", idxT, corpT)
+      Dedup.componentsCommit(
+        s, arrivals.select(col("doc_id").as("id")), fresh, clusT)
       clusT.read(s).select(col("id").as("doc_id"), col("cluster"))
     }),
 

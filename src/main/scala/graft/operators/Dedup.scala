@@ -401,12 +401,6 @@ object Dedup {
           graft.table.WarehouseTable.tableProperties("MOR", "snappy"))
       table.merge(spark, assignment, Seq("id"))
     } else {
-      def tt[A](label: String)(f: => A): A =
-        if (sys.env.contains("GRAFT_Q106_DEBUG")) {
-          val t0 = System.nanoTime(); val r = f
-          System.err.println(f"[ccCommit] $label%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-          r
-        } else f
       val stored = table.read(spark).select(col("id"), col("cluster"))
       val touchedIds = newPairs.select(col("d1").as("id"))
         .unionByName(newPairs.select(col("d2").as("id")))
@@ -417,8 +411,8 @@ object Dedup {
         .select(col("cluster")).distinct()
       val affected = stored.join(touchedClusters, Seq("cluster"), "left_semi")
         .select(col("id"), col("cluster"))
-      val folded = tt("fold")(incrementalComponents(affected, newIds, newPairs))
-      tt("merge")(table.merge(spark, folded, Seq("id")))
+      val folded = incrementalComponents(affected, newIds, newPairs)
+      table.merge(spark, folded, Seq("id"))
     }
   }
 

@@ -1133,20 +1133,14 @@ object TextDedup {
     require(missProb <= 0.001,
       f"banding ${bands}x$rows gives only ${(1 - missProb) * 100}%.2f%% recall " +
         f"at jaccard $minRecallJaccard — raise bands (or minRecallJaccard)")
-    def tt[A](label: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_Q106_DEBUG")) {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[lookup] $label%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        r
-      } else f
     val qsh = shingled(arrivals, idCol, textCol, shingleN)
-    val qidx = tt("qidx ckpt")(bandHashes(qsh, bands, rows)
+    val qidx = bandHashes(qsh, bands, rows)
       .withColumn("pb",
         (col("band") * partBuckets + pmod(col("bh"), lit(partBuckets))).cast("int"))
-      .localCheckpoint())
+      .localCheckpoint()
     // bounded: at most bands·partBuckets distinct values reach the driver
-    val pbVals = tt("pbVals")(
-      qidx.select(col("pb")).distinct().collect().map(_.get(0)).toSeq)
+    val pbVals =
+      qidx.select(col("pb")).distinct().collect().map(_.get(0)).toSeq
     val idx = table.read(spark, partitions = Some(pbVals))
     val cands = idx
       .join(qidx.select(col("doc_id").as("qid"), col("band"), col("bh")),
@@ -1199,18 +1193,12 @@ object TextDedup {
     def param(k: String): Int = stored.getOrElse(s"minhash.$k",
       throw new IllegalArgumentException(
         s"index table has no minhash.$k property — not a minhash index")).toInt
-    def tt[A](label: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_Q106_DEBUG")) {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[idxCommit] $label%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        r
-      } else f
     val bands = param("bands"); val rows = param("rows")
     val shingleN = param("shingleN"); val partBuckets = param("partBuckets")
     val idx = bandHashes(shingled(accepted, idCol, textCol, shingleN), bands, rows)
       .withColumn("pb",
         (col("band") * partBuckets + pmod(col("bh"), lit(partBuckets))).cast("int"))
-    tt("idxMerge")(indexTable.merge(spark, idx, Seq("doc_id", "band")))
+    indexTable.merge(spark, idx, Seq("doc_id", "band"))
     val corp = accepted.select(
       col(idCol).cast("long").as("doc_id"),
       graft.functions.TextFunctions.fingerprint(col(textCol)).as("fp"),
@@ -1222,7 +1210,7 @@ object TextDedup {
     if (!corpusTable.exists)
       corpusTable.create(corp.schema,
         properties = graft.table.WarehouseTable.tableProperties("MOR", "snappy"))
-    tt("corpMerge")(corpusTable.merge(spark, corp, Seq("doc_id")))
+    corpusTable.merge(spark, corp, Seq("doc_id"))
   }
 
   /** Asymmetric CONTAINMENT decontamination — the graded companion to the

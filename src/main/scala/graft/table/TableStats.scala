@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.language.existentials
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -79,18 +80,31 @@ object TableStats {
   /** A Configuration whose lazy default-resource load has already run:
     * sharing one instance across [[parMap]] threads is only safe after
     * first use (Configuration's resource loading is not fully
-    * thread-safe on first touch). One property read forces it, on the
-    * caller's thread, before any fan-out.
+    * thread-safe on first touch). One property read forces it inside the
+    * initializer, before any fan-out. It holds only the default
+    * resources and nothing sets it, so one instance serves every harvest
+    * (loading it costs ~10 ms of XML parsing).
     */
-  private def loadedConf(): Configuration = {
+  private lazy val loadedConf: Configuration = {
     val conf = new Configuration()
     conf.get("io.file.buffer.size") // force the lazy resource load here
     conf
   }
 
+  /** A footer reader over `file` configured from `conf`. The one-argument
+    * `ParquetFileReader.open` builds its read options from a FRESH Hadoop
+    * Configuration, re-parsing the default XML resources on every footer
+    * — the bulk of a footer harvest's driver time; options built from
+    * the caller's loaded `conf` skip that.
+    */
+  private def openFooter(conf: Configuration, file: Path): ParquetFileReader =
+    ParquetFileReader.open(
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toUri), conf),
+      HadoopReadOptions.builder(conf).build())
+
   /** Harvest per-dir stats from the parquet footers under `root/relDir`. */
   def collect(root: String, relDirs: Seq[String]): Map[String, DirStats] = {
-    val conf = loadedConf()
+    val conf = loadedConf
     parMap(relDirs) { rel =>
       val dir = Paths.get(root, rel)
       if (!Files.isDirectory(dir)) None
@@ -116,7 +130,7 @@ object TableStats {
     * refusal; Spark-written parquet always records null counts).
     */
   def nullCount(root: String, relDirs: Seq[String], cols: Set[String]): Long = {
-    val conf = loadedConf()
+    val conf = loadedConf
     parMap(relDirs) { rel =>
       val dir = Paths.get(root, rel)
       if (!Files.isDirectory(dir)) 0L
@@ -126,8 +140,7 @@ object TableStats {
           try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
           finally listing.close()
         files.map { f =>
-          val reader = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+          val reader = openFooter(conf, f)
           try reader.getFooter.getBlocks.asScala.map(
             _.getColumns.asScala
               .filter(c => cols.contains(c.getPath.toDotString))
@@ -147,7 +160,7 @@ object TableStats {
     * same bill [[collect]] pays.
     */
   def dirFootprint(root: String, relDirs: Seq[String]): Map[String, (Long, Long, Long)] = {
-    val conf = loadedConf()
+    val conf = loadedConf
     parMap(relDirs) { rel =>
       val dir = Paths.get(root, rel)
       if (!Files.isDirectory(dir)) rel -> ((0L, 0L, 0L))
@@ -157,8 +170,7 @@ object TableStats {
           try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
           finally listing.close()
         val rows = files.map { f =>
-          val reader = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+          val reader = openFooter(conf, f)
           try reader.getRecordCount finally reader.close()
         }.sum
         rel -> ((files.size.toLong, rows, files.map(Files.size(_)).sum))
@@ -170,7 +182,7 @@ object TableStats {
     * for the `files` metadata table. Same footer-only bill.
     */
   def fileFootprint(root: String, relDirs: Seq[String]): Seq[(String, String, Long, Long)] = {
-    val conf = loadedConf()
+    val conf = loadedConf
     parMap(relDirs) { rel =>
       val dir = Paths.get(root, rel)
       if (!Files.isDirectory(dir)) Nil
@@ -180,8 +192,7 @@ object TableStats {
           try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
           finally listing.close()
         files.map { f =>
-          val reader = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+          val reader = openFooter(conf, f)
           val rows = try reader.getRecordCount finally reader.close()
           (rel, f.getFileName.toString, rows, Files.size(f))
         }
@@ -229,8 +240,7 @@ object TableStats {
           val conf = new Configuration()
           it.map { case (rel, name) =>
             val f = Paths.get(rootC, rel, name)
-            val reader = ParquetFileReader.open(
-              HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+            val reader = openFooter(conf, f)
             val rows = try reader.getRecordCount finally reader.close()
             (rel, name, rows, Files.size(f))
           }
@@ -254,8 +264,7 @@ object TableStats {
   }
 
   private def fileStats(conf: Configuration, file: Path): Map[String, (JValue, JValue)] = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toUri), conf))
+    val reader = openFooter(conf, file)
     try {
       reader.getFooter.getBlocks.asScala.foldLeft(Map.empty[String, (JValue, JValue)]) {
         (acc, block) =>

@@ -665,9 +665,13 @@ final class WarehouseTable(val root: String) {
   }
 
   /** The (file, pos) rows of a snapshot's position-delete dirs. */
-  private def posDeleteFrame(spark: SparkSession, m: Manifest): DataFrame =
-    spark.read.schema(s"$PosFileCol STRING, $PosIdxCol BIGINT")
-      .parquet(m.posDeletes.map(d => s"$root/$d"): _*)
+  private def posDeleteFrame(spark: SparkSession, m: Manifest): DataFrame = {
+    val schema = StructType.fromDDL(s"$PosFileCol STRING, $PosIdxCol BIGINT")
+    ManifestScan.frames(spark, root, m.posDeletes.distinct, schema, identity) match {
+      case Nil => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      case scans => scans.reduce(_ unionByName _)
+    }
+  }
 
   /** The manifest-relative data-dir candidates of an absolute file path
     * a position-delete sidecar names. Manifests name dirs relative to
@@ -1181,22 +1185,30 @@ final class WarehouseTable(val root: String) {
     // projection collapse to the declared fields exactly as before.
     val renames = renameMap(meta)
     val schema = physicalSchema(declared, renames)
-    // position identity must be captured AT THE SCAN (the `_metadata`
+    // ONE projection per scan: the logical columns (prior names
+    // coalesced), the tombstone defaulted to false, and the position
+    // identity — which must be captured AT THE SCAN (the `_metadata`
     // pseudo-column resolves only against a file-source relation, not
-    // through a projection), so each per-dir read surfaces it immediately
-    def addPos(df: DataFrame): DataFrame =
-      if (withFilePos)
-        df.withColumn(PosFileCol, col("_metadata.file_path"))
-          .withColumn(PosIdxCol, col("_metadata.row_index"))
-      else df
-    val outCols: Seq[Column] = {
-      val logical = logicalCols(declared, renames)
-      if (withFilePos) logical :+ col(PosFileCol) :+ col(PosIdxCol)
-      else logical
-    }
+    // through a projection)
+    def projection(pos: Seq[Column]): Seq[Column] =
+      logicalCols(declared, renames).zip(declared.fieldNames).map {
+        case (c, n) if n == TombstoneCol => coalesce(c, lit(false)).as(TombstoneCol)
+        case (c, _) => c
+      } ++ (if (withFilePos) pos else Nil)
+    // one relation per directory layout, planned from the manifest's own
+    // dir list (see ManifestScan). A partitioned table's partition values
+    // live in the `col=value` segment below `data/<uuid>`; an evolved
+    // table's legacy dirs keep their own layout (none, or an old spec's
+    // column). Explicit declared schema: files predating a schema
+    // evolution lack the added columns and read NULL, and column order
+    // follows the projection.
     val dirs = wanted.values.flatten.toSeq.distinct
-    val frame =
-      if (dirs.isEmpty) {
+    val base: String => String = meta.partition match {
+      case None => identity
+      case Some(_) => d => d.split("/").take(2).mkString("/")
+    }
+    ManifestScan.frames(spark, root, dirs, schema, base) match {
+      case Nil =>
         val emptySchema =
           if (withFilePos)
             StructType(schema.fields :+
@@ -1205,35 +1217,13 @@ final class WarehouseTable(val root: String) {
               org.apache.spark.sql.types.StructField(
                 PosIdxCol, org.apache.spark.sql.types.LongType))
           else schema
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], emptySchema)
-      } else {
-        // Data dirs are grouped by their parent uuid dir so hive partition
-        // discovery (basePath) restores the partition column.
-        meta.partition match {
-          case None =>
-            addPos(spark.read.schema(schema)
-              .parquet(dirs.map(d => s"$root/$d"): _*))
-          case Some(p) =>
-            val byBase = dirs.groupBy(d => d.split("/").take(2).mkString("/"))
-            // explicit declared schema on every group: files predating a
-            // schema evolution simply lack the added columns and parquet
-            // fills them with NULL (same contract as the unpartitioned
-            // branch), the partition column resolves from the dir path with
-            // its declared type, and column order follows the schema —
-            // no per-column existence probing needed
-            val parts = byBase.map { case (base, subdirs) =>
-              addPos(spark.read.schema(schema)
-                .option("basePath", s"$root/$base")
-                .parquet(subdirs.map(d => s"$root/$d"): _*))
-            }.toSeq
-            parts.reduce(_ unionByName _)
-        }
-      }
-    val projected = frame.select(outCols: _*)
-    if (withTombstone)
-      projected.withColumn(TombstoneCol, coalesce(col(TombstoneCol), lit(false)))
-    else projected
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], emptySchema)
+          .select(projection(Seq(col(PosFileCol), col(PosIdxCol))): _*)
+      case scans =>
+        val pos = Seq(col("_metadata.file_path").as(PosFileCol),
+          col("_metadata.row_index").as(PosIdxCol))
+        scans.map(_.select(projection(pos): _*)).reduce(_ unionByName _)
+    }
   }
 
   /** logical name -> its prior physical names, newest first (set by
@@ -1614,7 +1604,10 @@ final class WarehouseTable(val root: String) {
     * check and the COW overlapped check).
     */
   private def sweepUncommitted(rels: Iterable[String]): Unit =
-    rels.foreach { rel =>
+    // a write owns its whole data/<uuid> dir — the partition dirs the
+    // manifest would name AND the job's _SUCCESS marker beside them — so
+    // sweep at that level, or a partitioned write leaves its uuid dir
+    rels.map(_.split("/").take(2).mkString("/")).toSet.foreach { rel: String =>
       val d = rootPath.resolve(rel)
       if (Files.exists(d)) {
         val walk = Files.walk(d)
@@ -1655,21 +1648,15 @@ final class WarehouseTable(val root: String) {
     // Concurrent-writer safe: the delta rebases onto the snapshot current
     // at commit time (its sequence number re-derives from that manifest —
     // arbitration picks a total order between racing upserts).
-    def tt[A](label: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_MERGE_DEBUG")) {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[mergeMor] $label%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        r
-      } else f
     val src = source.withColumn(TombstoneCol,
       coalesce(deleteWhere.getOrElse(lit(false)), lit(false)))
-    val (added, stats) = tt("write")(writeDataDir(src, meta, extraCols = Seq(TombstoneCol)))
-    tt("nullCheck")(requireKeysNotNull(added, keys))
-    tt("commit")(commitRebasable { old =>
+    val (added, stats) = writeDataDir(src, meta, extraCols = Seq(TombstoneCol))
+    requireKeysNotNull(added, keys)
+    commitRebasable { old =>
       val seq = old.deltas.map(_.seq).maxOption.getOrElse(0L) + 1
       Manifest(old.base, old.deltas :+ Delta(seq, added),
         old.stats ++ stats, old.posDeletes)
-    })
+    }
     // compaction policy: read amplification grows linearly with delta
     // count (every read unions base + all deltas and re-arbitrates), so
     // once it crosses the table's threshold the deltas fold back into the
@@ -1678,10 +1665,9 @@ final class WarehouseTable(val root: String) {
     // 'compact.delta.threshold' (0 disables; default 8).
     val threshold = meta.properties.get("compact.delta.threshold")
       .map(_.toInt).getOrElse(8)
-    tt("compactChk")(
-      if (threshold > 0 && readManifest(currentSnapshotId).deltas.size >= threshold)
-        tryCompact(spark)
-      else autoCompactIfDegraded(spark, meta))
+    if (threshold > 0 && readManifest(currentSnapshotId).deltas.size >= threshold)
+      tryCompact(spark)
+    else autoCompactIfDegraded(spark, meta)
   }
 
   /** Inline read-amplification maintenance after a delta/sidecar commit —
@@ -1903,14 +1889,6 @@ final class WarehouseTable(val root: String) {
     }
   }
 
-  private def dbg[T](label: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_MERGE_DEBUG")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[merge] $label%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    } else f
-
   /** General MERGE program (SQL WHEN-clause semantics incl. conditional
     * updates and DELETE branches — see [[MergeInto.MergeClauses]]). Always
     * executes copy-on-write at partition granularity: deltas of a MOR
@@ -2008,22 +1986,26 @@ final class WarehouseTable(val root: String) {
       if (enforceKeyNotNull && keys.nonEmpty) {
         val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
         try Some(pool.submit(new java.util.concurrent.Callable[Boolean] {
-          def call(): Boolean = dbg("nullCheck")(
-            src.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty)
+          def call(): Boolean =
+            src.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty
         }))
         finally pool.shutdown() // runs the one submitted task, then exits
       } else None
     def awaitCleanKeys(written: Map[String, List[String]]): Unit =
-      nullCheckFut.foreach { fut =>
+      nullCheckFut.map(WarehouseTable.awaitedNullCheck).foreach { fut =>
         // ANY outcome that prevents the commit sweeps the written dirs —
         // a check-job infrastructure failure must not leak orphans any
         // more than a null-key verdict does
         val clean =
           try fut.get()
           catch {
-            case e: java.util.concurrent.ExecutionException =>
+            case e: Throwable =>
               sweepUncommitted(written.values.flatten)
-              throw e.getCause
+              throw (e match {
+                case x: java.util.concurrent.ExecutionException
+                    if x.getCause != null => x.getCause
+                case other => other
+              })
           }
         if (!clean) {
           sweepUncommitted(written.values.flatten)
@@ -2041,7 +2023,7 @@ final class WarehouseTable(val root: String) {
         case Some(p) =>
           // 1. partitions the program writes into (null → the hive default
           //    partition name so the keys line up with the manifest's)
-          val srcParts = dbg("srcParts")(srcPartsFn(src, p))
+          val srcParts = srcPartsFn(src, p)
           srcParts match {
             case None =>
               // unbounded writes (partition-moving update): rewrite all
@@ -2066,16 +2048,16 @@ final class WarehouseTable(val root: String) {
                   val keyRangeFilters = srcKeyRangeFilters(src, keys, meta)
                   val targetKeys = read(spark, None, keyRangeFilters)
                     .select((keys :+ p).map(col): _*)
-                  dbg("matchedParts")(targetKeys
+                  targetKeys
                     .join(broadcastIfSmall(src.select(keyCols: _*).distinct()), keys, "left_semi")
                     .select(col(p).cast("string")).distinct()
-                    .collect().map(r => Option(r.getString(0)).getOrElse(HiveNullPartition)).toSet)
+                    .collect().map(r => Option(r.getString(0)).getOrElse(HiveNullPartition)).toSet
                 }
               val affected = (sp ++ matchedParts).filter(old.base.contains)
               // 3. merge only affected partitions
               val target = read(spark, Some(affected.toSeq))
               val merged = upsert(target, src)
-              val (rewritten, stats) = dbg("write")(writeDataDir(merged, meta))
+              val (rewritten, stats) = writeDataDir(merged, meta)
               awaitCleanKeys(rewritten)
               // On an evolved table the pruned target read sweeps in EVERY
               // legacy-spec dir (they can't prune by the current spec), so
@@ -2099,9 +2081,9 @@ final class WarehouseTable(val root: String) {
               // pos-deletes carry: untouched partitions' erasures stay
               // live; refs into rewritten dirs are inert (the dirs left
               // the manifest) and are cleared at the next full rewrite
-              dbg("commit")(commit(cur,
+              commit(cur,
                 Manifest(newBase, Nil, old.stats ++ stats,
-                  old.posDeletes).pruneStats))
+                  old.posDeletes).pruneStats)
           }
       }
     } finally {
@@ -4222,6 +4204,16 @@ object WarehouseTable {
     * so the specs flip this instead. Production never sets it.
     */
   @volatile private[graft] var simulateLinkless = false
+
+  /** Test seam over the COW merge's overlapped null-key check: the future
+    * the merge awaits before committing passes through this. Specs swap
+    * in a future whose `get` is interrupted or cancelled — outcomes a
+    * real check job cannot be steered into — to pin the no-trace sweep.
+    * Production never sets it.
+    */
+  @volatile private[graft] var awaitedNullCheck
+      : java.util.concurrent.Future[Boolean] => java.util.concurrent.Future[Boolean] =
+    identity
   private[table] val rebaseAttempts =
     new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
   def rebaseRecording(on: Boolean): Unit = {

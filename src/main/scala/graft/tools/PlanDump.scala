@@ -71,7 +71,7 @@ object PlanDump {
           "awaited before the commit; exception surface and no-trace " +
           "contract unchanged. The RETURNED frame's plan (the final table " +
           "read) is identical before and after by design; evidence: " +
-          "GRAFT_MERGE_DEBUG nullCheck timings + 8-gate A/B in " +
+          "nullCheck timings + 8-gate A/B in " +
           "OPTIMIZATION_r17.md batch 2."
       Seq("q33_cdc_delete_pipeline", "q157_sql_update_delete",
         "q168_cdc_mirror_cow", "q23_sql_merge").foreach { q =>

@@ -1081,6 +1081,51 @@ class WarehouseTableSpec extends SparkSpec {
       .toSet == Set((1, "a")))
   }
 
+  test("COW merge: an interrupted or cancelled null-key wait sweeps the written dirs and rethrows") {
+    import java.util.concurrent.{CancellationException, Future, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    def dataDirs(t: WarehouseTable): Set[String] = {
+      val l = java.nio.file.Files.list(java.nio.file.Paths.get(t.root, "data"))
+      try l.iterator().asScala.map(_.getFileName.toString).toSet finally l.close()
+    }
+    // the awaited future fails in `get` itself (not through an
+    // ExecutionException); the real check job is cancelled alongside
+    def failing(e: () => Throwable): Future[Boolean] => Future[Boolean] = real => {
+      real.cancel(true)
+      new Future[Boolean] {
+        def cancel(interrupt: Boolean): Boolean = false
+        def isCancelled: Boolean = false
+        def isDone: Boolean = false
+        def get(): Boolean = throw e()
+        def get(timeout: Long, unit: TimeUnit): Boolean = throw e()
+      }
+    }
+    for ((partition, tag) <- Seq(None -> "flat", Some("state") -> "part")) {
+      val t = WarehouseTable(tmpDir(s"nullwait_$tag"))
+      t.create(schema, partition, Map.empty)
+      t.merge(spark, df((1, "a", "CA"), (2, "b", "NY")), Seq("k"))
+      val snap = t.currentSnapshotId
+      val dirs = dataDirs(t)
+      try {
+        WarehouseTable.awaitedNullCheck = failing(() => new InterruptedException("awaiting"))
+        intercept[InterruptedException] {
+          t.merge(spark, df((1, "z", "CA"), (3, "c", "TX")), Seq("k"))
+        }
+        assert(t.currentSnapshotId == snap, "interrupted merge moved the snapshot")
+        assert(dataDirs(t) == dirs, "interrupted merge left uncommitted data dirs")
+        WarehouseTable.awaitedNullCheck = failing(() => new CancellationException())
+        intercept[CancellationException] {
+          t.merge(spark, df((1, "z", "CA"), (3, "c", "TX")), Seq("k"))
+        }
+        assert(t.currentSnapshotId == snap, "cancelled merge moved the snapshot")
+        assert(dataDirs(t) == dirs, "cancelled merge left uncommitted data dirs")
+      } finally WarehouseTable.awaitedNullCheck = identity
+      t.merge(spark, df((1, "z", "CA"), (3, "c", "TX")), Seq("k"))
+      assert(t.read(spark).collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
+        Set((1, "z"), (2, "b"), (3, "c")))
+    }
+  }
+
   test("TIMESTAMP AS OF resolution binary-searches the id range: O(log n) manifest parses on a 100-commit table") {
     import org.apache.spark.sql.Row
     val sch = StructType(Seq(StructField("id", LongType, nullable = false)))
