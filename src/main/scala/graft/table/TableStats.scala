@@ -7,9 +7,12 @@ import scala.language.existentials
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
@@ -102,24 +105,39 @@ object TableStats {
       HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toUri), conf),
       HadoopReadOptions.builder(conf).build())
 
-  /** Harvest per-dir stats from the parquet footers under `root/relDir`. */
-  def collect(root: String, relDirs: Seq[String]): Map[String, DirStats] = {
+  /** The parquet files directly under `root/rel` (none when it is absent). */
+  private def parquetFiles(root: String, rel: String): List[Path] = {
+    val dir = Paths.get(root, rel)
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val listing = Files.list(dir)
+      try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally listing.close()
+    }
+  }
+
+  /** The one footer walk every driver-side harvest folds over: per dir, in
+    * order and on the [[parMap]] pool, `read` applied to each of its
+    * parquet files while that file's reader is open.
+    */
+  private def walkFooters[B](root: String, relDirs: Seq[String])(
+      read: (Path, ParquetFileReader) => B): Seq[(String, List[B])] = {
     val conf = loadedConf
     parMap(relDirs) { rel =>
-      val dir = Paths.get(root, rel)
-      if (!Files.isDirectory(dir)) None
-      else {
-        val listing = Files.list(dir)
-        val files =
-          try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-          finally listing.close()
-        val merged = files.foldLeft(Map.empty[String, (JValue, JValue)]) {
-          (acc, f) => mergeStats(acc, fileStats(conf, f))
-        }
-        if (merged.isEmpty) None else Some(rel -> merged)
+      rel -> parquetFiles(root, rel).map { f =>
+        val reader = openFooter(conf, f)
+        try read(f, reader) finally reader.close()
       }
-    }.flatten.toMap
+    }
   }
+
+  /** Harvest per-dir stats from the parquet footers under `root/relDir`. */
+  def collect(root: String, relDirs: Seq[String]): Map[String, DirStats] =
+    walkFooters(root, relDirs)((_, reader) => fileStats(reader)).flatMap {
+      case (rel, perFile) =>
+        val merged = perFile.foldLeft(Map.empty[String, (JValue, JValue)])(mergeStats)
+        if (merged.isEmpty) None else Some(rel -> merged)
+    }.toMap
 
   /** Footer-recorded null counts summed over `cols` across the dirs'
     * parquet files — footer-priced like [[collect]], no data pages. The
@@ -129,75 +147,79 @@ object TableStats {
     * carry the answer. Unknown statistics count as zero (never a false
     * refusal; Spark-written parquet always records null counts).
     */
-  def nullCount(root: String, relDirs: Seq[String], cols: Set[String]): Long = {
-    val conf = loadedConf
-    parMap(relDirs) { rel =>
-      val dir = Paths.get(root, rel)
-      if (!Files.isDirectory(dir)) 0L
-      else {
-        val listing = Files.list(dir)
-        val files =
-          try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-          finally listing.close()
-        files.map { f =>
-          val reader = openFooter(conf, f)
-          try reader.getFooter.getBlocks.asScala.map(
-            _.getColumns.asScala
-              .filter(c => cols.contains(c.getPath.toDotString))
-              .map { c =>
-                val st = c.getStatistics
-                if (st == null || !st.isNumNullsSet) 0L else st.getNumNulls
-              }.sum).sum
-          finally reader.close()
+  def nullCount(root: String, relDirs: Seq[String], cols: Set[String]): Long =
+    walkFooters(root, relDirs) { (_, reader) =>
+      reader.getFooter.getBlocks.asScala.iterator.flatMap(_.getColumns.asScala)
+        .filter(c => cols.contains(c.getPath.toDotString))
+        .map { c =>
+          val st = c.getStatistics
+          if (st == null || !st.isNumNullsSet) 0L else st.getNumNulls
         }.sum
-      }
-    }.sum
-  }
+    }.flatMap(_._2).sum
 
   /** (files, rows, bytes) per dir — parquet FOOTER record counts plus fs
     * metadata, no data pages read: the material for an Iceberg-style
     * `partitions` metadata table. Cost: one footer open per file, the
     * same bill [[collect]] pays.
     */
-  def dirFootprint(root: String, relDirs: Seq[String]): Map[String, (Long, Long, Long)] = {
-    val conf = loadedConf
-    parMap(relDirs) { rel =>
-      val dir = Paths.get(root, rel)
-      if (!Files.isDirectory(dir)) rel -> ((0L, 0L, 0L))
-      else {
-        val listing = Files.list(dir)
-        val files =
-          try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-          finally listing.close()
-        val rows = files.map { f =>
-          val reader = openFooter(conf, f)
-          try reader.getRecordCount finally reader.close()
-        }.sum
-        rel -> ((files.size.toLong, rows, files.map(Files.size(_)).sum))
-      }
+  def dirFootprint(root: String, relDirs: Seq[String]): Map[String, (Long, Long, Long)] =
+    walkFooters(root, relDirs)((f, reader) => (reader.getRecordCount, Files.size(f))).map {
+      case (rel, files) => rel -> ((files.size.toLong, files.map(_._1).sum, files.map(_._2).sum))
     }.toMap
-  }
+
+  /** Footer row count summed over the dirs — [[dirFootprint]]'s rows. */
+  def rowCount(root: String, relDirs: Seq[String]): Long =
+    dirFootprint(root, relDirs).values.map(_._2).sum
 
   /** Per-FILE (dir, file, rows, bytes) — [[dirFootprint]] at file grain,
     * for the `files` metadata table. Same footer-only bill.
     */
-  def fileFootprint(root: String, relDirs: Seq[String]): Seq[(String, String, Long, Long)] = {
-    val conf = loadedConf
-    parMap(relDirs) { rel =>
-      val dir = Paths.get(root, rel)
-      if (!Files.isDirectory(dir)) Nil
-      else {
-        val listing = Files.list(dir)
-        val files =
-          try listing.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-          finally listing.close()
-        files.map { f =>
-          val reader = openFooter(conf, f)
-          val rows = try reader.getRecordCount finally reader.close()
-          (rel, f.getFileName.toString, rows, Files.size(f))
+  def fileFootprint(root: String, relDirs: Seq[String]): Seq[(String, String, Long, Long)] =
+    walkFooters(root, relDirs) { (f, reader) =>
+      (f.getFileName.toString, reader.getRecordCount, Files.size(f))
+    }.flatMap { case (rel, files) =>
+      files.map { case (name, rows, bytes) => (rel, name, rows, bytes) }
+    }
+
+  /** Per dir, the row count of each distinct non-null value of the string
+    * column `column` — read on the driver through the same walk, from
+    * that one column's pages. Sized for position-delete sidecars, which
+    * hold two columns and one row per erased row: what a sidecar names is
+    * then known without starting a Spark job. A dir without the column
+    * (or without files) maps to no values.
+    */
+  def valueCounts(
+      root: String, relDirs: Seq[String], column: String): Map[String, Map[String, Long]] =
+    walkFooters(root, relDirs)((_, reader) => stringCounts(reader, column)).map {
+      case (rel, perFile) => rel -> perFile.flatten.groupMapReduce(_._1)(_._2)(_ + _)
+    }.toMap
+
+  private def stringCounts(reader: ParquetFileReader, column: String): Map[String, Long] = {
+    val meta = reader.getFooter.getFileMetaData
+    val schema = meta.getSchema
+    val counts = scala.collection.mutable.HashMap.empty[String, Long]
+    if (schema.containsField(column)) {
+      val proj = new MessageType(schema.getName, schema.getType(schema.getFieldIndex(column)))
+      val desc = proj.getColumnDescription(Array(column))
+      reader.setRequestedSchema(proj)
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val values = new ColumnReadStoreImpl(pages,
+          new GroupRecordConverter(proj).getRootConverter, proj, meta.getCreatedBy)
+          .getColumnReader(desc)
+        var i = 0L
+        while (i < values.getTotalValueCount) {
+          if (values.getCurrentDefinitionLevel == desc.getMaxDefinitionLevel) {
+            val v = values.getBinary.toStringUsingUTF8
+            counts(v) = counts.getOrElse(v, 0L) + 1L
+          }
+          values.consume()
+          i += 1
         }
+        pages = reader.readNextRowGroup()
       }
-    }.flatten
+    }
+    counts.toMap
   }
 
   /** Below this many files the footer walk stays on the driver — a Spark
@@ -220,15 +242,7 @@ object TableStats {
       root: String,
       relDirs: Seq[String]): Seq[(String, String, Long, Long)] = {
     val files: Seq[(String, String)] = relDirs.flatMap { rel =>
-      val dir = Paths.get(root, rel)
-      if (!Files.isDirectory(dir)) Nil
-      else {
-        val listing = Files.list(dir)
-        try listing.iterator().asScala
-          .filter(_.toString.endsWith(".parquet"))
-          .map(f => rel -> f.getFileName.toString).toList
-        finally listing.close()
-      }
+      parquetFiles(root, rel).map(f => rel -> f.getFileName.toString)
     }
     if (files.size < DistributeThreshold) fileFootprint(root, relDirs)
     else {
@@ -263,26 +277,22 @@ object TableStats {
     relDirs.map(rel => rel -> byDir.getOrElse(rel, (0L, 0L, 0L))).toMap
   }
 
-  private def fileStats(conf: Configuration, file: Path): Map[String, (JValue, JValue)] = {
-    val reader = openFooter(conf, file)
-    try {
-      reader.getFooter.getBlocks.asScala.foldLeft(Map.empty[String, (JValue, JValue)]) {
-        (acc, block) =>
-          block.getColumns.asScala.foldLeft(acc) { (a, col) =>
-            val name = col.getPath.toDotString
-            val st = col.getStatistics
-            if (st == null || !st.hasNonNullValue) a
-            else toJson(col.getPrimitiveType.getPrimitiveTypeName,
-              col.getPrimitiveType.getLogicalTypeAnnotation,
-              st.genericGetMin.asInstanceOf[AnyRef],
-              st.genericGetMax.asInstanceOf[AnyRef]) match {
-              case Some(mm) => mergeStats(a, Map(name -> mm))
-              case None => a
-            }
+  private def fileStats(reader: ParquetFileReader): Map[String, (JValue, JValue)] =
+    reader.getFooter.getBlocks.asScala.foldLeft(Map.empty[String, (JValue, JValue)]) {
+      (acc, block) =>
+        block.getColumns.asScala.foldLeft(acc) { (a, col) =>
+          val name = col.getPath.toDotString
+          val st = col.getStatistics
+          if (st == null || !st.hasNonNullValue) a
+          else toJson(col.getPrimitiveType.getPrimitiveTypeName,
+            col.getPrimitiveType.getLogicalTypeAnnotation,
+            st.genericGetMin.asInstanceOf[AnyRef],
+            st.genericGetMax.asInstanceOf[AnyRef]) match {
+            case Some(mm) => mergeStats(a, Map(name -> mm))
+            case None => a
           }
-      }
-    } finally reader.close()
-  }
+        }
+    }
 
   private def toJson(
       t: PrimitiveTypeName,

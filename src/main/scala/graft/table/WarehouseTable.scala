@@ -145,11 +145,16 @@ final class WarehouseTable(val root: String) {
     atomicWriteCurrent(0L)
   }
 
-  def drop(): Unit =
-    if (Files.exists(rootPath)) {
+  def drop(): Unit = deleteTree(rootPath)
+
+  /** Delete `p` and everything below it, deepest entries first (an absent
+    * `p` is a no-op).
+    */
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      val walk = Files.walk(rootPath)
-      try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
       finally walk.close()
     }
 
@@ -660,14 +665,14 @@ final class WarehouseTable(val root: String) {
     val afterPos =
       if (manifest.posDeletes.isEmpty) resolved
       else resolved.join(
-        posDeleteFrame(spark, manifest), Seq(PosFileCol, PosIdxCol), "left_anti")
+        posDeleteFrame(spark, manifest.posDeletes), Seq(PosFileCol, PosIdxCol), "left_anti")
     if (keepPos) afterPos else afterPos.drop(PosFileCol, PosIdxCol)
   }
 
-  /** The (file, pos) rows of a snapshot's position-delete dirs. */
-  private def posDeleteFrame(spark: SparkSession, m: Manifest): DataFrame = {
+  /** The (file, pos) rows of position-delete sidecar dirs. */
+  private def posDeleteFrame(spark: SparkSession, sidecars: Seq[String]): DataFrame = {
     val schema = StructType.fromDDL(s"$PosFileCol STRING, $PosIdxCol BIGINT")
-    ManifestScan.frames(spark, root, m.posDeletes.distinct, schema, identity) match {
+    ManifestScan.frames(spark, root, sidecars.distinct, schema, identity) match {
       case Nil => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       case scans => scans.reduce(_ unionByName _)
     }
@@ -1043,7 +1048,7 @@ final class WarehouseTable(val root: String) {
           // emitted as deletes when their sidecar landed — filter them
           val removedRows =
             if (!withPos) removedRaw.drop(PosFileCol, PosIdxCol)
-            else removedRaw.join(posDeleteFrame(spark, prevM),
+            else removedRaw.join(posDeleteFrame(spark, prevM.posDeletes),
               Seq(PosFileCol, PosIdxCol), "left_anti")
               .drop(PosFileCol, PosIdxCol)
           val gone =
@@ -1070,60 +1075,41 @@ final class WarehouseTable(val root: String) {
   }
 
   /** The full rows a batch of position-delete sidecars erased, re-read
-    * from the immutable data files the sidecars name. Driver-side
-    * collect: the DISTINCT FILE LIST of the delete batch — bounded by
-    * the files the deletion touched (the same order as the sidecar's own
-    * size), never the table's file count.
+    * from the immutable data files the sidecars name: one scan over those
+    * files' leaf dirs, restricted to exactly those files and semi-joined
+    * against the sidecars' (file, pos) rows — an O(files-touched-by-the-
+    * delete) read, never a table scan. The file list comes from the
+    * sidecars themselves, read on the driver ([[sidecarRefs]]), so
+    * building the frame starts no Spark job.
     */
   private def erasedRows(
       spark: SparkSession,
       meta: Meta,
       sidecars: Seq[String],
       onlyDirs: Option[Set[String]] = None): DataFrame = {
-    val posDf = posDeleteFrame(spark, Manifest(Map.empty, Nil,
-      posDeletes = sidecars.toList))
     // optional dir restriction (diffSnapshots: only erasures of rows that
     // were VISIBLE at `from` count — a sidecar may also name rows of dirs
     // that arrived after it), attributed via dataDirsOf's trailing-
     // component anchor (see its doc for why a root-prefix strip is wrong)
-    val files = posDf.select(PosFileCol).distinct()
-      .collect().map(_.getString(0))
+    val files = sidecarRefs(sidecars).values.flatMap(_.keys).toSeq.distinct
       .filter(f => onlyDirs.forall(ds => dataDirsOf(f).exists(ds.contains)))
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], meta.schema)
-    def withPos(df: DataFrame): DataFrame =
-      df.withColumn(PosFileCol, col("_metadata.file_path"))
-        .withColumn(PosIdxCol, col("_metadata.row_index"))
     // erased rows can live in MOR delta files, which physically carry the
-    // tombstone marker — an explicit schema without it ignores the extra
-    // column (a sidecar never names a tombstone row: the delete predicate
-    // ran on the resolved, tombstone-filtered view). Renamed columns read
-    // through the same prior-name coalesce as readParts (the erased file
-    // may predate a rename).
-    val renames = renameMap(meta)
-    val readSchema = physicalSchema(meta.schema, renames)
-    val outCols =
-      logicalCols(meta.schema, renames) :+ col(PosFileCol) :+ col(PosIdxCol)
-    val raw = (meta.partition match {
-      case None =>
-        withPos(spark.read.schema(readSchema).parquet(files.toIndexedSeq: _*))
-      case Some(_) =>
-        // partition values live in dir names, restored via basePath — the
-        // same two-segment grouping readParts uses (data/<uuid>/<p>=<v>)
-        val relDirs = files.map { f =>
-          val p = new java.net.URI(f).getPath
-          f -> p.stripPrefix(rootPath.toAbsolutePath.toString).stripPrefix("/")
-        }
-        val byBase = relDirs.groupBy(_._2.split("/").take(2).mkString("/"))
-        byBase.map { case (base, group) =>
-          withPos(spark.read.schema(readSchema)
-            .option("basePath", s"$root/$base")
-            .parquet(group.map(_._1).toIndexedSeq: _*))
-        }.reduce(_ unionByName _)
-    }).select(outCols: _*)
-    raw.join(posDf, Seq(PosFileCol, PosIdxCol), "left_semi")
+    // tombstone marker — a read without it ignores that column (a sidecar
+    // never names a tombstone row: the delete predicate ran on the
+    // resolved, tombstone-filtered view)
+    val leaves = files.map(f => dataDirsOf(f).maxBy(_.length)).distinct.toList
+    readParts(spark, meta, Map(NoPart -> leaves), withFilePos = true)
+      .filter(col(PosFileCol).isin(files: _*))
+      .join(posDeleteFrame(spark, sidecars), Seq(PosFileCol, PosIdxCol), "left_semi")
       .drop(PosFileCol, PosIdxCol)
   }
+
+  /** Per position-delete sidecar, the data files it names and how many of
+    * each file's rows it erases — read from the sidecars on the driver
+    * ([[TableStats.valueCounts]]).
+    */
+  private def sidecarRefs(sidecars: Seq[String]): Map[String, Map[String, Long]] =
+    TableStats.valueCounts(root, sidecars.distinct, PosFileCol)
 
   /** Rows of data dirs present at `asOf` but not at `sinceSnapId`, with
     * the tombstone marker surfaced — the one-shot manifest-diff behind
@@ -1156,7 +1142,7 @@ final class WarehouseTable(val root: String) {
     // The labeled-delete form, including position-delete erasures, is
     // changesSince.)
     if (afterM.posDeletes.isEmpty) raw
-    else raw.join(posDeleteFrame(spark, afterM),
+    else raw.join(posDeleteFrame(spark, afterM.posDeletes),
       Seq(PosFileCol, PosIdxCol), "left_anti").drop(PosFileCol, PosIdxCol)
   }
 
@@ -1466,13 +1452,8 @@ final class WarehouseTable(val root: String) {
     // Iceberg `commit.retry.num-retries` knob). Read LAZILY on the first
     // conflict — the uncontended path (almost every commit) pays no
     // extra metadata read for a budget it never consults.
-    lazy val maxAttempts = readMeta().properties
-      .get("commit.retry.max-attempts").map { v =>
-        try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"table property commit.retry.max-attempts must be an integer, got '$v'")
-        }
-      }.getOrElse(64)
+    lazy val maxAttempts =
+      intProperty(readMeta().properties, "commit.retry.max-attempts", 64)
     var attempt = 0
     var done = false
     while (!done) {
@@ -1497,6 +1478,17 @@ final class WarehouseTable(val root: String) {
       }
     }
   }
+
+  /** An integer table property (`default` when unset); a malformed value
+    * is refused by name.
+    */
+  private def intProperty(props: Map[String, String], key: String, default: Int): Int =
+    props.get(key).map { v =>
+      try v.toInt catch {
+        case _: NumberFormatException => throw new IllegalArgumentException(
+          s"table property $key must be an integer, got '$v'")
+      }
+    }.getOrElse(default)
 
   /** Append — `mode == 'append'` (read.py:231-233). New snapshot = old
     * manifest + new dirs per partition. Concurrent-writer safe: the new
@@ -1607,15 +1599,8 @@ final class WarehouseTable(val root: String) {
     // a write owns its whole data/<uuid> dir — the partition dirs the
     // manifest would name AND the job's _SUCCESS marker beside them — so
     // sweep at that level, or a partitioned write leaves its uuid dir
-    rels.map(_.split("/").take(2).mkString("/")).toSet.foreach { rel: String =>
-      val d = rootPath.resolve(rel)
-      if (Files.exists(d)) {
-        val walk = Files.walk(d)
-        try { import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-        } finally walk.close()
-      }
-    }
+    rels.map(_.split("/").take(2).mkString("/")).toSet
+      .foreach((rel: String) => deleteTree(rootPath.resolve(rel)))
 
   /** `detail` is "<n> " (count + trailing space) or "" when uncounted. */
   private def nullKeyRefusal(keys: Seq[String], detail: String) =
@@ -1642,6 +1627,7 @@ final class WarehouseTable(val root: String) {
   private def mergeMor(
       spark: SparkSession, source: DataFrame, keys: Seq[String], meta: Meta,
       deleteWhere: Option[Column] = None): Unit = {
+    val threshold = deltaThreshold(meta)
     recordMergeKeys(meta, keys)
     // tombstone flag rides along in the delta file: a delete is an O(batch)
     // append exactly like an upsert, resolved at read/compaction time.
@@ -1657,18 +1643,31 @@ final class WarehouseTable(val root: String) {
       Manifest(old.base, old.deltas :+ Delta(seq, added),
         old.stats ++ stats, old.posDeletes)
     }
-    // compaction policy: read amplification grows linearly with delta
-    // count (every read unions base + all deltas and re-arbitrates), so
-    // once it crosses the table's threshold the deltas fold back into the
-    // base — Iceberg's maintenance action, run inline while the batch's
-    // context is warm. Threshold via table property
-    // 'compact.delta.threshold' (0 disables; default 8).
-    val threshold = meta.properties.get("compact.delta.threshold")
-      .map(_.toInt).getOrElse(8)
-    if (threshold > 0 && readManifest(currentSnapshotId).deltas.size >= threshold)
+    maintainAfterCommit(spark, meta, threshold)(_.deltas.size)
+  }
+
+  /** The count threshold of inline compaction, table property
+    * `compact.delta.threshold` (0 disables; default 8). The MOR writes
+    * read it before they write any data: a malformed value refuses the
+    * write, instead of failing it after its commit has landed — a
+    * redelivered batch would then fail the same way forever.
+    */
+  private def deltaThreshold(meta: Meta): Int =
+    intProperty(meta.properties, "compact.delta.threshold", 8)
+
+  /** Inline maintenance after a delta or sidecar commit. Read
+    * amplification grows linearly with the delta count (every read unions
+    * base + all deltas and re-arbitrates) and the sidecar count (one anti
+    * join each), so once `pending` of the now-current manifest reaches
+    * `threshold` everything folds back into the base — Iceberg's
+    * maintenance action, run inline while the batch's context is warm.
+    * Below it the stats-driven dial decides.
+    */
+  private def maintainAfterCommit(spark: SparkSession, meta: Meta, threshold: Int)(
+      pending: Manifest => Int): Unit =
+    if (threshold > 0 && pending(readManifest(currentSnapshotId)) >= threshold)
       tryCompact(spark)
     else autoCompactIfDegraded(spark, meta)
-  }
 
   /** Inline read-amplification maintenance after a delta/sidecar commit —
     * BEST-EFFORT under concurrency. The triggering operation's own commit
@@ -1748,6 +1747,7 @@ final class WarehouseTable(val root: String) {
       s"equality-delete keys must include the partition column $p"))
     val missing = keys.filterNot(keyRows.columns.contains)
     require(missing.isEmpty, s"key columns absent from input: ${missing.mkString(", ")}")
+    val threshold = deltaThreshold(meta)
     recordMergeKeys(meta, keys)
     val src = keyRows.select(keys.map(col): _*).distinct()
       .withColumn(TombstoneCol, lit(true))
@@ -1758,11 +1758,7 @@ final class WarehouseTable(val root: String) {
       Manifest(old.base, old.deltas :+ Delta(seq, added),
         old.stats ++ stats, old.posDeletes)
     }
-    val threshold = meta.properties.get("compact.delta.threshold")
-      .map(_.toInt).getOrElse(8)
-    if (threshold > 0 && readManifest(currentSnapshotId).deltas.size >= threshold)
-      tryCompact(spark)
-    else autoCompactIfDegraded(spark, meta)
+    maintainAfterCommit(spark, meta, threshold)(_.deltas.size)
   }
 
   /** MOR POSITION DELETE — Iceberg v2's second delete flavor: erase the
@@ -1794,12 +1790,7 @@ final class WarehouseTable(val root: String) {
     // specifically (read.py:208-216 sets all three together for MOR)
     require(meta.properties.get("write.delete.mode").contains("merge-on-read"),
       "position deletes are a merge-on-read operation; COW tables use deleteRows")
-    def sweep(rel: String): Unit = {
-      val walk = Files.walk(rootPath.resolve(rel))
-      try { import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-      } finally walk.close()
-    }
+    val threshold = deltaThreshold(meta)
     // RE-PLANNING retry: the sidecar names physical rows of the planning
     // snapshot's files, so a concurrent compact/rewrite that dropped any
     // planned dir invalidates the handles mid-flight. The commit's
@@ -1819,10 +1810,10 @@ final class WarehouseTable(val root: String) {
         .filter(cond)
         .select(col(PosFileCol), col(PosIdxCol))
         .write.parquet(s"$root/$rel")
-      // row count from the freshly written footers — metadata-only scan
-      val n = spark.read.parquet(s"$root/$rel").count()
+      // row count from the freshly written footers — no Spark job
+      val n = TableStats.rowCount(root, Seq(rel))
       if (n == 0L) {
-        sweep(rel)
+        deleteTree(rootPath.resolve(rel))
         return 0L
       }
       // concurrent-writer rebase with a FILE-IDENTITY guard: the sidecar
@@ -1841,19 +1832,13 @@ final class WarehouseTable(val root: String) {
                 "planned against — re-run the delete on the current snapshot")
           now.copy(posDeletes = now.posDeletes :+ rel)
         }
-        // sidecars amplify every read by one anti join, same way deltas
-        // amplify arbitration — the same table threshold folds them back
-        val threshold = meta.properties.get("compact.delta.threshold")
-          .map(_.toInt).getOrElse(8)
-        if (threshold > 0 &&
-            readManifest(currentSnapshotId).posDeletes.size >= threshold)
-          tryCompact(spark)
-        else autoCompactIfDegraded(spark, meta)
+        maintainAfterCommit(spark, meta, threshold)(_.posDeletes.size)
         return n
       } catch {
         case e: IllegalStateException
             if e.getMessage.contains("planned against") =>
-          sweep(rel) // the failed sidecar was never referenced
+          // the failed sidecar was never referenced
+          deleteTree(rootPath.resolve(rel))
           if (attempt >= 5) throw e // livelock guard: maintenance storms
       }
     }
@@ -2187,31 +2172,13 @@ final class WarehouseTable(val root: String) {
       .filter(_.data.nonEmpty)
     val liveDirs: Set[String] =
       (newBase.values.flatten ++ newDeltas.flatMap(_.data.values.flatten)).toSet
-    val keptPos =
-      if (old.posDeletes.isEmpty) old.posDeletes
-      else {
-        // one metadata-priced pass: (sidecar, referenced data file)
-        // distinct pairs — bounded by sidecars × files, never erasures
-        val refs = spark.read.schema(s"$PosFileCol STRING, $PosIdxCol BIGINT")
-          .parquet(old.posDeletes.map(d => s"$root/$d"): _*)
-          .withColumn("__sidecar", col("_metadata.file_path"))
-          .select(col("__sidecar"), col(PosFileCol)).distinct()
-          .collect().map(r => (r.getString(0), r.getString(1)))
-        def sidecarOf(f: String): Option[String] = {
-          val segs = new java.net.URI(f).getPath.split("/").filter(_.nonEmpty)
-          val i = segs.lastIndexOf("posdel")
-          if (i >= 0 && i < segs.length - 1)
-            Some(segs.slice(i, i + 2).mkString("/"))
-          else None
-        }
-        val liveBySidecar = refs.groupBy(r => sidecarOf(r._1)).collect {
-          case (Some(sc), rs) =>
-            sc -> rs.exists(r => dataDirsOf(r._2).exists(liveDirs.contains))
-        }.toMap
-        // a sidecar Spark returned no rows for (all-erasure-free — can't
-        // happen, they're only written non-empty) defaults to kept
-        old.posDeletes.filter(sc => liveBySidecar.getOrElse(sc, true))
-      }
+    // a sidecar naming no rows (can't happen — they're only written
+    // non-empty) is kept
+    val refs = sidecarRefs(old.posDeletes)
+    val keptPos = old.posDeletes.filter { sc =>
+      val files = refs(sc).keys
+      files.isEmpty || files.exists(f => dataDirsOf(f).exists(liveDirs.contains))
+    }
     commit(cur,
       Manifest(newBase, newDeltas, old.stats ++ stats, keptPos).pruneStats,
       maintenance = true)
@@ -2296,10 +2263,7 @@ final class WarehouseTable(val root: String) {
         val dirToPart: Map[String, String] =
           (m.base.toSeq ++ m.deltas.flatMap(_.data.toSeq))
             .flatMap { case (pv, ds) => ds.map(_ -> pv) }.toMap
-        val perFile = posDeleteFrame(spark, m)
-          .groupBy(col(PosFileCol)).count().collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-        perFile.toSeq
+        sidecarRefs(m.posDeletes).values.flatten.toSeq
           .flatMap { case (f, n) =>
             dataDirsOf(f).collectFirst {
               case d if dirToPart.contains(d) => dirToPart(d) -> n
@@ -2380,8 +2344,7 @@ final class WarehouseTable(val root: String) {
     * for scale dispatch (no scan).
     */
   private def baseRowCount(m: Manifest): Long =
-    TableStats.dirFootprint(root, m.base.values.flatten.toSeq)
-      .values.map(_._2).sum
+    TableStats.rowCount(root, m.base.values.flatten.toSeq)
 
   /** Equi-depth quantile cuts for a NUMERIC cluster column. EXACT
     * (approxQuantile at relativeError 0) while the base's footer-counted
@@ -2567,12 +2530,13 @@ final class WarehouseTable(val root: String) {
       manifest.deltas.flatMap(_.data.values.flatten)).toList.distinct
     val missing = dirs.filterNot(d => Files.exists(bloomFile(column, d)))
     if (missing.nonEmpty) {
-      val dt = meta.schema(column).dataType
+      // the declared schema, renames coalesced: a dir written before the
+      // column was added reads it NULL, one written before a rename reads
+      // its prior physical name
       val perDir = missing.map { rel =>
-        spark.read.parquet(s"$root/$rel")
+        readParts(spark, meta, Map(NoPart -> List(rel)))
           .where(col(column).isNotNull)
-          .select(lit(rel).as("__dir"),
-            xxhash64(col(column).cast(dt)).as("__h"))
+          .select(lit(rel).as("__dir"), xxhash64(col(column)).as("__h"))
       }.reduce(_ unionByName _)
       val built = perDir.groupBy(col("__dir"))
         .agg(graft.functions.BloomBits(col("__h"), mBits, k).as("bits"))
@@ -2962,7 +2926,7 @@ final class WarehouseTable(val root: String) {
         withFilePos = old.posDeletes.nonEmpty)
       val slice =
         if (old.posDeletes.isEmpty) raw
-        else raw.join(posDeleteFrame(spark, old),
+        else raw.join(posDeleteFrame(spark, old.posDeletes),
           Seq(PosFileCol, PosIdxCol), "left_anti").drop(PosFileCol, PosIdxCol)
       // removed-row audit (DELETE asks for it, UPDATE never changes the
       // count): `before` is one predicate-free extra scan over only the
@@ -2971,19 +2935,11 @@ final class WarehouseTable(val root: String) {
       val before = if (countRemoved) slice.count() else 0L
       val (entries, stats) = writeDataDir(transform(slice), meta)
       val newDirs = entries.values.flatten.toSeq
-      val after =
-        if (!countRemoved) 0L
-        else if (newDirs.isEmpty) 0L
-        else spark.read.parquet(newDirs.map(d => s"$root/$d"): _*).count()
+      val after = if (countRemoved) TableStats.rowCount(root, newDirs) else 0L
       if (countRemoved && before == after) {
         // nothing actually removed (stats pruning was conservative):
         // drop the rewritten twins instead of committing a churn snapshot
-        newDirs.foreach { d =>
-          val walk = Files.walk(rootPath.resolve(d))
-          try { import scala.jdk.CollectionConverters._
-            walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-          } finally walk.close()
-        }
+        sweepUncommitted(newDirs)
         0L
       } else {
         val carried = carry.toMap
@@ -3369,9 +3325,7 @@ final class WarehouseTable(val root: String) {
             .filter(oldEnough)
           finally l.close()
         dead.foreach { p =>
-          val walk = Files.walk(p)
-          try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-          finally walk.close()
+          deleteTree(p)
           removed += 1
         }
       }
@@ -3563,7 +3517,7 @@ final class WarehouseTable(val root: String) {
       val raw = readParts(spark, meta, Map(NoPart -> dirs),
         withFilePos = withPos)
       if (!withPos) raw
-      else raw.join(posDeleteFrame(spark, m), Seq(PosFileCol, PosIdxCol),
+      else raw.join(posDeleteFrame(spark, m.posDeletes), Seq(PosFileCol, PosIdxCol),
         "left_anti").drop(PosFileCol, PosIdxCol)
     }
     // the A side additionally carries rows of SHARED dirs that sidecars
@@ -3641,18 +3595,13 @@ final class WarehouseTable(val root: String) {
     * the answer is always small.
     */
   def snapshotsMeta(spark: SparkSession): DataFrame = {
-    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._
     val cur = currentSnapshotId
     val lin = lineageId
     val ids = listSnapIds("snap-")
     val rows = ids.map { id =>
       val j = JsonMethods.parse(readString(snapPath(id)))
-      val ts = j \ "ts" match {
-        case JLong(t) => t
-        case JInt(t) => t.toLong
-        case _ => Files.getLastModifiedTime(snapPath(id)).toMillis
-      }
+      val ts = commitTsOfJson(j, snapPath(id))
       val kind = j \ "kind" match { case JString(k) => k; case _ => null }
       Row(id, ts, kind, id == cur, lin)
     }
@@ -3834,11 +3783,7 @@ final class WarehouseTable(val root: String) {
           try l.iterator().asScala.toList
             .filterNot(p => livePosDel2.contains(s"posdel/${p.getFileName}"))
           finally l.close()
-        dead.foreach { d =>
-          val walk = Files.walk(d)
-          try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-          finally walk.close()
-        }
+        dead.foreach(deleteTree)
       }
       val mfDir = rootPath.resolve("manifests")
       if (Files.isDirectory(mfDir)) {
@@ -3855,11 +3800,7 @@ final class WarehouseTable(val root: String) {
           try l.iterator().asScala.toList
             .filterNot(p => liveDataRoots2.contains(s"data/${p.getFileName}"))
           finally l.close()
-        dead.foreach { d =>
-          val walk = Files.walk(d)
-          try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-          finally walk.close()
-        }
+        dead.foreach(deleteTree)
       }
     }
   }

@@ -4,9 +4,12 @@ import java.sql.Date
 import java.util.UUID
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -16,7 +19,7 @@ import graft.table.WarehouseTable
   * files through Spark, and the rows, file paths and pruned file sets are
   * exactly those of a listed `spark.read.parquet` over the same dirs.
   */
-class ManifestScanSpec extends SparkSpec {
+class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val schema = StructType(Seq(
     StructField("k", IntegerType, nullable = false),
@@ -240,5 +243,87 @@ class ManifestScanSpec extends SparkSpec {
       .map(_.getInt(0)).toSet == Set(1))
     m.merge(spark, frame(schema, Seq(Row(6, "new", "a/b"))), Seq("k"))
     assert(m.read(spark).select("k").collect().map(_.getInt(0)).toSet == Set(1, 4, 6))
+  }
+
+  test("position-delete erasures: the change feed builds with no Spark job and opens only the named files") {
+    val t = WarehouseTable(tmpDir("scan_erasures"))
+    t.create(schema, Some("state"),
+      WarehouseTable.tableProperties("MOR", "snappy") + ("compact.delta.threshold" -> "0"))
+    val states = Seq("CA", "NY", "TX")
+    def row(k: Int, v: String) = Row(k, v, states(k % 3))
+    // several files per partition dir, so reading only the named files
+    // is narrower than reading their dirs
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
+    try {
+      t.append(frame(schema, (0 until 36).map(k => row(k, s"v$k"))))
+      t.merge(spark, frame(schema, (0 until 36 by 5).map(k => row(k, s"u$k"))), Seq("k"))
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    var model = (0 until 36).map(k => k -> row(k, s"v$k")).toMap ++
+      (0 until 36 by 5).map(k => k -> row(k, s"u$k"))
+    def modelRows(rs: Iterable[Row]): Seq[String] = rs.map(_.toSeq.mkString("|")).toSeq.sorted
+
+    // erases base rows and delta winners alike
+    val since = t.currentSnapshotId
+    val erased = model.values.filter(_.getInt(0) % 7 == 0)
+    assert(t.deleteWhereMor(spark, col("k") % 7 === 0) == erased.size)
+    model --= erased.map(_.getInt(0))
+
+    var feed: DataFrame = null
+    val jobs = jobsDuring { feed = t.changesSince(spark, since) }
+    assert(jobs == 0, s"building the change feed started $jobs Spark jobs")
+    val deletes = feed.filter(col("_change_type") === "delete")
+    assert(rows(deletes, schema) == modelRows(erased))
+    assert(feed.count() == erased.size)
+
+    // the erasure scan opens exactly the files the sidecar names, fewer
+    // than their dirs hold
+    val posDirs = t.filesMeta(spark).filter(col("content") === "posdel")
+      .select("dir").distinct().collect().map(r => s"${t.root}/${r.getString(0)}")
+    val named = spark.read.parquet(posDirs.toIndexedSeq: _*)
+      .select("__graft_file").distinct().collect().map(_.getString(0)).toSet
+    deletes.collect()
+    val dataScans = collect(deletes.queryExecution.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.forall(_.toString.contains("/data/")) => s
+    }
+    assert(dataScans.nonEmpty)
+    assert(dataScans.map(_.metrics("numFiles").value).sum == named.size)
+    val namedDirs = named.map { f =>
+      val p = new java.net.URI(f).getPath
+      p.substring(0, p.lastIndexOf('/'))
+    }
+    val filesInNamedDirs = t.filesMeta(spark).collect()
+      .count(r => namedDirs.contains(s"${t.root}/${r.getAs[String]("dir")}"))
+    assert(named.size < filesInNamedDirs,
+      s"every file of the erased rows' dirs is named: $named")
+
+    // DELETE counts are footer counts and match the model
+    val ny = model.values.filter(_.getString(2) == "NY")
+    assert(t.deleteRows(spark, col("state") === "NY") == ny.size)
+    model = model.filter(_._2.getString(2) != "NY")
+    assert(rows(t.read(spark), schema) == modelRows(model.values))
+    // a DELETE that removes nothing commits nothing and leaves no dir
+    def dataRoots: Set[String] = {
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(t.root, "data"))
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+    }
+    val (snap, roots) = (t.currentSnapshotId, dataRoots)
+    assert(t.deleteRows(spark, col("k") === 1000) == 0L)
+    assert(t.currentSnapshotId == snap && dataRoots == roots)
+  }
+
+  test("graft.table reads its own files only through ManifestScan: no listed spark.read elsewhere") {
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/table")
+    val sources = {
+      val ls = java.nio.file.Files.list(dir)
+      try ls.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally ls.close()
+    }
+    assert(sources.exists(_.getFileName.toString == "WarehouseTable.scala"),
+      s"no table sources under ${dir.toAbsolutePath}")
+    val offenders = sources.filterNot(_.getFileName.toString == "ManifestScan.scala").flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      Seq("spark.read", ".read.parquet(").filter(text.contains).map(p => s"${f.getFileName}: $p")
+    }
+    assert(offenders.isEmpty, s"a second read path for table files: ${offenders.mkString(", ")}")
   }
 }

@@ -2006,6 +2006,83 @@ class WarehouseTableSpec extends SparkSpec {
     }
   }
 
+  test("bloom index on an added or a renamed column reads the declared schema") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.sources.EqualTo
+    val sch = StructType(Seq(
+      StructField("id", IntegerType, nullable = false),
+      StructField("key", StringType)))
+    def frame(s: StructType, rows: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), s)
+    def ids(df: DataFrame, c: String, v: String): Seq[Int] =
+      df.filter(col(c) === v).collect().map(_.getInt(0)).toSeq.sorted
+
+    // added: the pre-add dir reads `tag` NULL, so its bloom is all zeros
+    // and every probe skips it
+    val a = WarehouseTable(tmpDir("bloom_added"))
+    a.create(sch, None, Map.empty)
+    a.append(frame(sch, (0 until 20).map(i => Row(i, s"k$i"))))
+    val preAdd = a.read(spark).inputFiles.toSet
+    a.addColumn("tag", StringType)
+    val tagged = StructType(sch.fields :+ StructField("tag", StringType))
+    a.append(frame(tagged, (20 until 40).map(i => Row(i, s"k$i", s"t${i % 4}"))))
+    assert(a.buildBloomIndex(spark, "tag") == 2)
+    val hit = a.read(spark, dataFilters = Seq(EqualTo("tag", "t1")))
+    assert(ids(hit, "tag", "t1") == (20 until 40).filter(_ % 4 == 1))
+    assert(hit.inputFiles.nonEmpty && hit.inputFiles.toSet.intersect(preAdd).isEmpty)
+
+    // renamed: the pre-rename dir is indexed under its prior physical name
+    val r = WarehouseTable(tmpDir("bloom_renamed"))
+    r.create(sch, None, Map.empty)
+    r.append(frame(sch, (0 until 20).map(i => Row(i, s"k$i"))))
+    val preRename = r.read(spark).inputFiles.toSet
+    r.renameColumn("key", "label")
+    val relabeled = StructType(Seq(sch.fields(0), StructField("label", StringType)))
+    r.append(frame(relabeled, (20 until 40).map(i => Row(i, s"k$i"))))
+    assert(r.buildBloomIndex(spark, "label") == 2)
+    val old = r.read(spark, dataFilters = Seq(EqualTo("label", "k3")))
+    assert(ids(old, "label", "k3") == Seq(3))
+    assert(old.inputFiles.toSet == preRename)
+    val fresh = r.read(spark, dataFilters = Seq(EqualTo("label", "k33")))
+    assert(ids(fresh, "label", "k33") == Seq(33))
+    assert(fresh.inputFiles.nonEmpty && fresh.inputFiles.toSet.intersect(preRename).isEmpty)
+  }
+
+  test("a malformed compact.delta.threshold refuses MOR writes before they write anything") {
+    import org.apache.spark.sql.functions.col
+    val t = WarehouseTable(tmpDir("badthreshold"))
+    t.create(schema, Some("state"), WarehouseTable.tableProperties("MOR", "snappy"))
+    t.append(df((1, "a", "CA"), (2, "b", "NY"), (3, "c", "NY")))
+    t.setProperties(Map("compact.delta.threshold" -> "abc"))
+    def dirs(sub: String): Set[String] = {
+      val d = java.nio.file.Paths.get(t.root, sub)
+      if (!java.nio.file.Files.isDirectory(d)) Set.empty
+      else {
+        val walk = java.nio.file.Files.walk(d)
+        try { import scala.jdk.CollectionConverters._
+          walk.iterator().asScala.map(_.toString).toSet
+        } finally walk.close()
+      }
+    }
+    val snap = t.currentSnapshotId
+    val before = (dirs("data"), dirs("posdel"))
+    def refused(write: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](write)
+      assert(e.getMessage.contains("compact.delta.threshold"), e.getMessage)
+      assert(t.currentSnapshotId == snap)
+      assert((dirs("data"), dirs("posdel")) == before)
+    }
+    refused(t.merge(spark, df((1, "x", "CA")), Seq("k", "state")))
+    refused(t.deleteKeysMor(spark, df((2, "b", "NY")), Seq("k", "state")))
+    refused(t.deleteWhereMor(spark, col("k") === 3))
+    t.setProperties(Map("compact.delta.threshold" -> "8"))
+    t.merge(spark, df((1, "x", "CA")), Seq("k", "state"))
+    assert(t.currentSnapshotId == snap + 1)
+    assert(t.read(spark).collect().map(r => r.getInt(0) -> r.getString(1)).toSet ==
+      Set(1 -> "x", 2 -> "b", 3 -> "c"))
+  }
+
   test("clusterAppend with batchId: replays replace their own dirs — same-id and crash-retry converge") {
     import org.apache.spark.sql.Row
     val t = WarehouseTable(tmpDir("clapp_bid"))
