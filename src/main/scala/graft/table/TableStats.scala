@@ -7,12 +7,9 @@ import scala.language.existentials
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.column.impl.ColumnReadStoreImpl
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
@@ -180,47 +177,6 @@ object TableStats {
     }.flatMap { case (rel, files) =>
       files.map { case (name, rows, bytes) => (rel, name, rows, bytes) }
     }
-
-  /** Per dir, the row count of each distinct non-null value of the string
-    * column `column` — read on the driver through the same walk, from
-    * that one column's pages. Sized for position-delete sidecars, which
-    * hold two columns and one row per erased row: what a sidecar names is
-    * then known without starting a Spark job. A dir without the column
-    * (or without files) maps to no values.
-    */
-  def valueCounts(
-      root: String, relDirs: Seq[String], column: String): Map[String, Map[String, Long]] =
-    walkFooters(root, relDirs)((_, reader) => stringCounts(reader, column)).map {
-      case (rel, perFile) => rel -> perFile.flatten.groupMapReduce(_._1)(_._2)(_ + _)
-    }.toMap
-
-  private def stringCounts(reader: ParquetFileReader, column: String): Map[String, Long] = {
-    val meta = reader.getFooter.getFileMetaData
-    val schema = meta.getSchema
-    val counts = scala.collection.mutable.HashMap.empty[String, Long]
-    if (schema.containsField(column)) {
-      val proj = new MessageType(schema.getName, schema.getType(schema.getFieldIndex(column)))
-      val desc = proj.getColumnDescription(Array(column))
-      reader.setRequestedSchema(proj)
-      var pages = reader.readNextRowGroup()
-      while (pages != null) {
-        val values = new ColumnReadStoreImpl(pages,
-          new GroupRecordConverter(proj).getRootConverter, proj, meta.getCreatedBy)
-          .getColumnReader(desc)
-        var i = 0L
-        while (i < values.getTotalValueCount) {
-          if (values.getCurrentDefinitionLevel == desc.getMaxDefinitionLevel) {
-            val v = values.getBinary.toStringUsingUTF8
-            counts(v) = counts.getOrElse(v, 0L) + 1L
-          }
-          values.consume()
-          i += 1
-        }
-        pages = reader.readNextRowGroup()
-      }
-    }
-    counts.toMap
-  }
 
   /** Below this many files the footer walk stays on the driver — a Spark
     * job's scheduling overhead exceeds a handful of footer opens.

@@ -678,6 +678,18 @@ final class WarehouseTable(val root: String) {
     }
   }
 
+  /** The data files each position-delete sidecar names: one scan per
+    * sidecar, tagged with its manifest name, then one distinct collect of
+    * the (sidecar, file) pairs — bounded by sidecars × files, never by
+    * erasures.
+    */
+  private def sidecarFiles(spark: SparkSession, sidecars: Seq[String]): Map[String, Set[String]] =
+    if (sidecars.isEmpty) Map.empty
+    else sidecars.distinct
+      .map(sc => posDeleteFrame(spark, Seq(sc)).select(lit(sc).as("__sidecar"), col(PosFileCol)))
+      .reduce(_ union _).distinct().collect()
+      .groupMap(_.getString(0))(_.getString(1)).view.mapValues(_.toSet).toMap
+
   /** The manifest-relative data-dir candidates of an absolute file path
     * a position-delete sidecar names. Manifests name dirs relative to
     * the table root (`data/<uuid>[/p]`); `_metadata.file_path` spells
@@ -1078,9 +1090,10 @@ final class WarehouseTable(val root: String) {
     * from the immutable data files the sidecars name: one scan over those
     * files' leaf dirs, restricted to exactly those files and semi-joined
     * against the sidecars' (file, pos) rows — an O(files-touched-by-the-
-    * delete) read, never a table scan. The file list comes from the
-    * sidecars themselves, read on the driver ([[sidecarRefs]]), so
-    * building the frame starts no Spark job.
+    * delete) read, never a table scan. Driver-side collect: the DISTINCT
+    * FILE LIST of the delete batch — bounded by the files the deletion
+    * touched (the same order as the sidecar's own size), never the
+    * table's file count.
     */
   private def erasedRows(
       spark: SparkSession,
@@ -1091,7 +1104,9 @@ final class WarehouseTable(val root: String) {
     // were VISIBLE at `from` count — a sidecar may also name rows of dirs
     // that arrived after it), attributed via dataDirsOf's trailing-
     // component anchor (see its doc for why a root-prefix strip is wrong)
-    val files = sidecarRefs(sidecars).values.flatMap(_.keys).toSeq.distinct
+    val posDf = posDeleteFrame(spark, sidecars)
+    val files = posDf.select(PosFileCol).distinct()
+      .collect().map(_.getString(0)).toSeq
       .filter(f => onlyDirs.forall(ds => dataDirsOf(f).exists(ds.contains)))
     // erased rows can live in MOR delta files, which physically carry the
     // tombstone marker — a read without it ignores that column (a sidecar
@@ -1100,16 +1115,9 @@ final class WarehouseTable(val root: String) {
     val leaves = files.map(f => dataDirsOf(f).maxBy(_.length)).distinct.toList
     readParts(spark, meta, Map(NoPart -> leaves), withFilePos = true)
       .filter(col(PosFileCol).isin(files: _*))
-      .join(posDeleteFrame(spark, sidecars), Seq(PosFileCol, PosIdxCol), "left_semi")
+      .join(posDf, Seq(PosFileCol, PosIdxCol), "left_semi")
       .drop(PosFileCol, PosIdxCol)
   }
-
-  /** Per position-delete sidecar, the data files it names and how many of
-    * each file's rows it erases — read from the sidecars on the driver
-    * ([[TableStats.valueCounts]]).
-    */
-  private def sidecarRefs(sidecars: Seq[String]): Map[String, Map[String, Long]] =
-    TableStats.valueCounts(root, sidecars.distinct, PosFileCol)
 
   /** Rows of data dirs present at `asOf` but not at `sinceSnapId`, with
     * the tombstone marker surfaced — the one-shot manifest-diff behind
@@ -2174,9 +2182,9 @@ final class WarehouseTable(val root: String) {
       (newBase.values.flatten ++ newDeltas.flatMap(_.data.values.flatten)).toSet
     // a sidecar naming no rows (can't happen — they're only written
     // non-empty) is kept
-    val refs = sidecarRefs(old.posDeletes)
+    val refs = sidecarFiles(spark, old.posDeletes)
     val keptPos = old.posDeletes.filter { sc =>
-      val files = refs(sc).keys
+      val files = refs.getOrElse(sc, Set.empty)
       files.isEmpty || files.exists(f => dataDirsOf(f).exists(liveDirs.contains))
     }
     commit(cur,
@@ -2263,7 +2271,9 @@ final class WarehouseTable(val root: String) {
         val dirToPart: Map[String, String] =
           (m.base.toSeq ++ m.deltas.flatMap(_.data.toSeq))
             .flatMap { case (pv, ds) => ds.map(_ -> pv) }.toMap
-        sidecarRefs(m.posDeletes).values.flatten.toSeq
+        posDeleteFrame(spark, m.posDeletes)
+          .groupBy(col(PosFileCol)).count().collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSeq
           .flatMap { case (f, n) =>
             dataDirsOf(f).collectFirst {
               case d if dirToPart.contains(d) => dirToPart(d) -> n
