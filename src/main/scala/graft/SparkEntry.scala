@@ -3773,11 +3773,11 @@ object SparkEntry {
     }),
 
     // INCREMENTAL AGGREGATE VIEW WITH MIN/MAX — the non-invertible
-    // aggregates maintained by RECOMPUTE-ON-REGRESS: inserts fold via
-    // least/greatest, and a window whose deletes reach a group's stored
-    // extreme re-aggregates exactly that group from the source AS OF
-    // the window end (partition-pruned — the group key IS the partition
-    // column). The history forces every repair path: an update wave
+    // aggregates kept with the number of rows at each extreme: a window
+    // that removes the last row holding a group's extreme re-aggregates
+    // exactly that group from the source AS OF the window end
+    // (partition-pruned — the group key IS the partition column). The
+    // history forces every repair path: an update wave
     // rewrites partitions (COW re-land = delete+insert pairs, extremes
     // survive exactly), a predicate delete removes min-attaining rows,
     // and a partition drop empties a group (its extremes must NULL, its
@@ -3807,7 +3807,7 @@ object SparkEntry {
           col("min_n_chars"), col("max_n_chars"))
     }),
 
-    // q183's MIN/MAX recompute-on-regress over a MOR source — the half
+    // q183's MIN/MAX view over a MOR source — the half
     // q183's COW fixture cannot stress: equality-delete waves regress
     // extremes through keyed −old arbitration, one group is EMPTIED
     // (extremes must NULL) and then RESURRECTED (extremes must restart
@@ -5243,7 +5243,7 @@ object SparkEntry {
         |FROM fin GROUP BY 1""".stripMargin,
 
     // q173's algebra with the non-invertible extremes alongside: the
-    // recompute-on-regress view must equal the plain GROUP BY exactly
+    // MIN/MAX view must equal the plain GROUP BY exactly
     "q183_agg_view_minmax" ->
       """WITH fin AS (
         |  SELECT lang,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Incrementally-maintained rollup table — materialized-view maintenance
   * for additive/mergeable aggregates (the pre-aggregation every recurring
@@ -24,9 +25,11 @@ import org.apache.spark.sql.functions._
   * still accept it.
   *
   * Merge functions are the self-mergeable ones (`sum`, `min`, `max` —
-  * partial aggregation of the same op); the batch is pre-aggregated to
-  * one row per key HERE (never trusted from the caller — duplicate
-  * source keys would multiply through the merge's outer join). `count`
+  * partial aggregation of the same op) plus `set`, for a value the
+  * caller already computed from the stored state; the batch is
+  * pre-aggregated to one row per key HERE (never trusted from the
+  * caller — duplicate source keys would multiply through the merge's
+  * outer join). `count`
   * is `sum` over a `lit(1)` measure; `avg` is a `(sum, count)` pair
   * finished at read time — the classic decomposition.
   *
@@ -41,8 +44,11 @@ object IncrementalRollup {
 
   /** Fold one batch of raw rows into the rollup table (created on first
     * commit). `merges` maps each measure column of `arrivals` to its
-    * merge function: `"sum"`, `"min"` or `"max"`. Replay-safe per the
-    * class docs: re-committing the same (batch, batchId) is a no-op.
+    * merge function: `"sum"`, `"min"`, `"max"`, or `"set"` — the
+    * batch's value replaces the stored one (the caller computed the
+    * post-batch value; it must be a function of the key within the
+    * batch). Replay-safe per the class docs: re-committing the same
+    * (batch, batchId) is a no-op.
     */
   def commit(
       spark: SparkSession,
@@ -51,54 +57,21 @@ object IncrementalRollup {
       merges: Map[String, String],
       table: graft.table.WarehouseTable,
       batchId: Long): Unit = {
-    require(merges.nonEmpty, "at least one measure required")
-    merges.values.foreach(f => require(Set("sum", "min", "max").contains(f),
-      s"unsupported merge function '$f' (sum/min/max)"))
-    val measures = merges.keys.toSeq.sorted
-    def partial(c: String): Column = merges(c) match {
-      case "sum" => sum(col(c)).as(c)
-      case "min" => min(col(c)).as(c)
-      case "max" => max(col(c)).as(c)
-    }
-    val delta = arrivals
-      .groupBy(keys.map(col): _*)
-      .agg(partial(measures.head), measures.tail.map(partial): _*)
-    if (!table.exists)
-      table.create(
-        delta.schema.add(BatchCol, org.apache.spark.sql.types.LongType,
-          nullable = false),
-        properties =
-          graft.table.WarehouseTable.tableProperties("COW", "snappy"))
-    def fold(c: String): Column = merges(c) match {
-      case "sum" => col(s"__t_$c") + col(c)
-      case "min" => least(col(s"__t_$c"), col(c))
-      case "max" => greatest(col(s"__t_$c"), col(c))
-    }
-    val fresh = col(s"__t_$BatchCol") < lit(batchId)
-    // nullSafeKeys: the rollup's keys are GROUP identities — a NULL
-    // group is a real group (groupBy put it there) and must FOLD, not
-    // re-insert a fresh row every window (ANSI merge equality would)
-    table.mergeClauses(spark, delta, keys, MergeInto.MergeClauses(
-      matched = Seq(MergeInto.UpdateClause(Some(fresh),
-        measures.map(c => c -> fold(c)).toMap + (BatchCol -> lit(batchId)))),
-      notMatched = Seq(MergeInto.InsertClause(None,
-        (keys ++ measures).map(c => c -> col(c)).toMap +
-          (BatchCol -> lit(batchId))))),
-      nullSafeKeys = true)
+    val (measures, delta) = preAggregate(arrivals, keys, merges)
+    mergeDelta(spark, delta, keys, measures,
+      c => fold(merges(c), c), c => col(c), table, batchId)
   }
 
   /** [[commit]] with a REPAIR overlay, fused into the SAME merge program
     * (one snapshot commit instead of two): rows of `repair` name groups
     * whose `repairCols` must be SET to the repair's values instead of
-    * folded — the MIN/MAX recompute-on-regress consumer, where folding
-    * via least/greatest cannot lower a stored extreme and the truth
-    * read's values must land verbatim (including NULLs for an emptied
-    * group). Non-repaired groups fold exactly as [[commit]]; replay
-    * safety is unchanged (the fused matched-UPDATE sits behind the same
+    * merged — the aggregate view's MIN/MAX truth read, whose values
+    * must land verbatim (including NULLs for an emptied group).
+    * Non-repaired groups merge exactly as [[commit]]; replay safety is
+    * unchanged (the fused matched-UPDATE sits behind the same
     * `last_batch < batchId` guard, and a replayed window's repair values
-    * are the same truth it already wrote). Fusing halves the view's
-    * write amplification per regressed window — at scale that is one
-    * commit, one manifest and one folded file set per window, not two.
+    * are the same truth it already wrote). Fusing keeps the view at one
+    * commit, one manifest and one folded file set per window.
     */
   def commitWithRepair(
       spark: SparkSession,
@@ -109,26 +82,9 @@ object IncrementalRollup {
       repairCols: Seq[String],
       table: graft.table.WarehouseTable,
       batchId: Long): Unit = {
-    require(merges.nonEmpty, "at least one measure required")
-    merges.values.foreach(f => require(Set("sum", "min", "max").contains(f),
-      s"unsupported merge function '$f' (sum/min/max)"))
     require(repairCols.forall(merges.contains),
       s"repair columns ${repairCols.mkString(", ")} must be measures")
-    val measures = merges.keys.toSeq.sorted
-    def partial(c: String): Column = merges(c) match {
-      case "sum" => sum(col(c)).as(c)
-      case "min" => min(col(c)).as(c)
-      case "max" => max(col(c)).as(c)
-    }
-    val delta = arrivals
-      .groupBy(keys.map(col): _*)
-      .agg(partial(measures.head), measures.tail.map(partial): _*)
-    if (!table.exists)
-      table.create(
-        delta.schema.add(BatchCol, org.apache.spark.sql.types.LongType,
-          nullable = false),
-        properties =
-          graft.table.WarehouseTable.tableProperties("COW", "snappy"))
+    val (measures, delta) = preAggregate(arrivals, keys, merges)
     // attach the repair overlay: null-safe (group identities), flagged so
     // a repair row whose truth value is legitimately NULL still overrides
     val rep = repair.select(
@@ -140,26 +96,75 @@ object IncrementalRollup {
         measures.map(c => col(s"d.$c").as(c)) ++
         repairCols.map(c => col(s"r.__rep_$c").as(s"__rep_$c")) :+
         coalesce(col("r.__rep"), lit(false)).as("__rep"): _*)
-    def fold(c: String): Column = merges(c) match {
-      case "sum" => col(s"__t_$c") + col(c)
-      case "min" => least(col(s"__t_$c"), col(c))
-      case "max" => greatest(col(s"__t_$c"), col(c))
-    }
-    def foldOrRepair(c: String): Column =
+    def orRepair(c: String, otherwise: Column): Column =
       if (repairCols.contains(c))
-        when(col("__rep"), col(s"__rep_$c")).otherwise(fold(c))
-      else fold(c)
-    def insertVal(c: String): Column =
-      if (repairCols.contains(c))
-        when(col("__rep"), col(s"__rep_$c")).otherwise(col(c))
-      else col(c)
+        when(col("__rep"), col(s"__rep_$c")).otherwise(otherwise)
+      else otherwise
+    mergeDelta(spark, src, keys, measures,
+      c => orRepair(c, fold(merges(c), c)), c => orRepair(c, col(c)),
+      table, batchId)
+  }
+
+  /** The batch pre-aggregated to one row per key (never trusted from the
+    * caller — duplicate source keys would multiply through the merge's
+    * outer join), with its sorted measure names.
+    */
+  private def preAggregate(arrivals: DataFrame, keys: Seq[String],
+      merges: Map[String, String]): (Seq[String], DataFrame) = {
+    require(merges.nonEmpty, "at least one measure required")
+    merges.values.foreach(f => require(Set("sum", "min", "max", "set").contains(f),
+      s"unsupported merge function '$f' (sum/min/max/set)"))
+    val measures = merges.keys.toSeq.sorted
+    def partial(c: String): Column = (merges(c) match {
+      case "sum" => sum(col(c))
+      case "min" => min(col(c))
+      case "max" => max(col(c))
+      case "set" => any_value(col(c))
+    }).as(c)
+    (measures, arrivals
+      .groupBy(keys.map(col): _*)
+      .agg(partial(measures.head), measures.tail.map(partial): _*))
+  }
+
+  /** A measure's matched-row value: the stored `__t_<c>` merged with the
+    * batch's `c`.
+    */
+  private def fold(fn: String, c: String): Column = fn match {
+    case "sum" => col(s"__t_$c") + col(c)
+    case "min" => least(col(s"__t_$c"), col(c))
+    case "max" => greatest(col(s"__t_$c"), col(c))
+    case "set" => col(c)
+  }
+
+  /** The one guarded merge both commits land: matched keys take
+    * `matched(c)` only while `last_batch < batchId`, new keys insert
+    * `inserted(c)`; both stamp the batch marker.
+    */
+  private def mergeDelta(
+      spark: SparkSession,
+      src: DataFrame,
+      keys: Seq[String],
+      measures: Seq[String],
+      matched: String => Column,
+      inserted: String => Column,
+      table: graft.table.WarehouseTable,
+      batchId: Long): Unit = {
+    if (!table.exists)
+      table.create(
+        StructType(src.schema.filter(f => (keys ++ measures).contains(f.name)))
+          .add(BatchCol, LongType, nullable = false),
+        properties =
+          graft.table.WarehouseTable.tableProperties("COW", "snappy"))
     val fresh = col(s"__t_$BatchCol") < lit(batchId)
+    // nullSafeKeys: the rollup's keys are GROUP identities — a NULL
+    // group is a real group (groupBy put it there) and must FOLD, not
+    // re-insert a fresh row every window (ANSI merge equality would)
     table.mergeClauses(spark, src, keys, MergeInto.MergeClauses(
       matched = Seq(MergeInto.UpdateClause(Some(fresh),
-        measures.map(c => c -> foldOrRepair(c)).toMap + (BatchCol -> lit(batchId)))),
+        measures.map(c => c -> matched(c)).toMap + (BatchCol -> lit(batchId)))),
       notMatched = Seq(MergeInto.InsertClause(None,
         keys.map(c => c -> col(c)).toMap ++
-          measures.map(c => c -> insertVal(c)).toMap +
+          measures.map(c => c -> inserted(c)).toMap +
           (BatchCol -> lit(batchId))))),
       nullSafeKeys = true)
   }

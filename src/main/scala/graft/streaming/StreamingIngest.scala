@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -57,10 +57,11 @@ final case class FileStreamSpec(
   */
 object StreamingIngest {
 
-  /** Test observability for the MIN/MAX recompute's threshold guard:
-    * Some(true) = the last recompute collected its key set (under the
-    * maxCollectKeys bound), Some(false) = it ran the distributed
-    * semi-join fallback. Never consulted by production code.
+  /** Test observability for the MIN/MAX truth read: Some(true) = the
+    * last truth read collected its key set (under the maxCollectKeys
+    * bound), Some(false) = it ran the distributed semi-join fallback,
+    * None = no truth read since a spec reset it. Never consulted by
+    * production code.
     */
   @volatile private[graft] var lastRecomputeCollected: Option[Boolean] = None
 
@@ -1322,21 +1323,28 @@ object StreamingIngest {
     * SUM/COUNT fold purely incrementally (invertible under deletion).
     *
     * MIN/MAX (`minMaxCols`) are NOT invertible — a delete can remove the
-    * row attaining the extreme — so they maintain by RECOMPUTE-ON-
-    * REGRESS: inserts fold via least/greatest (monotone, no rescan);
-    * when a window's deletes COULD have removed a group's extreme
-    * (delete-side min ≤ stored min, or delete-side max ≥ stored max —
-    * one join against the view), exactly those groups re-aggregate from
-    * the source AS OF the window end, partition-pruned when the group
-    * key IS the partition column (the natural layout for a grouped
-    * view). Cost shape: zero extra reads on insert-only windows; on
-    * delete windows, O(regressed groups' partitions) — and under COW
-    * rewrites (which re-land their partitions as delete+insert pairs)
-    * that is the same partitions the rewrite itself already paid for. A
-    * group emptied by deletes NULLs its extremes, so a later
-    * resurrection restarts them cleanly. The recompute is an idempotent
-    * "set to truth at window end", so checkpoint replays converge
-    * without a batch guard.
+    * row attaining the extreme — so the view keeps, beside `min_c` and
+    * `max_c`, the number of live rows holding each (`n_min_c`,
+    * `n_max_c`; O(1) state per group). A count at one value is a sum of
+    * an indicator, so the gross feed keeps it exact exactly as it keeps
+    * `n`: the window's one group-by gives the insert-side and
+    * delete-side extremes with their row counts (a mergeable
+    * (extreme, count) aggregate, so it combines map-side like `min`),
+    * and with `p = least(stored min, insert min)` the count at `p` after
+    * the window is `[stored min = p]·stored count + [insert min =
+    * p]·inserts at p − [delete min = p]·deletes at p` (the max side
+    * mirrors it). Only a group whose count at an extreme falls to ≤ 0 —
+    * the last row holding it left — or whose deletes reach past `p`
+    * (impossible on an exact feed, refused as a regression anyway)
+    * re-aggregates from the source AS OF the window end
+    * ([[regressedTruth]]), partition-pruned when the group key IS the
+    * partition column (the natural layout for a grouped view). Every
+    * other window group takes its extremes and counts from that
+    * computed post-window state. Cost shape: zero extra reads unless an
+    * extreme's last holder leaves; then O(regressed groups'
+    * partitions). A group emptied by deletes NULLs its extremes (counts
+    * 0), so a later resurrection restarts them cleanly. A view written
+    * without the count columns is refused at start, never migrated.
     *
     * MOR sources work too: a MOR upsert appends the new version WITHOUT
     * removing the old one's dir, so the gross feed recovers the
@@ -1380,6 +1388,29 @@ object StreamingIngest {
       "startAggView over a MOR source needs its merge keys recorded " +
         "(ensureMergeKeys / any MOR merge): the gross feed recovers each " +
         "upsert's −old through keyed arbitration")
+    // parsed only where it is used, and before anything is written
+    val maxCollect = if (minMaxCols.nonEmpty) recomputeMaxCollectKeys(spark) else 0
+    val counted = minMaxCols.flatMap(c => Seq(s"n_min_$c", s"n_max_$c"))
+    val setCols = minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c")) ++ counted
+    val sums = sumCols.map(c => s"sum_$c") :+ "n"
+    // a view of another layout is refused before anything is written:
+    // a MIN/MAX view written before it counted its extremes cannot be
+    // migrated (the counts are not derivable from the view itself)
+    if (view.exists) {
+      val want = (groupKeys ++ sums ++ setCols :+
+        graft.operators.IncrementalRollup.BatchCol).toSet
+      val have = view.schema.fieldNames.toSet
+      if (have != want)
+        throw new IllegalStateException(
+          s"aggregate view at ${view.root} has columns " +
+            s"${have.toSeq.sorted.mkString(", ")}, but this drain maintains " +
+            s"${want.toSeq.sorted.mkString(", ")}" +
+            (if (counted.nonEmpty && !counted.exists(have.contains))
+               " (a MIN/MAX view without its per-extreme row counts)"
+             else "") +
+            " — drop the view, its _agg_applied cursor and the stream " +
+            "checkpoint to re-seed.")
+    }
     // the cursor lives BESIDE the view root (the view table itself is
     // created by the rollup's first commit, after the cursor's parent
     // must already be writable)
@@ -1416,115 +1447,124 @@ object StreamingIngest {
             sumCols.map(c => (col(c).cast("long") * sign).as(s"sum_$c")) :+
             sign.as("n"): _*)
           graft.operators.IncrementalRollup.commit(spark, contrib,
-            groupKeys, sumCols.map(c => s"sum_$c" -> "sum").toMap + ("n" -> "sum"),
-            view, batchId = target)
+            groupKeys, sums.map(_ -> "sum").toMap, view, batchId = target)
         } else {
-          // one pass over the window yields the signed sums, the
-          // insert-side extremes (fold via least/greatest) AND the
-          // delete-side extremes (the regression detector) — the
-          // result is group-cardinality-sized, so pin it once
+          // one group-by of the window yields the signed sums and, per
+          // side, each extreme with the number of rows at it. Every
+          // aggregate is a monoid, so it combines map-side: the shuffle
+          // carries one row per (task, group), whatever the number of
+          // distinct values and however large a rewrite's feed.
           val aggs =
             sumCols.map(c => sum(col(c).cast("long") * sign).as(s"sum_$c")) ++
             Seq(sum(sign).as("n")) ++
-            minMaxCols.flatMap(c => Seq(
-              min(when(!isDel, col(c).cast("long"))).as(s"min_$c"),
-              max(when(!isDel, col(c).cast("long"))).as(s"max_$c"),
-              min(when(isDel, col(c).cast("long"))).as(s"__delmin_$c"),
-              max(when(isDel, col(c).cast("long"))).as(s"__delmax_$c")))
+            minMaxCols.flatMap(c => Seq("ins" -> !isDel, "del" -> isDel)
+              .flatMap { case (s, on) =>
+                extremeAt(least = true, when(on, col(c)), s"${s}_min_$c") ++
+                  extremeAt(least = false, when(on, col(c)), s"${s}_max_$c")
+              })
           val w = window.groupBy(groupKeys.map(col): _*)
-            .agg(aggs.head, aggs.tail: _*).localCheckpoint()
-          val mergeFns =
-            sumCols.map(c => s"sum_$c" -> "sum").toMap + ("n" -> "sum") ++
-              minMaxCols.flatMap(c =>
-                Seq(s"min_$c" -> "min", s"max_$c" -> "max"))
-          // RECOMPUTE-ON-REGRESS: a group whose deletes reach its
-          // POST-FOLD extreme may have lost the attaining row — set
-          // exactly those groups to the truth AS OF the window end.
-          // The post-fold extremes are computed HERE from the stored
-          // view and the window's insert-side extremes (least/greatest
-          // — the fold's own algebra), so detection needs no commit
-          // first and the fold and the repair land as ONE view merge
-          // (commitWithRepair) — one snapshot per window instead of
-          // two. A replayed window detects against already-repaired
-          // extremes; whatever it flags, the repair values are the
-          // same truth it already wrote, so the guarded merge no-ops.
-          // The candidate set is bounded by the window's delete-touched
-          // groups (view-key-sized at most), so collecting it for the
-          // partition prune is bounded the same way.
-          val post =
-            if (view.exists)
-              w.alias("w").join(
-                  graft.operators.IncrementalRollup.read(spark, view)
-                    .select(groupKeys.map(col) ++ minMaxCols.flatMap(c =>
-                      Seq(col(s"min_$c"), col(s"max_$c"))): _*)
-                    .alias("p"),
-                  groupKeys.map(k => col(s"w.$k") <=> col(s"p.$k"))
-                    .reduce(_ && _), "left")
-                .select(groupKeys.map(k => col(s"w.$k").as(k)) ++
-                  minMaxCols.flatMap(c => Seq(
-                    col(s"w.__delmin_$c").as(s"__delmin_$c"),
-                    col(s"w.__delmax_$c").as(s"__delmax_$c"),
-                    least(col(s"p.min_$c"), col(s"w.min_$c"))
-                      .as(s"__post_min_$c"),
-                    greatest(col(s"p.max_$c"), col(s"w.max_$c"))
-                      .as(s"__post_max_$c"))): _*)
-            else // first window: the fold's result IS the window's own
-              w.select(groupKeys.map(col) ++ minMaxCols.flatMap(c => Seq(
-                col(s"__delmin_$c"), col(s"__delmax_$c"),
-                col(s"min_$c").as(s"__post_min_$c"),
-                col(s"max_$c").as(s"__post_max_$c"))): _*)
-          val needCond = minMaxCols.map(c =>
-            (col(s"__delmin_$c") <=
-              coalesce(col(s"__post_min_$c"), col(s"__delmin_$c"))) ||
-            (col(s"__delmax_$c") >=
-              coalesce(col(s"__post_max_$c"), col(s"__delmax_$c"))))
-            .reduce(_ || _)
-          // null-safe key match (a NULL group is a real group — see
-          // regressedTruth): ANSI equality here would flag it as
-          // regressed on EVERY delete-carrying window (conservative
-          // but a spurious recompute per window)
-          val needJoined = post
-            .filter(needCond)
-            .select(groupKeys.map(col): _*)
-          // THRESHOLD-GUARDED collect: the needing-key set is usually
-          // window-sized (deletes' groups), and collecting it buys two
-          // prunes (partition fast path + key-range dataFilters). But a
-          // FULL-VIEW regress — a COW rewrite of every partition over a
-          // high-cardinality group key — needs every group key, and at
-          // 10^8 groups an unconditional collect is driver-memory death.
-          // Probe via limit(maxCollect+1): at most maxCollect+1 rows ever
-          // reach the driver. Under the bound, the probe IS the key set
-          // (one job, same as before); over it, the collect and its two
-          // key prunes are DROPPED and the recompute runs the already-
-          // distributed semi-join form (non-broadcast) — the sound
-          // unpruned fallback regressedTruth documents for null
-          // partition keys.
-          val maxCollect = spark.conf.get(
-            "spark.graft.aggview.recompute.maxCollectKeys", "100000").toInt
-          val probe = needJoined.limit(maxCollect + 1).collect()
-          if (probe.isEmpty)
-            graft.operators.IncrementalRollup.commit(
-              spark, w, groupKeys, mergeFns, view, batchId = target)
-          else {
-            val underBound = probe.length <= maxCollect
-            StreamingIngest.lastRecomputeCollected = Some(underBound)
-            val rec = if (underBound) {
-              val needDf = spark.createDataFrame(
-                java.util.Arrays.asList(probe: _*),
-                StructType(groupKeys.map(k => w.schema(k))))
-              regressedTruth(spark, source, groupKeys, minMaxCols,
-                needDf, Some(probe), target)
-            } else
-              regressedTruth(spark, source, groupKeys, minMaxCols,
-                needJoined, None, target)
-            graft.operators.IncrementalRollup
-              .commitWithRepair(spark, w, groupKeys, mergeFns,
-                rec, minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c")),
-                view, batchId = target)
+            .agg(aggs.head, aggs.tail: _*)
+          // the POST-WINDOW extremes and counts, from the stored view and
+          // the window (see the scaladoc's count algebra), computed and
+          // pinned ONCE: the regress probe and the view merge both read
+          // these local blocks. `lost` flags a group whose extreme's last
+          // holder left (or whose deletes reach past it) — only those
+          // read the source. A group the view already marked at this
+          // batch (a checkpoint replay) is never flagged: the guarded
+          // merge leaves it untouched anyway.
+          val exists = view.exists
+          val joined =
+            if (exists)
+              w.alias("w").join(view.read(spark).alias("p"),
+                groupKeys.map(k => col(s"w.$k") <=> col(s"p.$k"))
+                  .reduce(_ && _), "left")
+            else w.alias("w")
+          def p(c: String) = if (exists) col(s"p.$c") else lit(null).cast("long")
+          def win(c: String) = col(s"w.$c")
+          val extremes = minMaxCols.map { c =>
+            def side(ext: String, pick: (Column, Column) => Column,
+                past: (Column, Column) => Column) = {
+              val (stored, ins, dels) = (s"${ext}_$c", s"ins_${ext}_$c", s"del_${ext}_$c")
+              val at = pick(p(stored), win(ins))
+              def heldAt(v: Column, k: Column) = when(v === at, k).otherwise(lit(0L))
+              val n = heldAt(p(stored), p(s"n_$stored")) +
+                heldAt(win(ins), win(s"n_$ins")) - heldAt(win(dels), win(s"n_$dels"))
+              val lost = (at.isNotNull && n <= 0) ||
+                coalesce(past(win(dels), at), win(dels).isNotNull)
+              (Seq(at.as(stored), n.as(s"n_$stored")), lost)
+            }
+            val (lo, lostLo) = side("min", least(_, _), _ < _)
+            val (hi, lostHi) = side("max", greatest(_, _), _ > _)
+            (lo ++ hi, lostLo || lostHi)
           }
+          val post = joined.select(groupKeys.map(k => col(s"w.$k").as(k)) ++
+              sums.map(c => col(s"w.$c").as(c)) ++ extremes.flatMap(_._1) :+
+              (coalesce(p(graft.operators.IncrementalRollup.BatchCol) < target,
+                lit(true)) && extremes.map(_._2).reduce(_ || _)).as("__lost"): _*)
+            .localCheckpoint()
+          val lostKeys = post.filter(col("__lost")).select(groupKeys.map(col): _*)
+          // THRESHOLD-GUARDED collect: the lost-key set is usually a few
+          // groups, and collecting it buys two prunes (partition fast
+          // path + key-range dataFilters). But a FULL-VIEW regress — a
+          // COW rewrite emptying every group of a high-cardinality key —
+          // needs every group key, and at 10^8 groups an unconditional
+          // collect is driver-memory death. Probe via limit(maxCollect+1):
+          // at most maxCollect+1 rows ever reach the driver. Under the
+          // bound, the probe IS the key set; over it, the collect and its
+          // two key prunes are DROPPED and the recompute runs the
+          // already-distributed semi-join form (non-broadcast) — the
+          // sound unpruned fallback regressedTruth documents for null
+          // partition keys.
+          val probe = lostKeys.limit(maxCollect + 1).collect()
+          val repair =
+            if (probe.isEmpty)
+              post.filter(lit(false)).select((groupKeys ++ setCols).map(col): _*)
+            else {
+              val underBound = probe.length <= maxCollect
+              StreamingIngest.lastRecomputeCollected = Some(underBound)
+              if (underBound) {
+                val needDf = spark.createDataFrame(
+                  java.util.Arrays.asList(probe: _*),
+                  StructType(groupKeys.map(k => post.schema(k))))
+                regressedTruth(spark, source, groupKeys, minMaxCols,
+                  needDf, Some(probe), target)
+              } else
+                regressedTruth(spark, source, groupKeys, minMaxCols,
+                  lostKeys, None, target)
+            }
+          // sums and n fold; extremes and counts are SET — from the
+          // post-window state, or from the truth for lost groups
+          graft.operators.IncrementalRollup.commitWithRepair(spark,
+            post.drop("__lost"), groupKeys,
+            sums.map(_ -> "sum").toMap ++ setCols.map(_ -> "set"),
+            repair, setCols, view, batchId = target)
         }
       }
     }
+  }
+
+  /** `spark.graft.aggview.recompute.maxCollectKeys` (default 100000): the
+    * most lost group keys a MIN/MAX recompute collects to the driver.
+    * Read once when a drain starts, so a malformed value is refused
+    * before anything is written.
+    */
+  private def recomputeMaxCollectKeys(spark: SparkSession): Int = {
+    val key = "spark.graft.aggview.recompute.maxCollectKeys"
+    val raw = spark.conf.get(key, "100000")
+    scala.util.Try(raw.trim.toInt).toOption
+      .filter(k => k >= 1 && k < Int.MaxValue)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$key must be an integer in 1..${Int.MaxValue - 1}, got '$raw'"))
+  }
+
+  /** The least (or greatest) non-null value of `v`, as `name`, and the
+    * number of rows holding it, as `n_<name>` (0 when every value is
+    * NULL).
+    */
+  private def extremeAt(least: Boolean, v: Column, name: String): Seq[Column] = {
+    val x = v.cast("long")
+    Seq((if (least) min(x) else max(x)).as(name),
+      graft.functions.CountAtExtreme(x, least).as(s"n_$name"))
   }
 
   /** The MIN/MAX recompute's truth read for the regressed groups. With
@@ -1559,8 +1599,10 @@ object StreamingIngest {
     * the needDf PLAN, never a driver-side key set. Reads the whole
     * source once; sound at any group cardinality.
     *
-    * Returns the merge source: needDf LEFT JOIN truth — a group emptied
-    * by the window's deletes has no truth row and NULLs its extremes.
+    * Returns the repair source: needDf LEFT JOIN truth — keys, then
+    * `min_c`/`max_c` per column, then the true `n_min_c`/`n_max_c` row
+    * counts at them. A group emptied by the window's deletes has no
+    * truth row: NULL extremes, counts 0.
     * Package-private so the regression specs drive the EXACT production
     * read (planned-file assertions on `.inputFiles`).
     */
@@ -1604,9 +1646,9 @@ object StreamingIngest {
         }
       }
     }
-    val recAggs = minMaxCols.flatMap(c => Seq(
-      min(col(c).cast("long")).as(s"min_$c"),
-      max(col(c).cast("long")).as(s"max_$c")))
+    val recAggs = minMaxCols.flatMap(c =>
+      extremeAt(least = true, col(c), s"min_$c") ++
+        extremeAt(least = false, col(c), s"max_$c"))
     // NULL-SAFE (<=>) join conditions throughout: the view's fold path
     // already matches null group keys null-safely (MergeInto's <=>
     // condition), so a grouped view CAN carry a NULL group — a plain
@@ -1630,16 +1672,23 @@ object StreamingIngest {
       .select(groupKeys.map(k => col(s"n.$k").as(k)) ++
         minMaxCols.flatMap(c => Seq(
           col(s"t.min_$c").as(s"min_$c"),
-          col(s"t.max_$c").as(s"max_$c"))): _*)
+          col(s"t.max_$c").as(s"max_$c"))) ++
+        minMaxCols.flatMap(c => Seq(
+          coalesce(col(s"t.n_min_$c"), lit(0L)).as(s"n_min_$c"),
+          coalesce(col(s"t.n_max_$c"), lit(0L)).as(s"n_max_$c"))): _*)
   }
 
-  /** The aggregate view's user-facing read: per-group `n` (live count)
-    * and `sum_<col>` totals; zero-count marker rows filtered.
+  /** The aggregate view's user-facing read: per-group `n` (live count),
+    * `sum_<col>` totals and `min_<col>`/`max_<col>` extremes; zero-count
+    * marker rows and the per-extreme row counts filtered.
     */
   def readAggView(
-      spark: SparkSession, view: graft.table.WarehouseTable): DataFrame =
-    graft.operators.IncrementalRollup.read(spark, view)
-      .filter(col("n") =!= 0L)
+      spark: SparkSession, view: graft.table.WarehouseTable): DataFrame = {
+    val rollup = graft.operators.IncrementalRollup.read(spark, view)
+    rollup.filter(col("n") =!= 0L)
+      .drop(rollup.columns.toSeq.filter(_.startsWith("min_")).flatMap(m =>
+        Seq(s"n_$m", s"n_max_${m.stripPrefix("min_")}")): _*)
+  }
 
   // ---- watermark-buffered ORDERED stateful stages --------------------------
   //

@@ -105,9 +105,9 @@ object PlanDump {
       "q188_agg_view_null_group").foreach { q =>
       dump(q, "after",
         "plan = the view read (unchanged by design); the round's change is " +
-          "drain-side — fold+repair fused into ONE view commit per regressed " +
+          "drain-side — fold+repair fused into ONE view commit per " +
           "window (IncrementalRollup.commitWithRepair), detection from " +
-          "pre-commit state. See OPTIMIZATION_r16.md batch 2.")
+          "the counts at each stored extreme. See OPTIMIZATION_r16.md batch 2.")
     }
     Seq("q168_cdc_mirror_cow", "q156_cdc_mirror_posdel").foreach { q =>
       dump(q, "after",

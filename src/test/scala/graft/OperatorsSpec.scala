@@ -1073,6 +1073,29 @@ class OperatorsSpec extends SparkSpec {
     assert(merged == whole)
   }
 
+  test("count at extreme: partial counts merge across partitions; NULLs never count") {
+    import graft.functions.CountAtExtreme
+    import org.apache.spark.sql.functions.{col, max, min}
+    val rowsGen = Gen.listOfN(200,
+      Gen.zip(Gen.choose(0, 3), Gen.option(Gen.choose(-5L, 5L))))
+    forAllSeeded(rowsGen) { generated =>
+      // group 9 holds only NULLs
+      val rows = generated ++ Seq((9, None), (9, None))
+      // seven partitions: ties at an extreme meet only in the merge
+      val got = rows.toDF("g", "v").repartition(7).groupBy("g")
+        .agg(min("v"), CountAtExtreme(col("v"), least = true),
+          max("v"), CountAtExtreme(col("v"), least = false))
+        .as[(Int, Option[Long], Long, Option[Long], Long)].collect().toSet
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        val vs = rs.flatMap(_._2)
+        if (vs.isEmpty) (g, None, 0L, None, 0L)
+        else (g, Some(vs.min), vs.count(_ == vs.min).toLong,
+          Some(vs.max), vs.count(_ == vs.max).toLong)
+      }.toSet
+      assert(got == want)
+    }
+  }
+
   test("vocab encode: frequency-order ids, UNK mapping, in-order fingerprint") {
     import graft.operators.Vocabulary
     import org.apache.spark.sql.functions.col

@@ -1645,6 +1645,257 @@ class StreamingIngestSpec extends SparkSpec {
       g > wide && n == 1L && mn == g && mx == g })
   }
 
+  // ---- MIN/MAX counts at the extremes -------------------------------------
+
+  private val mmSch = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("g", StringType, nullable = true),
+    StructField("v", IntegerType, nullable = true)))
+
+  private def mmRows(rows: (Long, String, Integer)*) = spark.createDataFrame(
+    spark.sparkContext.parallelize(
+      rows.map { case (i, g, v) => org.apache.spark.sql.Row(i, g, v) }, 2),
+    mmSch)
+
+  /** A MOR source with `rows` loaded: partitioned by g and keyed (id, g),
+    * or unpartitioned and keyed on id alone (room for a NULL group).
+    */
+  private def mmSource(name: String, partitioned: Boolean = true)(
+      rows: (Long, String, Integer)*): WarehouseTable = {
+    val src = WarehouseTable(tmpDir(name) + "/src")
+    src.create(mmSch, if (partitioned) Some("g") else None,
+      WarehouseTable.tableProperties("MOR", "snappy") +
+        ("compact.delta.threshold" -> "0"))
+    src.merge(spark, mmRows(rows: _*),
+      if (partitioned) Seq("id", "g") else Seq("id"))
+    src
+  }
+
+  private def mmUpsert(src: WarehouseTable, rows: (Long, String, Integer)*): Unit =
+    src.merge(spark, mmRows(rows: _*), src.recordedMergeKeys.get)
+
+  private def mmDelete(src: WarehouseTable, rows: (Long, String, Integer)*): Unit = {
+    val keys = src.recordedMergeKeys.get
+    src.deleteKeysMor(spark, mmRows(rows: _*).select(keys.map(col): _*), keys)
+  }
+
+  /** Drains `src` into the view beside it, `perWindow` commits a window. */
+  private def mmDrain(src: WarehouseTable, perWindow: Int = 1): WarehouseTable = {
+    val root = new java.io.File(src.root).getParent
+    val view = WarehouseTable(root + "/view")
+    StreamingIngest.startAggView(spark, src, view, Seq("g"), Seq("id"),
+      root + "/ckpt", maxFilesPerTrigger = perWindow, minMaxCols = Seq("v"))
+      .awaitTermination(180000)
+    view
+  }
+
+  /** readAggView must equal a group-by over the source it summarises. */
+  private def assertViewIsSource(src: WarehouseTable, view: WarehouseTable): Unit = {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val got = rows(StreamingIngest.readAggView(spark, view)
+      .select("g", "n", "sum_id", "min_v", "max_v"))
+    val want = rows(src.read(spark).groupBy("g").agg(count(lit(1)),
+      sum(col("id")), min(col("v").cast("long")), max(col("v").cast("long"))))
+    assert(got == want, s"view diverged from the source: $got vs $want")
+  }
+
+  test("min/max agg view: an extreme other rows still hold needs no truth read") {
+    // one group, values 1..3 ten rows each
+    val src = mmSource("mmheld")(
+      (1L to 30L).map(i => (i, "g0", Int.box(((i - 1) % 3 + 1).toInt))): _*)
+    val view = mmDrain(src)
+    StreamingIngest.lastRecomputeCollected = None
+    try {
+      // one window: a delete at the min, an update moving a max row to 2
+      mmDelete(src, (1L, "g0", null))
+      mmUpsert(src, (3L, "g0", 2))
+      mmDrain(src, perWindow = 2)
+      assertViewIsSource(src, view)
+      // a COW partition rewrite re-lands every unchanged row as a
+      // delete+insert pair: the counts at both extremes stay put
+      src.updateRows(spark, Map("v" -> col("v")), Some(col("id") === 2L))
+      mmDrain(src)
+      assertViewIsSource(src, view)
+      assert(StreamingIngest.lastRecomputeCollected.isEmpty,
+        "a window that left both extremes held read the source: " +
+          StreamingIngest.lastRecomputeCollected)
+      val counts = graft.operators.IncrementalRollup.read(spark, view)
+        .select("n_min_v", "n_max_v").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(counts == Seq((9L, 9L)), s"counts at the extremes: $counts")
+    } finally StreamingIngest.lastRecomputeCollected = None
+  }
+
+  test("min/max agg view: count algebra edge cases match a group-by over the source") {
+    StreamingIngest.lastRecomputeCollected = None
+    try {
+      // the only row at the min leaves while a smaller value arrives:
+      // the new min is held once, no truth read
+      val a = mmSource("mmedge_a")((1L, "g0", 5), (2L, "g0", 6), (3L, "g0", 7))
+      val va = mmDrain(a)
+      mmDelete(a, (1L, "g0", null))
+      mmUpsert(a, (4L, "g0", 2))
+      mmDrain(a, perWindow = 2)
+      assertViewIsSource(a, va)
+      assert(StreamingIngest.lastRecomputeCollected.isEmpty)
+      // a key lands below the min and moves up in the same window: the
+      // net count at the new min is 0, so the group recomputes
+      val b = mmSource("mmedge_b")((1L, "g0", 5), (2L, "g0", 6))
+      val vb = mmDrain(b)
+      mmUpsert(b, (3L, "g0", 1))
+      mmUpsert(b, (3L, "g0", 9))
+      mmDrain(b, perWindow = 2)
+      assertViewIsSource(b, vb)
+      assert(StreamingIngest.lastRecomputeCollected.contains(true))
+      // NULL values never count: deleting the group's only non-null row
+      // NULLs its extremes while n stays above 0; a NULL group key
+      // matches its stored row null-safely
+      val c = mmSource("mmedge_c", partitioned = false)((1L, "g0", 5),
+        (2L, "g0", null), (3L, "g0", null), (4L, null, 3), (5L, null, 3),
+        (6L, null, 8))
+      val vc = mmDrain(c)
+      mmUpsert(c, (7L, "g0", null))
+      mmDelete(c, (4L, null, null))
+      mmDrain(c)
+      assertViewIsSource(c, vc)
+      mmDelete(c, (1L, "g0", null), (5L, null, null))
+      mmDrain(c)
+      assertViewIsSource(c, vc)
+      val g0 = StreamingIngest.readAggView(spark, vc).filter(col("g") === "g0")
+        .select("n", "min_v", "max_v").collect().map(_.toSeq).toSeq
+      assert(g0 == Seq(Seq(3L, null, null)), s"all-NULL group: $g0")
+    } finally StreamingIngest.lastRecomputeCollected = None
+  }
+
+  test("min/max agg view: two MIN/MAX columns count each column's extreme on its own") {
+    val sch = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("g", StringType, nullable = false),
+      StructField("a", IntegerType, nullable = false),
+      StructField("b", IntegerType, nullable = false)))
+    def rows(rs: (Long, String, Int, Int)*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rs.map { case (i, g, a, b) =>
+        org.apache.spark.sql.Row(i, g, a, b) }, 2), sch)
+    val root = tmpDir("mmtwo")
+    val src = WarehouseTable(root + "/src")
+    src.create(sch, Some("g"), WarehouseTable.tableProperties("MOR", "snappy") +
+      ("compact.delta.threshold" -> "0"))
+    // a = 1 is held by two rows that differ in b
+    src.merge(spark, rows((1L, "g0", 1, 6), (2L, "g0", 1, 5), (3L, "g0", 2, 7),
+      (4L, "g1", 3, 3)), Seq("id", "g"))
+    val view = WarehouseTable(root + "/view")
+    def drain(): Unit = StreamingIngest.startAggView(spark, src, view, Seq("g"),
+      Seq("a"), root + "/ckpt", minMaxCols = Seq("a", "b")).awaitTermination(180000)
+    def assertViewIsSource(): Unit = {
+      val got = StreamingIngest.readAggView(spark, view)
+        .select("g", "n", "min_a", "max_a", "min_b", "max_b")
+        .collect().map(_.toSeq).toSet
+      val want = src.read(spark).groupBy("g").agg(count(lit(1)),
+        min(col("a").cast("long")), max(col("a").cast("long")),
+        min(col("b").cast("long")), max(col("b").cast("long")))
+        .collect().map(_.toSeq).toSet
+      assert(got == want, s"view diverged from the source: $got vs $want")
+    }
+    drain()
+    val counts = graft.operators.IncrementalRollup.read(spark, view)
+      .filter(col("g") === "g0")
+      .select("n_min_a", "n_max_a", "n_min_b", "n_max_b").collect()
+      .map(r => (0 to 3).map(r.getLong))
+    assert(counts.toSeq == Seq(Seq(2L, 1L, 1L, 1L)), s"counts: ${counts.toSeq}")
+    StreamingIngest.lastRecomputeCollected = None
+    try {
+      // one of a's two min rows leaves (b's 6 is no extreme): held
+      src.deleteKeysMor(spark, rows((1L, "g0", 0, 0)).select("id", "g"),
+        Seq("id", "g"))
+      drain()
+      assertViewIsSource()
+      assert(StreamingIngest.lastRecomputeCollected.isEmpty,
+        s"a held extreme read the source: ${StreamingIngest.lastRecomputeCollected}")
+      // the only row at both maxima leaves: the group reads the truth
+      src.deleteKeysMor(spark, rows((3L, "g0", 0, 0)).select("id", "g"),
+        Seq("id", "g"))
+      drain()
+      assertViewIsSource()
+      assert(StreamingIngest.lastRecomputeCollected.contains(true))
+    } finally StreamingIngest.lastRecomputeCollected = None
+  }
+
+  test("min/max agg view: a crash replay keeps the counts at the extremes") {
+    val src = mmSource("mmcrash")((1L, "g0", 1), (2L, "g0", 1), (3L, "g0", 4),
+      (4L, "g1", 7))
+    val view = mmDrain(src)
+    val root = new java.io.File(src.root).getParent
+    val cursor = Paths.get(view.root + "_agg_applied")
+    val before = Files.readAllBytes(cursor)
+    // one window: a delete at g0's min, a new max
+    mmDelete(src, (1L, "g0", null))
+    mmUpsert(src, (5L, "g0", 6))
+    mmDrain(src, perWindow = 2)
+    def state() = graft.operators.IncrementalRollup.read(spark, view)
+      .collect().map(_.toSeq).toSet
+    val drained = state()
+    // crash after the view merge, before the cursor write and the
+    // checkpoint's commit entry
+    Files.write(cursor, before)
+    val commits = new java.io.File(root + "/ckpt/commits").list()
+      .filter(_.forall(_.isDigit)).map(_.toLong)
+    Files.delete(Paths.get(s"$root/ckpt/commits/${commits.max}"))
+    Files.deleteIfExists(Paths.get(s"$root/ckpt/commits/.${commits.max}.crc"))
+    StreamingIngest.lastRecomputeCollected = None
+    try {
+      mmDrain(src, perWindow = 2)
+      assert(state() == drained, s"replay moved the view: ${state()} vs $drained")
+      // the replayed delete would drop g0's count at 1 to 0 a second
+      // time; the guard that blocks its merge also keeps it off the probe
+      assert(StreamingIngest.lastRecomputeCollected.isEmpty,
+        "a replayed window read the source")
+    } finally StreamingIngest.lastRecomputeCollected = None
+    assert(!java.util.Arrays.equals(Files.readAllBytes(cursor), before))
+    assertViewIsSource(src, view)
+  }
+
+  test("min/max agg view: a view without the per-extreme counts is refused, not migrated") {
+    val src = mmSource("mmold")((1L, "g0", 5))
+    val root = new java.io.File(src.root).getParent
+    val view = WarehouseTable(root + "/view")
+    // the layout a MIN/MAX view had before it counted its extremes
+    graft.operators.IncrementalRollup.commit(spark,
+      mmRows((1L, "g0", 5)).select(col("g"), col("id").as("sum_id"),
+        lit(1L).as("n"), col("v").cast("long").as("min_v"),
+        col("v").cast("long").as("max_v")),
+      Seq("g"), Map("sum_id" -> "sum", "n" -> "sum", "min_v" -> "min",
+        "max_v" -> "max"), view, 1L)
+    val snap = view.currentSnapshotId
+    val err = intercept[IllegalStateException](mmDrain(src))
+    assert(err.getMessage.contains(view.root) && err.getMessage.contains(
+      "drop the view, its _agg_applied cursor and the stream checkpoint"),
+      err.getMessage)
+    assert(view.currentSnapshotId == snap)
+    assert(!Files.exists(Paths.get(view.root + "_agg_applied")))
+  }
+
+  test("min/max agg view: a malformed maxCollectKeys conf is refused at start") {
+    val key = "spark.graft.aggview.recompute.maxCollectKeys"
+    val src = mmSource("mmconf")((1L, "g0", 5))
+    val root = new java.io.File(src.root).getParent
+    try Seq("abc", "0", Int.MaxValue.toString).foreach { bad =>
+      spark.conf.set(key, bad)
+      val err = intercept[IllegalArgumentException](mmDrain(src))
+      assert(err.getMessage.contains(key), err.getMessage)
+      assert(!WarehouseTable(root + "/view").exists)
+      assert(!Files.exists(Paths.get(root + "/view_agg_applied")))
+    } finally spark.conf.unset(key)
+    // a sum-only drain never reads the conf, so it still starts over one
+    val sums = WarehouseTable(root + "/sums")
+    try {
+      spark.conf.set(key, "abc")
+      StreamingIngest.startAggView(spark, src, sums, Seq("g"), Seq("id"),
+        root + "/sums_ckpt").awaitTermination(180000)
+    } finally spark.conf.unset(key)
+    assert(StreamingIngest.readAggView(spark, sums).select("g", "n", "sum_id")
+      .collect().map(_.toSeq).toSeq == Seq(Seq("g0", 1L, 1L)))
+  }
+
   test("streaming window prober: as-of-arrival join — each batch sees itself and every earlier interval") {
     import spark.implicits._
     import graft.operators.RangeIndex
