@@ -127,10 +127,12 @@ object IncrementalRollup {
   }
 
   /** A measure's matched-row value: the stored `__t_<c>` merged with the
-    * batch's `c`.
+    * batch's `c`. A NULL side is absent, as in SQL's `sum`: a batch whose
+    * values are all NULL keeps the stored sum, and a stored NULL takes
+    * the batch's.
     */
   private def fold(fn: String, c: String): Column = fn match {
-    case "sum" => col(s"__t_$c") + col(c)
+    case "sum" => coalesce(col(s"__t_$c") + col(c), col(s"__t_$c"), col(c))
     case "min" => least(col(s"__t_$c"), col(c))
     case "max" => greatest(col(s"__t_$c"), col(c))
     case "set" => col(c)

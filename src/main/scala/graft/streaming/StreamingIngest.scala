@@ -1321,6 +1321,9 @@ object StreamingIngest {
     * rows, which contribute (−old, +new) = 0, and an UPDATE contributes
     * exactly the difference — no row identity, no anti-join, no rescan.
     * SUM/COUNT fold purely incrementally (invertible under deletion).
+    * Beside each `sum_c` the view keeps `nn_c`, the signed count of
+    * non-NULL `c` values, so a group whose live values of `c` are all
+    * NULL reads `sum_c` NULL, as SQL's `sum` does.
     *
     * MIN/MAX (`minMaxCols`) are NOT invertible — a delete can remove the
     * row attaining the extreme — so the view keeps, beside `min_c` and
@@ -1392,7 +1395,7 @@ object StreamingIngest {
     val maxCollect = if (minMaxCols.nonEmpty) recomputeMaxCollectKeys(spark) else 0
     val counted = minMaxCols.flatMap(c => Seq(s"n_min_$c", s"n_max_$c"))
     val setCols = minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c")) ++ counted
-    val sums = sumCols.map(c => s"sum_$c") :+ "n"
+    val sums = sumCols.flatMap(c => Seq(s"sum_$c", s"nn_$c")) :+ "n"
     // a view of another layout is refused before anything is written:
     // a MIN/MAX view written before it counted its extremes cannot be
     // migrated (the counts are not derivable from the view itself)
@@ -1424,6 +1427,7 @@ object StreamingIngest {
       refusal, checkpointDir, maxFilesPerTrigger) { (from, target) =>
       val isDel = col("_change_type") === "delete"
       val sign = when(isDel, lit(-1L)).otherwise(lit(1L))
+      def nonNull(c: String) = when(col(c).isNotNull, sign).otherwise(lit(0L))
       // STATIC empty-window skip: a maintenance-only window (compact,
       // posdel fold, re-cluster on the source) carries no change
       // frames — a fact changesSinceOpt decides from manifests alone.
@@ -1444,7 +1448,8 @@ object StreamingIngest {
         val window = windowOpt.getOrElse(source.emptyChangeFrame(spark))
         if (minMaxCols.isEmpty) {
           val contrib = window.select(groupKeys.map(col) ++
-            sumCols.map(c => (col(c).cast("long") * sign).as(s"sum_$c")) :+
+            sumCols.flatMap(c => Seq((col(c).cast("long") * sign).as(s"sum_$c"),
+              nonNull(c).as(s"nn_$c"))) :+
             sign.as("n"): _*)
           graft.operators.IncrementalRollup.commit(spark, contrib,
             groupKeys, sums.map(_ -> "sum").toMap, view, batchId = target)
@@ -1455,7 +1460,8 @@ object StreamingIngest {
           // carries one row per (task, group), whatever the number of
           // distinct values and however large a rewrite's feed.
           val aggs =
-            sumCols.map(c => sum(col(c).cast("long") * sign).as(s"sum_$c")) ++
+            sumCols.flatMap(c => Seq(sum(col(c).cast("long") * sign).as(s"sum_$c"),
+              sum(nonNull(c)).as(s"nn_$c"))) ++
             Seq(sum(sign).as("n")) ++
             minMaxCols.flatMap(c => Seq("ins" -> !isDel, "del" -> isDel)
               .flatMap { case (s, on) =>
@@ -1679,15 +1685,21 @@ object StreamingIngest {
   }
 
   /** The aggregate view's user-facing read: per-group `n` (live count),
-    * `sum_<col>` totals and `min_<col>`/`max_<col>` extremes; zero-count
-    * marker rows and the per-extreme row counts filtered.
+    * `sum_<col>` totals (NULL while no live value of `col` is non-NULL)
+    * and `min_<col>`/`max_<col>` extremes; zero-count marker rows, the
+    * non-NULL counts and the per-extreme row counts filtered.
     */
   def readAggView(
       spark: SparkSession, view: graft.table.WarehouseTable): DataFrame = {
     val rollup = graft.operators.IncrementalRollup.read(spark, view)
+    val summed = rollup.columns.toSeq.filter(_.startsWith("nn_")).map(_.stripPrefix("nn_"))
+    val counts = summed.map(c => s"nn_$c") ++
+      rollup.columns.toSeq.filter(_.startsWith("min_")).flatMap(m =>
+        Seq(s"n_$m", s"n_max_${m.stripPrefix("min_")}"))
     rollup.filter(col("n") =!= 0L)
-      .drop(rollup.columns.toSeq.filter(_.startsWith("min_")).flatMap(m =>
-        Seq(s"n_$m", s"n_max_${m.stripPrefix("min_")}")): _*)
+      .withColumns(summed.map(c =>
+        s"sum_$c" -> when(col(s"nn_$c") =!= 0L, col(s"sum_$c"))).toMap)
+      .drop(counts: _*)
   }
 
   // ---- watermark-buffered ORDERED stateful stages --------------------------

@@ -141,7 +141,7 @@ final class WarehouseTable(val root: String) {
       "partition" -> JString(partition.getOrElse("")),
       "properties" -> props)
     writeString(metaPath, JsonMethods.compact(JsonMethods.render(meta)))
-    writeManifest(0L, Manifest(Map.empty, Nil))
+    writeSnapshot(0L, Manifest(Map.empty, Nil), None, createNew = false)
     atomicWriteCurrent(0L)
   }
 
@@ -179,11 +179,31 @@ final class WarehouseTable(val root: String) {
       posDeletes: List[String] = Nil) {
     def allPartitions: Set[String] =
       base.keySet ++ deltas.flatMap(_.data.keySet)
+    /** Every data dir this snapshot references, base and deltas. */
+    def liveDirs: Set[String] =
+      (base.values.flatten ++ deltas.flatMap(_.data.values.flatten)).toSet
     /** Drop stats of dirs no longer referenced by this snapshot. */
     def pruneStats: Manifest = {
-      val live = (base.values.flatten ++ deltas.flatMap(_.data.values.flatten)).toSet
+      val live = liveDirs
       copy(stats = stats.view.filterKeys(live.contains).toMap)
     }
+    // The steps writes hand [[commit]]: `add` dirs (stats `st`) unioned
+    // into the base per key, as the next MOR delta, in place of partition
+    // keys `parts`, or in place of everything; keys or base dirs dropped.
+    def addDirs(add: Map[String, List[String]], st: Map[String, TableStats.DirStats]): Manifest =
+      copy(base = (base.keySet ++ add.keySet).map(k =>
+        k -> (base.getOrElse(k, Nil) ++ add.getOrElse(k, Nil))).toMap, stats = stats ++ st)
+    def addDelta(add: Map[String, List[String]], st: Map[String, TableStats.DirStats]): Manifest =
+      copy(deltas = deltas :+ Delta(deltas.map(_.seq).maxOption.getOrElse(0L) + 1, add),
+        stats = stats ++ st)
+    def replaceParts(parts: Set[String], add: Map[String, List[String]],
+        st: Map[String, TableStats.DirStats]): Manifest = dropParts(parts).addDirs(add, st)
+    def replaceAll(add: Map[String, List[String]], st: Map[String, TableStats.DirStats]): Manifest =
+      Manifest(add, Nil, st)
+    def dropParts(parts: Set[String]): Manifest = copy(base = base -- parts,
+      deltas = deltas.map(d => d.copy(data = d.data -- parts)).filter(_.data.nonEmpty)).pruneStats
+    def dropDirs(gone: String => Boolean): Manifest =
+      copy(base = base.view.mapValues(_.filterNot(gone)).filter(_._2.nonEmpty).toMap).pruneStats
   }
 
   private def partsToJson(m: Map[String, List[String]]): JValue =
@@ -301,20 +321,22 @@ final class WarehouseTable(val root: String) {
     }
   }
 
-  /** Write snapshot `id` in the v3 split format, reusing the previous
+  /** Write snapshot `id` in the v3 split format, reusing the parent
     * snapshot's fragment files for partitions whose dirs+stats did not
-    * change. `createNew` guards the snapshot pointer file against racing
-    * commits (fragments carry uuid names and cannot collide).
+    * change (`parent` is its id and manifest, which the commit already
+    * read). `createNew` guards the snapshot pointer file against racing
+    * commits (fragments carry uuid names and cannot collide). Returns
+    * normally exactly when the snapshot file landed.
     */
   private def writeSnapshot(
-      id: Long, m: Manifest, prevId: Option[Long], createNew: Boolean,
+      id: Long, m: Manifest, parent: Option[(Long, Manifest)], createNew: Boolean,
       kind: String = "data", staged: Boolean = false,
       wapId: Option[String] = None): Unit = {
     // ONE parse of the parent snapshot serves both consumers below: the
     // fragment-reuse pointer map AND the monotone-ts clamp (a second
     // readString+parse of a large manifest per commit is pure waste on
     // the hot write path)
-    val prevParsed: Option[(Path, org.json4s.JValue)] = prevId.flatMap { pid =>
+    val prevParsed: Option[(Path, org.json4s.JValue)] = parent.flatMap { case (pid, _) =>
       val pp = snapOrStaged(pid)
       if (Files.exists(pp)) Some((pp, JsonMethods.parse(readString(pp))))
       else None
@@ -325,9 +347,7 @@ final class WarehouseTable(val root: String) {
         case _ => Map.empty[String, String]
       }
     }.getOrElse(Map.empty)
-    val prev = prevId
-      .filter(_ => prevPaths.nonEmpty)
-      .map(pid => readManifest(pid))
+    val prev = parent.map(_._2).filter(_ => prevPaths.nonEmpty)
     val parts = m.base.map { case (pv, dirs) =>
       val stats = m.stats.view.filterKeys(dirs.contains).toMap
       val unchanged = prev.exists(pm =>
@@ -498,7 +518,12 @@ final class WarehouseTable(val root: String) {
         }
       else Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
-    } finally Files.deleteIfExists(tmp)
+    } finally {
+      // a scratch file left behind is removeOrphanFiles' `.tmp.` debris;
+      // failing here would report a landed snapshot as not landed
+      try Files.deleteIfExists(tmp)
+      catch { case _: java.io.IOException => () }
+    }
   }
 
   /** O_EXCL id-claim sidecar beside a snapshot file (linkless-FS commit
@@ -508,13 +533,6 @@ final class WarehouseTable(val root: String) {
     */
   private def claimPath(p: Path): Path =
     p.resolveSibling("." + p.getFileName.toString + ".claim")
-
-  private def writeManifest(id: Long, m: Manifest): Unit =
-    writeSnapshot(id, m, None, createNew = false)
-
-  /** CREATE_NEW write — fails if a racing commit already claimed this id. */
-  private def writeManifestNew(id: Long, m: Manifest, kind: String): Unit =
-    writeSnapshot(id, m, Some(id - 1), createNew = true, kind)
 
   private def atomicWriteCurrent(id: Long): Unit = {
     val tmp = rootPath.resolve(s"_current.tmp.${UUID.randomUUID()}")
@@ -539,10 +557,8 @@ final class WarehouseTable(val root: String) {
     */
   def sizeInBytes(asOf: Option[Long] = None): Long = {
     val m = readManifest(asOf.getOrElse(currentSnapshotId))
-    val dirs = (m.base.values.flatten ++
-      m.deltas.flatMap(_.data.values.flatten)).toSeq.distinct
     import scala.jdk.CollectionConverters._
-    dirs.map { d =>
+    m.liveDirs.toSeq.map { d =>
       val p = Paths.get(root, d)
       if (!Files.isDirectory(p)) 0L
       else {
@@ -845,9 +861,7 @@ final class WarehouseTable(val root: String) {
     // read on split-format snapshots with many fragments, a real cost
     // per feed poll)
     val anchorM = readManifest(sinceSnapId)
-    var seenDirs: Set[String] =
-      (anchorM.base.values.flatten ++
-        anchorM.deltas.flatMap(_.data.values.flatten)).toSet
+    var seenDirs: Set[String] = anchorM.liveDirs
     var seenPos: Set[String] = anchorM.posDeletes.toSet
     var prevM = anchorM
     val frames = Seq.newBuilder[DataFrame]
@@ -999,11 +1013,7 @@ final class WarehouseTable(val root: String) {
       // identity to diff on — the documented keyless caveat). Cost is
       // O(removed + re-landed dirs of that commit) — the rewrite itself
       // already paid that.
-      val prevAll = (prevM.base.values.flatten ++
-        prevM.deltas.flatMap(_.data.values.flatten)).toSet
-      val curAll = (m.base.values.flatten ++
-        m.deltas.flatMap(_.data.values.flatten)).toSet
-      val removed = prevAll -- curAll
+      val removed = prevM.liveDirs -- m.liveDirs
       // maintenance is the WRITER's explicit stamp — a heuristic can't
       // tell a compact (delta dirs fold away, rows re-land) from a
       // dropPartitions that sweeps a partition's delta dirs (rows are
@@ -1075,7 +1085,7 @@ final class WarehouseTable(val root: String) {
             .withColumn("_change_ordinal", lit(id))
         }
       }
-      seenDirs ++= m.base.values.flatten ++ m.deltas.flatMap(_.data.values.flatten)
+      seenDirs ++= m.liveDirs
       seenPos ++= m.posDeletes
       prevM = m
       id += 1
@@ -1134,9 +1144,7 @@ final class WarehouseTable(val root: String) {
       s"snapshot $sinceSnapId does not exist (expired or never created)")
     val beforeM = readManifest(sinceSnapId)
     val afterM = readManifest(to)
-    val seen: Set[String] =
-      (beforeM.base.values.flatten ++
-        beforeM.deltas.flatMap(_.data.values.flatten)).toSet
+    val seen: Set[String] = beforeM.liveDirs
     def fresh(m: Map[String, List[String]]): Seq[(String, List[String])] =
       m.view.mapValues(_.filterNot(seen)).filter(_._2.nonEmpty).toSeq
     val wanted: Map[String, List[String]] =
@@ -1439,51 +1447,107 @@ final class WarehouseTable(val root: String) {
     df.select(cols: _*)
   }
 
-  /** Optimistic RETRY for rebasable commits — real multi-writer support
-    * for the append-shaped paths: their data dirs are written ONCE and
-    * are independent of the parent snapshot, so losing the CREATE_NEW
-    * race costs only re-deriving the manifest against the new current
-    * and re-committing — no data is rewritten (Iceberg's fast-append
-    * retry). `makeManifest(currentManifest)` must be a pure function of
-    * the parent manifest (add dirs / a delta / a sidecar). COW rewrites
-    * must NOT use this: their CONTENT depends on the parent state, so a
-    * lost race means re-reading data — they keep the loud
-    * single-writer-per-table contract instead of a silent wrong rebase.
+  /** A write's change to its parent manifest: a pure step `f` (one of the
+    * [[Manifest]] shapes), and what it is decides where it may land.
+    * `parent()` is the snapshot an attempt lands on, with its manifest.
     */
-  private def commitRebasable(
-      makeManifest: Manifest => Manifest): Unit = {
-    // retry budget: worst case for W lockstep racers is W rounds (each
-    // round exactly one writer lands — measured in SCALING §10o), so the
-    // default must sit comfortably above any realistic writer count;
-    // retries are cheap (manifest re-derivation, never a data rewrite).
-    // Tables expecting extreme fan-in can raise it per table (the
-    // Iceberg `commit.retry.num-retries` knob). Read LAZILY on the first
-    // conflict — the uncontended path (almost every commit) pays no
-    // extra metadata read for a budget it never consults.
-    lazy val maxAttempts =
-      intProperty(readMeta().properties, "commit.retry.max-attempts", 64)
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      val cur = currentSnapshotId
-      try {
-        commit(cur, makeManifest(readManifest(cur)))
-        done = true
-        if (WarehouseTable.recordRebase)
-          WarehouseTable.rebaseAttempts.add(attempt)
-      } catch {
-        case e @ (_: java.util.ConcurrentModificationException |
-                  _: java.nio.file.FileAlreadyExistsException) =>
-          if (attempt >= maxAttempts) throw e
-          // jittered linear backoff: contention here is other LOCAL
-          // committers, and without jitter N lockstep racers can starve
-          // one writer through many rounds (seen as a flaky 8-way race
-          // under full-suite CPU load); retries stay cheap — manifest
-          // re-derivation only, never a data rewrite
-          Thread.sleep(5L * attempt +
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(20L))
+  private sealed abstract class Step(val attempts: Int, val f: Manifest => Manifest) {
+    def parent(): (Long, Manifest)
+  }
+
+  /** An append-shaped step — new dirs, a MOR delta or a position-delete
+    * sidecar. The written data does not depend on the parent snapshot,
+    * so a lost race only re-derives the manifest against the snapshot
+    * then current and retries, up to `attempts` tries (Iceberg's
+    * fast-append retry; no data is rewritten).
+    */
+  private final class Rebase(attempts: Int)(f: Manifest => Manifest) extends Step(attempts, f) {
+    def parent(): (Long, Manifest) = { val cur = currentSnapshotId; (cur, readManifest(cur)) }
+  }
+
+  /** A rewrite: its content was computed from snapshot `id`, whose
+    * manifest is `old`, so it lands on that snapshot or not at all — a
+    * lost race is a ConcurrentModificationException, never a silent
+    * rebase of stale content.
+    */
+  private final class OnParent(id: Long, old: Manifest)(f: Manifest => Manifest)
+      extends Step(1, f) {
+    def parent(): (Long, Manifest) = (id, old)
+  }
+
+  /** The retry budget of [[Rebase]] steps, table property
+    * `commit.retry.max-attempts` (default 64; at least 1). Worst case for
+    * W lockstep racers is W rounds (each round exactly one writer lands —
+    * measured in SCALING §10o), so the default sits comfortably above any
+    * realistic writer count (the Iceberg `commit.retry.num-retries`
+    * knob). Parsed from the write's own `Meta` before it writes any data,
+    * so a malformed value refuses every write, contended or not.
+    */
+  private def retryBudget(meta: Meta): Int = {
+    val n = intProperty(meta.properties, "commit.retry.max-attempts", 64)
+    require(n >= 1, s"table property commit.retry.max-attempts must be at least 1, got $n")
+    n
+  }
+
+  /** The one commit path: every write's snapshot file is written here,
+    * as `snaps/snap-<parent+1>.json` followed by the pointer move, or
+    * under the staged name with no pointer move (`staged`). The file is
+    * created CREATE_NEW, so a racing commit on the same id fails loudly;
+    * a [[Rebase]] step then retries with jittered backoff, an
+    * [[OnParent]] step throws. `written` are the dirs the write created
+    * (`data/<uuid>/…` or a `posdel/<uuid>` sidecar) and `check` its
+    * validation, run before anything lands. When the commit does not
+    * land — a refused check, a lost race, an exhausted budget, any other
+    * throwable before the snapshot file exists — the written dirs are
+    * deleted and the exception rethrown. Once the file exists nothing is
+    * swept: a commit-log tailer may already have read it. Returns the new
+    * snapshot id.
+    */
+  private def commit(
+      written: Iterable[String],
+      step: Step,
+      maintenance: Boolean = false,
+      staged: Boolean = false,
+      wapId: Option[String] = None,
+      check: => Unit = ()): Long = {
+    var landed = false
+    try {
+      check
+      var attempt = 0
+      var next = 0L
+      while (!landed) {
+        attempt += 1
+        val (parent, old) = step.parent()
+        next = parent + 1
+        try {
+          val actual = currentSnapshotId
+          // a stage never moves the pointer, so it does not race it
+          if (!staged && actual != parent)
+            throw new java.util.ConcurrentModificationException(
+              s"snapshot advanced from $parent to $actual during write; retry")
+          writeSnapshot(next, step.f(old), Some(parent -> old), createNew = true,
+            if (maintenance) "maintenance" else "data", staged, wapId)
+          landed = true
+        } catch {
+          case _: java.util.ConcurrentModificationException |
+               _: java.nio.file.FileAlreadyExistsException if attempt < step.attempts =>
+            // jittered linear backoff: contention here is other LOCAL
+            // committers, and without jitter N lockstep racers can starve
+            // one writer through many rounds (seen as a flaky 8-way race
+            // under full-suite CPU load)
+            Thread.sleep(5L * attempt +
+              java.util.concurrent.ThreadLocalRandom.current().nextLong(20L))
+        }
       }
+      if (!staged) atomicWriteCurrent(next)
+      if (WarehouseTable.recordRebase && step.isInstanceOf[Rebase])
+        WarehouseTable.rebaseAttempts.add(attempt)
+      next
+    } catch {
+      case e: Throwable if !landed =>
+        try sweepUncommitted(written)
+        catch { case s: Throwable => e.addSuppressed(s) }
+        throw e
     }
   }
 
@@ -1504,21 +1568,18 @@ final class WarehouseTable(val root: String) {
     */
   def append(df: DataFrame): Unit = {
     val meta = readMeta()
+    val attempts = retryBudget(meta)
     val (added, stats) = writeDataDir(df, meta)
-    commitRebasable { old =>
-      val merged = (old.base.keySet ++ added.keySet).map { k =>
-        k -> (old.base.getOrElse(k, Nil) ++ added.getOrElse(k, Nil))
-      }.toMap
-      Manifest(merged, old.deltas, old.stats ++ stats, old.posDeletes)
-    }
+    commit(added.values.flatten, new Rebase(attempts)(_.addDirs(added, stats)))
   }
 
   /** Overwrite — `mode == 'overwrite'` (read.py:234-236). */
   def overwrite(df: DataFrame): Unit = {
     val meta = readMeta()
     val cur = currentSnapshotId
+    val old = readManifest(cur)
     val (entries, stats) = writeDataDir(df, meta)
-    commit(cur, Manifest(entries, Nil, stats))
+    commit(entries.values.flatten, new OnParent(cur, old)(_.replaceAll(entries, stats)))
   }
 
   /** MERGE upsert — `mode == 'merge'` (read.py:237-239 + mergeSQL.sql).
@@ -1596,12 +1657,18 @@ final class WarehouseTable(val root: String) {
     * no consistent null-key semantics, which is exactly why Iceberg
     * forbids nullable identifier fields. Enforced FOOTER-PRICED on the
     * just-written delta dirs (their footers already carry per-column
-    * null counts — zero extra scans), pre-commit so a refusal leaves no
-    * manifest trace: the written dirs are swept before throwing.
+    * null counts — zero extra scans), as the commit's pre-landing check,
+    * so a refusal leaves no manifest trace: [[commit]] sweeps the
+    * written dirs before rethrowing.
     */
-  /** Recursively delete written-but-not-committed data dirs — the
-    * no-trace half of a refused keyed write (shared by the MOR footer
-    * check and the COW overlapped check).
+  private def requireKeysNotNull(
+      added: Map[String, List[String]], keys: Seq[String]): Unit = {
+    val n = TableStats.nullCount(root, added.values.flatten.toSeq, keys.toSet)
+    if (n > 0) throw nullKeyRefusal(keys, s"$n ")
+  }
+
+  /** Recursively delete written-but-not-committed dirs — the no-trace
+    * half of a write whose commit did not land.
     */
   private def sweepUncommitted(rels: Iterable[String]): Unit =
     // a write owns its whole data/<uuid> dir — the partition dirs the
@@ -1617,16 +1684,6 @@ final class WarehouseTable(val root: String) {
         "identifier fields must be non-null (Iceberg's identifier-field " +
         "contract); filter or coalesce the batch's keys first")
 
-  private def requireKeysNotNull(
-      added: Map[String, List[String]], keys: Seq[String]): Unit = {
-    val dirs = added.values.flatten.toSeq
-    val n = TableStats.nullCount(root, dirs, keys.toSet)
-    if (n > 0) {
-      sweepUncommitted(dirs)
-      throw nullKeyRefusal(keys, s"$n ")
-    }
-  }
-
   /** Merge-on-read: the deduped batch is APPENDED as a delta — O(batch)
     * write, no target read at all; arbitration happens at read time
     * (newest delta sequence wins per key). [[compact]] folds deltas back
@@ -1634,23 +1691,27 @@ final class WarehouseTable(val root: String) {
     */
   private def mergeMor(
       spark: SparkSession, source: DataFrame, keys: Seq[String], meta: Meta,
-      deleteWhere: Option[Column] = None): Unit = {
-    val threshold = deltaThreshold(meta)
-    recordMergeKeys(meta, keys)
+      deleteWhere: Option[Column] = None): Unit =
     // tombstone flag rides along in the delta file: a delete is an O(batch)
-    // append exactly like an upsert, resolved at read/compaction time.
-    // Concurrent-writer safe: the delta rebases onto the snapshot current
-    // at commit time (its sequence number re-derives from that manifest —
-    // arbitration picks a total order between racing upserts).
-    val src = source.withColumn(TombstoneCol,
-      coalesce(deleteWhere.getOrElse(lit(false)), lit(false)))
-    val (added, stats) = writeDataDir(src, meta, extraCols = Seq(TombstoneCol))
-    requireKeysNotNull(added, keys)
-    commitRebasable { old =>
-      val seq = old.deltas.map(_.seq).maxOption.getOrElse(0L) + 1
-      Manifest(old.base, old.deltas :+ Delta(seq, added),
-        old.stats ++ stats, old.posDeletes)
-    }
+    // append exactly like an upsert, resolved at read/compaction time
+    writeDelta(spark, meta, keys, source.withColumn(TombstoneCol,
+      coalesce(deleteWhere.getOrElse(lit(false)), lit(false))))
+
+  /** The keyed MOR delta write ([[mergeMor]], [[deleteKeysMor]]): `rows`
+    * (tombstone flag included) land as the next delta once their keys
+    * are checked non-null, then inline maintenance runs. Concurrent-writer
+    * safe: the delta rebases onto the snapshot current at commit time
+    * (its sequence number re-derives from that manifest — arbitration
+    * picks a total order between racing upserts).
+    */
+  private def writeDelta(
+      spark: SparkSession, meta: Meta, keys: Seq[String], rows: DataFrame): Unit = {
+    val threshold = deltaThreshold(meta)
+    val attempts = retryBudget(meta)
+    recordMergeKeys(meta, keys)
+    val (added, stats) = writeDataDir(rows, meta, extraCols = Seq(TombstoneCol))
+    commit(added.values.flatten, new Rebase(attempts)(_.addDelta(added, stats)),
+      check = requireKeysNotNull(added, keys))
     maintainAfterCommit(spark, meta, threshold)(_.deltas.size)
   }
 
@@ -1687,8 +1748,8 @@ final class WarehouseTable(val root: String) {
     * compaction round costs read amplification until the next quiet
     * writer (or an explicit [[compact]] / `CALL graft.system.compact`)
     * folds the deltas — never data. The folded dir a losing compactor
-    * already wrote becomes ordinary orphan-GC debris. Explicit compacts
-    * keep their loud single-writer contract.
+    * already wrote is swept by its commit. Explicit compacts keep their
+    * loud single-writer contract.
     */
   private def tryCompact(spark: SparkSession): Unit =
     try compact(spark)
@@ -1755,18 +1816,8 @@ final class WarehouseTable(val root: String) {
       s"equality-delete keys must include the partition column $p"))
     val missing = keys.filterNot(keyRows.columns.contains)
     require(missing.isEmpty, s"key columns absent from input: ${missing.mkString(", ")}")
-    val threshold = deltaThreshold(meta)
-    recordMergeKeys(meta, keys)
-    val src = keyRows.select(keys.map(col): _*).distinct()
-      .withColumn(TombstoneCol, lit(true))
-    val (added, stats) = writeDataDir(src, meta, extraCols = Seq(TombstoneCol))
-    requireKeysNotNull(added, keys)
-    commitRebasable { old =>
-      val seq = old.deltas.map(_.seq).maxOption.getOrElse(0L) + 1
-      Manifest(old.base, old.deltas :+ Delta(seq, added),
-        old.stats ++ stats, old.posDeletes)
-    }
-    maintainAfterCommit(spark, meta, threshold)(_.deltas.size)
+    writeDelta(spark, meta, keys, keyRows.select(keys.map(col): _*).distinct()
+      .withColumn(TombstoneCol, lit(true)))
   }
 
   /** MOR POSITION DELETE — Iceberg v2's second delete flavor: erase the
@@ -1799,6 +1850,7 @@ final class WarehouseTable(val root: String) {
     require(meta.properties.get("write.delete.mode").contains("merge-on-read"),
       "position deletes are a merge-on-read operation; COW tables use deleteRows")
     val threshold = deltaThreshold(meta)
+    val attempts = retryBudget(meta)
     // RE-PLANNING retry: the sidecar names physical rows of the planning
     // snapshot's files, so a concurrent compact/rewrite that dropped any
     // planned dir invalidates the handles mid-flight. The commit's
@@ -1811,8 +1863,7 @@ final class WarehouseTable(val root: String) {
     var attempt = 0
     while (true) {
       attempt += 1
-      val cur = currentSnapshotId
-      val old = readManifest(cur)
+      val plannedDirs = readManifest(currentSnapshotId).liveDirs
       val rel = s"posdel/${UUID.randomUUID()}"
       readResolved(spark, None, Nil, None, keepPos = true)
         .filter(cond)
@@ -1828,26 +1879,21 @@ final class WarehouseTable(val root: String) {
       // may rebase onto appends/deltas/sidecars (planned dirs all
       // survive) but never silently onto a rewrite/compact that dropped
       // any of them
-      val plannedDirs = (old.base.values.flatten ++
-        old.deltas.flatMap(_.data.values.flatten)).toSet
       try {
-        commitRebasable { now =>
-          val nowDirs = (now.base.values.flatten ++
-            now.deltas.flatMap(_.data.values.flatten)).toSet
-          if (!plannedDirs.subsetOf(nowDirs))
+        commit(Seq(rel), new Rebase(attempts)(now => {
+          if (!plannedDirs.subsetOf(now.liveDirs))
             throw new IllegalStateException(
               "a concurrent rewrite removed files this position-delete was " +
                 "planned against — re-run the delete on the current snapshot")
           now.copy(posDeletes = now.posDeletes :+ rel)
-        }
+        }))
         maintainAfterCommit(spark, meta, threshold)(_.posDeletes.size)
         return n
       } catch {
+        // the commit swept the refused sidecar; re-plan (the attempt
+        // bound is the livelock guard against maintenance storms)
         case e: IllegalStateException
-            if e.getMessage.contains("planned against") =>
-          // the failed sidecar was never referenced
-          deleteTree(rootPath.resolve(rel))
-          if (attempt >= 5) throw e // livelock guard: maintenance storms
+            if e.getMessage.contains("planned against") && attempt < 5 => ()
       }
     }
     0L // unreachable
@@ -1955,26 +2001,23 @@ final class WarehouseTable(val root: String) {
     // only runs over deltas), but [[changesSince]] needs the identity to
     // diff a rewrite commit's removed dirs against its re-landed rows
     recordMergeKeys(meta, keys)
-    // a COW merge over leftover deltas (table switched modes) folds first
-    if (readManifest(currentSnapshotId).deltas.nonEmpty) compact(spark)
-    val cur = currentSnapshotId
-    val old = readManifest(cur)
+    val (cur, old) = deltaFreeParent(spark)
     val src = (if (alignSource) alignToSchema(source, meta.schema) else source).cache()
     // same identifier-field contract as the MOR delta paths (see
     // requireKeysNotNull); one cheap pass over the CACHED batch. The
     // null-safe group-identity callers (the rollup fold) opt out.
     // OVERLAPPED: the check is independent of partition discovery and of
     // the rewrite's write, so it runs as a CONCURRENT job on the cached
-    // batch and is awaited only after the write, strictly before the
-    // commit — hiding its ~0.1–0.2 s job latency behind work the merge
-    // does anyway instead of serializing it in front. The trade, stated
-    // honestly: a bad batch now pays a wasted never-committed write
-    // (awaitCleanKeys sweeps those dirs before throwing the same
-    // IllegalArgumentException — the MOR path's no-trace contract); and
-    // when the WRITE itself also fails on a bad batch, the write's error
-    // may surface instead of the null-key verdict (pre-change, the
-    // serial check always won). The refusal is deterministic whenever
-    // the write succeeds, which is what the identifier-field spec pins.
+    // batch and is awaited as the commit's pre-landing check — hiding its
+    // ~0.1–0.2 s job latency behind work the merge does anyway instead of
+    // serializing it in front. The trade, stated honestly: a bad batch
+    // now pays a wasted never-committed write (the commit sweeps those
+    // dirs before rethrowing the same IllegalArgumentException — the MOR
+    // path's no-trace contract); and when the WRITE itself also fails on
+    // a bad batch, the write's error may surface instead of the null-key
+    // verdict (pre-change, the serial check always won). The refusal is
+    // deterministic whenever the write succeeds, which is what the
+    // identifier-field spec pins.
     val nullCheckFut: Option[java.util.concurrent.Future[Boolean]] =
       if (enforceKeyNotNull && keys.nonEmpty) {
         val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
@@ -1984,101 +2027,68 @@ final class WarehouseTable(val root: String) {
         }))
         finally pool.shutdown() // runs the one submitted task, then exits
       } else None
-    def awaitCleanKeys(written: Map[String, List[String]]): Unit =
+    def awaitCleanKeys(): Unit =
       nullCheckFut.map(WarehouseTable.awaitedNullCheck).foreach { fut =>
-        // ANY outcome that prevents the commit sweeps the written dirs —
-        // a check-job infrastructure failure must not leak orphans any
-        // more than a null-key verdict does
         val clean =
           try fut.get()
           catch {
-            case e: Throwable =>
-              sweepUncommitted(written.values.flatten)
-              throw (e match {
-                case x: java.util.concurrent.ExecutionException
-                    if x.getCause != null => x.getCause
-                case other => other
-              })
+            case x: java.util.concurrent.ExecutionException
+                if x.getCause != null => throw x.getCause
           }
-        if (!clean) {
-          sweepUncommitted(written.values.flatten)
-          throw nullKeyRefusal(keys, "")
-        }
+        if (!clean) throw nullKeyRefusal(keys, "")
       }
     try {
-      meta.partition match {
-        case None =>
-          val target = read(spark)
-          val merged = upsert(target, src)
-          val (entries, stats) = writeDataDir(merged, meta)
-          awaitCleanKeys(entries)
-          commit(cur, Manifest(entries, Nil, stats))
-        case Some(p) =>
-          // 1. partitions the program writes into (null → the hive default
-          //    partition name so the keys line up with the manifest's)
-          val srcParts = srcPartsFn(src, p)
-          srcParts match {
-            case None =>
-              // unbounded writes (partition-moving update): rewrite all
-              val target = read(spark)
-              val merged = upsert(target, src)
-              val (entries, stats) = writeDataDir(merged, meta)
-              awaitCleanKeys(entries)
-              commit(cur, Manifest(entries, Nil, stats))
-            case Some(sp) =>
-              // 2. partitions holding targets of matched keys (pruned scan:
-              //    parquet reads only keys + partition column, and the
-              //    source's key RANGE prunes target dirs via file stats —
-              //    an append-mostly table with time-ordered keys reads
-              //    only the dirs whose [min,max] overlaps the batch).
-              //    SKIPPED entirely when the batch's own partitions already
-              //    cover every base partition (nothing left to discover) —
-              //    in particular on the first merge into an empty table.
-              val keyCols = keys.map(col)
-              val matchedParts =
-                if (old.base.keySet.subsetOf(sp)) Set.empty[String]
-                else {
-                  val keyRangeFilters = srcKeyRangeFilters(src, keys, meta)
-                  val targetKeys = read(spark, None, keyRangeFilters)
-                    .select((keys :+ p).map(col): _*)
-                  targetKeys
-                    .join(broadcastIfSmall(src.select(keyCols: _*).distinct()), keys, "left_semi")
-                    .select(col(p).cast("string")).distinct()
-                    .collect().map(r => Option(r.getString(0)).getOrElse(HiveNullPartition)).toSet
-                }
-              val affected = (sp ++ matchedParts).filter(old.base.contains)
-              // 3. merge only affected partitions
-              val target = read(spark, Some(affected.toSeq))
-              val merged = upsert(target, src)
-              val (rewritten, stats) = writeDataDir(merged, meta)
-              awaitCleanKeys(rewritten)
-              // On an evolved table the pruned target read sweeps in EVERY
-              // legacy-spec dir (they can't prune by the current spec), so
-              // their rows are all re-landed in `rewritten` — carrying the
-              // legacy dirs forward would duplicate them. A COW merge on a
-              // mixed-spec table therefore also migrates it to the current
-              // spec, paying the legacy rewrite once.
-              val untouched = old.base.view
-                .filterKeys(k => !affected.contains(k))
-                .mapValues(dirs =>
-                  if (partitionHistory(meta).isEmpty) dirs
-                  else dirs.filter(dirUnderSpec(meta.partition)))
-                .filter(_._2.nonEmpty).toMap
-              // concatenate per key, never replace: a migrated legacy
-              // row's current-spec value may collide with an untouched
-              // key (impossible un-evolved — every src partition value
-              // lands in `affected`)
-              val newBase = (untouched.keySet ++ rewritten.keySet).map { k =>
-                k -> (untouched.getOrElse(k, Nil) ++ rewritten.getOrElse(k, Nil))
-              }.toMap
-              // pos-deletes carry: untouched partitions' erasures stay
-              // live; refs into rewritten dirs are inert (the dirs left
-              // the manifest) and are cleared at the next full rewrite
-              commit(cur,
-                Manifest(newBase, Nil, old.stats ++ stats,
-                  old.posDeletes).pruneStats)
-          }
+      // the partitions the program rewrites; None = all of them (an
+      // unpartitioned table, or a partition-moving update)
+      val affected: Option[Set[String]] = meta.partition.flatMap { p =>
+        // 1. partitions the program writes into (null → the hive default
+        //    partition name so the keys line up with the manifest's)
+        srcPartsFn(src, p).map { sp =>
+          // 2. partitions holding targets of matched keys (pruned scan:
+          //    parquet reads only keys + partition column, and the
+          //    source's key RANGE prunes target dirs via file stats —
+          //    an append-mostly table with time-ordered keys reads
+          //    only the dirs whose [min,max] overlaps the batch).
+          //    SKIPPED entirely when the batch's own partitions already
+          //    cover every base partition (nothing left to discover) —
+          //    in particular on the first merge into an empty table.
+          val matchedParts =
+            if (old.base.keySet.subsetOf(sp)) Set.empty[String]
+            else {
+              val keyRangeFilters = srcKeyRangeFilters(src, keys, meta)
+              read(spark, None, keyRangeFilters)
+                .select((keys :+ p).map(col): _*)
+                .join(broadcastIfSmall(src.select(keys.map(col): _*).distinct()),
+                  keys, "left_semi")
+                .select(col(p).cast("string")).distinct()
+                .collect().map(r => Option(r.getString(0)).getOrElse(HiveNullPartition)).toSet
+            }
+          (sp ++ matchedParts).filter(old.base.contains)
+        }
       }
+      // 3. merge only affected partitions
+      val merged = upsert(read(spark, affected.map(_.toSeq)), src)
+      val (rewritten, stats) = writeDataDir(merged, meta)
+      commit(rewritten.values.flatten, new OnParent(cur, old)(m => affected match {
+        case None => m.replaceAll(rewritten, stats)
+        case Some(a) =>
+          // On an evolved table the pruned target read sweeps in EVERY
+          // legacy-spec dir (they can't prune by the current spec), so
+          // their rows are all re-landed in `rewritten` — carrying the
+          // legacy dirs forward would duplicate them. A COW merge on a
+          // mixed-spec table therefore also migrates it to the current
+          // spec, paying the legacy rewrite once. replaceParts
+          // concatenates per key: a migrated legacy row's current-spec
+          // value may collide with an untouched key (impossible
+          // un-evolved — every src partition value lands in `affected`).
+          // Pos-deletes carry: untouched partitions' erasures stay live;
+          // refs into rewritten dirs are inert (the dirs left the
+          // manifest) and are cleared at the next full rewrite.
+          val carried =
+            if (partitionHistory(meta).isEmpty) m
+            else m.dropDirs(d => !dirUnderSpec(meta.partition)(d))
+          carried.replaceParts(a, rewritten, stats)
+      }), check = awaitCleanKeys())
     } finally {
       // an unrelated failure mid-merge must not leave the check job
       // running against an unpersisting cache
@@ -2096,9 +2106,25 @@ final class WarehouseTable(val root: String) {
     val cur = currentSnapshotId
     val m = readManifest(cur)
     if (m.deltas.nonEmpty || m.posDeletes.nonEmpty) {
-      val full = read(spark)
-      val (entries, stats) = writeDataDir(full, meta)
-      commit(cur, Manifest(entries, Nil, stats), maintenance = true)
+      val (entries, stats) = writeDataDir(read(spark), meta)
+      commit(entries.values.flatten, new OnParent(cur, m)(_.replaceAll(entries, stats)),
+        maintenance = true)
+    }
+  }
+
+  /** The current snapshot id and its manifest, with MOR deltas left over
+    * from a mode switch folded first: the COW rewrites that call this
+    * assume a delta-free base. Reads the manifest once when there is
+    * nothing to fold.
+    */
+  @annotation.tailrec
+  private def deltaFreeParent(spark: SparkSession): (Long, Manifest) = {
+    val cur = currentSnapshotId
+    val m = readManifest(cur)
+    if (m.deltas.isEmpty) (cur, m)
+    else {
+      compact(spark)
+      deltaFreeParent(spark)
     }
   }
 
@@ -2116,16 +2142,12 @@ final class WarehouseTable(val root: String) {
     // legacy dir, duplicating the untouched keys' rows on commit)
     require(partitionHistory(meta).isEmpty,
       "compactBase on an evolved table: run rewriteToCurrentSpec first")
-    if (readManifest(currentSnapshotId).deltas.nonEmpty) compact(spark)
-    val cur = currentSnapshotId
-    val old = readManifest(cur)
+    val (cur, old) = deltaFreeParent(spark)
     val crowded = old.base.filter(_._2.size > maxDirsPerPartition).keySet
     if (crowded.nonEmpty) {
-      val slice = read(spark, Some(crowded.toSeq))
-      val (rewritten, stats) = writeDataDir(slice, meta)
-      val untouched = old.base.view.filterKeys(k => !crowded.contains(k)).toMap
-      commit(cur, Manifest(untouched ++ rewritten, Nil, old.stats ++ stats,
-        old.posDeletes).pruneStats, maintenance = true)
+      val (rewritten, stats) = writeDataDir(read(spark, Some(crowded.toSeq)), meta)
+      commit(rewritten.values.flatten,
+        new OnParent(cur, old)(_.replaceParts(crowded, rewritten, stats)), maintenance = true)
     }
   }
 
@@ -2173,23 +2195,17 @@ final class WarehouseTable(val root: String) {
       case Some(bucket) => writeBucketedDirs(meta, slice, bucket)
       case None => writeDataDir(slice, meta)
     }
-    val untouchedBase = old.base.view.filterKeys(k => !target.contains(k)).toMap
-    val newBase = untouchedBase ++ rewritten
-    val newDeltas = old.deltas
-      .map(d => d.copy(data = d.data.view.filterKeys(k => !target.contains(k)).toMap))
-      .filter(_.data.nonEmpty)
-    val liveDirs: Set[String] =
-      (newBase.values.flatten ++ newDeltas.flatMap(_.data.values.flatten)).toSet
-    // a sidecar naming no rows (can't happen — they're only written
-    // non-empty) is kept
     val refs = sidecarFiles(spark, old.posDeletes)
-    val keptPos = old.posDeletes.filter { sc =>
-      val files = refs.getOrElse(sc, Set.empty)
-      files.isEmpty || files.exists(f => dataDirsOf(f).exists(liveDirs.contains))
-    }
-    commit(cur,
-      Manifest(newBase, newDeltas, old.stats ++ stats, keptPos).pruneStats,
-      maintenance = true)
+    commit(rewritten.values.flatten, new OnParent(cur, old)(m => {
+      val folded = m.replaceParts(target, rewritten, stats)
+      val live = folded.liveDirs
+      // a sidecar naming no rows (can't happen — they're only written
+      // non-empty) is kept
+      folded.copy(posDeletes = m.posDeletes.filter { sc =>
+        val files = refs.getOrElse(sc, Set.empty)
+        files.isEmpty || files.exists(f => dataDirsOf(f).exists(live.contains))
+      })
+    }), maintenance = true)
   }
 
   /** STATS-DRIVEN targeted compaction — the consumer of the `.stats`
@@ -2320,34 +2336,37 @@ final class WarehouseTable(val root: String) {
       "clusterCol IS the partition column - partitioning already clusters it")
     require(meta.schema.fieldNames.contains(clusterCol),
       s"cluster column '$clusterCol' not in schema")
-    if (readManifest(currentSnapshotId).deltas.nonEmpty) compact(spark)
-    val cur = currentSnapshotId
-    val old = readManifest(cur)
+    val (cur, old) = deltaFreeParent(spark)
     val slice = read(spark)
-    if (meta.schema(clusterCol).dataType ==
-        org.apache.spark.sql.types.StringType) {
-      val cuts = stringCuts(slice, clusterCol, nBuckets - 1)
-      // cuts are arbitrary strings — URL-encode each so the persisted
-      // comma-joined property round-trips commas/newlines in keys
-      setProperties(Map(
-        "cluster.kind" -> "srange",
-        "cluster.col" -> clusterCol,
-        "cluster.cuts" -> cuts.map(c =>
-          java.net.URLEncoder.encode(c, "UTF-8")).mkString(",")))
-      commitBucketed(meta, cur, slice, rangeBucketExpr(clusterCol, cuts),
-        nBuckets)
-      return
-    }
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val cuts = numericCuts(slice, clusterCol, probs, baseRowCount(old))
     // the cuts ARE the layout: persisting them lets clusterAppend route
     // later arrivals into the same ranges without re-deriving (and
     // therefore without rewriting) anything
-    setProperties(Map(
-      "cluster.kind" -> "range",
-      "cluster.col" -> clusterCol,
-      "cluster.cuts" -> cuts.mkString(",")))
-    commitBucketed(meta, cur, slice, rangeBucketExpr(clusterCol, cuts), nBuckets)
+    val cuts: Seq[Any] =
+      if (meta.schema(clusterCol).dataType ==
+          org.apache.spark.sql.types.StringType) {
+        val strs = stringCuts(slice, clusterCol, nBuckets - 1)
+        // cuts are arbitrary strings — URL-encode each so the persisted
+        // comma-joined property round-trips commas/newlines in keys
+        setProperties(Map(
+          "cluster.kind" -> "srange",
+          "cluster.col" -> clusterCol,
+          "cluster.cuts" -> strs.map(c =>
+            java.net.URLEncoder.encode(c, "UTF-8")).mkString(",")))
+        strs
+      } else {
+        val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
+        val nums = numericCuts(slice, clusterCol, probs, baseRowCount(old))
+        setProperties(Map(
+          "cluster.kind" -> "range",
+          "cluster.col" -> clusterCol,
+          "cluster.cuts" -> nums.mkString(",")))
+        nums
+      }
+    val (entries, stats) = writeBucketedDirs(meta, slice,
+      rangeBucketExpr(clusterCol, cuts), nBuckets = nBuckets)
+    // re-clustering re-lands every live row — resolution-invariant
+    commit(entries.values.flatten, new OnParent(cur, old)(_.replaceAll(entries, stats)),
+      maintenance = true)
   }
 
   /** Footer-priced row count of a snapshot's base dirs — metadata only,
@@ -2482,12 +2501,8 @@ final class WarehouseTable(val root: String) {
       case Some(t) => _.startsWith(s"data/$t-")
       case None => _ => false
     }
-    val basePruned = old.base.map { case (k, v) => k -> v.filterNot(stale) }
-    val statsPruned = old.stats.filterNot { case (d, _) => stale(d) }
-    val merged = (basePruned.keySet ++ added.keySet).map { k =>
-      k -> (basePruned.getOrElse(k, Nil) ++ added.getOrElse(k, Nil))
-    }.toMap
-    commit(cur, Manifest(merged, old.deltas, statsPruned ++ stats, old.posDeletes))
+    commit(added.values.flatten,
+      new OnParent(cur, old)(_.dropDirs(stale).addDirs(added, stats)))
   }
 
   // ---- bloom file-skipping index ----------------------------------------
@@ -2535,10 +2550,8 @@ final class WarehouseTable(val root: String) {
         s"bloom index for '$column' was built with geometry $p but this " +
           s"call passed $mBits,$k — drop root/bloom first to rebuild")
     }
-    val manifest = readManifest(currentSnapshotId)
-    val dirs = (manifest.base.values.flatten ++
-      manifest.deltas.flatMap(_.data.values.flatten)).toList.distinct
-    val missing = dirs.filterNot(d => Files.exists(bloomFile(column, d)))
+    val missing = readManifest(currentSnapshotId).liveDirs.toList
+      .filterNot(d => Files.exists(bloomFile(column, d)))
     if (missing.nonEmpty) {
       // the declared schema, renames coalesced: a dir written before the
       // column was added reads it NULL, one written before a rename reads
@@ -2668,9 +2681,7 @@ final class WarehouseTable(val root: String) {
       "a cluster column IS the partition column - partitioning already clusters it")
     clusterCols.foreach(cc => require(meta.schema.fieldNames.contains(cc),
       s"cluster column '$cc' not in schema"))
-    if (readManifest(currentSnapshotId).deltas.nonEmpty) compact(spark)
-    val cur = currentSnapshotId
-    val curM = readManifest(cur)
+    val (cur, curM) = deltaFreeParent(spark)
     val slice = read(spark)
     val levels = 1 << bitsPerCol
     val probs = (1 until levels).map(_.toDouble / levels).toArray
@@ -2707,7 +2718,10 @@ final class WarehouseTable(val root: String) {
             cuts.map(c =>
               java.net.URLEncoder.encode(c.toString, "UTF-8")).mkString(",")
           else cuts.mkString(",")) })
-    commitBucketed(meta, cur, slice, (z / per).cast("int"), nBuckets)
+    val (entries, stats) = writeBucketedDirs(meta, slice, (z / per).cast("int"),
+      nBuckets = nBuckets)
+    commit(entries.values.flatten, new OnParent(cur, curM)(_.replaceAll(entries, stats)),
+      maintenance = true)
   }
 
   /** Shared rewrite core of [[clusterBase]]/[[clusterBaseZ]]: one
@@ -2843,18 +2857,6 @@ final class WarehouseTable(val root: String) {
     (entries, TableStats.collect(root, dirs))
   }
 
-  private def commitBucketed(
-      meta: Meta,
-      parent: Long,
-      slice: DataFrame,
-      bucket: Column,
-      nBuckets: Int): Unit = {
-    val (entries, stats) = writeBucketedDirs(meta, slice, bucket,
-      nBuckets = nBuckets)
-    // re-clustering re-lands every live row — resolution-invariant
-    commit(parent, Manifest(entries, Nil, stats).pruneStats, maintenance = true)
-  }
-
   /** DELETE FROM: remove rows matching `cond`. Dir-level surgery, not a
     * table rewrite — `pruneFilters` (a conservative Filter rendering of
     * the condition) selects the data dirs that MAY hold matching rows via
@@ -2908,9 +2910,7 @@ final class WarehouseTable(val root: String) {
       transform: DataFrame => DataFrame): Long = {
     val meta = readMeta()
     // MOR deltas fold first: dir surgery below assumes COW semantics
-    if (readManifest(currentSnapshotId).deltas.nonEmpty) compact(spark)
-    val cur = currentSnapshotId
-    val old = readManifest(cur)
+    val (cur, old) = deltaFreeParent(spark)
     // partition-value restriction from equality/IN filters on the col
     val partVals: Option[Set[String]] = meta.partition.flatMap { p =>
       pruneFilters.collectFirst {
@@ -2919,15 +2919,11 @@ final class WarehouseTable(val root: String) {
           vs.map(String.valueOf).toSet
       }
     }
-    val (rewrite, carry) = old.base.toSeq.map { case (pv, dirs) =>
-      if (partVals.exists(!_.contains(pv))) (pv -> Nil, pv -> dirs)
-      else {
-        val (r, c) = dirs.partition(dir =>
-          old.stats.get(dir).forall(TableStats.mayMatch(_, pruneFilters)))
-        (pv -> r, pv -> c)
-      }
-    }.unzip
-    val toRewrite = rewrite.toMap.filter(_._2.nonEmpty)
+    val toRewrite = old.base.map { case (pv, dirs) =>
+      pv -> (if (partVals.exists(!_.contains(pv))) Nil
+        else dirs.filter(dir =>
+          old.stats.get(dir).forall(TableStats.mayMatch(_, pruneFilters))))
+    }.filter(_._2.nonEmpty)
     if (toRewrite.isEmpty) 0L
     else {
       // rewritten dirs get NEW file identities, so any position delete
@@ -2952,12 +2948,8 @@ final class WarehouseTable(val root: String) {
         sweepUncommitted(newDirs)
         0L
       } else {
-        val carried = carry.toMap
-        val newBase = (carried.keySet ++ entries.keySet).map { k =>
-          k -> (carried.getOrElse(k, Nil) ++ entries.getOrElse(k, Nil))
-        }.toMap.filter(_._2.nonEmpty)
-        commit(cur,
-          Manifest(newBase, Nil, old.stats ++ stats, old.posDeletes).pruneStats)
+        val gone = toRewrite.values.flatten.toSet
+        commit(newDirs, new OnParent(cur, old)(_.dropDirs(gone).addDirs(entries, stats)))
         before - after
       }
     }
@@ -3257,7 +3249,7 @@ final class WarehouseTable(val root: String) {
     // legacy key set under the NEW spec (fragment files are all reused —
     // this writes one snapshot json, no data)
     val cur = currentSnapshotId
-    commit(cur, readManifest(cur))
+    commit(Nil, new OnParent(cur, readManifest(cur))(identity))
   }
 
   /** Physically migrate every legacy-spec dir to the current spec — one
@@ -3270,21 +3262,22 @@ final class WarehouseTable(val root: String) {
     val meta = readMeta()
     val cur = currentSnapshotId
     val m = readManifest(cur)
-    val allDirs = m.base.values.flatten ++ m.deltas.flatMap(_.data.values.flatten)
     if (m.deltas.nonEmpty || m.posDeletes.nonEmpty ||
-        !allDirs.forall(dirUnderSpec(meta.partition))) {
-      val full = read(spark)
-      val (entries, stats) = writeDataDir(full, meta)
-      commit(cur, Manifest(entries, Nil, stats), maintenance = true)
+        !m.liveDirs.forall(dirUnderSpec(meta.partition))) {
+      val (entries, stats) = writeDataDir(read(spark), meta)
+      commit(entries.values.flatten, new OnParent(cur, m)(_.replaceAll(entries, stats)),
+        maintenance = true)
     }
   }
 
   /** ORPHAN-FILE GC — Iceberg's `remove_orphan_files`: physically delete
     * every data dir, posdel dir, and manifest fragment referenced by NO
     * existing snapshot. Orphans are the debris of [[rollback]] (the
-    * abandoned timeline's writes), of crashed commits (dirs written, the
-    * CREATE_NEW snapshot race lost), and of [[rewriteRows]]' discarded
-    * no-op twins on older layouts. [[expireSnapshots]] can't touch them —
+    * abandoned timeline's writes), of writers that crashed between
+    * writing their dirs and landing their snapshot, of discarded stages,
+    * and of [[rewriteRows]]' discarded no-op twins on older layouts. A
+    * commit that does not land sweeps its own dirs; only a crash leaves
+    * them behind. [[expireSnapshots]] can't touch them —
     * it reclaims only what EXPIRED snapshots referenced, and runs only
     * when something expires. Metadata-bounded: one manifest walk over all
     * live snapshots builds the live set, one directory listing diffs it;
@@ -3320,10 +3313,7 @@ final class WarehouseTable(val root: String) {
     val withStaged = ids ++ stagedSnapshots.filterNot(ids.toSet)
     val liveFragments = withStaged.flatMap(snapFragmentPaths(_).values).toSet
     val manifests = withStaged.map(readManifest(_))
-    val liveDataRoots = manifests.flatMap { m =>
-      (m.base.values.flatten ++ m.deltas.flatMap(_.data.values.flatten))
-        .map(_.split("/").take(2).mkString("/"))
-    }.toSet
+    val liveDataRoots = manifests.flatMap(_.liveDirs.map(_.split("/").take(2).mkString("/"))).toSet
     val livePosDel = manifests.flatMap(_.posDeletes).toSet
     def sweepDirs(sub: String, live: Set[String]): Unit = {
       val d = rootPath.resolve(sub)
@@ -3432,13 +3422,8 @@ final class WarehouseTable(val root: String) {
     val keys = values.map(String.valueOf).toSet
     val cur = currentSnapshotId
     val old = readManifest(cur)
-    val removed = old.allPartitions.count(keys.contains)
-    val newBase = old.base.view.filterKeys(!keys.contains(_)).toMap
-    val newDeltas = old.deltas
-      .map(d => d.copy(data = d.data.view.filterKeys(!keys.contains(_)).toMap))
-      .filter(_.data.nonEmpty)
-    commit(cur, Manifest(newBase, newDeltas, old.stats, old.posDeletes).pruneStats)
-    removed
+    commit(Nil, new OnParent(cur, old)(_.dropParts(keys)))
+    old.allPartitions.count(keys.contains)
   }
 
   // ---- named snapshot tags ----------------------------------------------
@@ -3756,10 +3741,8 @@ final class WarehouseTable(val root: String) {
       val keptAll = kept ++ stagedSnapshots.filterNot(kept.toSet)
       val liveFragments = keptAll.flatMap(snapFragmentPaths(_).values).toSet
       val keptManifests = keptAll.map(readManifest(_))
-      val liveDataRoots = keptManifests.flatMap { m =>
-        (m.base.values.flatten ++ m.deltas.flatMap(_.data.values.flatten))
-          .map(_.split("/").take(2).mkString("/"))
-      }.toSet
+      val liveDataRoots =
+        keptManifests.flatMap(_.liveDirs.map(_.split("/").take(2).mkString("/"))).toSet
       val livePosDel = keptManifests.flatMap(_.posDeletes).toSet
       expired.foreach(id => Files.deleteIfExists(snapPath(id)))
       // CONCURRENT-COMMIT GUARD: the live sets above are a point-in-time
@@ -3781,10 +3764,8 @@ final class WarehouseTable(val root: String) {
         catch { case _: java.nio.file.NoSuchFileException => None })
       val liveFragments2 =
         liveFragments ++ newIds.flatMap(snapFragmentPaths(_).values)
-      val liveDataRoots2 = liveDataRoots ++ newManifests.flatMap { m =>
-        (m.base.values.flatten ++ m.deltas.flatMap(_.data.values.flatten))
-          .map(_.split("/").take(2).mkString("/"))
-      }
+      val liveDataRoots2 = liveDataRoots ++
+        newManifests.flatMap(_.liveDirs.map(_.split("/").take(2).mkString("/")))
       val livePosDel2 = livePosDel ++ newManifests.flatMap(_.posDeletes)
       val posDir = rootPath.resolve("posdel")
       if (Files.isDirectory(posDir)) {
@@ -3881,15 +3862,9 @@ final class WarehouseTable(val root: String) {
     }
     val old = readManifest(cur)
     val (added, stats) = writeDataDir(df, meta)
-    val merged = (old.base.keySet ++ added.keySet).map { k =>
-      k -> (old.base.getOrElse(k, Nil) ++ added.getOrElse(k, Nil))
-    }.toMap
-    val next = cur + 1
-    writeSnapshot(next,
-      Manifest(merged, old.deltas, old.stats ++ stats, old.posDeletes),
-      prevId = Some(cur), createNew = true, kind = "data", staged = true,
-      wapId = wapId)
-    next // pointer NOT advanced — that is the point
+    // pointer NOT advanced — that is the point
+    commit(added.values.flatten, new OnParent(cur, old)(_.addDirs(added, stats)),
+      staged = true, wapId = wapId)
   }
 
   /** The caller-supplied WAP id a staged snapshot was written under
@@ -4048,25 +4023,6 @@ final class WarehouseTable(val root: String) {
     if (threshold > 0 && estimated <= threshold) broadcast(df) else df
   }
 
-  /** Optimistic commit: the snapshot file is created with CREATE_NEW so a
-    * racing writer that produced the same next id fails loudly instead of
-    * silently overwriting a live manifest, and the pointer only advances
-    * if no other commit landed since the writer planned (single-writer is
-    * still the supported mode; this turns races into errors, not data
-    * loss).
-    */
-  private def commit(
-      expectedCurrent: Long, manifest: Manifest,
-      maintenance: Boolean = false): Unit = {
-    val actual = currentSnapshotId
-    if (actual != expectedCurrent)
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot advanced from $expectedCurrent to $actual during write; retry")
-    val next = expectedCurrent + 1
-    writeManifestNew(next, manifest, if (maintenance) "maintenance" else "data")
-    atomicWriteCurrent(next)
-  }
-
   // ---- io helpers --------------------------------------------------------
 
   private def readString(p: Path): String =
@@ -4142,7 +4098,7 @@ object WarehouseTable {
 
   /** Opt-in rebase-attempt recorder behind the contention harness
     * (`graft.tools.ContentionBench`, SCALING §10o): when enabled, every
-    * [[commitRebasable]] records how many attempts its commit took, so
+    * commit of a rebasing step records how many attempts it took, so
     * the "jitter prevents starvation" claim is measured, not asserted.
     * One volatile read per commit when off; measurement-only — no
     * correctness path reads it.

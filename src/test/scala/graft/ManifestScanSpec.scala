@@ -324,4 +324,50 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(offenders.isEmpty, s"a second read path for table files: ${offenders.mkString(", ")}")
   }
+
+  test("graft.table writes snapshots only through commit: one writer of snapshot files and of the pointer") {
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/table")
+    val sources = {
+      val ls = java.nio.file.Files.list(dir)
+      try ls.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally ls.close()
+    }
+    assert(sources.exists(_.getFileName.toString == "WarehouseTable.scala"),
+      s"no table sources under ${dir.toAbsolutePath}")
+    // every code line, tagged with the class member (2-space indented
+    // def) it sits in; comments dropped
+    val member = """^  (?:(?:private|private\[\w+\]|override|final)\s+)*def\s+(\w+).*""".r
+    val lines: Seq[(String, String, String)] = sources.flatMap { f =>
+      var current = ""
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8").split("\n").toSeq.flatMap { l =>
+        l match {
+          case member(name) => current = name
+          case _ =>
+        }
+        val code = l.trim
+        if (code.startsWith("*") || code.startsWith("/*") || code.startsWith("//")) None
+        else Some((s"${f.getFileName}", current, code))
+      }
+    }
+    def callers(call: String): Set[String] = lines.collect {
+      case (_, m, code) if code.contains(s"$call(") && !code.contains(s"def $call(") => m
+    }.toSet
+    assert(callers("writeSnapshot") == Set("commit", "create"))
+    assert(callers("atomicWriteCurrent") == Set("create", "commit", "rollback", "publishStaged"))
+    // a write whose TARGET is a snapshot name: publishStaged's rename of
+    // a landed stage is the only one outside commit's writeSnapshot
+    val arg = """((?:[^,()]|\([^()]*\))+)"""
+    val targets = Seq(
+      s"Files\\.write\\(\\s*$arg,".r -> 1,
+      s"createLink\\(\\s*$arg,".r -> 1,
+      s"Files\\.move\\(\\s*$arg,\\s*$arg".r -> 2)
+    val snapshotWrites = lines.flatMap { case (f, m, code) =>
+      targets.flatMap { case (re, g) => re.findAllMatchIn(code).map(_.group(g)) }
+        .filter(t => t.contains("snapPath(") || t.contains("stagedPath("))
+        .map(t => s"$f:$m -> $t")
+    }
+    assert(snapshotWrites.exists(_.contains(":publishStaged -> snapPath(")),
+      s"the guard no longer sees publishStaged's rename: $snapshotWrites")
+    assert(snapshotWrites.forall(_.contains(":publishStaged -> ")),
+      s"a snapshot file written outside commit: ${snapshotWrites.mkString(", ")}")
+  }
 }

@@ -1767,6 +1767,36 @@ class StreamingIngestSpec extends SparkSpec {
     } finally StreamingIngest.lastRecomputeCollected = None
   }
 
+  test("agg view sums skip NULLs: an all-NULL window keeps the sum, a group left with only NULLs reads NULL") {
+    for (minMax <- Seq(Nil, Seq("v"))) {
+      val src = mmSource(s"nullsum_${minMax.size}")((1L, "g0", 5))
+      val root = new java.io.File(src.root).getParent
+      val view = WarehouseTable(root + "/view")
+      def drain(): Unit = StreamingIngest.startAggView(spark, src, view, Seq("g"),
+        Seq("v"), root + "/ckpt", minMaxCols = minMax).awaitTermination(180000)
+      def assertSumsAreSource(): Unit = {
+        def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+        val got = rows(StreamingIngest.readAggView(spark, view).select("g", "n", "sum_v"))
+        val want = rows(src.read(spark).groupBy("g")
+          .agg(count(lit(1)), sum(col("v").cast("long"))))
+        assert(got == want, s"view diverged from the source: $got vs $want")
+      }
+      drain()
+      // a window whose only row for the group is NULL in v
+      mmUpsert(src, (2L, "g0", null))
+      drain()
+      assertSumsAreSource()
+      // the last non-NULL value leaves: the sum reads NULL, n stays 1
+      mmDelete(src, (1L, "g0", null))
+      drain()
+      assertSumsAreSource()
+      val g0 = StreamingIngest.readAggView(spark, view)
+      assert(g0.columns.toSeq ==
+        (if (minMax.isEmpty) Seq("g", "n", "sum_v") else Seq("g", "max_v", "min_v", "n", "sum_v")))
+      assert(g0.select("n", "sum_v").collect().map(_.toSeq).toSeq == Seq(Seq(1L, null)))
+    }
+  }
+
   test("min/max agg view: two MIN/MAX columns count each column's extreme on its own") {
     val sch = StructType(Seq(
       StructField("id", LongType, nullable = false),

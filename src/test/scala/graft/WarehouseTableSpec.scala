@@ -1126,6 +1126,45 @@ class WarehouseTableSpec extends SparkSpec {
     }
   }
 
+  test("a COW merge that loses the commit race sweeps its rewrite; the racer's commit stands") {
+    import java.util.concurrent.{Future, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    def dataRoots(t: WarehouseTable): Set[String] = {
+      val l = java.nio.file.Files.list(java.nio.file.Paths.get(t.root, "data"))
+      try l.iterator().asScala.map(_.getFileName.toString).toSet finally l.close()
+    }
+    for ((partition, tag) <- Seq(None -> "flat", Some("state") -> "part")) {
+      val t = WarehouseTable(tmpDir(s"lostrace_$tag"))
+      t.create(schema, partition, Map.empty)
+      t.merge(spark, df((1, "a", "CA"), (2, "b", "NY")), Seq("k"))
+      val snap = t.currentSnapshotId
+      val before = dataRoots(t)
+      // the awaited null-key check first lands a racing append, then
+      // passes: the merge's commit finds the snapshot advanced
+      val racing: Future[Boolean] => Future[Boolean] = _ => new Future[Boolean] {
+        def cancel(interrupt: Boolean): Boolean = false
+        def isCancelled: Boolean = false
+        def isDone: Boolean = true
+        def get(): Boolean = { t.append(df((9, "r", "TX"))); true }
+        def get(timeout: Long, unit: TimeUnit): Boolean = get()
+      }
+      try {
+        WarehouseTable.awaitedNullCheck = racing
+        intercept[java.util.ConcurrentModificationException] {
+          t.merge(spark, df((1, "z", "CA"), (3, "c", "TX")), Seq("k"))
+        }
+      } finally WarehouseTable.awaitedNullCheck = identity
+      assert(t.currentSnapshotId == snap + 1, "the racer's snapshot is not current")
+      assert(t.read(spark).collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
+        Set((1, "a"), (2, "b"), (9, "r")))
+      val racer = t.filesMeta(spark).collect()
+        .map(_.getAs[String]("dir").split("/")(1)).toSet -- before
+      assert(racer.size == 1, s"the racer's dirs: $racer")
+      assert(dataRoots(t) == before ++ racer,
+        s"the losing merge left dirs: ${dataRoots(t) -- before -- racer}")
+    }
+  }
+
   test("TIMESTAMP AS OF resolution binary-searches the id range: O(log n) manifest parses on a 100-commit table") {
     import org.apache.spark.sql.Row
     val sch = StructType(Seq(StructField("id", LongType, nullable = false)))
@@ -1239,8 +1278,16 @@ class WarehouseTableSpec extends SparkSpec {
       val staleClaim = snaps.resolve(".snap-2.json.claim")
       Files.write(staleClaim, Array.emptyByteArray,
         java.nio.file.StandardOpenOption.CREATE_NEW)
+      def dataRoots: Set[String] = {
+        import scala.jdk.CollectionConverters._
+        val l = Files.list(Paths.get(t.root, "data"))
+        try l.iterator().asScala.map(_.getFileName.toString).toSet finally l.close()
+      }
+      val rootsBefore = dataRoots
       intercept[java.nio.file.FileAlreadyExistsException](
         t.append(df((2, "b", "NY"))))
+      // the refused append swept its own data/<uuid>
+      assert(dataRoots == rootsBefore, "the refused append left its data dir")
       // nothing was lost or replaced
       assert(t.currentSnapshotId == 1)
       assert(t.read(spark).count() == 1)
@@ -2081,6 +2128,43 @@ class WarehouseTableSpec extends SparkSpec {
     assert(t.currentSnapshotId == snap + 1)
     assert(t.read(spark).collect().map(r => r.getInt(0) -> r.getString(1)).toSet ==
       Set(1 -> "x", 2 -> "b", 3 -> "c"))
+  }
+
+  test("a malformed commit.retry.max-attempts refuses rebasing writes before they write anything") {
+    import org.apache.spark.sql.functions.col
+    val t = WarehouseTable(tmpDir("badretry"))
+    t.create(schema, Some("state"), WarehouseTable.tableProperties("MOR", "snappy"))
+    t.append(df((1, "a", "CA"), (2, "b", "NY"), (3, "c", "NY")))
+    def dirs(sub: String): Set[String] = {
+      val d = java.nio.file.Paths.get(t.root, sub)
+      if (!java.nio.file.Files.isDirectory(d)) Set.empty
+      else {
+        val walk = java.nio.file.Files.walk(d)
+        try { import scala.jdk.CollectionConverters._
+          walk.iterator().asScala.map(_.toString).toSet
+        } finally walk.close()
+      }
+    }
+    for (bad <- Seq("abc", "0")) {
+      t.setProperties(Map("commit.retry.max-attempts" -> bad))
+      val snap = t.currentSnapshotId
+      val before = (dirs("data"), dirs("posdel"))
+      def refused(write: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](write)
+        assert(e.getMessage.contains("commit.retry.max-attempts"), e.getMessage)
+        assert(t.currentSnapshotId == snap)
+        assert((dirs("data"), dirs("posdel")) == before)
+      }
+      refused(t.append(df((4, "d", "TX"))))
+      refused(t.merge(spark, df((1, "x", "CA")), Seq("k", "state")))
+      refused(t.deleteKeysMor(spark, df((2, "b", "NY")), Seq("k", "state")))
+      refused(t.deleteWhereMor(spark, col("k") === 3))
+    }
+    t.setProperties(Map("commit.retry.max-attempts" -> "1"))
+    t.append(df((4, "d", "TX")))
+    t.merge(spark, df((1, "x", "CA")), Seq("k", "state"))
+    assert(t.read(spark).collect().map(r => r.getInt(0) -> r.getString(1)).toSet ==
+      Set(1 -> "x", 2 -> "b", 3 -> "c", 4 -> "d"))
   }
 
   test("clusterAppend with batchId: replays replace their own dirs — same-id and crash-retry converge") {
