@@ -25,13 +25,16 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * still accept it.
   *
   * Merge functions are the self-mergeable ones (`sum`, `min`, `max` —
-  * partial aggregation of the same op) plus `set`, for a value the
-  * caller already computed from the stored state; the batch is
-  * pre-aggregated to one row per key HERE (never trusted from the
-  * caller — duplicate source keys would multiply through the merge's
-  * outer join). `count`
+  * partial aggregation of the same op); the batch is pre-aggregated to
+  * one row per key HERE (never trusted from the caller — duplicate
+  * source keys would multiply through the merge's outer join). `count`
   * is `sum` over a `lit(1)` measure; `avg` is a `(sum, count)` pair
-  * finished at read time — the classic decomposition.
+  * finished at read time — the classic decomposition. The
+  * delete-aware aggregate view
+  * ([[graft.streaming.StreamingIngest.startAggView]]) keeps this layout
+  * (measures plus the `last_batch` marker, so [[read]] reads it) but
+  * writes it itself: its fold already joins the stored rows, so it
+  * lands each window as one overwrite instead of a merge.
   *
   * Scale shape: one map-side partial agg over the batch (arrival-bound),
   * then a keyed COW merge that rewrites only the partitions carrying a
@@ -44,11 +47,8 @@ object IncrementalRollup {
 
   /** Fold one batch of raw rows into the rollup table (created on first
     * commit). `merges` maps each measure column of `arrivals` to its
-    * merge function: `"sum"`, `"min"`, `"max"`, or `"set"` — the
-    * batch's value replaces the stored one (the caller computed the
-    * post-batch value; it must be a function of the key within the
-    * batch). Replay-safe per the class docs: re-committing the same
-    * (batch, batchId) is a no-op.
+    * merge function: `"sum"`, `"min"` or `"max"`. Replay-safe per the
+    * class docs: re-committing the same (batch, batchId) is a no-op.
     */
   def commit(
       spark: SparkSession,
@@ -57,73 +57,37 @@ object IncrementalRollup {
       merges: Map[String, String],
       table: graft.table.WarehouseTable,
       batchId: Long): Unit = {
-    val (measures, delta) = preAggregate(arrivals, keys, merges)
-    mergeDelta(spark, delta, keys, measures,
-      c => fold(merges(c), c), c => col(c), table, batchId)
-  }
-
-  /** [[commit]] with a REPAIR overlay, fused into the SAME merge program
-    * (one snapshot commit instead of two): rows of `repair` name groups
-    * whose `repairCols` must be SET to the repair's values instead of
-    * merged — the aggregate view's MIN/MAX truth read, whose values
-    * must land verbatim (including NULLs for an emptied group).
-    * Non-repaired groups merge exactly as [[commit]]; replay safety is
-    * unchanged (the fused matched-UPDATE sits behind the same
-    * `last_batch < batchId` guard, and a replayed window's repair values
-    * are the same truth it already wrote). Fusing keeps the view at one
-    * commit, one manifest and one folded file set per window.
-    */
-  def commitWithRepair(
-      spark: SparkSession,
-      arrivals: DataFrame,
-      keys: Seq[String],
-      merges: Map[String, String],
-      repair: DataFrame, // keys ++ repairCols (truth values; NULL = clear)
-      repairCols: Seq[String],
-      table: graft.table.WarehouseTable,
-      batchId: Long): Unit = {
-    require(repairCols.forall(merges.contains),
-      s"repair columns ${repairCols.mkString(", ")} must be measures")
-    val (measures, delta) = preAggregate(arrivals, keys, merges)
-    // attach the repair overlay: null-safe (group identities), flagged so
-    // a repair row whose truth value is legitimately NULL still overrides
-    val rep = repair.select(
-      (keys.map(col) ++ repairCols.map(c => col(c).as(s"__rep_$c"))): _*)
-      .withColumn("__rep", lit(true))
-    val joinCond = keys.map(k => col(s"d.$k") <=> col(s"r.$k")).reduce(_ && _)
-    val src = delta.alias("d").join(rep.alias("r"), joinCond, "left")
-      .select(keys.map(k => col(s"d.$k").as(k)) ++
-        measures.map(c => col(s"d.$c").as(c)) ++
-        repairCols.map(c => col(s"r.__rep_$c").as(s"__rep_$c")) :+
-        coalesce(col("r.__rep"), lit(false)).as("__rep"): _*)
-    def orRepair(c: String, otherwise: Column): Column =
-      if (repairCols.contains(c))
-        when(col("__rep"), col(s"__rep_$c")).otherwise(otherwise)
-      else otherwise
-    mergeDelta(spark, src, keys, measures,
-      c => orRepair(c, fold(merges(c), c)), c => orRepair(c, col(c)),
-      table, batchId)
-  }
-
-  /** The batch pre-aggregated to one row per key (never trusted from the
-    * caller — duplicate source keys would multiply through the merge's
-    * outer join), with its sorted measure names.
-    */
-  private def preAggregate(arrivals: DataFrame, keys: Seq[String],
-      merges: Map[String, String]): (Seq[String], DataFrame) = {
     require(merges.nonEmpty, "at least one measure required")
-    merges.values.foreach(f => require(Set("sum", "min", "max", "set").contains(f),
-      s"unsupported merge function '$f' (sum/min/max/set)"))
+    merges.values.foreach(f => require(Set("sum", "min", "max").contains(f),
+      s"unsupported merge function '$f' (sum/min/max)"))
     val measures = merges.keys.toSeq.sorted
     def partial(c: String): Column = (merges(c) match {
       case "sum" => sum(col(c))
       case "min" => min(col(c))
       case "max" => max(col(c))
-      case "set" => any_value(col(c))
     }).as(c)
-    (measures, arrivals
+    // the batch pre-aggregated to one row per key (never trusted from the
+    // caller — duplicate source keys would multiply through the merge's
+    // outer join)
+    val delta = arrivals
       .groupBy(keys.map(col): _*)
-      .agg(partial(measures.head), measures.tail.map(partial): _*))
+      .agg(partial(measures.head), measures.tail.map(partial): _*)
+    if (!table.exists)
+      table.create(
+        StructType(delta.schema.fields).add(BatchCol, LongType, nullable = false),
+        properties =
+          graft.table.WarehouseTable.tableProperties("COW", "snappy"))
+    val fresh = col(s"__t_$BatchCol") < lit(batchId)
+    // nullSafeKeys: the rollup's keys are GROUP identities — a NULL
+    // group is a real group (groupBy put it there) and must FOLD, not
+    // re-insert a fresh row every window (ANSI merge equality would)
+    table.mergeClauses(spark, delta, keys, MergeInto.MergeClauses(
+      matched = Seq(MergeInto.UpdateClause(Some(fresh),
+        measures.map(c => c -> fold(merges(c), c)).toMap + (BatchCol -> lit(batchId)))),
+      notMatched = Seq(MergeInto.InsertClause(None,
+        (keys ++ measures).map(c => c -> col(c)).toMap +
+          (BatchCol -> lit(batchId))))),
+      nullSafeKeys = true)
   }
 
   /** A measure's matched-row value: the stored `__t_<c>` merged with the
@@ -135,40 +99,6 @@ object IncrementalRollup {
     case "sum" => coalesce(col(s"__t_$c") + col(c), col(s"__t_$c"), col(c))
     case "min" => least(col(s"__t_$c"), col(c))
     case "max" => greatest(col(s"__t_$c"), col(c))
-    case "set" => col(c)
-  }
-
-  /** The one guarded merge both commits land: matched keys take
-    * `matched(c)` only while `last_batch < batchId`, new keys insert
-    * `inserted(c)`; both stamp the batch marker.
-    */
-  private def mergeDelta(
-      spark: SparkSession,
-      src: DataFrame,
-      keys: Seq[String],
-      measures: Seq[String],
-      matched: String => Column,
-      inserted: String => Column,
-      table: graft.table.WarehouseTable,
-      batchId: Long): Unit = {
-    if (!table.exists)
-      table.create(
-        StructType(src.schema.filter(f => (keys ++ measures).contains(f.name)))
-          .add(BatchCol, LongType, nullable = false),
-        properties =
-          graft.table.WarehouseTable.tableProperties("COW", "snappy"))
-    val fresh = col(s"__t_$BatchCol") < lit(batchId)
-    // nullSafeKeys: the rollup's keys are GROUP identities — a NULL
-    // group is a real group (groupBy put it there) and must FOLD, not
-    // re-insert a fresh row every window (ANSI merge equality would)
-    table.mergeClauses(spark, src, keys, MergeInto.MergeClauses(
-      matched = Seq(MergeInto.UpdateClause(Some(fresh),
-        measures.map(c => c -> matched(c)).toMap + (BatchCol -> lit(batchId)))),
-      notMatched = Seq(MergeInto.InsertClause(None,
-        keys.map(c => c -> col(c)).toMap ++
-          measures.map(c => c -> inserted(c)).toMap +
-          (BatchCol -> lit(batchId))))),
-      nullSafeKeys = true)
   }
 
   /** The rollup's user-facing read: measures per key, marker dropped. */

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
 import graft.table.WarehouseTable
@@ -64,6 +64,17 @@ object StreamingIngest {
     * production code.
     */
   @volatile private[graft] var lastRecomputeCollected: Option[Boolean] = None
+
+  /** Test seam: runs after an aggregate-view window has read the view
+    * and before it writes it, so a spec can land a racing view commit
+    * there. Production never sets it.
+    */
+  @volatile private[graft] var beforeAggViewWrite: () => Unit = () => ()
+
+  /** The aggregate view's per-row batch marker: the rollup layout's, so
+    * [[graft.operators.IncrementalRollup.read]] reads a view as well.
+    */
+  private val ViewBatchCol = graft.operators.IncrementalRollup.BatchCol
 
   /** Run `body` on every micro-batch of `stream` until the input present
     * at start is drained (AvailableNow), checkpointed in `checkpointDir`.
@@ -1096,15 +1107,18 @@ object StreamingIngest {
     }
 
   /** Tail `source`'s commit log — the drain shared by [[startCdcMirror]]
-    * and [[startAggView]]. The `snaps/` dir is the wake signal (one tiny
-    * JSON file per commit; at `maxFilesPerTrigger = 1` the history
-    * applies COMMIT BY COMMIT). Each trigger calls `apply(from, target)`
-    * with `target` = the newest snapshot NAMED IN THIS BATCH (so the
-    * commit granularity is the trigger's, not "whatever is current by
-    * now") when it is past the applied-through cursor, then advances the
-    * cursor. The cursor advances only AFTER `apply` returns: a crash
-    * between apply and checkpoint replays a window whose apply must
-    * therefore be idempotent.
+    * and [[startAggView]] — through the snapshot-log stream source
+    * ([[SnapshotLogProvider]]): its offsets are `{lineage, snapshotId}`,
+    * a trigger reads only `_current`, and at `maxFilesPerTrigger = 1`
+    * (snapshots per batch) the history applies COMMIT BY COMMIT. Each
+    * batch calls `apply(from, target)` with `target` = the batch's end
+    * snapshot (so the commit granularity is the trigger's, not "whatever
+    * is current by now") when it is past the applied-through cursor,
+    * then advances the cursor. `target` comes from the offset Spark
+    * logged for the batch, so learning it starts no Spark job, and a
+    * replayed batch gets the same one. The cursor advances only AFTER
+    * `apply` returns: a crash between apply and checkpoint replays a
+    * window whose apply must therefore be idempotent.
     *
     * The cursor at `cursorPath` is "<lineage>@<snapId>": snapshot ids are
     * only monotone within one source lineage (a rollback reuses abandoned
@@ -1113,7 +1127,8 @@ object StreamingIngest {
     * — instead of treating the new timeline as continuous. Legacy cursors
     * without a lineage prefix resume only on a never-rolled-back source.
     * It is written tmp-then-atomic-move, so a reader never sees a torn
-    * cursor.
+    * cursor. The source refuses a checkpointed offset of another lineage
+    * on its own as well.
     */
   private def tailSnapshotLog(
       spark: SparkSession,
@@ -1140,32 +1155,22 @@ object StreamingIngest {
       Files.move(tmp, cursorPath,
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     }
-    // the lineage check must run AT START, not only per batch: a
-    // post-rollback commit reuses a snapshot id, so its snap file PATH is
-    // one the stream checkpoint already saw — no trigger would ever fire
-    // to run the per-batch check, and the stalled consumer would silently
-    // stay on the abandoned timeline.
+    // the cursor's lineage is checked AT START, so a rolled-back source
+    // is refused with this consumer's own message (what to drop) before
+    // any stream runs; the source's own offset check covers a checkpoint
+    // whose cursor is gone
     readCursor()
-    val snaps = spark.readStream
+    val log = spark.readStream.format("graft-snapshots")
+      .option("path", source.root)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(s"${source.root}/snaps")
-      // file identity must be captured AT THE SOURCE — `_metadata` only
-      // resolves against the file-source relation, and foreachBatch hands
-      // over a plain LogicalRDD
-      .select(col("_metadata.file_path").as("__snap_path"))
-    foreachBatchStage(snaps, checkpointDir) { (batch, _) =>
-      // driver-side collect bounded by maxFilesPerTrigger file paths
-      val ids = batch.select(col("__snap_path")).distinct()
-        .collect().map(_.getString(0)).flatMap { p =>
-          val n = p.substring(p.lastIndexOf('/') + 1)
-          if (n.startsWith("snap-") && n.endsWith(".json"))
-            Some(n.stripPrefix("snap-").stripSuffix(".json").toLong)
-          else None
-        }
+      .load()
+    lazy val offsets = SnapshotLogOffset.offsetLog(spark, checkpointDir)
+    foreachBatchStage(log, checkpointDir) { (_, batchId) =>
+      val target = SnapshotLogOffset.planned(offsets, batchId).snapshotId
       val from = readCursor()
-      if (ids.nonEmpty && ids.max > from) {
-        apply(from, ids.max)
-        writeCursor(ids.max)
+      if (target > from) {
+        apply(from, target)
+        writeCursor(target)
       }
     }
   }
@@ -1315,8 +1320,9 @@ object StreamingIngest {
     * [[startCdcMirror]] ([[tailSnapshotLog]]), reads the window's GROSS feed
     * ([[graft.table.WarehouseTable.changesSince]] with
     * `netRemovals = false`) and folds SIGNED contributions — insert
-    * rows +1/+v, delete rows −1/−v — into an [[graft.operators
-    * .IncrementalRollup]] table keyed by `groupKeys`. Gross is the
+    * rows +1/+v, delete rows −1/−v — into the view, one row per
+    * `groupKeys` group in the rollup layout (measures plus the
+    * `last_batch` marker). Gross is the
     * load-bearing choice: a partition rewrite re-lands its unchanged
     * rows, which contribute (−old, +new) = 0, and an UPDATE contributes
     * exactly the difference — no row identity, no anti-join, no rescan.
@@ -1324,6 +1330,18 @@ object StreamingIngest {
     * Beside each `sum_c` the view keeps `nn_c`, the signed count of
     * non-NULL `c` values, so a group whose live values of `c` are all
     * NULL reads `sum_c` NULL, as SQL's `sum` does.
+    *
+    * One window, one view write: the window's one group-by is joined
+    * with the view read AS OF one snapshot `s`, and a single select
+    * computes each window group's complete post-window row (sums, `nn_c`
+    * and `n` as `coalesce(stored + window, stored, window)`; extremes
+    * and counts by the algebra below; `last_batch` = the window's target
+    * snapshot), pinned by a `localCheckpoint`. The new view is the rows
+    * of `s` whose group the window does not touch freshly, plus the
+    * fresh rows (with the truth overlay below), landed as ONE overwrite
+    * on parent `s`: a view commit racing the window fails it with a
+    * ConcurrentModificationException, and the commit path sweeps its
+    * dirs. The view is unpartitioned, so every window rewrites it whole.
     *
     * MIN/MAX (`minMaxCols`) are NOT invertible — a delete can remove the
     * row attaining the extreme — so the view keeps, beside `min_c` and
@@ -1341,13 +1359,13 @@ object StreamingIngest {
     * (impossible on an exact feed, refused as a regression anyway)
     * re-aggregates from the source AS OF the window end
     * ([[regressedTruth]]), partition-pruned when the group key IS the
-    * partition column (the natural layout for a grouped view). Every
-    * other window group takes its extremes and counts from that
-    * computed post-window state. Cost shape: zero extra reads unless an
-    * extreme's last holder leaves; then O(regressed groups'
-    * partitions). A group emptied by deletes NULLs its extremes (counts
-    * 0), so a later resurrection restarts them cleanly. A view written
-    * without the count columns is refused at start, never migrated.
+    * partition column (the natural layout for a grouped view); its
+    * extremes and counts replace the computed ones. Cost shape: zero
+    * extra reads unless an extreme's last holder leaves; then
+    * O(regressed groups' partitions). A group emptied by deletes NULLs
+    * its extremes (counts 0), so a later resurrection restarts them
+    * cleanly. A view written without the count columns is refused at
+    * start, never migrated.
     *
     * MOR sources work too: a MOR upsert appends the new version WITHOUT
     * removing the old one's dir, so the gross feed recovers the
@@ -1367,15 +1385,16 @@ object StreamingIngest {
     * way. Merge keys must be
     * recorded on MOR sources (they are, by any MOR merge). Maintenance
     * commits (compaction included) are skipped EXACTLY — their
-    * re-landed rows never reach the fold. Exactly-once: the rollup's
-    * own per-row batch marker (batchId = the window's target snapshot)
-    * makes a checkpoint-replayed window a per-key no-op; the cursor
-    * (with source lineage, same rollback protection as the mirror)
-    * advances only after the fold commits.
+    * re-landed rows never reach the fold. Exactly-once: each view row
+    * carries the window (target snapshot) that last folded it, and a
+    * group whose marker already reached the window is not fresh — a
+    * checkpoint-replayed window keeps the stored row, so it changes no
+    * group; the cursor (with source lineage, same rollback protection
+    * as the mirror) advances only after the view write lands.
     *
     * Read the view with [[readAggView]] — groups whose live count
-    * reached zero stay as (0, 0) marker rows in the rollup (the marker
-    * must survive for replay suppression) and are filtered there.
+    * reached zero stay as (0, 0) marker rows (the marker must survive
+    * for replay suppression) and are filtered there.
     */
   def startAggView(
       spark: SparkSession,
@@ -1400,8 +1419,7 @@ object StreamingIngest {
     // a MIN/MAX view written before it counted its extremes cannot be
     // migrated (the counts are not derivable from the view itself)
     if (view.exists) {
-      val want = (groupKeys ++ sums ++ setCols :+
-        graft.operators.IncrementalRollup.BatchCol).toSet
+      val want = (groupKeys ++ sums ++ setCols :+ ViewBatchCol).toSet
       val have = view.schema.fieldNames.toSet
       if (have != want)
         throw new IllegalStateException(
@@ -1415,119 +1433,122 @@ object StreamingIngest {
             "checkpoint to re-seed.")
     }
     // the cursor lives BESIDE the view root (the view table itself is
-    // created by the rollup's first commit, after the cursor's parent
-    // must already be writable)
+    // created by the first window, after the cursor's parent must
+    // already be writable)
     Files.createDirectories(Paths.get(view.root).getParent)
     val refusal = (lin: String, id: Long, cur: String) =>
       s"aggregate view at ${view.root} applied through snapshot $id " +
         s"of source lineage $lin, but the source is now on lineage " +
         s"$cur (rollback rewrote its timeline) — drop the view, its " +
         "_agg_applied cursor and the stream checkpoint to re-seed."
+    // group identities match NULL-safely: a NULL group is a real group
+    def sameGroup(a: String, b: String): Column =
+      groupKeys.map(k => col(s"$a.$k") <=> col(s"$b.$k")).reduce(_ && _)
     tailSnapshotLog(spark, source, Paths.get(view.root + "_agg_applied"),
       refusal, checkpointDir, maxFilesPerTrigger) { (from, target) =>
-      val isDel = col("_change_type") === "delete"
-      val sign = when(isDel, lit(-1L)).otherwise(lit(1L))
-      def nonNull(c: String) = when(col(c).isNotNull, sign).otherwise(lit(0L))
+      val windowOpt = source
+        .changesSinceOpt(spark, from, asOf = Some(target), netRemovals = false)
+      // the first window creates the view, even an empty one, so readers
+      // of a drained view always find a table: the rollup layout (keys,
+      // measures in name order, the batch marker), keyed on the groups
+      if (!view.exists) {
+        val keyFields = windowOpt.getOrElse(source.emptyChangeFrame(spark))
+          .schema.filter(f => groupKeys.contains(f.name))
+        view.create(StructType(keyFields ++
+            (sums ++ setCols).sorted.map(StructField(_, LongType)) :+
+            StructField(ViewBatchCol, LongType, nullable = false)),
+          properties = WarehouseTable.tableProperties("COW", "snappy"))
+        view.ensureMergeKeys(groupKeys)
+      }
       // STATIC empty-window skip: a maintenance-only window (compact,
       // posdel fold, re-cluster on the source) carries no change
       // frames — a fact changesSinceOpt decides from manifests alone.
       // Its gross contribution is identically zero, so the fold is a
-      // no-op by the fold's own algebra; executing it anyway costs the
-      // view a full keyed COW merge (null-key check + write job +
-      // manifest churn) per window. Skip everything but the cursor
-      // advance. Guarded on view.exists so the view's creating commit
-      // is never skipped (readers of a drained view must find a
-      // table); replay-safe: a replayed window re-decides the same
-      // skip from the same manifests.
-      val windowOpt = source
-        .changesSinceOpt(spark, from, asOf = Some(target), netRemovals = false)
-      if (windowOpt.nonEmpty || !view.exists) {
-        // None + no view yet: still fold (the empty frame's schema
-        // creates the view) — built directly, never by re-walking the
-        // window's manifests a second time
-        val window = windowOpt.getOrElse(source.emptyChangeFrame(spark))
-        if (minMaxCols.isEmpty) {
-          val contrib = window.select(groupKeys.map(col) ++
-            sumCols.flatMap(c => Seq((col(c).cast("long") * sign).as(s"sum_$c"),
-              nonNull(c).as(s"nn_$c"))) :+
-            sign.as("n"): _*)
-          graft.operators.IncrementalRollup.commit(spark, contrib,
-            groupKeys, sums.map(_ -> "sum").toMap, view, batchId = target)
-        } else {
-          // one group-by of the window yields the signed sums and, per
-          // side, each extreme with the number of rows at it. Every
-          // aggregate is a monoid, so it combines map-side: the shuffle
-          // carries one row per (task, group), whatever the number of
-          // distinct values and however large a rewrite's feed.
-          val aggs =
-            sumCols.flatMap(c => Seq(sum(col(c).cast("long") * sign).as(s"sum_$c"),
-              sum(nonNull(c)).as(s"nn_$c"))) ++
-            Seq(sum(sign).as("n")) ++
-            minMaxCols.flatMap(c => Seq("ins" -> !isDel, "del" -> isDel)
-              .flatMap { case (s, on) =>
-                extremeAt(least = true, when(on, col(c)), s"${s}_min_$c") ++
-                  extremeAt(least = false, when(on, col(c)), s"${s}_max_$c")
-              })
-          val w = window.groupBy(groupKeys.map(col): _*)
-            .agg(aggs.head, aggs.tail: _*)
-          // the POST-WINDOW extremes and counts, from the stored view and
-          // the window (see the scaladoc's count algebra), computed and
-          // pinned ONCE: the regress probe and the view merge both read
-          // these local blocks. `lost` flags a group whose extreme's last
-          // holder left (or whose deletes reach past it) — only those
-          // read the source. A group the view already marked at this
-          // batch (a checkpoint replay) is never flagged: the guarded
-          // merge leaves it untouched anyway.
-          val exists = view.exists
-          val joined =
-            if (exists)
-              w.alias("w").join(view.read(spark).alias("p"),
-                groupKeys.map(k => col(s"w.$k") <=> col(s"p.$k"))
-                  .reduce(_ && _), "left")
-            else w.alias("w")
-          def p(c: String) = if (exists) col(s"p.$c") else lit(null).cast("long")
-          def win(c: String) = col(s"w.$c")
-          val extremes = minMaxCols.map { c =>
-            def side(ext: String, pick: (Column, Column) => Column,
-                past: (Column, Column) => Column) = {
-              val (stored, ins, dels) = (s"${ext}_$c", s"ins_${ext}_$c", s"del_${ext}_$c")
-              val at = pick(p(stored), win(ins))
-              def heldAt(v: Column, k: Column) = when(v === at, k).otherwise(lit(0L))
-              val n = heldAt(p(stored), p(s"n_$stored")) +
-                heldAt(win(ins), win(s"n_$ins")) - heldAt(win(dels), win(s"n_$dels"))
-              val lost = (at.isNotNull && n <= 0) ||
-                coalesce(past(win(dels), at), win(dels).isNotNull)
-              (Seq(at.as(stored), n.as(s"n_$stored")), lost)
-            }
-            val (lo, lostLo) = side("min", least(_, _), _ < _)
-            val (hi, lostHi) = side("max", greatest(_, _), _ > _)
-            (lo ++ hi, lostLo || lostHi)
+      // no-op by its own algebra; executing it anyway costs the view a
+      // rewrite per window. Skip everything but the cursor advance;
+      // replay-safe: a replayed window re-decides the same skip from
+      // the same manifests.
+      windowOpt.foreach { window =>
+        val isDel = col("_change_type") === "delete"
+        val sign = when(isDel, lit(-1L)).otherwise(lit(1L))
+        def nonNull(c: String) = when(col(c).isNotNull, sign).otherwise(lit(0L))
+        // one group-by of the window yields the signed sums and, per
+        // side, each extreme with the number of rows at it. Every
+        // aggregate is a monoid, so it combines map-side: the shuffle
+        // carries one row per (task, group), whatever the number of
+        // distinct values and however large a rewrite's feed.
+        val aggs =
+          sumCols.flatMap(c => Seq(sum(col(c).cast("long") * sign).as(s"sum_$c"),
+            sum(nonNull(c)).as(s"nn_$c"))) ++
+          Seq(sum(sign).as("n")) ++
+          minMaxCols.flatMap(c => Seq("ins" -> !isDel, "del" -> isDel)
+            .flatMap { case (s, on) =>
+              extremeAt(least = true, when(on, col(c)), s"${s}_min_$c") ++
+                extremeAt(least = false, when(on, col(c)), s"${s}_max_$c")
+            })
+        val w = window.groupBy(groupKeys.map(col): _*)
+          .agg(aggs.head, aggs.tail: _*)
+        val s = view.currentSnapshotId
+        val before = view.read(spark, asOf = Some(s))
+        def p(c: String) = col(s"p.$c")
+        def win(c: String) = col(s"w.$c")
+        // the POST-WINDOW state of every window group, from the stored
+        // view at `s` and the window (see the scaladoc's count algebra),
+        // computed and pinned ONCE: the regress probe and the view write
+        // both read these local blocks. `__fresh` is the replay guard (a
+        // group the view already marked at this window keeps its stored
+        // row); `__lost` flags a fresh group whose extreme's last holder
+        // left (or whose deletes reach past it) — only those read the
+        // source.
+        val extremes = minMaxCols.map { c =>
+          def side(ext: String, pick: (Column, Column) => Column,
+              past: (Column, Column) => Column) = {
+            val (stored, ins, dels) = (s"${ext}_$c", s"ins_${ext}_$c", s"del_${ext}_$c")
+            val at = pick(p(stored), win(ins))
+            def heldAt(v: Column, k: Column) = when(v === at, k).otherwise(lit(0L))
+            val n = heldAt(p(stored), p(s"n_$stored")) +
+              heldAt(win(ins), win(s"n_$ins")) - heldAt(win(dels), win(s"n_$dels"))
+            val lost = (at.isNotNull && n <= 0) ||
+              coalesce(past(win(dels), at), win(dels).isNotNull)
+            (Seq(at.as(stored), n.as(s"n_$stored")), lost)
           }
-          val post = joined.select(groupKeys.map(k => col(s"w.$k").as(k)) ++
-              sums.map(c => col(s"w.$c").as(c)) ++ extremes.flatMap(_._1) :+
-              (coalesce(p(graft.operators.IncrementalRollup.BatchCol) < target,
-                lit(true)) && extremes.map(_._2).reduce(_ || _)).as("__lost"): _*)
-            .localCheckpoint()
-          val lostKeys = post.filter(col("__lost")).select(groupKeys.map(col): _*)
-          // THRESHOLD-GUARDED collect: the lost-key set is usually a few
-          // groups, and collecting it buys two prunes (partition fast
-          // path + key-range dataFilters). But a FULL-VIEW regress — a
-          // COW rewrite emptying every group of a high-cardinality key —
-          // needs every group key, and at 10^8 groups an unconditional
-          // collect is driver-memory death. Probe via limit(maxCollect+1):
-          // at most maxCollect+1 rows ever reach the driver. Under the
-          // bound, the probe IS the key set; over it, the collect and its
-          // two key prunes are DROPPED and the recompute runs the
-          // already-distributed semi-join form (non-broadcast) — the
-          // sound unpruned fallback regressedTruth documents for null
-          // partition keys.
-          val probe = lostKeys.limit(maxCollect + 1).collect()
-          val repair =
-            if (probe.isEmpty)
-              post.filter(lit(false)).select((groupKeys ++ setCols).map(col): _*)
-            else {
-              val underBound = probe.length <= maxCollect
-              StreamingIngest.lastRecomputeCollected = Some(underBound)
+          val (lo, lostLo) = side("min", least(_, _), _ < _)
+          val (hi, lostHi) = side("max", greatest(_, _), _ > _)
+          (lo ++ hi, lostLo || lostHi)
+        }
+        val fresh = coalesce(p(ViewBatchCol) < target, lit(true))
+        val post = w.alias("w").join(before.alias("p"), sameGroup("w", "p"), "left")
+          .select(groupKeys.map(k => win(k).as(k)) ++
+            sums.map(c => coalesce(p(c) + win(c), p(c), win(c)).as(c)) ++
+            extremes.flatMap(_._1) ++ Seq(
+              lit(target).as(ViewBatchCol),
+              fresh.as("__fresh"),
+              extremes.map(_._2).foldLeft(lit(false))(_ || _).as("__lost")): _*)
+          .localCheckpoint()
+        val freshRows = post.filter(col("__fresh")).drop("__fresh", "__lost")
+        val lostKeys = post.filter(col("__fresh") && col("__lost"))
+          .select(groupKeys.map(col): _*)
+        // THRESHOLD-GUARDED collect: the lost-key set is usually a few
+        // groups, and collecting it buys two prunes (partition fast
+        // path + key-range dataFilters). But a FULL-VIEW regress — a
+        // COW rewrite emptying every group of a high-cardinality key —
+        // needs every group key, and at 10^8 groups an unconditional
+        // collect is driver-memory death. Probe via limit(maxCollect+1):
+        // at most maxCollect+1 rows ever reach the driver. Under the
+        // bound, the probe IS the key set; over it, the collect and its
+        // two key prunes are DROPPED and the recompute runs the
+        // already-distributed semi-join form (non-broadcast) — the
+        // sound unpruned fallback regressedTruth documents for null
+        // partition keys. A sum-only view has nothing to probe.
+        val probe =
+          if (minMaxCols.isEmpty) Array.empty[org.apache.spark.sql.Row]
+          else lostKeys.limit(maxCollect + 1).collect()
+        val landed =
+          if (probe.isEmpty) freshRows
+          else {
+            val underBound = probe.length <= maxCollect
+            StreamingIngest.lastRecomputeCollected = Some(underBound)
+            val truth =
               if (underBound) {
                 val needDf = spark.createDataFrame(
                   java.util.Arrays.asList(probe: _*),
@@ -1537,14 +1558,21 @@ object StreamingIngest {
               } else
                 regressedTruth(spark, source, groupKeys, minMaxCols,
                   lostKeys, None, target)
-            }
-          // sums and n fold; extremes and counts are SET — from the
-          // post-window state, or from the truth for lost groups
-          graft.operators.IncrementalRollup.commitWithRepair(spark,
-            post.drop("__lost"), groupKeys,
-            sums.map(_ -> "sum").toMap ++ setCols.map(_ -> "set"),
-            repair, setCols, view, batchId = target)
-        }
+            // lost groups take their extremes and counts from the truth,
+            // verbatim (NULL extremes for an emptied group); the flag
+            // tells a truth row from an unmatched one
+            val rep = truth.withColumn("__rep", lit(true))
+            freshRows.alias("f").join(rep.alias("r"), sameGroup("f", "r"), "left")
+              .select(groupKeys.map(k => col(s"f.$k").as(k)) ++
+                sums.map(c => col(s"f.$c").as(c)) ++
+                setCols.map(c => when(col("r.__rep"), col(s"r.$c"))
+                  .otherwise(col(s"f.$c")).as(c)) :+
+                col(s"f.$ViewBatchCol").as(ViewBatchCol): _*)
+          }
+        val kept = before.alias("v").join(
+          freshRows.select(groupKeys.map(col): _*).alias("f"), sameGroup("v", "f"), "left_anti")
+        StreamingIngest.beforeAggViewWrite()
+        view.overwrite(kept.unionByName(landed), onParent = Some(s))
       }
     }
   }

@@ -945,8 +945,11 @@ final class WarehouseTable(val root: String) {
             .drop(TombstoneCol)
             .withColumn("_change_type", lit("insert"))
             .withColumn("_change_ordinal", lit(id))
+          // no distinct(): a left-semi join's result ignores duplicates
+          // on its build side, and a small scan is broadcast at planning
+          // time, where a distinct would add an AQE shuffle stage (a job)
           val touched = readParts(spark, meta, freshDeltaDirs,
-            withTombstone = true).select(keys.map(col): _*).distinct()
+            withTombstone = true).select(keys.map(col): _*)
           // freshDeltaDirs' keys ARE manifest partition keys (real values
           // or the hive-null sentinel), so they pass through verbatim
           val oldParts: Option[Seq[Any]] =
@@ -1573,10 +1576,14 @@ final class WarehouseTable(val root: String) {
     commit(added.values.flatten, new Rebase(attempts)(_.addDirs(added, stats)))
   }
 
-  /** Overwrite — `mode == 'overwrite'` (read.py:234-236). */
-  def overwrite(df: DataFrame): Unit = {
+  /** Overwrite — `mode == 'overwrite'` (read.py:234-236). With
+    * `onParent`, `df` was computed from that snapshot, so the overwrite
+    * lands on it or not at all: a commit that landed since fails it with
+    * a ConcurrentModificationException, and its written dirs are swept.
+    */
+  def overwrite(df: DataFrame, onParent: Option[Long] = None): Unit = {
     val meta = readMeta()
-    val cur = currentSnapshotId
+    val cur = onParent.getOrElse(currentSnapshotId)
     val old = readManifest(cur)
     val (entries, stats) = writeDataDir(df, meta)
     commit(entries.values.flatten, new OnParent(cur, old)(_.replaceAll(entries, stats)))

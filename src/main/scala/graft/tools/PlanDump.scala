@@ -99,15 +99,17 @@ object PlanDump {
     // Drain-side / write-side optimizations: the returned frame's plan is
     // the (unchanged) final table read; the optimization evidence is the
     // commit-count + stage-timer measurements in OPTIMIZATION_r16.md and
-    // the code (IncrementalRollup.commitWithRepair; WarehouseTable.writeTasks;
-    // TableStats.parMap).
+    // the code (StreamingIngest.startAggView's one view overwrite per
+    // window; WarehouseTable.writeTasks; TableStats.parMap).
     Seq("q183_agg_view_minmax", "q185_agg_view_minmax_mor",
       "q188_agg_view_null_group").foreach { q =>
       dump(q, "after",
         "plan = the view read (unchanged by design); the round's change is " +
-          "drain-side — fold+repair fused into ONE view commit per " +
-          "window (IncrementalRollup.commitWithRepair), detection from " +
-          "the counts at each stored extreme. See OPTIMIZATION_r16.md batch 2.")
+          "drain-side — the fold computes each window group's complete " +
+          "row and the view lands as ONE overwrite per window on the " +
+          "snapshot the fold read (StreamingIngest.startAggView), " +
+          "detection from the counts at each stored extreme. See " +
+          "OPTIMIZATION_r16.md batch 2.")
     }
     Seq("q168_cdc_mirror_cow", "q156_cdc_mirror_posdel").foreach { q =>
       dump(q, "after",

@@ -370,4 +370,40 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(snapshotWrites.forall(_.contains(":publishStaged -> ")),
       s"a snapshot file written outside commit: ${snapshotWrites.mkString(", ")}")
   }
+
+  test("graft.streaming tails a table's commit log only through the snapshot-log source; startAggView writes its view itself") {
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/streaming")
+    val sources = {
+      val ls = java.nio.file.Files.list(dir)
+      try ls.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally ls.close()
+    }
+    assert(sources.exists(_.getFileName.toString == "StreamingIngest.scala"),
+      s"no streaming sources under ${dir.toAbsolutePath}")
+    // code lines per file, tagged with the member (2-space indented def)
+    // they sit in; comments dropped
+    val member = """^  (?:(?:private|private\[\w+\]|override|final)\s+)*def\s+(\w+).*""".r
+    val lines: Seq[(String, String, String)] = sources.flatMap { f =>
+      var current = ""
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8").split("\n").toSeq.flatMap { l =>
+        l match {
+          case member(name) => current = name
+          case _ =>
+        }
+        val code = l.trim
+        if (code.startsWith("*") || code.startsWith("/*") || code.startsWith("//")) None
+        else Some((s"${f.getFileName}", current, code))
+      }
+    }
+    // a file stream over snaps/ names the dir in its path
+    val snapsDir = lines.collect {
+      case (f, m, code) if code.contains("/snaps") || code.contains("\"snaps\"") => s"$f:$m: $code"
+    }
+    assert(snapsDir.isEmpty, s"a stream over a table's snaps dir: ${snapsDir.mkString("; ")}")
+    assert(lines.exists { case (_, m, code) =>
+      m == "tailSnapshotLog" && code.contains("format(\"graft-snapshots\")") })
+    val aggView = lines.collect { case (_, "startAggView", code) => code }
+    assert(aggView.exists(_.contains("view.overwrite(")), "the guard no longer sees the view write")
+    assert(!aggView.exists(_.contains("IncrementalRollup")),
+      "startAggView writes the view through IncrementalRollup")
+  }
 }

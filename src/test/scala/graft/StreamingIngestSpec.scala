@@ -1926,6 +1926,82 @@ class StreamingIngestSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq == Seq(Seq("g0", 1L, 1L)))
   }
 
+  test("agg view write: a NULL truth lands, an un-repaired group folds, a replayed window changes no group") {
+    // g0 is held by one row; g1 by two
+    val src = mmSource("mmwrite")((1L, "g0", 5), (2L, "g1", 3), (3L, "g1", 7))
+    val view = mmDrain(src)
+    val root = new java.io.File(src.root).getParent
+    val cursor = Paths.get(view.root + "_agg_applied")
+    val before = Files.readAllBytes(cursor)
+    // one window: g0 is emptied (its truth is NULL extremes at count 0),
+    // g1 gains a new max, which folds without a truth read
+    mmDelete(src, (1L, "g0", null))
+    mmUpsert(src, (4L, "g1", 9))
+    val viewSnap = view.currentSnapshotId
+    StreamingIngest.lastRecomputeCollected = None
+    def state() = graft.operators.IncrementalRollup.read(spark, view)
+      .select("g", "n", "sum_id", "min_v", "max_v", "n_min_v", "n_max_v")
+      .collect().map(_.toSeq).toSet
+    try {
+      mmDrain(src, perWindow = 2)
+      assert(StreamingIngest.lastRecomputeCollected.contains(true),
+        "the emptied group was not read from the source")
+    } finally StreamingIngest.lastRecomputeCollected = None
+    // one window, one view write
+    assert(view.currentSnapshotId == viewSnap + 1)
+    val want = Set(
+      Seq("g0", 0L, 0L, null, null, 0L, 0L),
+      Seq("g1", 3L, 9L, 3L, 9L, 1L, 1L))
+    assert(state() == want, s"got ${state()}")
+    assertViewIsSource(src, view)
+    // replay the window: the cursor and the checkpoint's last commit go
+    // back, the view write does not
+    Files.write(cursor, before)
+    val commits = new java.io.File(root + "/ckpt/commits").list()
+      .filter(_.forall(_.isDigit)).map(_.toLong)
+    Files.delete(Paths.get(s"$root/ckpt/commits/${commits.max}"))
+    Files.deleteIfExists(Paths.get(s"$root/ckpt/commits/.${commits.max}.crc"))
+    try {
+      mmDrain(src, perWindow = 2)
+      assert(StreamingIngest.lastRecomputeCollected.isEmpty,
+        "a replayed window read the source")
+    } finally StreamingIngest.lastRecomputeCollected = None
+    assert(state() == want, s"replay moved the view: ${state()}")
+  }
+
+  test("agg view write: a view commit racing the window fails it; nothing advances; a restart converges") {
+    val src = mmSource("mmrace")((1L, "g0", 5), (2L, "g1", 3))
+    val view = mmDrain(src)
+    val root = new java.io.File(src.root).getParent
+    val cursor = Paths.get(view.root + "_agg_applied")
+    val cursorBefore = Files.readAllBytes(cursor)
+    def commits() = new java.io.File(root + "/ckpt/commits").list()
+      .filter(_.forall(_.isDigit)).map(_.toLong).toSet
+    def dataDirs() = new java.io.File(view.root + "/data").list().toSet
+    val commitsBefore = commits()
+    mmUpsert(src, (3L, "g0", 1))
+    mmDelete(src, (2L, "g1", null))
+    // the racer rewrites the view with its own content, between the
+    // window's read of the view and its write
+    var afterRace = Set.empty[String]
+    StreamingIngest.beforeAggViewWrite = { () =>
+      view.overwrite(view.read(spark))
+      afterRace = dataDirs()
+    }
+    val err =
+      try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        mmDrain(src, perWindow = 2))
+      finally StreamingIngest.beforeAggViewWrite = () => ()
+    assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.util.ConcurrentModificationException]), err)
+    assert(afterRace.nonEmpty && dataDirs() == afterRace,
+      "the refused view write left a data dir")
+    assert(java.util.Arrays.equals(Files.readAllBytes(cursor), cursorBefore))
+    assert(commits() == commitsBefore)
+    mmDrain(src, perWindow = 2)
+    assertViewIsSource(src, view)
+  }
+
   test("streaming window prober: as-of-arrival join — each batch sees itself and every earlier interval") {
     import spark.implicits._
     import graft.operators.RangeIndex
@@ -2940,6 +3016,130 @@ class StreamingIngestSpec extends SparkSpec {
     assert(err.getMessage.contains("lineage"))
     val viewErr = intercept[IllegalStateException](startView())
     assert(viewErr.getMessage.contains("lineage"))
+  }
+
+  /** A keyless COW table with `commits` one-row appends after its create. */
+  private def logTable(name: String, commits: Int): WarehouseTable = {
+    import spark.implicits._
+    val t = WarehouseTable(tmpDir(name) + "/t")
+    t.create(Seq((0L, "")).toDF("doc_id", "text").schema, None,
+      WarehouseTable.tableProperties("COW", "snappy"))
+    (1 to commits).foreach(i => t.append(Seq((i.toLong, s"d$i")).toDF("doc_id", "text")))
+    t
+  }
+
+  private def logStream(t: WarehouseTable, perBatch: Int) = {
+    val opts = new java.util.HashMap[String, String]()
+    opts.put("path", t.root)
+    opts.put("maxFilesPerTrigger", perBatch.toString)
+    new graft.streaming.SnapshotLogProvider()
+      .getTable(graft.streaming.SnapshotLogStream.Schema, Array.empty, opts)
+      .asInstanceOf[graft.streaming.SnapshotLogTable]
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().toMicroBatchStream("unused")
+      .asInstanceOf[graft.streaming.SnapshotLogStream]
+  }
+
+  test("snapshot-log source: trigger planning reads _current only, never the snaps dir") {
+    import graft.streaming.{SnapshotLogOffset, SnapshotRange}
+    val t = logTable("slog_plan", 5)
+    val stream = logStream(t, perBatch = 2)
+    val snaps = Paths.get(t.root, "snaps")
+    val away = Paths.get(t.root, "snaps.away")
+    // with snaps/ gone, nothing that lists it or reads a snapshot can run
+    Files.move(snaps, away)
+    try {
+      val start = stream.initialOffset()
+      assert(start == SnapshotLogOffset("root", 0L))
+      val limit = stream.getDefaultReadLimit
+      def next(o: org.apache.spark.sql.connector.read.streaming.Offset) =
+        stream.latestOffset(o, limit).asInstanceOf[SnapshotLogOffset]
+      val first = next(start)
+      assert(first == SnapshotLogOffset("root", 2L))
+      assert(stream.planInputPartitions(start, first).toSeq == Seq(SnapshotRange(1L, 2L)))
+      val rest = Iterator.iterate(first)(next).take(4).map(_.snapshotId).toSeq
+      assert(rest == Seq(2L, 4L, 5L, 5L))
+      assert(stream.planInputPartitions(first, first).isEmpty)
+      // the same through Spark: a drain whose body reads the batch rows
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      StreamingIngest.foreachBatchStage(spark.readStream.format("graft-snapshots")
+          .option("path", t.root).option("maxFilesPerTrigger", 2).load(),
+        tmpDir("slog_plan_ckpt")) { (batch, _) =>
+        batch.collect().foreach(r => seen.add(r.getLong(0)))
+      }.awaitTermination(120000)
+      assert(seen.toArray.toSeq == (1L to 5L))
+    } finally Files.move(away, snaps)
+  }
+
+  test("snapshot-log source: AvailableNow stops at the snapshot current at start while commits land") {
+    import spark.implicits._
+    val t = logTable("slog_now", 3)
+    val ends = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    val q = StreamingIngest.foreachBatchStage(spark.readStream.format("graft-snapshots")
+        .option("path", t.root).load(), tmpDir("slog_now_ckpt")) { (batch, _) =>
+      ends.add(batch.collect().map(_.getLong(0)).toSeq)
+      // a commit lands during every batch
+      t.append(Seq((100L, "x")).toDF("doc_id", "text"))
+    }
+    assert(q.awaitTermination(120000), "the drain did not stop")
+    assert(ends.toArray.toSeq == Seq(Seq(1L), Seq(2L), Seq(3L)))
+    assert(t.currentSnapshotId == 6L)
+  }
+
+  test("snapshot-log source: one snapshot a window at maxFilesPerTrigger = 1, with the same change ordinals") {
+    val t = logTable("slog_one", 4)
+    val windows = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[Long], Set[Long])]()
+    StreamingIngest.foreachBatchStage(spark.readStream.format("graft-snapshots")
+        .option("path", t.root).option("maxFilesPerTrigger", 1).load(),
+      tmpDir("slog_one_ckpt")) { (batch, _) =>
+      val ids = batch.collect().map(_.getLong(0)).toSeq
+      val ordinals = t.changesSince(spark, ids.min - 1, asOf = Some(ids.max))
+        .select("_change_ordinal").collect().map(_.getLong(0)).toSet
+      windows.add(ids -> ordinals)
+    }.awaitTermination(120000)
+    assert(windows.toArray.toSeq == (1L to 4L).map(i => (Seq(i), Set(i))))
+    // the aggregate view over the same log: every group was folded by
+    // the window of its own commit, and each window wrote the view once
+    val view = WarehouseTable(tmpDir("slog_one_view") + "/v")
+    StreamingIngest.startAggView(spark, t, view, Seq("text"), Seq("doc_id"),
+      tmpDir("slog_one_vckpt")).awaitTermination(120000)
+    assert(view.read(spark).select("text", "last_batch").collect().map(r => r.getString(0) -> r.getLong(1))
+      .toMap == (1L to 4L).map(i => s"d$i" -> i).toMap)
+    assert(view.currentSnapshotId == 4L) // the create, then one write a window
+  }
+
+  test("snapshot-log source: a window over an expired snapshot fails loudly") {
+    val t = logTable("slog_exp", 4)
+    t.expireSnapshots(keepLast = 2)
+    assert(!Files.exists(Paths.get(t.root, "snaps", "snap-0.json")))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingIngest.startAggView(spark, t, WarehouseTable(tmpDir("slog_exp_view") + "/v"),
+        Seq("text"), Seq("doc_id"), tmpDir("slog_exp_ckpt")).awaitTermination(120000)
+    }
+    assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("expired")), err)
+  }
+
+  test("snapshot-log source: a checkpointed offset from another lineage is refused by the source") {
+    import spark.implicits._
+    val t = logTable("slog_lin", 2)
+    val mirror = WarehouseTable(tmpDir("slog_lin_mir") + "/m")
+    val ckpt = tmpDir("slog_lin_ckpt")
+    def run() = StreamingIngest.startCdcMirror(spark, t, mirror, Seq("doc_id"), ckpt)
+      .awaitTermination(120000)
+    run()
+    t.rollback(1L)
+    t.append(Seq((3L, "d3")).toDF("doc_id", "text"))
+    // without the mirror's cursor the start-time check has nothing to
+    // compare: the checkpoint's offset alone must stop the drain
+    Files.delete(Paths.get(mirror.root, "_cdc_applied"))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("lineage")), err)
+    // the stream itself, handed the old offset
+    val stale = graft.streaming.SnapshotLogOffset("root", 2L).json
+    val direct = intercept[IllegalStateException](logStream(t, 1).deserializeOffset(stale))
+    assert(direct.getMessage.contains(t.lineageId), direct.getMessage)
   }
 
   test("batchStage crash replay: the uncommitted batch re-runs under its id and rewrites only its own dir") {

@@ -1780,44 +1780,6 @@ class WarehouseTableSpec extends SparkSpec {
     assert(state() == after2)
   }
 
-  test("IncrementalRollup.commitWithRepair: repair overrides the fold (incl. NULL truth), others fold, replay no-ops") {
-    import spark.implicits._
-    import graft.operators.IncrementalRollup
-    val table = WarehouseTable(tmpDir("rollupr") + "/agg")
-    val keys = Seq("k")
-    val merges = Map("n" -> "sum", "mx" -> "max", "mn" -> "min")
-    def state(): Map[String, (Long, Option[Long], Option[Long])] =
-      IncrementalRollup.read(spark, table)
-        .select("k", "n", "mx", "mn")
-        .as[(String, Long, Option[Long], Option[Long])].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    IncrementalRollup.commit(spark,
-      Seq(("a", 2L, 9L, 3L), ("b", 1L, 7L, 7L), ("c", 1L, 4L, 4L))
-        .toDF("k", "n", "mx", "mn"), keys, merges, table, 1L)
-    // window 2: folds would give a.mx = max(9, 5) = 9 and b extremes
-    // NULL-skipped, but the repair overlay says a's truth is (8, 4)
-    // (its 9/3-attaining rows died) and b was EMPTIED (NULL extremes);
-    // c has no repair row and folds normally; d is a repaired INSERT
-    val w2 = Seq(("a", -1L, Some(5L), Some(5L)), ("b", -1L, None, None),
-      ("c", 1L, Some(6L), Some(6L)), ("d", 1L, Some(2L), Some(2L)))
-      .toDF("k", "n", "mx", "mn")
-    val repair = Seq(("a", Some(8L), Some(4L)), ("b", None, None),
-      ("d", Some(1L), Some(1L)))
-      .toDF("k", "mx", "mn")
-    IncrementalRollup.commitWithRepair(spark, w2, keys, merges,
-      repair, Seq("mx", "mn"), table, 2L)
-    val want = Map(
-      "a" -> ((1L, Some(8L), Some(4L))),  // repaired, sum still folds
-      "b" -> ((0L, None, None)),          // emptied: NULL extremes land
-      "c" -> ((2L, Some(6L), Some(4L))),  // plain fold
-      "d" -> ((1L, Some(1L), Some(1L))))  // repaired insert
-    assert(state() == want, s"got ${state()}")
-    // checkpoint replay of the same window: guard blocks every key
-    IncrementalRollup.commitWithRepair(spark, w2, keys, merges,
-      repair, Seq("mx", "mn"), table, 2L)
-    assert(state() == want, s"replay diverged: ${state()}")
-  }
-
   test("clusterBase: sampled cuts (over the exact-quantile scale bound) keep reads exact and pruning selective") {
     import org.apache.spark.sql.Row
     val t = WarehouseTable(tmpDir("clsample"))
