@@ -536,15 +536,13 @@ object SparkEntry {
     * bit-for-bit regardless of which generation wrote the file.
     */
   /** Reset an agg-view gate's consumer state for a fresh drain: drop the
-    * view table, its `_agg_applied` cursor (the name is StreamingIngest's
-    * `view.root + "_agg_applied"` convention) and the stream checkpoint.
-    * The SOURCE fixture is untouched — it memoizes via atRestBuilt.
+    * view table (its source position goes with it) and the stream
+    * checkpoint. The SOURCE fixture is untouched — it memoizes via
+    * atRestBuilt.
     */
   private def resetAggView(base: String): (graft.table.WarehouseTable, java.nio.file.Path) = {
     val view = graft.table.WarehouseTable(base + "/view")
     view.drop()
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(base + "/view_agg_applied"))
     val ckpt = java.nio.file.Paths.get(base, "ckpt")
     if (java.nio.file.Files.exists(ckpt)) {
       val walk = java.nio.file.Files.walk(ckpt)

@@ -31,10 +31,11 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * is `sum` over a `lit(1)` measure; `avg` is a `(sum, count)` pair
   * finished at read time — the classic decomposition. The
   * delete-aware aggregate view
-  * ([[graft.streaming.StreamingIngest.startAggView]]) keeps this layout
-  * (measures plus the `last_batch` marker, so [[read]] reads it) but
-  * writes it itself: its fold already joins the stored rows, so it
-  * lands each window as one overwrite instead of a merge.
+  * ([[graft.streaming.StreamingIngest.startAggView]]) keeps one row of
+  * measures per key too, but no `last_batch`: its fold already joins the
+  * stored rows, so it lands each window as one overwrite that records
+  * the source snapshot it applied through, and that position is its
+  * replay guard.
   *
   * Scale shape: one map-side partial agg over the batch (arrival-bound),
   * then a keyed COW merge that rewrites only the partitions carrying a

@@ -1,8 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -65,16 +62,12 @@ object StreamingIngest {
     */
   @volatile private[graft] var lastRecomputeCollected: Option[Boolean] = None
 
-  /** Test seam: runs after an aggregate-view window has read the view
-    * and before it writes it, so a spec can land a racing view commit
-    * there. Production never sets it.
+  /** Test seam: runs after a commit-log consumer's window has read the
+    * consumer's snapshot and position and before it applies the window,
+    * so a spec can land a racing consumer commit there. Production never
+    * sets it.
     */
-  @volatile private[graft] var beforeAggViewWrite: () => Unit = () => ()
-
-  /** The aggregate view's per-row batch marker: the rollup layout's, so
-    * [[graft.operators.IncrementalRollup.read]] reads a view as well.
-    */
-  private val ViewBatchCol = graft.operators.IncrementalRollup.BatchCol
+  @volatile private[graft] var beforeConsumerWrite: () => Unit = () => ()
 
   /** Run `body` on every micro-batch of `stream` until the input present
     * at start is drained (AvailableNow), checkpointed in `checkpointDir`.
@@ -1111,55 +1104,42 @@ object StreamingIngest {
     * ([[SnapshotLogProvider]]): its offsets are `{lineage, snapshotId}`,
     * a trigger reads only `_current`, and at `maxFilesPerTrigger = 1`
     * (snapshots per batch) the history applies COMMIT BY COMMIT. Each
-    * batch calls `apply(from, target)` with `target` = the batch's end
-    * snapshot (so the commit granularity is the trigger's, not "whatever
-    * is current by now") when it is past the applied-through cursor,
-    * then advances the cursor. `target` comes from the offset Spark
-    * logged for the batch, so learning it starts no Spark job, and a
-    * replayed batch gets the same one. The cursor advances only AFTER
-    * `apply` returns: a crash between apply and checkpoint replays a
-    * window whose apply must therefore be idempotent.
+    * batch's `target` is its end snapshot, from the offset Spark logged
+    * for it, so learning it starts no Spark job and a replayed batch gets
+    * the same one.
     *
-    * The cursor at `cursorPath` is "<lineage>@<snapId>": snapshot ids are
-    * only monotone within one source lineage (a rollback reuses abandoned
-    * ids), so a persisted cursor from a pre-rollback timeline must FAIL
-    * LOUDLY — with `refusal(persistedLineage, appliedId, currentLineage)`
-    * — instead of treating the new timeline as continuous. Legacy cursors
-    * without a lineage prefix resume only on a never-rolled-back source.
-    * It is written tmp-then-atomic-move, so a reader never sees a torn
-    * cursor. The source refuses a checkpointed offset of another lineage
-    * on its own as well.
+    * The consumer's progress is recorded in its own table: each batch
+    * reads the consumer's current snapshot `s` (None before the table
+    * exists) and the [[graft.table.WarehouseTable.sourcePosition]] there,
+    * and calls `apply(s, advance)` when `target` is past that position.
+    * `apply` lands the window with `advance`, so the data and the new
+    * position are one commit, and a crash before it or a replay after it
+    * never applies a window twice; a window at or below the position is
+    * skipped before anything is read. Snapshot ids are only monotone
+    * within one source lineage (a rollback reuses abandoned ids), so a
+    * position from another lineage FAILS LOUDLY — with `refusal(recorded
+    * lineage, applied id, current lineage)` — at start, before any stream
+    * runs, and at every batch. The source refuses a checkpointed offset
+    * of another lineage on its own as well.
     */
   private def tailSnapshotLog(
       spark: SparkSession,
       source: WarehouseTable,
-      cursorPath: Path,
+      consumer: WarehouseTable,
       refusal: (String, Long, String) => String,
       checkpointDir: String,
-      maxFilesPerTrigger: Int)(apply: (Long, Long) => Unit): StreamingQuery = {
-    def readCursor(): Long =
-      if (!Files.exists(cursorPath)) 0L
-      else {
-        val raw = new String(Files.readAllBytes(cursorPath), StandardCharsets.UTF_8).trim
-        val (lin, id) = raw.split("@") match {
-          case Array(l, i) => (l, i.toLong)
-          case _ => ("root", raw.toLong)
-        }
-        val cur = source.lineageId
-        if (lin != cur) throw new IllegalStateException(refusal(lin, id, cur))
-        id
-      }
-    def writeCursor(v: Long): Unit = {
-      val tmp = Paths.get(s"$cursorPath.tmp")
-      Files.write(tmp, s"${source.lineageId}@$v".getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, cursorPath,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      maxFilesPerTrigger: Int)(
+      apply: (Option[Long], WarehouseTable.Advance) => Unit): StreamingQuery = {
+    def position(): (Option[Long], WarehouseTable.SourcePosition) = {
+      val s = if (consumer.exists) Some(consumer.currentSnapshotId) else None
+      val lineage = source.lineageId
+      val at = s.flatMap(consumer.sourcePosition)
+        .getOrElse(WarehouseTable.SourcePosition(lineage, 0L))
+      if (at.lineage != lineage)
+        throw new IllegalStateException(refusal(at.lineage, at.snapshotId, lineage))
+      (s, at)
     }
-    // the cursor's lineage is checked AT START, so a rolled-back source
-    // is refused with this consumer's own message (what to drop) before
-    // any stream runs; the source's own offset check covers a checkpoint
-    // whose cursor is gone
-    readCursor()
+    position()
     val log = spark.readStream.format("graft-snapshots")
       .option("path", source.root)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -1167,10 +1147,10 @@ object StreamingIngest {
     lazy val offsets = SnapshotLogOffset.offsetLog(spark, checkpointDir)
     foreachBatchStage(log, checkpointDir) { (_, batchId) =>
       val target = SnapshotLogOffset.planned(offsets, batchId).snapshotId
-      val from = readCursor()
-      if (target > from) {
-        apply(from, target)
-        writeCursor(target)
+      val (s, at) = position()
+      if (target > at.snapshotId) {
+        beforeConsumerWrite()
+        apply(s, WarehouseTable.Advance(at.lineage, at.snapshotId, target))
       }
     }
   }
@@ -1196,13 +1176,20 @@ object StreamingIngest {
     * .ensureMergeKeys]]) so a COW source that was never key-merged still
     * gets its removals diffed — the silent-divergence hole a keyless COW
     * source used to leave open. A source already keyed DIFFERENTLY
-    * refuses loudly (one table, one row identity). Replay-safe: the
-    * applied-through cursor (`_cdc_applied` inside the mirror root)
-    * advances only AFTER the window's merges commit; a replayed window's
-    * keyed apply is idempotent — re-upserting identical rows and
-    * re-deleting absent keys both land arbitration no-ops. Deleting a key
+    * refuses loudly (one table, one row identity).
+    *
+    * Exactly-once: each window lands as ONE merge-on-read merge of its
+    * winners — upserts and keyed deletes (`deleteWhere` on the winner's
+    * `_change_type`) in one delta — that records the window's end as the
+    * mirror's source position ([[tailSnapshotLog]]). The merge rebases
+    * over racing mirror commits that leave the position alone, but one
+    * that moved it fails the window with a
+    * ConcurrentModificationException, and the commit path sweeps the
+    * window's dirs. A replayed window is skipped unread. Deleting a key
     * the mirror never held (an insert+delete collapsed inside one window)
-    * is equally a no-op: the tombstone wins arbitration over nothing.
+    * is a no-op: the tombstone wins arbitration over nothing. A mirror
+    * that recorded no position re-applies the source from snapshot 0,
+    * which the keyed apply makes idempotent.
     *
     * Scale: per-trigger cost is CHANGE-bound — the feed reads fresh dirs
     * plus posdel-touched files only, and the keyed apply merges only the
@@ -1229,27 +1216,18 @@ object StreamingIngest {
         s"source lineage $lin, but the source at ${source.root} is now " +
         s"on lineage $cur (a rollback rewrote its timeline and snapshot " +
         "ids were reused) — the mirror no longer corresponds to any " +
-        "source state. Drop the mirror table, its _cdc_applied cursor " +
-        "and the stream checkpoint, then restart to re-seed."
-    tailSnapshotLog(spark, source, Paths.get(mirror.root, "_cdc_applied"),
-      refusal, checkpointDir, maxFilesPerTrigger) { (from, target) =>
+        "source state. Drop the mirror table and the stream checkpoint, " +
+        "then restart to re-seed."
+    tailSnapshotLog(spark, source, mirror, refusal, checkpointDir,
+      maxFilesPerTrigger) { (_, advance) =>
       // STATIC empty-window skip (see startAggView): a maintenance-only
-      // window carries no change frames — decided from manifests alone.
-      // No exists-guard needed here: an empty feed never created the
-      // mirror before either (both merges are guarded).
-      source.changesSinceOpt(spark, from, asOf = Some(target)).foreach { feed0 =>
-        val feed = feed0.withColumn("__ord2", expr(
-          "_change_ordinal * 2 + IF(_change_type = 'insert', 1, 0)"))
-        val winners = Dedup
-          .latestByKey(feed, keys, orderDesc = "__ord2")
-          .localCheckpoint() // pin: both merges below consume it
-        val ups = winners.filter(col("_change_type") =!= "delete")
-          .drop("_change_type", "_change_ordinal", "__ord2")
-        if (!ups.isEmpty) mirror.merge(spark, ups, keys)
-        val dels = winners.filter(col("_change_type") === "delete")
-          .drop("_change_type", "_change_ordinal", "__ord2")
-        if (!dels.isEmpty)
-          mirror.merge(spark, dels, keys, deleteWhere = Some(lit(true)))
+      // window carries no change frames — decided from manifests alone —
+      // and commits nothing
+      source.changesSinceOpt(spark, advance.from, asOf = Some(advance.to)).foreach { feed =>
+        val winners = Dedup.latestByKey(feed.withColumn("__ord2", expr(
+          "_change_ordinal * 2 + IF(_change_type = 'insert', 1, 0)")), keys, orderDesc = "__ord2")
+        mirror.merge(spark, winners, keys,
+          deleteWhere = Some(col("_change_type") === "delete"), advance = Some(advance))
       }
     }
   }
@@ -1321,8 +1299,7 @@ object StreamingIngest {
     * ([[graft.table.WarehouseTable.changesSince]] with
     * `netRemovals = false`) and folds SIGNED contributions — insert
     * rows +1/+v, delete rows −1/−v — into the view, one row per
-    * `groupKeys` group in the rollup layout (measures plus the
-    * `last_batch` marker). Gross is the
+    * `groupKeys` group with its measures. Gross is the
     * load-bearing choice: a partition rewrite re-lands its unchanged
     * rows, which contribute (−old, +new) = 0, and an UPDATE contributes
     * exactly the difference — no row identity, no anti-join, no rescan.
@@ -1332,16 +1309,18 @@ object StreamingIngest {
     * NULL reads `sum_c` NULL, as SQL's `sum` does.
     *
     * One window, one view write: the window's one group-by is joined
-    * with the view read AS OF one snapshot `s`, and a single select
-    * computes each window group's complete post-window row (sums, `nn_c`
-    * and `n` as `coalesce(stored + window, stored, window)`; extremes
-    * and counts by the algebra below; `last_batch` = the window's target
-    * snapshot), pinned by a `localCheckpoint`. The new view is the rows
-    * of `s` whose group the window does not touch freshly, plus the
-    * fresh rows (with the truth overlay below), landed as ONE overwrite
-    * on parent `s`: a view commit racing the window fails it with a
-    * ConcurrentModificationException, and the commit path sweeps its
-    * dirs. The view is unpartitioned, so every window rewrites it whole.
+    * with the view read AS OF the snapshot `s` whose source position the
+    * window starts from, and a single select computes each window
+    * group's complete post-window row (sums, `nn_c` and `n` as
+    * `coalesce(stored + window, stored, window)`; extremes and counts by
+    * the algebra below), pinned by a `localCheckpoint`. The new view is
+    * the rows of `s` whose group the window does not touch, plus the
+    * window's rows (with the truth overlay below), landed as ONE
+    * overwrite on parent `s` that records the window's end as the view's
+    * source position ([[tailSnapshotLog]]): a view commit racing the
+    * window fails it with a ConcurrentModificationException, and the
+    * commit path sweeps its dirs. The view is unpartitioned, so every
+    * window rewrites it whole.
     *
     * MIN/MAX (`minMaxCols`) are NOT invertible — a delete can remove the
     * row attaining the extreme — so the view keeps, beside `min_c` and
@@ -1385,16 +1364,15 @@ object StreamingIngest {
     * way. Merge keys must be
     * recorded on MOR sources (they are, by any MOR merge). Maintenance
     * commits (compaction included) are skipped EXACTLY — their
-    * re-landed rows never reach the fold. Exactly-once: each view row
-    * carries the window (target snapshot) that last folded it, and a
-    * group whose marker already reached the window is not fresh — a
-    * checkpoint-replayed window keeps the stored row, so it changes no
-    * group; the cursor (with source lineage, same rollback protection
-    * as the mirror) advances only after the view write lands.
+    * re-landed rows never reach the fold, and a window of nothing else
+    * commits nothing. Exactly-once: the view's content and its source
+    * position (with the source lineage, the same rollback protection as
+    * the mirror) are read from, and land on, the same snapshot, so a
+    * checkpoint-replayed window is skipped unread, and a rolled-back view
+    * re-applies the windows after its restored position.
     *
     * Read the view with [[readAggView]] — groups whose live count
-    * reached zero stay as (0, 0) marker rows (the marker must survive
-    * for replay suppression) and are filtered there.
+    * reached zero stay as zero-count rows and are filtered there.
     */
   def startAggView(
       spark: SparkSession,
@@ -1419,7 +1397,7 @@ object StreamingIngest {
     // a MIN/MAX view written before it counted its extremes cannot be
     // migrated (the counts are not derivable from the view itself)
     if (view.exists) {
-      val want = (groupKeys ++ sums ++ setCols :+ ViewBatchCol).toSet
+      val want = (groupKeys ++ sums ++ setCols).toSet
       val have = view.schema.fieldNames.toSet
       if (have != want)
         throw new IllegalStateException(
@@ -1429,45 +1407,40 @@ object StreamingIngest {
             (if (counted.nonEmpty && !counted.exists(have.contains))
                " (a MIN/MAX view without its per-extreme row counts)"
              else "") +
-            " — drop the view, its _agg_applied cursor and the stream " +
-            "checkpoint to re-seed.")
+            " — drop the view and the stream checkpoint to re-seed.")
     }
-    // the cursor lives BESIDE the view root (the view table itself is
-    // created by the first window, after the cursor's parent must
-    // already be writable)
-    Files.createDirectories(Paths.get(view.root).getParent)
     val refusal = (lin: String, id: Long, cur: String) =>
       s"aggregate view at ${view.root} applied through snapshot $id " +
         s"of source lineage $lin, but the source is now on lineage " +
-        s"$cur (rollback rewrote its timeline) — drop the view, its " +
-        "_agg_applied cursor and the stream checkpoint to re-seed."
+        s"$cur (rollback rewrote its timeline) — drop the view and the " +
+        "stream checkpoint to re-seed."
     // group identities match NULL-safely: a NULL group is a real group
     def sameGroup(a: String, b: String): Column =
       groupKeys.map(k => col(s"$a.$k") <=> col(s"$b.$k")).reduce(_ && _)
-    tailSnapshotLog(spark, source, Paths.get(view.root + "_agg_applied"),
-      refusal, checkpointDir, maxFilesPerTrigger) { (from, target) =>
-      val windowOpt = source
-        .changesSinceOpt(spark, from, asOf = Some(target), netRemovals = false)
+    tailSnapshotLog(spark, source, view, refusal, checkpointDir,
+      maxFilesPerTrigger) { (at, advance) =>
+      val windowOpt = source.changesSinceOpt(spark, advance.from, asOf = Some(advance.to),
+        netRemovals = false)
       // the first window creates the view, even an empty one, so readers
-      // of a drained view always find a table: the rollup layout (keys,
-      // measures in name order, the batch marker), keyed on the groups
-      if (!view.exists) {
+      // of a drained view always find a table: keys, then measures in
+      // name order, keyed on the groups
+      val s = at.getOrElse {
         val keyFields = windowOpt.getOrElse(source.emptyChangeFrame(spark))
           .schema.filter(f => groupKeys.contains(f.name))
         view.create(StructType(keyFields ++
-            (sums ++ setCols).sorted.map(StructField(_, LongType)) :+
-            StructField(ViewBatchCol, LongType, nullable = false)),
+            (sums ++ setCols).sorted.map(StructField(_, LongType))),
           properties = WarehouseTable.tableProperties("COW", "snappy"))
         view.ensureMergeKeys(groupKeys)
+        view.currentSnapshotId
       }
       // STATIC empty-window skip: a maintenance-only window (compact,
       // posdel fold, re-cluster on the source) carries no change
       // frames — a fact changesSinceOpt decides from manifests alone.
       // Its gross contribution is identically zero, so the fold is a
       // no-op by its own algebra; executing it anyway costs the view a
-      // rewrite per window. Skip everything but the cursor advance;
-      // replay-safe: a replayed window re-decides the same skip from
-      // the same manifests.
+      // rewrite per window. It commits nothing: the next window starts
+      // at the same recorded position and skips the maintenance commit
+      // exactly, as it does inside a multi-commit window.
       windowOpt.foreach { window =>
         val isDel = col("_change_type") === "delete"
         val sign = when(isDel, lit(-1L)).otherwise(lit(1L))
@@ -1488,18 +1461,15 @@ object StreamingIngest {
             })
         val w = window.groupBy(groupKeys.map(col): _*)
           .agg(aggs.head, aggs.tail: _*)
-        val s = view.currentSnapshotId
         val before = view.read(spark, asOf = Some(s))
         def p(c: String) = col(s"p.$c")
         def win(c: String) = col(s"w.$c")
         // the POST-WINDOW state of every window group, from the stored
         // view at `s` and the window (see the scaladoc's count algebra),
         // computed and pinned ONCE: the regress probe and the view write
-        // both read these local blocks. `__fresh` is the replay guard (a
-        // group the view already marked at this window keeps its stored
-        // row); `__lost` flags a fresh group whose extreme's last holder
-        // left (or whose deletes reach past it) — only those read the
-        // source.
+        // both read these local blocks. `__lost` flags a group whose
+        // extreme's last holder left (or whose deletes reach past it) —
+        // only those read the source.
         val extremes = minMaxCols.map { c =>
           def side(ext: String, pick: (Column, Column) => Column,
               past: (Column, Column) => Column) = {
@@ -1516,18 +1486,14 @@ object StreamingIngest {
           val (hi, lostHi) = side("max", greatest(_, _), _ > _)
           (lo ++ hi, lostLo || lostHi)
         }
-        val fresh = coalesce(p(ViewBatchCol) < target, lit(true))
         val post = w.alias("w").join(before.alias("p"), sameGroup("w", "p"), "left")
           .select(groupKeys.map(k => win(k).as(k)) ++
             sums.map(c => coalesce(p(c) + win(c), p(c), win(c)).as(c)) ++
-            extremes.flatMap(_._1) ++ Seq(
-              lit(target).as(ViewBatchCol),
-              fresh.as("__fresh"),
-              extremes.map(_._2).foldLeft(lit(false))(_ || _).as("__lost")): _*)
+            extremes.flatMap(_._1) :+
+            extremes.map(_._2).foldLeft(lit(false))(_ || _).as("__lost"): _*)
           .localCheckpoint()
-        val freshRows = post.filter(col("__fresh")).drop("__fresh", "__lost")
-        val lostKeys = post.filter(col("__fresh") && col("__lost"))
-          .select(groupKeys.map(col): _*)
+        val windowRows = post.drop("__lost")
+        val lostKeys = post.filter(col("__lost")).select(groupKeys.map(col): _*)
         // THRESHOLD-GUARDED collect: the lost-key set is usually a few
         // groups, and collecting it buys two prunes (partition fast
         // path + key-range dataFilters). But a FULL-VIEW regress — a
@@ -1544,7 +1510,7 @@ object StreamingIngest {
           if (minMaxCols.isEmpty) Array.empty[org.apache.spark.sql.Row]
           else lostKeys.limit(maxCollect + 1).collect()
         val landed =
-          if (probe.isEmpty) freshRows
+          if (probe.isEmpty) windowRows
           else {
             val underBound = probe.length <= maxCollect
             StreamingIngest.lastRecomputeCollected = Some(underBound)
@@ -1554,25 +1520,23 @@ object StreamingIngest {
                   java.util.Arrays.asList(probe: _*),
                   StructType(groupKeys.map(k => post.schema(k))))
                 regressedTruth(spark, source, groupKeys, minMaxCols,
-                  needDf, Some(probe), target)
+                  needDf, Some(probe), advance.to)
               } else
                 regressedTruth(spark, source, groupKeys, minMaxCols,
-                  lostKeys, None, target)
+                  lostKeys, None, advance.to)
             // lost groups take their extremes and counts from the truth,
             // verbatim (NULL extremes for an emptied group); the flag
             // tells a truth row from an unmatched one
             val rep = truth.withColumn("__rep", lit(true))
-            freshRows.alias("f").join(rep.alias("r"), sameGroup("f", "r"), "left")
+            windowRows.alias("f").join(rep.alias("r"), sameGroup("f", "r"), "left")
               .select(groupKeys.map(k => col(s"f.$k").as(k)) ++
                 sums.map(c => col(s"f.$c").as(c)) ++
                 setCols.map(c => when(col("r.__rep"), col(s"r.$c"))
-                  .otherwise(col(s"f.$c")).as(c)) :+
-                col(s"f.$ViewBatchCol").as(ViewBatchCol): _*)
+                  .otherwise(col(s"f.$c")).as(c)): _*)
           }
         val kept = before.alias("v").join(
-          freshRows.select(groupKeys.map(col): _*).alias("f"), sameGroup("v", "f"), "left_anti")
-        StreamingIngest.beforeAggViewWrite()
-        view.overwrite(kept.unionByName(landed), onParent = Some(s))
+          windowRows.select(groupKeys.map(col): _*).alias("f"), sameGroup("v", "f"), "left_anti")
+        view.overwrite(kept.unionByName(landed), onParent = Some(s), advance = Some(advance))
       }
     }
   }
@@ -1714,12 +1678,12 @@ object StreamingIngest {
 
   /** The aggregate view's user-facing read: per-group `n` (live count),
     * `sum_<col>` totals (NULL while no live value of `col` is non-NULL)
-    * and `min_<col>`/`max_<col>` extremes; zero-count marker rows, the
-    * non-NULL counts and the per-extreme row counts filtered.
+    * and `min_<col>`/`max_<col>` extremes; zero-count rows, the non-NULL
+    * counts and the per-extreme row counts filtered.
     */
   def readAggView(
       spark: SparkSession, view: graft.table.WarehouseTable): DataFrame = {
-    val rollup = graft.operators.IncrementalRollup.read(spark, view)
+    val rollup = view.read(spark)
     val summed = rollup.columns.toSeq.filter(_.startsWith("nn_")).map(_.stripPrefix("nn_"))
     val counts = summed.map(c => s"nn_$c") ++
       rollup.columns.toSeq.filter(_.startsWith("min_")).flatMap(m =>

@@ -170,13 +170,15 @@ final class WarehouseTable(val root: String) {
     * `posDeletes` lists position-delete dirs (Iceberg v2's second delete
     * flavor): each holds (data-file path, row ordinal) rows naming
     * physical rows erased from this snapshot's view — see
-    * [[deleteWhereMor]].
+    * [[deleteWhereMor]]. `position` is the [[sourcePosition]] the
+    * snapshot records.
     */
   final case class Manifest(
       base: Map[String, List[String]],
       deltas: List[Delta],
       stats: Map[String, TableStats.DirStats] = Map.empty,
-      posDeletes: List[String] = Nil) {
+      posDeletes: List[String] = Nil,
+      position: Option[WarehouseTable.SourcePosition] = None) {
     def allPartitions: Set[String] =
       base.keySet ++ deltas.flatMap(_.data.keySet)
     /** Every data dir this snapshot references, base and deltas. */
@@ -199,7 +201,7 @@ final class WarehouseTable(val root: String) {
     def replaceParts(parts: Set[String], add: Map[String, List[String]],
         st: Map[String, TableStats.DirStats]): Manifest = dropParts(parts).addDirs(add, st)
     def replaceAll(add: Map[String, List[String]], st: Map[String, TableStats.DirStats]): Manifest =
-      Manifest(add, Nil, st)
+      copy(base = add, deltas = Nil, stats = st, posDeletes = Nil)
     def dropParts(parts: Set[String]): Manifest = copy(base = base -- parts,
       deltas = deltas.map(d => d.copy(data = d.data -- parts)).filter(_.data.nonEmpty)).pruneStats
     def dropDirs(gone: String => Boolean): Manifest =
@@ -287,12 +289,12 @@ final class WarehouseTable(val root: String) {
           // (read-side key filters, the gross feed's old-version range).
           // Absent on pre-dstats snapshots → conservative, no pruning.
           frags.flatMap(_._3).toMap ++ statsFromJson(j \ "dstats"),
-          posDeletesFromJson(j))
+          posDeletesFromJson(j), positionFromJson(j))
       case _ => (j \ "base") match {
         case JNothing => Manifest(partsFromJson(j), Nil) // v1 flat format
         case baseJ =>
           Manifest(partsFromJson(baseJ), deltasFromJson(j), statsFromJson(j \ "stats"),
-            posDeletesFromJson(j))
+            posDeletesFromJson(j), positionFromJson(j))
       }
     }
   }
@@ -301,6 +303,18 @@ final class WarehouseTable(val root: String) {
     case JArray(ds) => ds.map(_.extract[String])
     case _ => Nil
   }
+
+  private def positionFromJson(j: JValue): Option[WarehouseTable.SourcePosition] =
+    (j \ "applied").extractOpt[WarehouseTable.SourcePosition]
+
+  /** The source position snapshot `id` records: how far the consumer
+    * that writes this table (an aggregate view, a CDC mirror) has applied
+    * its source's commit log. Only a write's `advance` sets it; every
+    * other commit carries its parent's, and a [[rollback]] returns to the
+    * position of the snapshot it restores. None before the first advance.
+    */
+  def sourcePosition(id: Long): Option[WarehouseTable.SourcePosition] =
+    positionFromJson(JsonMethods.parse(readString(snapOrStaged(id))))
 
   private def deltasFromJson(j: JValue): List[Delta] = (j \ "deltas") match {
     case JArray(ds) => ds.map { d =>
@@ -391,7 +405,7 @@ final class WarehouseTable(val root: String) {
     // unpublishable — without this stamp, publishStaged(N) after the new
     // timeline re-reaches N−1 would atomically install a manifest built
     // on pre-rollback state, silently dropping every new-timeline commit
-    // (the same snapshot-id-reuse hole lineage ids close for CDC cursors).
+    // (the same snapshot-id-reuse hole lineage ids close for consumer positions).
     val stagedField: List[(String, JValue)] =
       (if (staged) List("lineage" -> (JString(lineageId): JValue)) else Nil) ++
         wapId.map(w => "wap-id" -> (JString(w): JValue)).toList
@@ -434,7 +448,8 @@ final class WarehouseTable(val root: String) {
       ("deltas" -> (JArray(m.deltas.map(d => JObject(
         "seq" -> JInt(d.seq), "data" -> partsToJson(d.data)))): JValue)) ::
       ("posdel" -> (JArray(m.posDeletes.map(JString(_))): JValue)) ::
-      (stagedField ++ dstatsField ++ legacyField))
+      (stagedField ++ dstatsField ++ legacyField ++
+        m.position.map(p => "applied" -> Extraction.decompose(p))))
     val bytes = JsonMethods.compact(JsonMethods.render(snap))
       .getBytes(StandardCharsets.UTF_8)
     val p = if (staged) stagedPath(id) else snapPath(id)
@@ -1367,7 +1382,9 @@ final class WarehouseTable(val root: String) {
 
   /** Write `df` as a new immutable data dir; returns manifest entries
     * (partitionValue -> dirs) plus per-dir min/max stats harvested from
-    * the freshly written parquet footers.
+    * the freshly written parquet footers. The `data/<uuid>` dir is the
+    * unit a commit keeps or sweeps, so a partitioned write that produced
+    * no partition dir removes it here: no manifest will name it.
     */
   private def writeDataDir(
       df: DataFrame, meta: Meta,
@@ -1412,7 +1429,7 @@ final class WarehouseTable(val root: String) {
         // list the hive dirs spark produced
         import scala.jdk.CollectionConverters._
         val listing = Files.list(Paths.get(dest))
-        try listing.iterator().asScala
+        val parts = try listing.iterator().asScala
           .filter(d => Files.isDirectory(d) && d.getFileName.toString.contains("="))
           .map { d =>
             val dirName = d.getFileName.toString
@@ -1420,6 +1437,8 @@ final class WarehouseTable(val root: String) {
             unescapePartitionValue(value) -> List(s"$rel/$dirName")
           }.toMap
         finally listing.close()
+        if (parts.isEmpty) deleteTree(Paths.get(dest))
+        parts
     }
     // 'stats.mode=none' (Iceberg's write.metadata.metrics.default=none):
     // index tables whose reads prune ONLY by partition value (minhash
@@ -1499,12 +1518,16 @@ final class WarehouseTable(val root: String) {
     * a [[Rebase]] step then retries with jittered backoff, an
     * [[OnParent]] step throws. `written` are the dirs the write created
     * (`data/<uuid>/…` or a `posdel/<uuid>` sidecar) and `check` its
-    * validation, run before anything lands. When the commit does not
-    * land — a refused check, a lost race, an exhausted budget, any other
-    * throwable before the snapshot file exists — the written dirs are
-    * deleted and the exception rethrown. Once the file exists nothing is
-    * swept: a commit-log tailer may already have read it. Returns the new
-    * snapshot id.
+    * validation, run before anything lands. An `advance` records its new
+    * source position in the snapshot, and lands only on a parent that
+    * records the position it starts from: a parent whose position moved
+    * fails it with a ConcurrentModificationException that no step
+    * retries. Every other commit carries its parent's position. When
+    * the commit does not land — a refused check, a lost race, an
+    * exhausted budget, any other throwable before the snapshot file
+    * exists — the written dirs are deleted and the exception rethrown.
+    * Once the file exists nothing is swept: a commit-log tailer may
+    * already have read it. Returns the new snapshot id.
     */
   private def commit(
       written: Iterable[String],
@@ -1512,6 +1535,7 @@ final class WarehouseTable(val root: String) {
       maintenance: Boolean = false,
       staged: Boolean = false,
       wapId: Option[String] = None,
+      advance: Option[WarehouseTable.Advance] = None,
       check: => Unit = ()): Long = {
     var landed = false
     try {
@@ -1522,13 +1546,20 @@ final class WarehouseTable(val root: String) {
         attempt += 1
         val (parent, old) = step.parent()
         next = parent + 1
+        val m = advance.fold(step.f(old)) { a =>
+          val at = old.position.getOrElse(WarehouseTable.SourcePosition(a.lineage, 0L))
+          if (at != WarehouseTable.SourcePosition(a.lineage, a.from))
+            throw new java.util.ConcurrentModificationException(
+              s"source position moved to $at while a write applied ${a.lineage} from ${a.from}")
+          step.f(old).copy(position = Some(WarehouseTable.SourcePosition(a.lineage, a.to)))
+        }
         try {
           val actual = currentSnapshotId
           // a stage never moves the pointer, so it does not race it
           if (!staged && actual != parent)
             throw new java.util.ConcurrentModificationException(
               s"snapshot advanced from $parent to $actual during write; retry")
-          writeSnapshot(next, step.f(old), Some(parent -> old), createNew = true,
+          writeSnapshot(next, m, Some(parent -> old), createNew = true,
             if (maintenance) "maintenance" else "data", staged, wapId)
           landed = true
         } catch {
@@ -1580,13 +1611,16 @@ final class WarehouseTable(val root: String) {
     * `onParent`, `df` was computed from that snapshot, so the overwrite
     * lands on it or not at all: a commit that landed since fails it with
     * a ConcurrentModificationException, and its written dirs are swept.
+    * `advance` records the source position `df` reflects (see [[commit]]).
     */
-  def overwrite(df: DataFrame, onParent: Option[Long] = None): Unit = {
+  def overwrite(df: DataFrame, onParent: Option[Long] = None,
+      advance: Option[WarehouseTable.Advance] = None): Unit = {
     val meta = readMeta()
     val cur = onParent.getOrElse(currentSnapshotId)
     val old = readManifest(cur)
     val (entries, stats) = writeDataDir(df, meta)
-    commit(entries.values.flatten, new OnParent(cur, old)(_.replaceAll(entries, stats)))
+    commit(entries.values.flatten, new OnParent(cur, old)(_.replaceAll(entries, stats)),
+      advance = advance)
   }
 
   /** MERGE upsert — `mode == 'merge'` (read.py:237-239 + mergeSQL.sql).
@@ -1612,6 +1646,9 @@ final class WarehouseTable(val root: String) {
     * attempt. On the COW path the null-key check runs concurrently with
     * the rewrite's write, so when that write itself fails on the bad
     * batch, the write's error may surface instead of the refusal.
+    *
+    * `advance` records the source position the merge brings the table to
+    * (see [[commit]]); only a merge-on-read merge carries one.
     */
   def merge(
       spark: SparkSession,
@@ -1619,7 +1656,8 @@ final class WarehouseTable(val root: String) {
       keys: Seq[String],
       updateCols: Option[Seq[String]] = None,
       deleteWhere: Option[Column] = None,
-      evolveSchema: Boolean = false): Unit = {
+      evolveSchema: Boolean = false,
+      advance: Option[WarehouseTable.Advance] = None): Unit = {
     // MERGE WITH SCHEMA EVOLUTION (the implicit Iceberg widening the
     // reference relies on, SURVEY.md §1.2): source columns absent from the
     // declared schema are ADDed (nullable, metadata-only) before the merge;
@@ -1634,10 +1672,12 @@ final class WarehouseTable(val root: String) {
     val meta = readMeta()
     val partial = updateCols.exists(cols =>
       meta.schema.fieldNames.exists(c => !keys.contains(c) && !cols.contains(c)))
-    if (meta.properties.get("write.merge.mode").contains("merge-on-read")) {
+    val mor = meta.properties.get("write.merge.mode").contains("merge-on-read")
+    require(mor || advance.isEmpty, "a source position advances with a merge-on-read merge only")
+    if (mor) {
       require(!partial,
         "merge-on-read deltas carry whole rows; partial UPDATE SET lists need COW")
-      mergeMor(spark, source, keys, meta, deleteWhere)
+      mergeMor(spark, source, keys, meta, deleteWhere, advance)
     } else deleteWhere match {
       case Some(del) =>
         // CDC deletes over COW run as a merge program: delete-marked
@@ -1698,11 +1738,11 @@ final class WarehouseTable(val root: String) {
     */
   private def mergeMor(
       spark: SparkSession, source: DataFrame, keys: Seq[String], meta: Meta,
-      deleteWhere: Option[Column] = None): Unit =
+      deleteWhere: Option[Column], advance: Option[WarehouseTable.Advance]): Unit =
     // tombstone flag rides along in the delta file: a delete is an O(batch)
     // append exactly like an upsert, resolved at read/compaction time
     writeDelta(spark, meta, keys, source.withColumn(TombstoneCol,
-      coalesce(deleteWhere.getOrElse(lit(false)), lit(false))))
+      coalesce(deleteWhere.getOrElse(lit(false)), lit(false))), advance)
 
   /** The keyed MOR delta write ([[mergeMor]], [[deleteKeysMor]]): `rows`
     * (tombstone flag included) land as the next delta once their keys
@@ -1712,13 +1752,14 @@ final class WarehouseTable(val root: String) {
     * picks a total order between racing upserts).
     */
   private def writeDelta(
-      spark: SparkSession, meta: Meta, keys: Seq[String], rows: DataFrame): Unit = {
+      spark: SparkSession, meta: Meta, keys: Seq[String], rows: DataFrame,
+      advance: Option[WarehouseTable.Advance] = None): Unit = {
     val threshold = deltaThreshold(meta)
     val attempts = retryBudget(meta)
     recordMergeKeys(meta, keys)
     val (added, stats) = writeDataDir(rows, meta, extraCols = Seq(TombstoneCol))
     commit(added.values.flatten, new Rebase(attempts)(_.addDelta(added, stats)),
-      check = requireKeysNotNull(added, keys))
+      advance = advance, check = requireKeysNotNull(added, keys))
     maintainAfterCommit(spark, meta, threshold)(_.deltas.size)
   }
 
@@ -3176,11 +3217,13 @@ final class WarehouseTable(val root: String) {
         Files.deleteIfExists(claimPath(snapPath(i)))
       }
       // the abandoned ids become reclaimable, so post-rollback commits
-      // REUSE them — a persisted incremental cursor (a CDC mirror's
-      // applied-through marker) would silently treat the new timeline as
-      // continuous with the old one. Bumping the lineage id makes every
-      // such cursor fail LOUDLY instead (the Iceberg random-snapshot-id
-      // argument, paid once per rollback instead of per commit).
+      // REUSE them — a consumer's recorded source position (a CDC
+      // mirror's or an aggregate view's, see sourcePosition) would
+      // silently treat the new timeline as continuous with the old one.
+      // Bumping the lineage id makes every such position fail LOUDLY
+      // instead (the Iceberg random-snapshot-id argument, paid once per
+      // rollback instead of per commit). A rollback of the consumer
+      // itself returns its position with its content.
       writeString(lineagePath, UUID.randomUUID().toString)
     }
   }
@@ -3189,9 +3232,9 @@ final class WarehouseTable(val root: String) {
 
   /** Identifies the table's commit TIMELINE: constant ("root") until the
     * first [[rollback]], then a fresh uuid per rollback. Snapshot ids are
-    * only monotone WITHIN one lineage — any consumer that persists a
-    * snapshot-id cursor across process restarts must persist the lineage
-    * beside it and refuse to resume on a mismatch (see
+    * only monotone WITHIN one lineage — a consumer's recorded
+    * [[WarehouseTable.SourcePosition]] carries the lineage beside the
+    * snapshot id, and the consumer refuses to resume on a mismatch (see
     * [[graft.streaming.StreamingIngest.startCdcMirror]]).
     */
   def lineageId: String =
@@ -4060,6 +4103,19 @@ final class WarehouseTable(val root: String) {
 
 object WarehouseTable {
   def apply(root: String): WarehouseTable = new WarehouseTable(root)
+
+  /** A consumer table's place in a source table's commit log: the
+    * source's [[WarehouseTable.lineageId]] and the last source snapshot
+    * the consumer applied ([[WarehouseTable.sourcePosition]]).
+    */
+  final case class SourcePosition(lineage: String, snapshotId: Long)
+
+  /** A write that applies source snapshots `from` (exclusive) to `to` of
+    * source `lineage`: it lands only on a parent whose recorded position
+    * is `from` on that lineage (none recorded counts as 0), and records
+    * `to`.
+    */
+  final case class Advance(lineage: String, from: Long, to: Long)
 
   // Metadata-table schemas — shared between the builders above and the
   // catalog's lazy metadata relations (which must answer schema() without

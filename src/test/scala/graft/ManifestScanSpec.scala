@@ -325,18 +325,20 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(offenders.isEmpty, s"a second read path for table files: ${offenders.mkString(", ")}")
   }
 
-  test("graft.table writes snapshots only through commit: one writer of snapshot files and of the pointer") {
-    val dir = java.nio.file.Paths.get("src/main/scala/graft/table")
+  /** Every code line of the sources in `src/main/scala/graft/<pkg>` as
+    * (file, member, code): the member is the 2-space indented def it sits
+    * in; comment lines are dropped. `anchor` must be among the files.
+    */
+  private def codeLines(pkg: String, anchor: String): Seq[(String, String, String)] = {
+    val dir = java.nio.file.Paths.get(s"src/main/scala/graft/$pkg")
     val sources = {
       val ls = java.nio.file.Files.list(dir)
       try ls.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally ls.close()
     }
-    assert(sources.exists(_.getFileName.toString == "WarehouseTable.scala"),
-      s"no table sources under ${dir.toAbsolutePath}")
-    // every code line, tagged with the class member (2-space indented
-    // def) it sits in; comments dropped
+    assert(sources.exists(_.getFileName.toString == anchor),
+      s"no $pkg sources under ${dir.toAbsolutePath}")
     val member = """^  (?:(?:private|private\[\w+\]|override|final)\s+)*def\s+(\w+).*""".r
-    val lines: Seq[(String, String, String)] = sources.flatMap { f =>
+    sources.flatMap { f =>
       var current = ""
       new String(java.nio.file.Files.readAllBytes(f), "UTF-8").split("\n").toSeq.flatMap { l =>
         l match {
@@ -348,6 +350,10 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         else Some((s"${f.getFileName}", current, code))
       }
     }
+  }
+
+  test("graft.table writes snapshots only through commit: one writer of snapshot files and of the pointer") {
+    val lines = codeLines("table", "WarehouseTable.scala")
     def callers(call: String): Set[String] = lines.collect {
       case (_, m, code) if code.contains(s"$call(") && !code.contains(s"def $call(") => m
     }.toSet
@@ -372,28 +378,7 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("graft.streaming tails a table's commit log only through the snapshot-log source; startAggView writes its view itself") {
-    val dir = java.nio.file.Paths.get("src/main/scala/graft/streaming")
-    val sources = {
-      val ls = java.nio.file.Files.list(dir)
-      try ls.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally ls.close()
-    }
-    assert(sources.exists(_.getFileName.toString == "StreamingIngest.scala"),
-      s"no streaming sources under ${dir.toAbsolutePath}")
-    // code lines per file, tagged with the member (2-space indented def)
-    // they sit in; comments dropped
-    val member = """^  (?:(?:private|private\[\w+\]|override|final)\s+)*def\s+(\w+).*""".r
-    val lines: Seq[(String, String, String)] = sources.flatMap { f =>
-      var current = ""
-      new String(java.nio.file.Files.readAllBytes(f), "UTF-8").split("\n").toSeq.flatMap { l =>
-        l match {
-          case member(name) => current = name
-          case _ =>
-        }
-        val code = l.trim
-        if (code.startsWith("*") || code.startsWith("/*") || code.startsWith("//")) None
-        else Some((s"${f.getFileName}", current, code))
-      }
-    }
+    val lines = codeLines("streaming", "StreamingIngest.scala")
     // a file stream over snaps/ names the dir in its path
     val snapsDir = lines.collect {
       case (f, m, code) if code.contains("/snaps") || code.contains("\"snaps\"") => s"$f:$m: $code"
@@ -405,5 +390,31 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(aggView.exists(_.contains("view.overwrite(")), "the guard no longer sees the view write")
     assert(!aggView.exists(_.contains("IncrementalRollup")),
       "startAggView writes the view through IncrementalRollup")
+  }
+
+  test("graft.streaming records a consumer's progress only through a WarehouseTable commit") {
+    val lines = codeLines("streaming", "StreamingIngest.scala")
+    // no file of its own: a cursor beside the table, a marker, a rename
+    val ownWrites = lines.collect {
+      case (f, m, code) if Seq("Files.write", "Files.move", "writeString", "_applied")
+          .exists(code.contains) => s"$f:$m: $code"
+    }
+    assert(ownWrites.isEmpty, s"graft.streaming writes a file itself: ${ownWrites.mkString("; ")}")
+    // the position is read from the consumer table, and each consumer
+    // lands it with its window's one write
+    assert(lines.exists { case (_, m, code) =>
+      m == "tailSnapshotLog" && code.contains("consumer.sourcePosition") })
+    for ((consumer, write) <- Seq("startAggView" -> "view.overwrite(",
+        "startCdcMirror" -> "mirror.merge(")) {
+      val body = lines.collect { case (_, `consumer`, code) => code }
+      assert(body.count(_.contains(write)) == 1 &&
+        body.count(_.contains("advance = Some(advance)")) == 1,
+        s"$consumer no longer lands its window as one $write that carries the position")
+    }
+    // on the table side only commit sets a snapshot's position
+    val setters = codeLines("table", "WarehouseTable.scala").collect {
+      case (_, m, code) if code.contains("position = Some(") => m
+    }
+    assert(setters.toSet == Set("commit"), s"a source position set outside commit: $setters")
   }
 }

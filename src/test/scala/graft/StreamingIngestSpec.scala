@@ -1401,7 +1401,7 @@ class StreamingIngestSpec extends SparkSpec {
       s"resurrected view diverged: $got2")
   }
 
-  test("agg view drain skips a maintenance-only window statically (no view commit; cursor advances)") {
+  test("agg view drain skips a maintenance-only window statically (no view commit; the position holds)") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
     val sch = StructType(Seq(
@@ -1434,12 +1434,10 @@ class StreamingIngestSpec extends SparkSpec {
     // skipped: the view landed NO no-op merge commit...
     assert(view.currentSnapshotId == viewSnap,
       "maintenance-only window still folded into the view")
-    // ...but the cursor advanced past the maintenance snapshot, so the
-    // next window never re-walks it
-    val cur = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(view.root + "_agg_applied")),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    assert(cur == s"${src.lineageId}@${src.currentSnapshotId}")
+    // ...and recorded no position past it: the next window starts
+    // before the maintenance snapshot and skips it exactly
+    assert(view.sourcePosition(viewSnap) ==
+      Some(graft.table.WarehouseTable.SourcePosition(src.lineageId, before)))
     // a later data window folds normally on top of the skip
     src.merge(spark, df(Seq((3L, "g0", 30))), Seq("id", "g"))
     val q3 = StreamingIngest.startAggView(
@@ -1855,8 +1853,7 @@ class StreamingIngestSpec extends SparkSpec {
       (4L, "g1", 7))
     val view = mmDrain(src)
     val root = new java.io.File(src.root).getParent
-    val cursor = Paths.get(view.root + "_agg_applied")
-    val before = Files.readAllBytes(cursor)
+    val before = view.sourcePosition(view.currentSnapshotId)
     // one window: a delete at g0's min, a new max
     mmDelete(src, (1L, "g0", null))
     mmUpsert(src, (5L, "g0", 6))
@@ -1864,9 +1861,7 @@ class StreamingIngestSpec extends SparkSpec {
     def state() = graft.operators.IncrementalRollup.read(spark, view)
       .collect().map(_.toSeq).toSet
     val drained = state()
-    // crash after the view merge, before the cursor write and the
-    // checkpoint's commit entry
-    Files.write(cursor, before)
+    // crash after the view write, before the checkpoint's commit entry
     val commits = new java.io.File(root + "/ckpt/commits").list()
       .filter(_.forall(_.isDigit)).map(_.toLong)
     Files.delete(Paths.get(s"$root/ckpt/commits/${commits.max}"))
@@ -1876,11 +1871,11 @@ class StreamingIngestSpec extends SparkSpec {
       mmDrain(src, perWindow = 2)
       assert(state() == drained, s"replay moved the view: ${state()} vs $drained")
       // the replayed delete would drop g0's count at 1 to 0 a second
-      // time; the guard that blocks its merge also keeps it off the probe
+      // time; the recorded position skips the window before the probe
       assert(StreamingIngest.lastRecomputeCollected.isEmpty,
         "a replayed window read the source")
     } finally StreamingIngest.lastRecomputeCollected = None
-    assert(!java.util.Arrays.equals(Files.readAllBytes(cursor), before))
+    assert(view.sourcePosition(view.currentSnapshotId) != before)
     assertViewIsSource(src, view)
   }
 
@@ -1898,10 +1893,10 @@ class StreamingIngestSpec extends SparkSpec {
     val snap = view.currentSnapshotId
     val err = intercept[IllegalStateException](mmDrain(src))
     assert(err.getMessage.contains(view.root) && err.getMessage.contains(
-      "drop the view, its _agg_applied cursor and the stream checkpoint"),
+      "drop the view and the stream checkpoint"),
       err.getMessage)
     assert(view.currentSnapshotId == snap)
-    assert(!Files.exists(Paths.get(view.root + "_agg_applied")))
+    assert(view.sourcePosition(snap).isEmpty)
   }
 
   test("min/max agg view: a malformed maxCollectKeys conf is refused at start") {
@@ -1913,7 +1908,6 @@ class StreamingIngestSpec extends SparkSpec {
       val err = intercept[IllegalArgumentException](mmDrain(src))
       assert(err.getMessage.contains(key), err.getMessage)
       assert(!WarehouseTable(root + "/view").exists)
-      assert(!Files.exists(Paths.get(root + "/view_agg_applied")))
     } finally spark.conf.unset(key)
     // a sum-only drain never reads the conf, so it still starts over one
     val sums = WarehouseTable(root + "/sums")
@@ -1931,8 +1925,6 @@ class StreamingIngestSpec extends SparkSpec {
     val src = mmSource("mmwrite")((1L, "g0", 5), (2L, "g1", 3), (3L, "g1", 7))
     val view = mmDrain(src)
     val root = new java.io.File(src.root).getParent
-    val cursor = Paths.get(view.root + "_agg_applied")
-    val before = Files.readAllBytes(cursor)
     // one window: g0 is emptied (its truth is NULL extremes at count 0),
     // g1 gains a new max, which folds without a truth read
     mmDelete(src, (1L, "g0", null))
@@ -1954,9 +1946,8 @@ class StreamingIngestSpec extends SparkSpec {
       Seq("g1", 3L, 9L, 3L, 9L, 1L, 1L))
     assert(state() == want, s"got ${state()}")
     assertViewIsSource(src, view)
-    // replay the window: the cursor and the checkpoint's last commit go
-    // back, the view write does not
-    Files.write(cursor, before)
+    // replay the window: the checkpoint's last commit goes back, the
+    // view write does not
     val commits = new java.io.File(root + "/ckpt/commits").list()
       .filter(_.forall(_.isDigit)).map(_.toLong)
     Files.delete(Paths.get(s"$root/ckpt/commits/${commits.max}"))
@@ -1973,8 +1964,7 @@ class StreamingIngestSpec extends SparkSpec {
     val src = mmSource("mmrace")((1L, "g0", 5), (2L, "g1", 3))
     val view = mmDrain(src)
     val root = new java.io.File(src.root).getParent
-    val cursor = Paths.get(view.root + "_agg_applied")
-    val cursorBefore = Files.readAllBytes(cursor)
+    val positionBefore = view.sourcePosition(view.currentSnapshotId)
     def commits() = new java.io.File(root + "/ckpt/commits").list()
       .filter(_.forall(_.isDigit)).map(_.toLong).toSet
     def dataDirs() = new java.io.File(view.root + "/data").list().toSet
@@ -1984,21 +1974,40 @@ class StreamingIngestSpec extends SparkSpec {
     // the racer rewrites the view with its own content, between the
     // window's read of the view and its write
     var afterRace = Set.empty[String]
-    StreamingIngest.beforeAggViewWrite = { () =>
+    StreamingIngest.beforeConsumerWrite = { () =>
       view.overwrite(view.read(spark))
       afterRace = dataDirs()
     }
     val err =
       try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
         mmDrain(src, perWindow = 2))
-      finally StreamingIngest.beforeAggViewWrite = () => ()
+      finally StreamingIngest.beforeConsumerWrite = () => ()
     assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[java.util.ConcurrentModificationException]), err)
     assert(afterRace.nonEmpty && dataDirs() == afterRace,
       "the refused view write left a data dir")
-    assert(java.util.Arrays.equals(Files.readAllBytes(cursor), cursorBefore))
+    assert(view.sourcePosition(view.currentSnapshotId) == positionBefore)
     assert(commits() == commitsBefore)
     mmDrain(src, perWindow = 2)
+    assertViewIsSource(src, view)
+  }
+
+  test("agg view rollback: the view's position rolls back with it, and the next drain re-converges") {
+    val src = mmSource("mmroll")((1L, "g0", 5), (2L, "g1", 3))
+    val view = mmDrain(src)
+    val k = view.currentSnapshotId
+    val applied = view.sourcePosition(k)
+    mmUpsert(src, (3L, "g0", 1))
+    mmDelete(src, (2L, "g1", null))
+    mmDrain(src)
+    assertViewIsSource(src, view)
+    // the view goes back to k, and with it the source position it
+    // applied through; one more source commit, then a drain
+    view.rollback(k)
+    assert(view.sourcePosition(view.currentSnapshotId) == applied)
+    mmUpsert(src, (4L, "g2", 8))
+    mmDrain(src)
+    // the windows after k are re-applied with the new one
     assertViewIsSource(src, view)
   }
 
@@ -2849,15 +2858,15 @@ class StreamingIngestSpec extends SparkSpec {
     assert(view(mirror) == Set((1L, "a2", "en"), (3L, "c", "en"),
       (4L, "d2", "en"), (6L, "f", "fr")))
     assert(view(mirror) == view(src))
-    val cursorRaw = new String(Files.readAllBytes(
-      Paths.get(mirRoot, "_cdc_applied")), StandardCharsets.UTF_8).trim
-    // cursor carries the source lineage beside the applied snapshot id
-    assert(cursorRaw == s"${src.lineageId}@${src.currentSnapshotId}")
-    // drained restart with no new commits: nothing to apply, cursor holds
+    // the mirror's position carries the source lineage beside the
+    // applied snapshot id
+    assert(mirror.sourcePosition(mirror.currentSnapshotId) ==
+      Some(WarehouseTable.SourcePosition(src.lineageId, src.currentSnapshotId)))
+    // drained restart with no new commits: nothing to apply, position holds
     run()
     assert(view(mirror) == view(src))
     // more history: another predicate erasure + an append, applied by a
-    // RESTARTED stage (checkpoint + cursor pick up mid-stream)
+    // RESTARTED stage (checkpoint + position pick up mid-stream)
     assert(src.deleteWhereMor(spark, col("doc_id") % 3 === 0) == 2L)
     src.append(docs((7L, "g", "en")))
     run()
@@ -3018,6 +3027,62 @@ class StreamingIngestSpec extends SparkSpec {
     assert(viewErr.getMessage.contains("lineage"))
   }
 
+  test("CDC mirror: one mirror commit a window, carrying its position; a replay lands none; a racing position change fails the window") {
+    import spark.implicits._
+    val src = WarehouseTable(tmpDir("cdc1_src") + "/t")
+    val mirror = WarehouseTable(tmpDir("cdc1_mir") + "/t")
+    val ckpt = tmpDir("cdc1_ckpt")
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    src.create(docs().schema, None,
+      WarehouseTable.tableProperties("MOR", "snappy") +
+        ("compact.delta.threshold" -> "0"))
+    src.append(docs((1L, "a"), (2L, "b"), (3L, "c")))
+    def run(): Unit = StreamingIngest.startCdcMirror(spark, src, mirror,
+      Seq("doc_id"), ckpt, maxFilesPerTrigger = 2).awaitTermination(180000)
+    def rows(t: WarehouseTable) =
+      t.read(spark).select("doc_id", "text").as[(Long, String)].collect().toSet
+    def position = mirror.sourcePosition(mirror.currentSnapshotId)
+    def applied = Some(WarehouseTable.SourcePosition(src.lineageId, src.currentSnapshotId))
+    def dataDirs() = new java.io.File(mirror.root + "/data").list().toSet
+    run()
+    val snap = mirror.currentSnapshotId
+    // one window holding an upsert, an insert and a delete
+    src.merge(spark, docs((1L, "a2"), (4L, "d")), Seq("doc_id"))
+    src.deleteKeysMor(spark, docs((2L, "")).select("doc_id"), Seq("doc_id"))
+    run()
+    assert(mirror.currentSnapshotId == snap + 1)
+    assert(position == applied)
+    assert(rows(mirror) == rows(src) && rows(src) == Set((1L, "a2"), (3L, "c"), (4L, "d")))
+    // replay the window: the checkpoint's last commit goes back
+    val commits = new java.io.File(ckpt + "/commits").list()
+      .filter(_.forall(_.isDigit)).map(_.toLong)
+    Files.delete(Paths.get(s"$ckpt/commits/${commits.max}"))
+    Files.deleteIfExists(Paths.get(s"$ckpt/commits/.${commits.max}.crc"))
+    run()
+    assert(mirror.currentSnapshotId == snap + 1)
+    // a mirror rollback between the window's read of the position and
+    // its merge moves the position back under it
+    src.merge(spark, docs((5L, "e")), Seq("doc_id"))
+    src.deleteKeysMor(spark, docs((3L, "")).select("doc_id"), Seq("doc_id"))
+    var afterRace = Set.empty[String]
+    StreamingIngest.beforeConsumerWrite = { () =>
+      mirror.rollback(snap)
+      afterRace = dataDirs()
+    }
+    val err =
+      try intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+      finally StreamingIngest.beforeConsumerWrite = () => ()
+    assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.util.ConcurrentModificationException]), err)
+    assert(mirror.currentSnapshotId == snap)
+    assert(afterRace.nonEmpty && dataDirs() == afterRace,
+      "the refused mirror write left a data dir")
+    // the restart re-applies everything after the rolled-back position
+    run()
+    assert(rows(mirror) == rows(src) && rows(src) == Set((1L, "a2"), (4L, "d"), (5L, "e")))
+    assert(position == applied)
+  }
+
   /** A keyless COW table with `commits` one-row appends after its create. */
   private def logTable(name: String, commits: Int): WarehouseTable = {
     import spark.implicits._
@@ -3103,8 +3168,9 @@ class StreamingIngestSpec extends SparkSpec {
     val view = WarehouseTable(tmpDir("slog_one_view") + "/v")
     StreamingIngest.startAggView(spark, t, view, Seq("text"), Seq("doc_id"),
       tmpDir("slog_one_vckpt")).awaitTermination(120000)
-    assert(view.read(spark).select("text", "last_batch").collect().map(r => r.getString(0) -> r.getLong(1))
-      .toMap == (1L to 4L).map(i => s"d$i" -> i).toMap)
+    assert((1L to 4L).map(k => view.read(spark, asOf = Some(k)).select("text").collect()
+      .map(_.getString(0)).toSet -> view.sourcePosition(k).map(_.snapshotId)) ==
+      (1L to 4L).map(k => (1L to k).map(i => s"d$i").toSet -> Some(k)))
     assert(view.currentSnapshotId == 4L) // the create, then one write a window
   }
 
@@ -3130,9 +3196,9 @@ class StreamingIngestSpec extends SparkSpec {
     run()
     t.rollback(1L)
     t.append(Seq((3L, "d3")).toDF("doc_id", "text"))
-    // without the mirror's cursor the start-time check has nothing to
+    // without the mirror's position the start-time check has nothing to
     // compare: the checkpoint's offset alone must stop the drain
-    Files.delete(Paths.get(mirror.root, "_cdc_applied"))
+    mirror.drop()
     val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
     assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
       .exists(e => String.valueOf(e.getMessage).contains("lineage")), err)

@@ -1165,6 +1165,27 @@ class WarehouseTableSpec extends SparkSpec {
     }
   }
 
+  test("an empty write to a partitioned table leaves no data dir, whether its commit lands or not") {
+    import scala.jdk.CollectionConverters._
+    val t = WarehouseTable(tmpDir("emptypart"))
+    t.create(schema, Some("state"), Map.empty)
+    t.append(df((1, "a", "CA")))
+    def dataRoots: Set[String] = {
+      val l = java.nio.file.Files.list(java.nio.file.Paths.get(t.root, "data"))
+      try l.iterator().asScala.map(_.getFileName.toString).toSet finally l.close()
+    }
+    val before = dataRoots
+    val snap = t.currentSnapshotId
+    t.append(df())
+    assert(dataRoots == before, s"the empty append left ${dataRoots -- before}")
+    t.overwrite(df())
+    assert(t.currentSnapshotId == snap + 2 && t.read(spark).count() == 0)
+    assert(dataRoots == before, s"the empty overwrite left ${dataRoots -- before}")
+    // refused: its parent is no longer current
+    intercept[java.util.ConcurrentModificationException](t.overwrite(df(), onParent = Some(snap)))
+    assert(dataRoots == before, s"the refused empty overwrite left ${dataRoots -- before}")
+  }
+
   test("TIMESTAMP AS OF resolution binary-searches the id range: O(log n) manifest parses on a 100-commit table") {
     import org.apache.spark.sql.Row
     val sch = StructType(Seq(StructField("id", LongType, nullable = false)))
